@@ -142,9 +142,7 @@ BENCH_QUERIES = (
     "doc_winnowing_fingerprints",
     "embedding_pq_codes",
     # round 7 continuation — the iterative/graph/text additions, so
-    # every new operator class carries a tracked number (deferred
-    # queries are benchmarkable: the registry merge below includes
-    # DEFERRED_QUERIES).
+    # every new operator class carries a tracked number.
     "item_kcore_membership",
     "embedding_top_eigenvector",
     "session_survival_curve",
@@ -188,7 +186,7 @@ BENCH_QUERIES = (
     "corpus_bigram_llr",
     "doc_blocklist_filter",
     "pit_staleness_audit",
-    # round 9b (round-10-queue deferred, benchmarkable): k-group rank
+    # round 9b: k-group rank
     # test (shared rank machinery), internal cluster validity,
     # 1-NN label noise probe (broadcast NLJ all-pairs), calibration
     # ECE, recsys aggregate diversity, Simpson aggregation-bias
@@ -359,7 +357,7 @@ def _calibrate(spark, sf_dir: str) -> tuple[float, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
-    qs = {**registry.queries(), **registry.DEFERRED_QUERIES}
+    qs = registry.queries()
 
     # Warm up: JIT-compile the query paths once at the smallest SF so
     # measurements reflect steady-state execution, not first-call
@@ -367,11 +365,20 @@ def main() -> None:
     # one-time JVM cost).
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
+        warm_failed = []
         for name in BENCH_QUERIES:
             try:
                 qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+            except Exception as e:
+                warm_failed.append(name)
+                msg = " ".join(str(e).split())[:200]
+                print(f"warm-up failed: {name}: {type(e).__name__}: {msg}", file=sys.stderr)
+        if warm_failed:
+            print(
+                f"warm-up: {len(warm_failed)}/{len(BENCH_QUERIES)} queries failed: "
+                + ", ".join(warm_failed),
+                file=sys.stderr,
+            )
     else:
         spark.read.parquet(f"{sf_dir}/region.parquet").count()
 

@@ -1614,7 +1614,6 @@ def order_value_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_activity_entropy",
-    defer=True,
     oracle="""
     WITH c AS (
         SELECT user_id, event_type, COUNT(*) AS c
@@ -1679,7 +1678,6 @@ _GINI_BUCKET = 1000
 
 @register(
     "acctbal_gini_by_segment",
-    defer=True,
     oracle="""
     WITH q AS (
         SELECT c_mktsegment AS segment,
@@ -1772,7 +1770,6 @@ def acctbal_gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "monthly_revenue_gap_fill",
-    defer=True,
     oracle="""
     WITH m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
@@ -1860,7 +1857,6 @@ def monthly_revenue_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_seasonal_decomposition",
-    defer=True,
     oracle="""
     WITH m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
@@ -1957,7 +1953,6 @@ def revenue_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "part_price_size_skyline",
-    defer=True,
     oracle="""
     WITH g AS (
         SELECT p_retailprice AS price, MAX(p_size) AS gmax
@@ -2068,7 +2063,7 @@ def _acf_oracle() -> str:
     """
 
 
-@register("event_daily_autocorrelation", defer=True, oracle=_acf_oracle())
+@register("event_daily_autocorrelation", oracle=_acf_oracle())
 def event_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample autocorrelation function of the per-type daily event
     count series at lags 1..{maxlag} — the standing seasonality probe
@@ -2197,7 +2192,7 @@ def _ewma_oracle() -> str:
     """
 
 
-@register("revenue_ewma_trend", defer=True, oracle=_ewma_oracle())
+@register("revenue_ewma_trend", oracle=_ewma_oracle())
 def revenue_ewma_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of monthly revenue
     (decay 0.7, {span}-term window — pandas ``ewm(alpha=0.3,
@@ -2255,7 +2250,6 @@ revenue_ewma_trend.__doc__ = revenue_ewma_trend.__doc__.format(
 
 @register(
     "concurrent_sessions_daily",
-    defer=True,
     oracle="""
     WITH x AS (
         SELECT user_id, ts, event_id,
@@ -2444,7 +2438,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@register("item_kcore_membership", defer=True, oracle=_kcore_oracle())
+@register("item_kcore_membership", oracle=_kcore_oracle())
 def item_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{k}-core of the item co-occurrence graph (same edges as
     :func:`item_pagerank`: items sharing >= {sup} orders): the maximal
@@ -2591,7 +2585,7 @@ def _lpa_oracle() -> str:
     """
 
 
-@register("item_label_propagation", defer=True, oracle=_lpa_oracle())
+@register("item_label_propagation", oracle=_lpa_oracle())
 def item_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection over the item co-occurrence graph by
     synchronous label propagation (Raghavan et al. 2007), made fully
@@ -2798,7 +2792,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_survival_curve",
-    defer=True,
     oracle="""
     WITH x AS (
         SELECT user_id, ts, event_id,
@@ -2958,7 +2951,6 @@ def session_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_changepoint_scan",
-    defer=True,
     oracle="""
     WITH m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
@@ -3084,7 +3076,6 @@ def revenue_changepoint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_revenue_abc_classes",
-    defer=True,
     oracle="""
     WITH per_part AS (
         SELECT l_partkey,
@@ -3182,7 +3173,6 @@ def part_revenue_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_trend_regression",
-    defer=True,
     oracle="""
     WITH m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
@@ -3342,7 +3332,7 @@ def _rec_oracle() -> str:
     """
 
 
-@register("rec_popularity_ndcg", defer=True, oracle=_rec_oracle())
+@register("rec_popularity_ndcg", oracle=_rec_oracle())
 def rec_popularity_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline recommender evaluation on a temporal split: the
     popularity baseline (top-{k} parts by distinct-order count before
@@ -3455,7 +3445,6 @@ def rec_popularity_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_activity_streaks",
-    defer=True,
     oracle="""
     WITH days AS (
         SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
@@ -3553,7 +3542,6 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_mann_kendall",
-    defer=True,
     oracle="""
     WITH m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,
@@ -3691,7 +3679,6 @@ def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "daily_revenue_runs_test",
-    defer=True,
     oracle="""
     WITH d AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
@@ -3804,7 +3791,6 @@ def daily_revenue_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "discount_quantity_elasticity",
-    defer=True,
     oracle="""
     WITH x AS (
         SELECT p.p_brand AS brand,
@@ -3900,7 +3886,6 @@ def discount_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cohort_ltv_curve",
-    defer=True,
     oracle="""
     WITH firstseen AS (
         SELECT user_id,
@@ -4011,7 +3996,6 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "supply_concentration_hhi",
-    defer=True,
     oracle="""
     WITH per_supp AS (
         SELECT p.p_type AS part_type, l.l_suppkey AS supp,
@@ -4115,7 +4099,6 @@ _RA_TOPK = 20
 
 @register(
     "item_ra_link_prediction",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id
@@ -4223,7 +4206,6 @@ _SAX_ALPHABET = 4
 
 @register(
     "daily_revenue_sax",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
@@ -4321,7 +4303,6 @@ _MIGRATION_TERCILES = 3
 
 @register(
     "customer_segment_migration",
-    defer=True,
     oracle=f"""
     WITH spend AS (
         SELECT o_custkey AS cust,
@@ -4419,7 +4400,6 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "funnel_conversion_ztest",
-    defer=True,
     oracle="""
     WITH e AS (
         SELECT user_id, event_type, ts FROM events WHERE user_id IS NOT NULL
@@ -4541,7 +4521,6 @@ def funnel_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "robust_order_value_stats",
-    defer=True,
     oracle="""
     WITH r AS (
         SELECT c.c_mktsegment AS segment,
@@ -4622,7 +4601,6 @@ _CHURN_MIN_SUPPORT = 2
 
 @register(
     "cobuy_edge_churn",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l.l_orderkey AS order_id, l.l_partkey AS item_id,
@@ -4735,7 +4713,6 @@ def cobuy_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cobuy_degree_assortativity",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id
@@ -4820,7 +4797,6 @@ def cobuy_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "markov_entropy_rate",
-    defer=True,
     oracle=f"""
     WITH e AS (
         SELECT user_id, ts, event_id, event_type FROM events
@@ -4946,7 +4922,6 @@ def _pois_w_sql(lam: str, k: str) -> str:
 
 @register(
     "basket_size_poisson_gof",
-    defer=True,
     oracle=f"""
     WITH b AS (
         SELECT l_orderkey, CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS k
@@ -5056,7 +5031,6 @@ def basket_size_poisson_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "acctbal_revenue_spearman",
-    defer=True,
     oracle="""
     WITH cust AS (
         SELECT c.c_custkey AS cust,
@@ -5163,7 +5137,6 @@ def acctbal_revenue_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "segment_priority_association",
-    defer=True,
     oracle="""
     WITH t AS (
         SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
@@ -5259,7 +5232,6 @@ def segment_priority_association(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "returnflag_anova_ftest",
-    defer=True,
     oracle="""
     WITH g AS (
         SELECT l_returnflag,
@@ -5504,7 +5476,6 @@ _REC_COV_K = 5
 
 @register(
     "rec_coverage_gini",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id
@@ -5643,7 +5614,6 @@ rec_coverage_gini.__doc__ = rec_coverage_gini.__doc__.format(k=_REC_COV_K)
 
 @register(
     "discount_simpson_paradox_audit",
-    defer=True,
     oracle="""
     WITH x AS (
         SELECT p.p_brand AS brand,
@@ -5789,7 +5759,6 @@ def discount_simpson_paradox_audit(
 
 @register(
     "daily_revenue_chow_test",
-    defer=True,
     oracle="""
     WITH d AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
@@ -5964,7 +5933,6 @@ def daily_revenue_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_backlog_littles_law",
-    defer=True,
     oracle="""
     WITH o AS (
         SELECT o.o_orderkey,
@@ -6203,7 +6171,6 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cobuy_community_conductance",
-    defer=True,
     oracle=f"""
     WITH {_lpa_cte()},
     lab AS (SELECT item_id, label FROM l{_LPA_ROUNDS}),
@@ -6312,7 +6279,6 @@ def cobuy_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rec_novelty_by_rank",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id
@@ -6444,7 +6410,6 @@ _BT_SEASON = 7
 
 @register(
     "daily_revenue_forecast_backtest",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT date_trunc('day', o_orderdate) AS day,
@@ -6642,7 +6607,6 @@ def _boot_powa_sql() -> str:
 
 @register(
     "order_value_bootstrap_ci",
-    defer=True,
     oracle=f"""
     WITH o AS (
         SELECT o_orderkey,
@@ -6848,7 +6812,6 @@ _MED_CI_Z = 1.959964
 
 @register(
     "order_value_median_ci",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT CAST(o_totalprice AS DECIMAL(12,2)) AS v, o_orderkey
@@ -6909,45 +6872,34 @@ def order_value_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(12,2)").alias("v"), "o_orderkey"
     )
 
-    def _rank_exprs(n):
-        nd = n.cast("double")
-        lo = F.greatest(
+    # One set of rank Columns over ranked_select's group total drives
+    # both the chunk selection and the picks below, so the two can
+    # never disagree.
+    n = F.col("n_rows")
+    nd = n.cast("double")
+    ranks = {
+        "med_lo_rank": (((n + 1) - (n + 1) % 2) / 2).cast("bigint"),
+        "med_hi_rank": (((n + 2) - (n + 2) % 2) / 2).cast("bigint"),
+        "lo_rank": F.greatest(
             F.lit(1).cast("bigint"),
             F.floor((nd - _MED_CI_Z * F.sqrt(nd)) / 2).cast("bigint"),
-        )
-        hi = F.least(
+        ),
+        "hi_rank": F.least(
             n,
             F.ceil((nd + _MED_CI_Z * F.sqrt(nd)) / 2).cast("bigint") + 1,
-        )
-        m_lo = (((n + 1) - (n + 1) % 2) / 2).cast("bigint")
-        m_hi = (((n + 2) - (n + 2) % 2) / 2).cast("bigint")
-        return F.array(m_lo, m_hi, lo, hi)
-
+        ),
+    }
     # r14 optimization: the consumer keeps only FOUR order statistics,
     # so route through ranked_select — the chunk-count pass locates
     # the target ranks and only the chunks containing them are sorted
     # (bit-identical rows to ranked()+filter; see ranking.py).
-    r = ranked_select(o, [("v", "asc"), ("o_orderkey", "asc")], _rank_exprs)
-    n = F.col("n_rows")
-    nd = n.cast("double")
-    lo_rank = F.greatest(
-        F.lit(1).cast("bigint"),
-        F.floor((nd - _MED_CI_Z * F.sqrt(nd)) / 2).cast("bigint"),
+    r = ranked_select(
+        o,
+        [("v", "asc"), ("o_orderkey", "asc")],
+        lambda _n: F.array(*ranks.values()),
     )
-    hi_rank = F.least(
-        n,
-        F.ceil((nd + _MED_CI_Z * F.sqrt(nd)) / 2).cast("bigint") + 1,
-    )
-    med_lo = ((n + 1) - (n + 1) % 2) / 2
-    med_hi = ((n + 2) - (n + 2) % 2) / 2
     k = r.select(
-        "v",
-        "rn",
-        n.alias("n"),
-        lo_rank.alias("lo_rank"),
-        hi_rank.alias("hi_rank"),
-        med_lo.cast("bigint").alias("med_lo_rank"),
-        med_hi.cast("bigint").alias("med_hi_rank"),
+        "v", "rn", n.alias("n"), *(c.alias(a) for a, c in ranks.items())
     )
     return k.agg(
         F.max("n").cast("bigint").alias("n"),
@@ -6978,7 +6930,6 @@ _CONF_ALPHA = 0.1
 
 @register(
     "order_value_conformal_interval",
-    defer=True,
     oracle=f"""
     WITH o AS (
         SELECT o_orderkey, o_orderpriority AS prio,
@@ -7140,7 +7091,6 @@ _HILL_K = 200
 
 @register(
     "event_value_hill_tail_index",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT value, event_id FROM events
@@ -7246,7 +7196,6 @@ _EMB_MIN_SUPPORT = 2
 
 @register(
     "cobuy_edge_embeddedness",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id
@@ -7370,7 +7319,6 @@ _TS_Z = 1.959964
 
 @register(
     "daily_revenue_theil_sen",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT CAST(date_trunc('day', CAST(o_orderdate AS DATE)) AS DATE)
@@ -7506,18 +7454,16 @@ def daily_revenue_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(18.0)
     )
 
-    def _rank_exprs(np_):
-        k_lo = F.greatest(
-            F.lit(1).cast("bigint"),
-            F.floor((np_ - c) / 2).cast("bigint"),
-        )
-        k_hi = F.least(np_, F.ceil((np_ + c) / 2).cast("bigint") + 1)
-        return F.array(
-            F.expr("(np + 1) div 2"),
-            F.expr("np div 2 + 1"),
-            k_lo,
-            k_hi,
-        )
+    # One set of rank Columns over ranked_select's pair total "np"
+    # drives both the chunk selection and the picks below.
+    np_ = F.col("np")
+    med_lo = F.expr("(np + 1) div 2")
+    med_hi = F.expr("np div 2 + 1")
+    k_lo = F.greatest(
+        F.lit(1).cast("bigint"),
+        F.floor((np_ - c) / 2).cast("bigint"),
+    )
+    k_hi = F.least(np_, F.ceil((np_ + c) / 2).cast("bigint") + 1)
 
     # r14 optimization: only the median pair and Sen's two CI ranks
     # are consumed — ranked_select sorts just the chunks holding
@@ -7527,22 +7473,12 @@ def daily_revenue_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = ranked_select(
         pairs,
         [("slope", "asc"), ("pair_id", "asc")],
-        _rank_exprs,
+        lambda _n: F.array(med_lo, med_hi, k_lo, k_hi),
         rn_col="rn",
         n_col="np",
         extra=nd,
     )
-    k_lo = F.greatest(
-        F.lit(1).cast("bigint"),
-        F.floor((F.col("np") - c) / 2).cast("bigint"),
-    )
-    k_hi = F.least(
-        F.col("np"),
-        F.ceil((F.col("np") + c) / 2).cast("bigint") + 1,
-    )
-    med_rank = (F.col("rn") == F.expr("(np + 1) div 2")) | (
-        F.col("rn") == F.expr("np div 2 + 1")
-    )
+    med_rank = (F.col("rn") == med_lo) | (F.col("rn") == med_hi)
     s = r.crossJoin(F.broadcast(nd)).agg(
         F.max("np").alias("np"),
         F.max("n_days").alias("n_days"),
@@ -7586,7 +7522,6 @@ def _hits_iter_sql(i: int) -> str:
 
 @register(
     "item_hits_authority",
-    defer=True,
     oracle=f"""
     WITH e AS (
         SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS i
@@ -7702,7 +7637,6 @@ _PERM_SEGS = ("MACHINERY", "AUTOMOBILE")
 
 @register(
     "order_value_permutation_test",
-    defer=True,
     oracle=f"""
     WITH base AS MATERIALIZED (
         SELECT o_orderkey,
@@ -7955,7 +7889,6 @@ def _als_solve_sql(a11: str, a12: str, a22: str, b1: str, b2: str) -> str:
 
 @register(
     "item_implicit_als_epoch",
-    defer=True,
     oracle=f"""
     WITH r AS MATERIALIZED (
         SELECT DISTINCT o_custkey AS u, l_partkey AS i
@@ -8201,7 +8134,6 @@ _IJ_MIN_SUPPORT = 2
 
 @register(
     "item_cobuy_jaccard_topk",
-    defer=True,
     oracle=f"""
     WITH basket AS (
         SELECT DISTINCT l_orderkey AS order_id, l_partkey AS item_id

@@ -661,7 +661,6 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_value_locf_interpolation",
-    defer=True,
     oracle="""
     WITH obs AS (
         SELECT user_id, day, value
@@ -856,7 +855,6 @@ def asof_join_nearest(
 
 @register(
     "pit_nearest_join",
-    defer=True,
     oracle=f"""
     WITH {HOURLY_FEATURES_SQL_CTE},
     entity AS (
@@ -933,7 +931,6 @@ _BT_RECEIPT_LAG_DAYS = 14
 
 @register(
     "bitemporal_customer_features",
-    defer=True,
     oracle=f"""
     WITH known AS (
         SELECT o.o_orderkey AS k, o.o_custkey AS cust,
@@ -1183,7 +1180,6 @@ _HORIZON_SWEEP_S = (3600, 21600, 86400, 259200)
 
 @register(
     "label_horizon_sweep",
-    defer=True,
     oracle=f"""
     WITH {_ENTITY_SQL_CTE},
     conv AS (

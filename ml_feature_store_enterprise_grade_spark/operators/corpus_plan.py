@@ -723,7 +723,6 @@ def _hrw_case_sql() -> tuple[str, str]:
 
 @register(
     "doc_shard_rendezvous",
-    defer=True,
     oracle=f"""
     WITH g AS ({_hrw_case_sql()[0]}),
     a AS (
@@ -805,7 +804,6 @@ _SHARD_CUT_SEED = 9300
 
 @register(
     "training_shard_cut_plan",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
@@ -907,7 +905,6 @@ _RANGE_PARTS = 8
 
 @register(
     "range_partition_balance_plan",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS n
@@ -1022,7 +1019,6 @@ def range_partition_balance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sequence_packing_efficiency",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT doc_id,
@@ -1256,7 +1252,7 @@ def _bloom_oracle() -> str:
     """
 
 
-@register("bloom_filter_sizing_advisor", defer=True, oracle=_bloom_oracle())
+@register("bloom_filter_sizing_advisor", oracle=_bloom_oracle())
 def bloom_filter_sizing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter sizing advisor for the engine's join-key columns:
     exact NDV per candidate key, then the standard optimal sizing at
@@ -1364,7 +1360,6 @@ _RESHARD_EXP_HRW_E6 = 111111
 
 @register(
     "shard_reshard_movement_audit",
-    defer=True,
     oracle=f"""
     WITH h AS (
         SELECT {PORTABLE_HASH64_SQL("CAST(doc_id AS VARCHAR)", _RESHARD_MOD_SEED)} AS hm,
@@ -1473,7 +1468,6 @@ _TEMP_SWEEP_KS = (1, 2, 3)
 
 @register(
     "mixture_temperature_sweep",
-    defer=True,
     oracle=f"""
     WITH s AS MATERIALIZED (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -1611,7 +1605,6 @@ _SHUF_EPOCH_SEED = 31
 
 @register(
     "epoch_shuffle_quality_audit",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT doc_id, lang,

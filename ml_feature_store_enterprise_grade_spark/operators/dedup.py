@@ -2443,7 +2443,6 @@ _HARDNEG_TOPK = 50
 
 @register(
     "hard_negative_pairs",
-    defer=True,
     oracle=f"""
     WITH {_SHINGLES_SQL_CTE},
     sig AS (
@@ -2531,7 +2530,6 @@ def hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dup_cluster_language_purity",
-    defer=True,
     oracle=f"""
     WITH RECURSIVE {_CLUSTER_LABEL_SQL_CTES},
     sized AS (
@@ -2603,7 +2601,6 @@ def dup_cluster_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dup_pair_source_matrix",
-    defer=True,
     oracle=f"""
     WITH RECURSIVE {_CLUSTER_LABEL_SQL_CTES},
     pm AS (
@@ -2724,7 +2721,6 @@ def dup_pair_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_transitivity_audit",
-    defer=True,
     oracle=f"""
     WITH RECURSIVE {_CLUSTER_LABEL_SQL_CTES},
     ded_e AS (SELECT DISTINCT a, b FROM e0),
@@ -2996,7 +2992,6 @@ minhash_jaccard_error_audit.__doc__ = minhash_jaccard_error_audit.__doc__.format
 
 @register(
     "dedup_method_agreement",
-    defer=True,
     oracle=f"""
     WITH {_SHINGLES_SQL_CTE},
     tok AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS token FROM nd),
@@ -3205,7 +3200,6 @@ dedup_method_agreement.__doc__ = dedup_method_agreement.__doc__.format(
 
 @register(
     "dedup_survivor_policy_audit",
-    defer=True,
     oracle=f"""
     WITH RECURSIVE {_CLUSTER_LABEL_SQL_CTES},
     sz AS (SELECT cluster_id, COUNT(*) AS n FROM lbl GROUP BY 1),
@@ -3357,7 +3351,6 @@ _PPJ_TAU_DEN = 10
 
 @register(
     "jaccard_prefix_filter_join",
-    defer=True,
     oracle=f"""
     WITH nd AS (
         SELECT doc_id, {NORMALIZE_TEXT_SQL("text")} AS norm FROM documents
@@ -3533,7 +3526,6 @@ def _fs_w_sql(cm: str, nm: str, cu: str, nu: str) -> str:
 
 @register(
     "fellegi_sunter_weights",
-    defer=True,
     oracle=f"""
     WITH {_SHINGLES_SQL_CTE},
     sig AS MATERIALIZED (

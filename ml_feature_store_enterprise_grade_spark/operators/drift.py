@@ -950,7 +950,6 @@ def event_value_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "event_value_kruskal_wallis",
-    defer=True,
     oracle=f"""
     WITH {_RANK_CTES},
     q AS (
@@ -1065,7 +1064,6 @@ _QSHIFT_QS = tuple(round(0.1 * i, 1) for i in range(1, 10))
 
 @register(
     "drift_quantile_shift",
-    defer=True,
     oracle=f"""
     WITH s AS (
         SELECT event_type AS feature,
@@ -1178,7 +1176,6 @@ _FDR_BUCKETS = 256
 
 @register(
     "order_value_drift_fdr",
-    defer=True,
     oracle=f"""
     WITH s AS (
         SELECT c.c_nationkey AS feature, o.o_totalprice AS x,

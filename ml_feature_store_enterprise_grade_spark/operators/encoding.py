@@ -575,7 +575,6 @@ _QN_BUCKETS = 10
 
 @register(
     "event_value_quantile_normalization",
-    defer=True,
     oracle=f"""
     WITH q AS (
         SELECT event_type, event_id,
@@ -672,7 +671,6 @@ def event_value_quantile_normalization(spark: SparkSession, sf_dir: str) -> Data
 
 @register(
     "feature_information_gain",
-    defer=True,
     oracle="""
     WITH lab AS (
         SELECT c.c_custkey,
@@ -821,7 +819,6 @@ _CALIB_BINS = 10
 
 @register(
     "purchase_propensity_calibration",
-    defer=True,
     oracle=f"""
     WITH p1 AS (
         SELECT user_id,

@@ -424,7 +424,6 @@ _DECAY_ORACLE = f"""
 
 @register(
     "user_decay_features",
-    defer=True,
     oracle=_DECAY_ORACLE,
 )
 def user_decay_features(spark: SparkSession, sf_dir: str) -> DataFrame:

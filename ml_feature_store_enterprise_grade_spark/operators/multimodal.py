@@ -793,7 +793,6 @@ def image_byte_histogram(df: DataFrame) -> DataFrame:
 
 @register(
     "multimodal_image_entropy",
-    defer=True,
     oracle=f"""
     WITH px AS (
         SELECT doc_id, {_PPM_HEX_SQL} AS hex FROM documents
@@ -929,7 +928,6 @@ def audio_silence_runs(df: DataFrame) -> DataFrame:
 
 @register(
     "multimodal_audio_silence_runs",
-    defer=True,
     oracle=f"""
     WITH hx AS (
         SELECT doc_id, {_PPM_HEX_SQL} AS hex FROM documents
@@ -1070,7 +1068,6 @@ def _ppm_grad_sql(vertical: bool) -> str:
 
 @register(
     "multimodal_image_edge_density",
-    defer=True,
     oracle=f"""
     WITH px AS (
         SELECT doc_id, {_PPM_HEX_SQL} AS hex FROM documents

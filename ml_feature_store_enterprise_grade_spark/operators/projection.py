@@ -492,7 +492,6 @@ _WINSOR_LEVELS = ("p90", "p95", "p99", "none")
 
 @register(
     "event_value_winsorize_sweep",
-    defer=True,
     oracle="""
     WITH v AS (
         SELECT value FROM events
@@ -614,7 +613,6 @@ _BOTTOMK_SEED = 29
 
 @register(
     "consistent_sample_bottomk",
-    defer=True,
     oracle=f"""
     WITH h AS (
         SELECT lang, doc_id, n_chars,

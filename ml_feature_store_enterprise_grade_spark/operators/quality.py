@@ -684,7 +684,7 @@ def _benford_oracle() -> str:
     """
 
 
-@register("benford_digit_audit", defer=True, oracle=_benford_oracle())
+@register("benford_digit_audit", oracle=_benford_oracle())
 def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit conformance of order totals, per
     priority class: observed leading-digit counts and shares against
@@ -798,7 +798,7 @@ def _ab_oracle() -> str:
     """
 
 
-@register("ab_assignment_srm_audit", defer=True, oracle=_ab_oracle())
+@register("ab_assignment_srm_audit", oracle=_ab_oracle())
 def ab_assignment_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-bucket experiment assignment with a
     sample-ratio-mismatch (SRM) audit — the first gate every
@@ -1041,7 +1041,6 @@ _DPH_THRESH_E9 = _dlap_thresholds_e9()
            CAST(GREATEST(true_n + noise, 0) AS BIGINT) AS released_nonneg
     FROM n
     """,
-    defer=True,
 )
 def dp_histogram_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private histogram RELEASE — the mechanism step
@@ -1104,7 +1103,6 @@ def dp_histogram_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "online_offline_skew_audit",
-    defer=True,
     oracle="""
     WITH t AS (
         SELECT date_trunc('hour', MAX(ts)) AS t2,
@@ -1245,7 +1243,6 @@ def online_offline_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cross_table_consistency_audit",
-    defer=True,
     oracle="""
     WITH checks AS (
         SELECT 'orders.o_custkey -> customer' AS check_name,
@@ -1515,7 +1512,6 @@ def _fk_profile_sql(fact: str, key: str, dim: str) -> str:
 
 @register(
     "fk_join_skew_advisor",
-    defer=True,
     oracle=" UNION ALL ".join(
         _fk_profile_sql(f, k, d) for f, k, d in _FK_RELATIONS
     ),
@@ -1751,7 +1747,6 @@ def _ladder_level_sql(level: int, desc: str, cols: tuple) -> str:
 
 @register(
     "anonymity_generalization_ladder",
-    defer=True,
     oracle=" UNION ALL ".join(
         _ladder_level_sql(lv, d, c) for lv, d, c in _QI_LADDER
     ),
@@ -1837,7 +1832,6 @@ _DISP_TOPK = 20
 
 @register(
     "part_price_dispersion_audit",
-    defer=True,
     oracle=f"""
     WITH u AS (
         SELECT l_partkey,
@@ -1996,7 +1990,6 @@ def _fd_profile_sql(tab: str, lhs: str, rhs: str) -> str:
 
 @register(
     "approximate_fd_audit",
-    defer=True,
     oracle=" UNION ALL ".join(
         _fd_profile_sql(t, l, r) for t, l, r in _FD_CANDIDATES
     ),
@@ -2075,7 +2068,6 @@ _T_CLOSENESS_DEN = 10
 
 @register(
     "t_closeness_audit",
-    defer=True,
     oracle=f"""
     WITH b AS (
         SELECT c_nationkey, c_mktsegment,
@@ -2210,7 +2202,6 @@ _SALTED_JOIN_FANOUT = 8
 
 @register(
     "skew_resilient_distinct_rollup",
-    defer=True,
     oracle="""
     SELECT event_type,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
@@ -2260,7 +2251,6 @@ def skew_resilient_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "salted_enrichment_join",
-    defer=True,
     oracle="""
     WITH dim AS (
         SELECT user_id,
@@ -2333,7 +2323,6 @@ _DPM_SEED = 9500
 
 @register(
     "dp_median_release",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT event_type,

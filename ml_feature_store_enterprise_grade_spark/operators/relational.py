@@ -1579,7 +1579,6 @@ def local_supply_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "part_name_fuzzy_links",
-    defer=True,
     oracle="""
     WITH names AS (
         SELECT p_name,
@@ -1645,7 +1644,6 @@ def part_name_fuzzy_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "supplier_acctbal_ntile",
-    defer=True,
     oracle="""
     WITH q AS (
         SELECT n.n_name,
@@ -1705,7 +1703,6 @@ _DIV_PER_CUSTOMER = 2
 
 @register(
     "top_orders_diversified",
-    defer=True,
     oracle=f"""
     WITH capped AS (
         SELECT o_orderkey, o_custkey,

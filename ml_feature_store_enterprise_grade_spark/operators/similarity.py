@@ -1603,7 +1603,6 @@ def pca_whitening(spark: SparkSession, sf_dir: str, energy: float = 0.95):
 
 @register(
     "embedding_effective_rank",
-    defer=True,
     oracle=f"""
     WITH cov AS ({_EMB_COV_ORACLE}),
     agg AS (
@@ -1943,7 +1942,6 @@ _PQ_RECON_SQL = f"""CASE WHEN st.hi = st.lo THEN st.lo
 
 @register(
     "embedding_pq_adc_recall",
-    defer=True,
     oracle=f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -2359,7 +2357,7 @@ def _km_assign(cents: list[tuple[int, list[int], int]]) -> Column:
     return F.array_min(F.array(*_km_dist_structs(cents)))
 
 
-@register("embedding_kmeans", defer=True, oracle=_km_oracle())
+@register("embedding_kmeans", oracle=_km_oracle())
 def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means (k={k}, {t} assignment rounds) over the
     embedding corpus, bit-deterministic in both engines: per-cluster
@@ -2518,7 +2516,7 @@ def _eig_oracle() -> str:
     """
 
 
-@register("embedding_top_eigenvector", defer=True, oracle=_eig_oracle())
+@register("embedding_top_eigenvector", oracle=_eig_oracle())
 def embedding_top_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant eigenvector of the embedding scatter matrix by {t}
     power-iteration rounds, bit-deterministic end to end — the first
@@ -2638,7 +2636,6 @@ _JL_MAX_ABS = 30.0
 
 @register(
     "embedding_jl_distortion",
-    defer=True,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, label, i - 1 AS i,
@@ -2746,7 +2743,6 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_centroid_drift",
-    defer=True,
     oracle="""
     WITH q AS (
         SELECT vec_id % 2 AS half, label, i - 1 AS dim,
@@ -3189,7 +3185,7 @@ def _silhouette_oracle() -> str:
     """
 
 
-@register("embedding_silhouette", defer=True, oracle=_silhouette_oracle())
+@register("embedding_silhouette", oracle=_silhouette_oracle())
 def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid) silhouette of the deterministic Lloyd
     fit — the INTERNAL validity score next to
@@ -3258,7 +3254,6 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_knn_label_accuracy",
-    defer=True,
     oracle=f"""
     WITH s AS (
         SELECT a.vec_id AS qid, a.label AS lab,
@@ -3362,7 +3357,6 @@ _HUB_K = 5
 
 @register(
     "embedding_hubness_audit",
-    defer=True,
     oracle=f"""
     WITH s AS (
         SELECT a.vec_id AS qid,
@@ -3503,7 +3497,6 @@ _DPROF_SEED = 17
 
 @register(
     "embedding_distance_profile",
-    defer=True,
     oracle=f"""
     WITH h AS (
         SELECT vec_id, embedding,
@@ -3829,7 +3822,6 @@ def _mmr_step_sql(i: int) -> str:
 
 @register(
     "mmr_diversified_topk",
-    defer=True,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, embedding FROM embeddings

@@ -1378,7 +1378,6 @@ _PRF_EPS = 1e-6
 
 @register(
     "bm25_prf_expansion",
-    defer=True,
     oracle=f"""
     WITH {_BM25_SCORED_SQL_CTES},
     rel AS (
@@ -1506,7 +1505,6 @@ _LMD_TOPK = 20
 
 @register(
     "lm_dirichlet_search_topk",
-    defer=True,
     oracle=f"""
     WITH nd AS (
         SELECT doc_id, {NORMALIZE_TEXT_SQL("text")} AS norm FROM documents
@@ -1860,7 +1858,6 @@ _WINNOW_MAX_DF = 50
 
 @register(
     "doc_winnowing_matches",
-    defer=True,
     oracle=f"""
     WITH {_WINNOW_FP_SQL_CTES},
     d AS (SELECT DISTINCT doc_id, fph FROM fp),
@@ -1948,7 +1945,6 @@ _RAKE_TOP_K = 20
 
 @register(
     "doc_rake_keyphrases",
-    defer=True,
     oracle=f"""
     WITH toks AS MATERIALIZED (
         SELECT doc_id, pos, w,
@@ -2131,7 +2127,6 @@ doc_rake_keyphrases.__doc__ = doc_rake_keyphrases.__doc__.format(
 
 @register(
     "vocab_zipf_fit",
-    defer=True,
     oracle=f"""
     WITH vocab AS (
         SELECT w, COUNT(*) AS freq
@@ -2299,7 +2294,7 @@ def _bpe_oracle() -> str:
     """
 
 
-@register("bpe_merge_learning", defer=True, oracle=_bpe_oracle())
+@register("bpe_merge_learning", oracle=_bpe_oracle())
 def bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first {n} byte-pair-encoding merges from the corpus
     (Sennrich, Haddow & Birch 2016 — the tokenizer-training step of
@@ -2404,7 +2399,6 @@ def bpe_merge_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_ablation_report",
-    defer=True,
     oracle=f"""
     WITH d AS (
         SELECT source, n_chars,
@@ -2531,7 +2525,6 @@ _LEX_EPS = 1e-06
 
 @register(
     "corpus_lexical_drift",
-    defer=True,
     oracle=f"""
     WITH w AS (
         SELECT lang, doc_id % 2 AS half, t.w AS word
@@ -2712,7 +2705,6 @@ _PHRASE_TOPDOCS = 5
 
 @register(
     "phrase_search_topdocs",
-    defer=True,
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
@@ -2833,7 +2825,6 @@ def _lang_marker_count_sql(lang: str) -> str:
 
 @register(
     "doc_language_purity",
-    defer=True,
     oracle=f"""
     WITH m AS (
         SELECT doc_id, lang,
@@ -2910,7 +2901,6 @@ _DSIR_TARGET_LANG = "en"
 
 @register(
     "dsir_importance_weights",
-    defer=True,
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, lang, t.w AS word
@@ -3113,7 +3103,6 @@ def _unigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ccnet_perplexity_buckets",
-    defer=True,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang,
@@ -3207,7 +3196,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_concentration_curve",
-    defer=True,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, n_chars,
@@ -3311,7 +3299,6 @@ _CURRICULUM_CORE_DECI = 7
 
 @register(
     "corpus_token_budget_curriculum",
-    defer=True,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, unnest(string_split({NORMALIZE_TEXT_SQL("text")}, ' ')) AS tok
@@ -3840,7 +3827,6 @@ def doc_compression_ratio_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_filter_agreement",
-    defer=True,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, unnest(string_split({NORMALIZE_TEXT_SQL("text")}, ' ')) AS tok
@@ -4040,7 +4026,6 @@ def _rbo_li_sql() -> str:
 
 @register(
     "ranker_rbo_agreement",
-    defer=True,
     oracle=f"""
     WITH {_BM25_SCORED_SQL_CTES},
     a AS MATERIALIZED (

@@ -3,12 +3,25 @@
 Every operator from SURVEY.md §2 registers here as a named query —
 a ``(spark, sf_dir) -> DataFrame`` callable plus (when the semantics
 are ANSI-SQL-expressible) a DuckDB oracle SQL string over the same
-parquet tables.  ``__spark_entry__.py`` re-exports this registry to
-the verify driver.
+parquet tables, or a ``rows_only=`` reason why it has none.
+``__spark_entry__.py`` re-exports this registry to the verify driver.
+
+Ordering rule.  The verify driver oracle-checks the FIRST 50 entries
+of ``queries()`` and records each round's rows in
+``CORRECTNESS_r<N>.json`` at the repo root (next to this package).
+``queries()`` and ``oracles()`` list the registered names stable-sorted
+by the newest round ``N`` that has a row for the name; a name with no
+row sorts as round -1.  So never-checked names lead the window, then
+the longest-unchecked ones, and ties keep registration order.  With no
+CORRECTNESS file present the order is plain registration order.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import re
 import textwrap
 from collections.abc import Callable
 from importlib import import_module
@@ -20,127 +33,15 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: Queries registered with ``defer=True``: full local parity coverage
-#: (tests/test_oracle_parity.py sweeps them like any other), but kept
-#: OFF the driver surface until a window slot frees up — the first-50
-#: window must hold every never-checked driver-visible query, so new
-#: operators landing after the window fills wait here one round.
-#: Overflow queue (promote when a window slot frees; one name per
-#: line, format enforced by tests/test_registry.py):
-#   - stream_tws_purchase_stats (environment-gated on protobuf —
-#     permanently deferred in containers whose driver env lacks it)
-#   - order_value_permutation_test (round 14 queue)
-#   - consistent_sample_bottomk (round 14 queue)
-#   - ranker_rbo_agreement (round 14 queue)
-#   - mixture_temperature_sweep (round 14 queue)
-#   - epoch_shuffle_quality_audit (round 14 queue)
-#   - fellegi_sunter_weights (round 14 queue)
-#   - item_implicit_als_epoch (round 14 queue)
-#   - item_cobuy_jaccard_topk (round 14 queue)
-#   - stream_bottomk_sample (round 14 queue)
+#: Always empty; kept because perfbench/query_suite.py still merges them.
 DEFERRED_QUERIES: dict[str, QueryFn] = {}
 DEFERRED_ORACLES: dict[str, str] = {}
 
-#: Data-driven promotion: names listed here are promoted OUT of
-#: defer at registration time — ``register(defer=True)`` becomes a
-#: normal registration for them, so a round's promotion is ONE edit
-#: (fill this set + rebuild ``_FRONT``) instead of ~50 decorator
-#: edits across operator files.  Every promoted name must then sit in
-#: ``_FRONT`` (or be driver-checked) — the existing never-checked
-#: guard enforces that automatically; stale names are caught by
-#: tests/test_registry.py::test_promoted_names_are_registered.
-_PROMOTED: frozenset[str] = frozenset((
-    # round-13 promotions: the 8-name r13 queue (VERDICT r12 item 1).
-    "daily_revenue_theil_sen", "order_value_drift_fdr",
-    "item_hits_authority", "bloom_filter_sizing_advisor",
-    "dp_median_release", "stream_cusum_drift_monitor",
-    "mmr_diversified_topk", "shard_reshard_movement_audit",
-    "top_orders_diversified", "pit_nearest_join",
-    "bitemporal_customer_features", "user_activity_entropy",
-    "revenue_seasonal_decomposition", "part_price_size_skyline",
-    "event_daily_autocorrelation", "concurrent_sessions_daily",
-    "item_kcore_membership", "item_label_propagation",
-    "session_survival_curve", "revenue_changepoint_scan",
-    "part_revenue_abc_classes", "revenue_trend_regression",
-    "rec_popularity_ndcg", "revenue_mann_kendall",
-    "discount_quantity_elasticity", "supply_concentration_hhi",
-    "customer_segment_migration", "funnel_conversion_ztest",
-    "robust_order_value_stats", "cobuy_degree_assortativity",
-    "basket_size_poisson_gof", "acctbal_revenue_spearman",
-    "benford_digit_audit", "ab_assignment_srm_audit",
-    "doc_shard_rendezvous", "doc_winnowing_matches",
-    "doc_rake_keyphrases", "bpe_merge_learning",
-    "source_ablation_report", "corpus_lexical_drift",
-    "phrase_search_topdocs", "doc_language_purity",
-    "dsir_importance_weights", "ccnet_perplexity_buckets",
-    "quality_concentration_curve", "hard_negative_pairs",
-    "dup_cluster_language_purity", "embedding_kmeans",
-    "embedding_top_eigenvector", "embedding_jl_distortion",
-    "embedding_centroid_drift", "stream_dedup_within_watermark",
-    "stream_stream_left_outer_join",
-    # round-9 promotions: the 20-name r9 queue (VERDICT r8 item 3) —
-    # every one locally parity-green, now earning its first driver row.
-    "part_name_fuzzy_links", "supplier_acctbal_ntile",
-    "user_value_locf_interpolation", "event_value_quantile_normalization",
-    "acctbal_gini_by_segment", "monthly_revenue_gap_fill",
-    "revenue_ewma_trend", "user_activity_streaks",
-    "daily_revenue_runs_test", "cohort_ltv_curve",
-    "item_ra_link_prediction", "daily_revenue_sax",
-    "cobuy_edge_churn", "markov_entropy_rate",
-    "segment_priority_association", "vocab_zipf_fit",
-    "returnflag_anova_ftest", "feature_information_gain",
-    "online_offline_skew_audit", "cross_table_consistency_audit",
-    # round-10 promotions: the 15-name r10 queue (VERDICT r9 item 1) —
-    # every one locally parity-green, now earning its first driver row.
-    "embedding_silhouette", "event_value_kruskal_wallis",
-    "embedding_knn_label_accuracy", "purchase_propensity_calibration",
-    "rec_coverage_gini", "discount_simpson_paradox_audit",
-    "multimodal_image_entropy", "daily_revenue_chow_test",
-    "fk_join_skew_advisor", "orders_backlog_littles_law",
-    "embedding_hubness_audit", "dup_pair_source_matrix",
-    "dedup_transitivity_audit", "label_horizon_sweep",
-    "drift_quantile_shift",
-    # round-11 promotions: the 23-name r11 queue (VERDICT r10 item 1) —
-    # every one locally parity-green, now earning its first driver row.
-    "embedding_distance_profile",
-    "anonymity_generalization_ladder",
-    "multimodal_audio_silence_runs",
-    "event_value_winsorize_sweep",
-    "cobuy_community_conductance",
-    "dedup_method_agreement",
-    "rec_novelty_by_rank",
-    "stream_histogram_quantile_monitor",
-    "dedup_survivor_policy_audit",
-    "range_partition_balance_plan",
-    "part_price_dispersion_audit",
-    "embedding_effective_rank",
-    "embedding_pq_adc_recall",
-    "user_decay_features",
-    "approximate_fd_audit",
-    "t_closeness_audit",
-    "daily_revenue_forecast_backtest",
-    "order_value_bootstrap_ci",
-    "stream_decay_features",
-    "sequence_packing_efficiency",
-    "skew_resilient_distinct_rollup",
-    "salted_enrichment_join",
-    "jaccard_prefix_filter_join",
-    # round-12 promotions: the 13-name r12 queue (VERDICT r11 item 1) —
-    # every one locally parity-green, now earning its first driver row.
-    "corpus_token_budget_curriculum",
-    "training_shard_cut_plan",
-    "dp_histogram_release",
-    "order_value_median_ci",
-    "stream_dp_histogram_release",
-    "order_value_conformal_interval",
-    "multimodal_image_edge_density",
-    "lm_dirichlet_search_topk",
-    "event_value_hill_tail_index",
-    "bm25_prf_expansion",
-    "stream_conformal_coverage_monitor",
-    "cobuy_edge_embeddedness",
-    "quality_filter_agreement",
-))
+#: Names registered with an explicit ``rows_only=True`` justification
+#: (non-SQL-expressible: sketches, seeded sampling, pandas-UDF
+#: kernels, MLlib-backed approximations).  The driver runs a weaker
+#: rows-only check for these; everything else MUST carry an oracle.
+ROWS_ONLY: dict[str, str] = {}
 
 _OPERATOR_MODULES = (
     "ml_feature_store_enterprise_grade_spark.operators.feature_agg",
@@ -162,304 +63,30 @@ _OPERATOR_MODULES = (
     "ml_feature_store_enterprise_grade_spark.streaming.joins",
 )
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ROUND = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
 _loaded = False
-
-#: Driver-visibility rotation.  The verify driver oracle-checks only
-#: the FIRST 50 entries of ``queries()``; names listed here are moved
-#: to the front (in this order) so every query earns at least one
-#: green CORRECTNESS row across rounds.  Maintained per round: put
-#: (a) queries the driver has never checked, (b) queries whose
-#: semantics changed this round, and (c) newly added queries first;
-#: long-stable greens rotate to the tail.
-#:
-#: ROTATION POLICY (round math, VERDICT r7 item 8).  With ~256
-#: registered queries and a 50-row window, a full driver
-#: re-verification cycle takes ceil(256/50) ≈ 6 rounds if every slot
-#: rotated — but slots are shared with never-checked/changed/new
-#: names, which ALWAYS win a slot (correctness of something unproven
-#: beats re-proving something stable).  So the cadence is:
-#:   priority 1 — never-checked driver-visible names (must be 100%
-#:                of them; the register() guard enforces it);
-#:   priority 2 — names whose semantics or implementation changed
-#:                this round (their old green row is stale evidence);
-#:   priority 3 — remaining slots go to the OLDEST greens by
-#:                last-checked round (track via the per-round
-#:                CORRECTNESS files; tools/update_checked_names.py
-#:                prints which _FRONT entries are rotatable).
-#: Every query is ALSO swept locally per round by
-#: tests/test_oracle_parity.py and tools/parity.py at up to 3 scales
-#: — the driver row is independent confirmation, not the only
-#: evidence, which is what makes a ~6-round driver cadence sound.
-#: The headline bench (bench.py) is decoupled from this rotation: it
-#: keeps one representative per operator family, so dropping a
-#: long-stable green from the WINDOW never drops its family from the
-#: bench trend.
-#: ROUND-14 REBUILD CHECKLIST (do this first next round): (1) run
-#: ``python tools/update_checked_names.py`` to fold the 50 round-13
-#: window rows into ``_DRIVER_CHECKED``; (2) promote the overflow-
-#: comment queue names (the round-14 queue) into ``_PROMOTED`` (keep
-#: the prior rounds' names in the set — they are what keeps those
-#: registrations un-deferred) and rebuild ``_FRONT`` with them at the
-#: head; (3) delete them from the overflow comment; (4) remaining
-#: slots go to new round-14 queries then the OLDEST driver greens per
-#: the rotation policy above (run the tool — after r13 the oldest
-#: cohort is the 11 r6 leftovers: purchase_interarrival_stats,
-#: pyds_jsonl_roundtrip and the rest the tool prints, then the r7
-#: cohort); (5) at close, regenerate QUERIES.md with
-#: ``python tools/gen_query_index.py`` AND run the full-registry plan
-#: flag audit ``python tools/explain_all.py --audit`` (r13 item 4 —
-#: must exit 0: every flag either fixed or justified in
-#: PLAN_AUDIT_ALLOWLIST; it caught rec_coverage_gini the round it
-#: landed).
-_FRONT: tuple[str, ...] = (
-    # --- Round 13 window.  Head: the 8-name r13 queue (VERDICT r12
-    # item 1) — first driver rows for every remaining zero-evidence
-    # query.
-    "daily_revenue_theil_sen",
-    "order_value_drift_fdr",
-    "item_hits_authority",
-    "bloom_filter_sizing_advisor",
-    "dp_median_release",
-    "stream_cusum_drift_monitor",
-    "mmr_diversified_topk",
-    "shard_reshard_movement_audit",
-    # --- Changed this round (rotation priority 2 — old green rows
-    # are stale evidence): the unpartitioned row_number census
-    # family re-planned through TakeOrdered-re-rank / ranked()
-    # (VERDICT r12 item 2).
-    "doc_rake_keyphrases",
-    "rec_popularity_ndcg",
-    "vocab_zipf_fit",
-    # rec_coverage_gini: Gini rank re-planned through ranked() after
-    # the r13 full-registry plan audit flagged its partitionBy(lit(0))
-    # window (same class, found by the new tooling).
-    "rec_coverage_gini",
-    # --- Oldest driver greens (the r6 cohort, alphabetical prefix —
-    # rotation priority 3 per tools/update_checked_names.py; the
-    # 11 r6 names that did not fit stay first in line for r14).
-    "ann_ivf_topk",
-    "bm25_search_topk",
-    "corpus_dedup_pipeline",
-    "corpus_ngram_novelty",
-    "countmin_heavy_hitters",
-    "customer_order_distribution",
-    "customers_without_orders",
-    "daily_event_type_pivot",
-    "dedup_clusters",
-    "dedup_crossdoc_spans",
-    "dedup_incremental",
-    "discounted_bracket_revenue",
-    "dup_cluster_size_histogram",
-    "embedding_covariance",
-    "event_code_projection",
-    "event_props_variant",
-    "feature_correlation_matrix",
-    "feature_unpivot_long",
-    "histogram_quantile_rollup",
-    "hll_portable_distinct_rollup",
-    "idle_rich_customers",
-    "important_parts_share",
-    "item_pagerank",
-    "kmv_audience_overlap",
-    "l_diversity_audit",
-    "lsh_tuning_report",
-    "min_price_supplier_region",
-    "multimodal_decode_features",
-    "multimodal_frame_dedup",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "multimodal_sidecar_kv",
-    "nation_pair_trade",
-    "pricing_summary",
-    "priority_order_counts",
-    "profile_distribution_stats",
-    "promo_revenue_share",
-)
-
-#: Names with at least one driver CORRECTNESS row from a prior round
-#: (regenerate with ``python tools/update_checked_names.py`` after each
-#: round's CORRECTNESS_r*.json lands).  ``register()`` consults this at
-#: import time: a query that has never been driver-checked must either
-#: sit in ``_FRONT`` (inside the first-50 window) or be registered with
-#: ``defer=True`` — so the round-6 class of miss (new queries silently
-#: landing outside the window, shipping "claimed, not proven") fails
-#: loudly at import, not just in a pytest someone forgets to read.
-_DRIVER_CHECKED: frozenset[str] = frozenset((
-    "ab_assignment_srm_audit", "acctbal_gini_by_segment", "acctbal_revenue_spearman",
-    "activity_band_interval_join", "ann_cosine_topk", "ann_filtered_topk",
-    "ann_ivf_topk", "ann_probe_recall_curve", "anonymity_generalization_ladder",
-    "approximate_fd_audit", "basket_size_poisson_gof", "benford_digit_audit",
-    "bitemporal_customer_features", "bloom_prejoin_prune", "bm25_prf_expansion",
-    "bm25_search_topk", "bpe_merge_learning", "brand_bracket_revenue",
-    "calendar_features", "ccnet_perplexity_buckets", "cdc_merge_upsert",
-    "cobuy_community_conductance", "cobuy_degree_assortativity", "cobuy_edge_churn",
-    "cobuy_edge_embeddedness", "cohort_ltv_curve", "cohort_retention",
-    "concurrent_sessions_daily", "context_length_fit", "conversion_attribution",
-    "corpus_bigram_llr", "corpus_bigram_pmi", "corpus_contamination",
-    "corpus_data_card", "corpus_dedup_pipeline", "corpus_lang_stats",
-    "corpus_lexical_drift", "corpus_mixture_weights", "corpus_ngram_novelty",
-    "corpus_quality_filter", "corpus_sampling_plan", "corpus_token_budget_curriculum",
-    "corpus_top_bigrams", "countmin_heavy_hitters", "cross_table_consistency_audit",
-    "crossdoc_span_heavy_hitters", "crossdoc_span_trim", "customer_order_distribution",
-    "customer_segment_migration", "customers_without_orders", "daily_event_type_pivot",
-    "daily_revenue_chow_test", "daily_revenue_forecast_backtest", "daily_revenue_runs_test",
-    "daily_revenue_sax", "daily_revenue_variance_ratio", "dataset_split_assignment",
-    "dedup_clusters", "dedup_crossdoc_spans", "dedup_exact",
-    "dedup_incremental", "dedup_method_agreement", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_rate_by_lang", "dedup_simhash",
-    "dedup_simhash_pairs", "dedup_survivor_policy_audit", "dedup_transitivity_audit",
-    "dict_encoding_advisor", "discount_quantity_elasticity", "discount_simpson_paradox_audit",
-    "discounted_bracket_revenue", "doc_bigram_logprob", "doc_blocklist_filter",
-    "doc_chunking_plan", "doc_compression_ratio_screen", "doc_fingerprint",
-    "doc_language_purity", "doc_length_mad_outliers", "doc_prefix_cluster_stats",
-    "doc_rake_keyphrases", "doc_repetition_stats", "doc_shard_rendezvous",
-    "doc_text_stats", "doc_tfidf_top_terms", "doc_token_entropy",
-    "doc_unigram_logprob", "doc_winnowing_fingerprints", "doc_winnowing_matches",
-    "dp_contribution_bounding", "dp_histogram_release", "drift_js_divergence",
-    "drift_ks_click_vs_view", "drift_psi_multi_feature", "drift_quantile_shift",
-    "drift_report_multi_feature", "dsir_importance_weights", "dup_cluster_language_purity",
-    "dup_cluster_size_histogram", "dup_pair_source_matrix", "duplicate_key_check",
-    "embedding_bitext_margin", "embedding_centroid_drift", "embedding_cluster_label_ari",
-    "embedding_covariance", "embedding_dim_stats", "embedding_distance_profile",
-    "embedding_effective_rank", "embedding_hubness_audit", "embedding_jl_distortion",
-    "embedding_kmeans", "embedding_knn_label_accuracy", "embedding_label_confusion",
-    "embedding_neardup", "embedding_norm_stats", "embedding_pq_adc_recall",
-    "embedding_pq_codes", "embedding_quantization_error", "embedding_silhouette",
-    "embedding_top_eigenvector", "embedding_truncation_audit", "event_code_projection",
-    "event_customer_enrichment", "event_customer_overlap", "event_daily_autocorrelation",
-    "event_props_struct", "event_props_variant", "event_value_hill_tail_index",
-    "event_value_kruskal_wallis", "event_value_mann_whitney", "event_value_percentile_disc",
-    "event_value_percentiles", "event_value_quantile_normalization", "event_value_winsorize_sweep",
-    "excess_stock_suppliers", "feature_backfill_plan", "feature_binning_quantile",
-    "feature_binning_scalable", "feature_correlation_matrix", "feature_coverage",
-    "feature_freshness", "feature_hash_cross", "feature_information_gain",
-    "feature_scaling", "feature_summary_stats", "feature_unpivot_long",
-    "feature_value_histogram", "file_skipping_stats", "fk_join_skew_advisor",
-    "forecast_discount_revenue", "funnel_conversion_ztest", "gdpr_deletion_audit",
-    "graph_modularity", "hard_negative_pairs", "histogram_quantile_rollup",
-    "hll_portable_distinct_rollup", "idle_rich_customers", "important_parts_share",
-    "incremental_feature_update", "inverted_index_postings", "item_cooccurrence_lift",
-    "item_kcore_membership", "item_label_propagation", "item_pagerank",
-    "item_ra_link_prediction", "item_triangle_census", "jaccard_prefix_filter_join",
-    "k_anonymity_audit", "kmv_audience_overlap", "knn_router_ivf_recall",
-    "l_diversity_audit", "label_horizon_sweep", "lang_id_confusion",
-    "large_volume_customers", "late_arrival_audit", "late_shipment_priority",
-    "latest_feature_snapshot", "lm_dirichlet_search_topk", "local_supply_share",
-    "lsh_tuning_report", "markov_entropy_rate", "min_price_supplier_region",
-    "minhash_jaccard_error_audit", "monthly_revenue_gap_fill", "monthly_revenue_momentum",
-    "multimodal_audio_energy", "multimodal_audio_silence_runs", "multimodal_decode_features",
-    "multimodal_frame_dedup", "multimodal_frame_sample", "multimodal_image_edge_density",
-    "multimodal_image_entropy", "multimodal_metadata", "multimodal_resize",
-    "multimodal_sidecar_kv", "nation_market_share", "nation_pair_trade",
-    "nation_top_customers_lateral", "nation_vip_roster", "negative_sample_pairs",
-    "online_feature_lookup", "online_offline_skew_audit", "order_reconciliation_audit",
-    "order_value_bootstrap_ci", "order_value_conformal_interval", "order_value_median_ci",
-    "order_value_zscore_outliers", "orders_backlog_littles_law", "part_name_fuzzy_links",
-    "part_price_dispersion_audit", "part_price_size_skyline", "part_revenue_abc_classes",
-    "part_supplier_variety", "partition_compaction_plan", "percentile_rank_features",
-    "phrase_search_topdocs", "pii_scrub", "pit_asof_join",
-    "pit_label_join", "pit_multi_view_join", "pit_nearest_join",
-    "pit_staleness_audit", "pricing_summary", "priority_order_counts",
-    "product_type_profit", "profile_distribution_stats", "promo_revenue_share",
-    "purchase_interarrival_stats", "purchase_propensity_calibration", "pyds_jsonl_roundtrip",
-    "quality_concentration_curve", "quality_expectation_suite", "quality_filter_agreement",
-    "range_partition_balance_plan", "rec_coverage_gini", "rec_novelty_by_rank",
-    "rec_popularity_ndcg", "region_revenue", "returned_items_revenue",
-    "returnflag_anova_ftest", "revenue_changepoint_scan", "revenue_ewma_trend",
-    "revenue_grouping_sets", "revenue_mann_kendall", "revenue_rollup_cube",
-    "revenue_seasonal_decomposition", "revenue_trend_regression", "rfm_segmentation",
-    "robust_order_value_stats", "rrf_hybrid_topk", "salted_enrichment_join",
-    "scd2_activity_history", "segment_dedup", "segment_priority_association",
-    "semantic_dedup", "sequence_packing_efficiency", "sequence_packing_plan",
-    "session_funnel", "session_gap_sensitivity", "session_path_markov",
-    "session_survival_curve", "session_windows", "shingle_containment_pairs",
-    "sketch_distinct_users_rollup", "skew_diagnostics", "skew_resilient_distinct_rollup",
-    "small_quantity_parts", "snapshot_diff_audit", "source_ablation_report",
-    "split_leakage_audit", "split_neardup_leakage", "stratified_event_sample",
-    "stratified_kfold_plan", "stream_asof_enrichment", "stream_conformal_coverage_monitor",
-    "stream_decay_features", "stream_dedup", "stream_dedup_within_watermark",
-    "stream_distinct_sketch", "stream_dp_histogram_release", "stream_drift_monitor",
-    "stream_event_type_share", "stream_histogram_quantile_monitor", "stream_hourly_features",
-    "stream_online_materialize", "stream_quality_monitor", "stream_session_windows",
-    "stream_sliding_features", "stream_stateful_running_totals", "stream_static_enrichment",
-    "stream_stream_interval_join", "stream_stream_left_outer_join", "stream_topk_heavy_hitters",
-    "supplier_acctbal_ntile", "supply_concentration_hhi", "t_closeness_audit",
-    "target_encoding_loo", "target_encoding_smoothing_sweep", "temporal_split_embargo",
-    "text_clean_projection", "tokenizer_fertility_audit", "top_customers_per_nation",
-    "top_orders_diversified", "top_revenue_orders", "top_supplier_revenue",
-    "training_set_export", "training_shard_cut_plan", "training_shard_manifest",
-    "user_activity_entropy", "user_activity_streaks", "user_daily_activity",
-    "user_decay_features", "user_decay_weighted_features", "user_hourly_features",
-    "user_ltv_features", "user_primary_event_type", "user_recency_features",
-    "user_rolling_7d_features", "user_sliding_features", "user_sliding_features_rollup",
-    "user_value_locf_interpolation", "user_wow_delta_features", "vocab_coverage_curve",
-    "vocab_oov_rate", "vocab_zipf_fit", "volume_anomaly_days",
-    "waiting_supplier_audit", "weighted_systematic_sample", "zorder_layout_plan",
-))
-
-
-def any_query(name: str) -> QueryFn:
-    """Registered callable by name, driver-visible OR deferred — the
-    promotion-proof lookup (a deferred query may be promoted to the
-    driver surface in a later round via ``_PROMOTED`` without its
-    tests or callers changing)."""
-    if name in QUERIES:
-        return QUERIES[name]
-    return DEFERRED_QUERIES[name]
-
-
-def _ordered(mapping: dict) -> dict:
-    front = {n: mapping[n] for n in _FRONT if n in mapping}
-    rest = {n: v for n, v in mapping.items() if n not in front}
-    return {**front, **rest}
-
-
-#: Names registered with an explicit ``rows_only=True`` justification
-#: (non-SQL-expressible: sketches, seeded sampling, pandas-UDF
-#: kernels, MLlib-backed approximations).  The driver runs a weaker
-#: rows-only check for these; everything else MUST carry an oracle.
-ROWS_ONLY: dict[str, str] = {}
 
 
 def register(
     name: str,
     oracle: str | None = None,
     rows_only: str | None = None,
-    defer: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query with its DuckDB oracle, or with an
     explicit ``rows_only`` justification string.  Exactly one of the
     two is required — a registration with neither (or both) is a bug
     caught at import time, so no query can silently ship without a
-    correctness story.  ``defer=True`` keeps the query off the driver
-    surface (but in the local parity sweep) until the next round's
-    window has a slot for it."""
+    correctness story."""
     if (oracle is None) == (rows_only is None):
         raise ValueError(
             f"query {name!r}: provide exactly one of oracle= or rows_only="
         )
 
     def deco(fn: QueryFn) -> QueryFn:
-        eff_defer = defer and name not in _PROMOTED
-        if name in QUERIES or name in DEFERRED_QUERIES:
+        if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        if not eff_defer and name not in _DRIVER_CHECKED and name not in _FRONT:
-            raise ValueError(
-                f"query {name!r}: never driver-checked and not in _FRONT — "
-                "either add it to the _FRONT window (if a slot is free) or "
-                "register with defer=True so it cannot ship unverified"
-            )
-        if eff_defer:
-            if oracle is None:
-                raise ValueError(
-                    f"query {name!r}: defer=True requires an oracle — a "
-                    "rows-only query gains nothing from waiting (the driver "
-                    "check it defers IS the oracle compare)"
-                )
-            DEFERRED_QUERIES[name] = fn
-            DEFERRED_ORACLES[name] = textwrap.dedent(oracle).strip()
-            return fn
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = textwrap.dedent(oracle).strip()
@@ -478,6 +105,25 @@ def load_all() -> None:
     for mod in _OPERATOR_MODULES:
         import_module(mod)
     _loaded = True
+
+
+@functools.cache
+def _last_checked() -> dict[str, int]:
+    """Newest driver round with a CORRECTNESS row, per query name."""
+    rounds: dict[str, int] = {}
+    for entry in os.listdir(_REPO_ROOT):
+        m = _ROUND.fullmatch(entry)
+        if m is None:
+            continue
+        with open(os.path.join(_REPO_ROOT, entry)) as f:
+            for name in json.load(f):
+                rounds[name] = max(int(m.group(1)), rounds.get(name, -1))
+    return rounds
+
+
+def _ordered(mapping: dict) -> dict:
+    rounds = _last_checked()
+    return dict(sorted(mapping.items(), key=lambda kv: rounds.get(kv[0], -1)))
 
 
 def queries() -> dict[str, QueryFn]:

@@ -170,13 +170,17 @@ def stream_state_confs(
     # Size from the source table itself (the staged replay dir is a
     # verbatim copy of it) — statting the source avoids staging a
     # copy as a side effect on paths that replay from their own
-    # staging dir (ADVICE r13).
+    # staging dir (ADVICE r13).  A file, or a (nested, partitioned)
+    # dataset directory; a missing source counts as 0 bytes, which
+    # leaves the count at the floor.
     src = os.path.join(sf_dir, "events.parquet")
     if os.path.isfile(src):
         size = os.path.getsize(src)
-    else:  # parquet dataset directory
+    else:
         size = sum(
-            e.stat().st_size for e in os.scandir(src) if e.is_file()
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(src)
+            for f in files
         )
     try:
         per_mb = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_MB", "32"))
@@ -1173,7 +1177,6 @@ def stream_event_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_dedup_within_watermark",
-    defer=True,
     oracle="""
     SELECT DISTINCT user_id, event_type
     FROM events WHERE user_id IS NOT NULL
@@ -1214,7 +1217,6 @@ from ..operators.sketches import _HQ_QS as _SQM_QS  # noqa: E402
 
 @register(
     "stream_histogram_quantile_monitor",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT ts, value FROM events
@@ -1340,7 +1342,6 @@ from ..operators.quality import _DPH_THRESH_E9 as _SDP_THRESH  # noqa: E402
 
 @register(
     "stream_dp_histogram_release",
-    defer=True,
     oracle=f"""
     WITH v AS (SELECT ts, event_type FROM events),
     fin AS (
@@ -1449,7 +1450,6 @@ _SCM_FLOOR = 0.8
 
 @register(
     "stream_conformal_coverage_monitor",
-    defer=True,
     oracle=f"""
     WITH e AS (
         SELECT event_id, event_type, ts,
@@ -1625,7 +1625,6 @@ _CUS_BURN = 168
 
 @register(
     "stream_cusum_drift_monitor",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT ts, value FROM events
@@ -1794,6 +1793,11 @@ _SBK_SEED = 47
 _SBK_SOURCE_FILES = 8
 
 
+def _nulls_first(*vals) -> tuple:
+    """Sort key over ``vals`` in Spark's ascending NULLS FIRST order."""
+    return tuple(x for v in vals for x in (v is not None, 0 if v is None else v))
+
+
 def _bottomk_merge_processor(state_path: str, k: int):
     """``foreachBatch`` body: fold a micro-batch into the standing
     per-type bottom-k table.  The merge is a set-union followed by
@@ -1855,14 +1859,12 @@ def _bottomk_merge_processor(state_path: str, k: int):
         keep = {
             (et, eid, h)
             for et, hs in by_type.items()
-            for h, eid in sorted(hs)[:k]
+            for h, eid in sorted(hs, key=lambda p: _nulls_first(*p))[:k]
         }
         standing["rows"] = keep
-        # Deterministic file contents (None-safe key; row order is
-        # cosmetic — the final read re-sorts by (event_type, rank)).
-        ordered = sorted(
-            keep, key=lambda t: (t[0] is not None, t[0] or "", t[2], t[1])
-        )
+        # Deterministic file contents (row order is cosmetic — the
+        # final read re-sorts by (event_type, rank)).
+        ordered = sorted(keep, key=lambda t: _nulls_first(t[0], t[2], t[1]))
         (
             local_rows(
                 spark,
@@ -1879,7 +1881,6 @@ def _bottomk_merge_processor(state_path: str, k: int):
 
 @register(
     "stream_bottomk_sample",
-    defer=True,
     oracle=f"""
     SELECT event_type, CAST(rn AS INTEGER) AS rank, event_id, h
     FROM (

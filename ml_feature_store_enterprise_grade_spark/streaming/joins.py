@@ -248,9 +248,10 @@ class _PurchaseStatsProcessor:
 
 def has_transform_with_state() -> bool:
     """``transformWithStateInPandas`` needs protobuf (its state
-    protocol is proto-serialized); this container ships without it,
-    so the operator registers only where the dependency exists —
-    the same runtime-gating pattern as the PIL codec slot."""
+    protocol is proto-serialized).  ``stream_tws_purchase_stats`` is
+    therefore not registered, so the driver surface is the same in
+    every interpreter; tests check it against ``_TWS_ORACLE`` where
+    the dependency exists."""
     try:
         import google.protobuf  # noqa: F401
 
@@ -309,22 +310,8 @@ def stream_tws_purchase_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-if has_transform_with_state():  # pragma: no cover - environment-dependent
-    # defer=True: environment-gated (protobuf), so the name can exist
-    # in SOME interpreters (e.g. Python workers with a vendored
-    # protobuf on path) and not others — a non-deferred registration
-    # would trip the never-driver-checked window guard exactly in
-    # those asymmetric environments.  Deferred keeps it on the local
-    # parity surface wherever the dependency exists and off the
-    # driver surface everywhere.
-    register("stream_tws_purchase_stats", oracle=_TWS_ORACLE, defer=True)(
-        stream_tws_purchase_stats
-    )
-
-
 @register(
     "stream_stream_left_outer_join",
-    defer=True,
     oracle="""
     WITH c AS (SELECT user_id, ts FROM events
                WHERE event_type = 'click' AND user_id IS NOT NULL),
@@ -656,7 +643,6 @@ def _decay_oracle() -> str:
 
 @register(
     "stream_decay_features",
-    defer=True,
     oracle=_decay_oracle(),
 )
 def stream_decay_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -169,10 +169,8 @@ def run_parity(
 ) -> list[CompareResult]:
     from . import registry
 
-    # Deferred queries (awaiting a driver-window slot) sweep exactly
-    # like driver-visible ones — deferral never skips correctness.
-    qs = {**registry.queries(), **registry.DEFERRED_QUERIES}
-    orc = {**registry.oracles(), **registry.DEFERRED_ORACLES}
+    qs = registry.queries()
+    orc = registry.oracles()
     con = duckdb_connection(sf_dir)
     results: list[CompareResult] = []
     for name, fn in sorted(qs.items()):

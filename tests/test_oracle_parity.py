@@ -22,11 +22,8 @@ from ml_feature_store_enterprise_grade_spark.testing import (
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
 
 registry.load_all()
-# Deferred queries (off the driver surface awaiting a window slot)
-# get the identical local sweep — deferral defers driver visibility,
-# never correctness coverage.
-_ALL_QUERIES = {**registry.queries(), **registry.DEFERRED_QUERIES}
-_ALL_ORACLES = {**registry.oracles(), **registry.DEFERRED_ORACLES}
+_ALL_QUERIES = registry.queries()
+_ALL_ORACLES = registry.oracles()
 _NAMES = sorted(_ALL_QUERIES)
 _ORACLE_NAMES = sorted(_ALL_ORACLES)
 

@@ -365,17 +365,11 @@ def test_local_supply_share_single_pass(spark):
     assert "o_orderdate" in plan.split("PushedFilters")[1][:400] or "1995-01-01" in plan
 
 
-def plan_of_deferred(spark, name: str) -> str:
-    df = registry.any_query(name)(spark, SF_SMOKE)
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_locf_interpolation_shares_one_user_shuffle(spark):
     """All three per-user windows (LOCF back, interp forward, spine
     join) run on the same user_id hash partitioning — no global sort
     (rangepartitioning) anywhere, per-user local sorts only."""
-    plan = plan_of_deferred(spark, "user_value_locf_interpolation")
+    plan = plan_of(spark, "user_value_locf_interpolation")
     assert "rangepartitioning" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" in plan
@@ -386,7 +380,7 @@ def test_kmeans_assignment_is_map_side(spark):
     corpus (centroids are literal arrays): the only join in the final
     plan is the broadcast of the k-row label-mode frame — never a
     shuffle join or cartesian of the corpus."""
-    plan = plan_of_deferred(spark, "embedding_kmeans")
+    plan = plan_of(spark, "embedding_kmeans")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -396,7 +390,7 @@ def test_benford_audit_broadcasts_group_totals(spark):
     """The fact table collapses in one partial aggregate; the
     group-total join is a broadcast of a handful of rows — no
     shuffle join anywhere."""
-    plan = plan_of_deferred(spark, "benford_digit_audit")
+    plan = plan_of(spark, "benford_digit_audit")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -406,7 +400,7 @@ def test_autocorrelation_windows_only_daily_frame(spark):
     """The corpus collapses to the (type, day) frame before any
     window runs: per-type stats and the denominator ride broadcast
     joins, and no global sort (rangepartitioning) appears."""
-    plan = plan_of_deferred(spark, "event_daily_autocorrelation")
+    plan = plan_of(spark, "event_daily_autocorrelation")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "rangepartitioning" not in plan
@@ -417,7 +411,7 @@ def test_kcore_edges_shuffle_once(spark):
     the broadcast survivor set against it — no per-round shuffle join
     of the edges in the final plan (localCheckpoint truncates rounds,
     so the executed plan only shows the last round's shape)."""
-    plan = plan_of_deferred(spark, "item_kcore_membership")
+    plan = plan_of(spark, "item_kcore_membership")
     assert "CartesianProduct" not in plan
 
 
@@ -426,7 +420,7 @@ def test_survival_curve_windows_only_bucket_frame(spark):
     over the bounded duration-bucket frame (a global window over tens
     of rows is fine; what must not appear is a cartesian or a
     shuffle join of the fact side)."""
-    plan = plan_of_deferred(spark, "session_survival_curve")
+    plan = plan_of(spark, "session_survival_curve")
     assert "CartesianProduct" not in plan or "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -435,7 +429,7 @@ def test_nearest_join_is_single_hash_aggregate(spark):
     """Nearest as-of collapses candidates with one min_by hash
     aggregate per (key, lookup): no window over the joined frame, no
     global sort."""
-    plan = plan_of_deferred(spark, "pit_nearest_join")
+    plan = plan_of(spark, "pit_nearest_join")
     assert "Window" not in plan
     assert "rangepartitioning" not in plan
 
@@ -444,7 +438,7 @@ def test_srm_audit_broadcasts_everything_small(spark):
     """Assignment is map-side; conversion joins broadcast on the
     entity key; the 3-row arm frame rides broadcast cross joins — no
     shuffle join in the plan."""
-    plan = plan_of_deferred(spark, "ab_assignment_srm_audit")
+    plan = plan_of(spark, "ab_assignment_srm_audit")
     assert "SortMergeJoin" not in plan
 
 
@@ -490,14 +484,14 @@ def test_audio_energy_stays_arrow_batched(spark):
 def test_anova_single_aggregate_no_cartesian(spark):
     """Group moments reduce the fact table to 3 rows; the only joins
     are 1-row broadcast attachments of the F frame."""
-    plan = plan_of_deferred(spark, "returnflag_anova_ftest")
+    plan = plan_of(spark, "returnflag_anova_ftest")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "HashAggregate" in plan
 
 
 def test_information_gain_no_wide_joins(spark):
-    plan = plan_of_deferred(spark, "feature_information_gain")
+    plan = plan_of(spark, "feature_information_gain")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     # stack unpivot must stay map-side: no Python eval anywhere.
@@ -508,7 +502,7 @@ def test_skew_audit_is_one_scan(spark):
     """Both watermarks are conditional aggregates in ONE pass — the
     plan must scan events once (plus the 1-row watermark subquery),
     never diff two scans through a join."""
-    plan = plan_of_deferred(spark, "online_offline_skew_audit")
+    plan = plan_of(spark, "online_offline_skew_audit")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     # exactly the watermark-attach broadcast, no equi-join of scans
@@ -516,7 +510,7 @@ def test_skew_audit_is_one_scan(spark):
 
 
 def test_consistency_audit_all_broadcast_gates(spark):
-    plan = plan_of_deferred(spark, "cross_table_consistency_audit")
+    plan = plan_of(spark, "cross_table_consistency_audit")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -559,7 +553,7 @@ def test_pit_staleness_single_shuffle_runmax_no_join(spark):
 
 
 def test_knn_label_accuracy_broadcast_not_cartesian(spark):
-    plan = plan_of_deferred(spark, "embedding_knn_label_accuracy")
+    plan = plan_of(spark, "embedding_knn_label_accuracy")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan
     assert "Window" not in plan  # neighbor election is max(struct)
@@ -576,18 +570,12 @@ def test_llr_margins_reaggregate_not_rescan(spark):
 # --- round-10 post-seal ops: the scale claims, visible in the plan ---
 
 
-def _deferred_plan_of(spark, name: str) -> str:
-    df = registry.any_query(name)(spark, SF_SMOKE)
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_decay_features_single_user_shuffle(spark):
     """The decay aggregation promises ONE user-keyed shuffle: literal-
     array weight lookup map-side, no joins, no windows.  (AQE's plan
     string can render the same stage twice, so the assertion is that
     every Exchange is the user-keyed one, not the count.)"""
-    plan = _deferred_plan_of(spark, "user_decay_features")
+    plan = plan_of(spark, "user_decay_features")
     for line in plan.split("\n"):
         if "Exchange" in line:
             assert "hashpartitioning(user_id" in line
@@ -597,7 +585,7 @@ def test_decay_features_single_user_shuffle(spark):
 def test_price_dispersion_topk_and_no_joins(spark):
     """Part-keyed aggregate into TakeOrderedAndProject — the audit
     never touches the part dim and never globally sorts."""
-    plan = _deferred_plan_of(spark, "part_price_dispersion_audit")
+    plan = plan_of(spark, "part_price_dispersion_audit")
     assert "TakeOrderedAndProject" in plan
     assert "Join" not in plan
     assert "GlobalLimit" not in plan or "TakeOrderedAndProject" in plan
@@ -608,7 +596,7 @@ def test_bootstrap_explode_pipelines_no_extra_shuffle(spark):
     shuffles are the replicate-keyed exchange plus the two 1-row
     stat attachments — never an exchange of the exploded frame
     keyed by anything wider."""
-    plan = _deferred_plan_of(spark, "order_value_bootstrap_ci")
+    plan = plan_of(spark, "order_value_bootstrap_ci")
     assert "Generate explode" in plan
     # replicate agg + point-estimate agg + the 100-row window's single
     # partition — bounded small exchanges only; the exploded frame
@@ -622,7 +610,7 @@ def test_bootstrap_explode_pipelines_no_extra_shuffle(spark):
 def test_packing_efficiency_no_global_sort(spark):
     """Prefix sums stay shard-partitioned: the only sort is within
     the shard window, never a global Sort of the doc frame."""
-    plan = _deferred_plan_of(spark, "sequence_packing_efficiency")
+    plan = plan_of(spark, "sequence_packing_efficiency")
     assert "Sort [shard" in plan
     assert "Sort [doc_id" not in plan.replace("Sort [shard", "")
 
@@ -630,7 +618,7 @@ def test_packing_efficiency_no_global_sort(spark):
 def test_effective_rank_no_vector_shuffle(spark):
     """Everything after the memoized moments is a d²-row fold: the
     plan must not re-shuffle anything keyed by vec_id."""
-    plan = _deferred_plan_of(spark, "embedding_effective_rank")
+    plan = plan_of(spark, "embedding_effective_rank")
     assert "vec_id" not in plan.split("HashAggregate")[0]
 
 
@@ -638,7 +626,7 @@ def test_salted_join_actually_salts(spark):
     """The registered salted join must really run the (key, salt)
     shuffle form — a broadcast of the dim would make the equivalence
     claim vacuous."""
-    plan = _deferred_plan_of(spark, "salted_enrichment_join")
+    plan = plan_of(spark, "salted_enrichment_join")
     assert "__salt" in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
@@ -646,5 +634,5 @@ def test_salted_join_actually_salts(spark):
 def test_two_stage_distinct_has_no_expand(spark):
     """The skew-resistant distinct must be the two-shuffle dedup form,
     not Spark's single-stage distinct-aggregate Expand."""
-    plan = _deferred_plan_of(spark, "skew_resilient_distinct_rollup")
+    plan = plan_of(spark, "skew_resilient_distinct_rollup")
     assert "Expand" not in plan

@@ -177,3 +177,24 @@ def test_stream_state_confs_env_robustness(spark):
         assert int(c["spark.sql.shuffle.partitions"]) >= 1
     finally:
         del os.environ["SPARK_GRAFT_STREAM_STATE_FLOOR"]
+
+
+def test_stream_state_confs_sizes_nested_and_missing_sources(
+    spark, tmp_path, monkeypatch
+):
+    """Bytes in every file of a partitioned events.parquet directory
+    count (not just its top level), and a missing source falls back to
+    the floor instead of raising."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_MB", "1")
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_FLOOR", raising=False)
+    mb = 1024 * 1024
+    src = tmp_path / "nested" / "events.parquet"
+    for part in ("event_date=2024-01-01", "event_date=2024-01-02"):
+        (src / part).mkdir(parents=True)
+        (src / part / "part-0.parquet").write_bytes(b"x" * (mb + 1))
+    (src / "_SUCCESS").write_bytes(b"")
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    c = stream_state_confs(spark, str(tmp_path / "nested"))
+    assert int(c["spark.sql.shuffle.partitions"]) == min(cap, 3)
+    c = stream_state_confs(spark, str(tmp_path / "missing"), floor=2)
+    assert c["spark.sql.shuffle.partitions"] == "2"

@@ -1,25 +1,35 @@
 """Registry invariants: the driver contract must not silently decay.
 
 The verify driver oracle-checks only the FIRST 50 entries of
-``queries()``; the rotation list (``registry._FRONT``) is how every
-query earns a driver correctness row across rounds.  A typo'd name
-there would silently fall back to tail order — these tests make that
-loud."""
+``queries()``.  That window is derived from the committed
+``CORRECTNESS_r*.json`` files (never-checked names first, then the
+oldest last-checked round); these tests recompute the rule from the
+files and hold the registry to it."""
 
 from __future__ import annotations
+
+import json
+import os
+import re
 
 from ml_feature_store_enterprise_grade_spark import registry
 
 registry.load_all()
 
-
-def test_front_names_all_exist():
-    unknown = [n for n in registry._FRONT if n not in registry.QUERIES]
-    assert not unknown, f"_FRONT lists unregistered queries: {unknown}"
+_REPO = os.path.join(os.path.dirname(__file__), "..")
 
 
-def test_front_has_no_duplicates():
-    assert len(set(registry._FRONT)) == len(registry._FRONT)
+def _last_checked_round() -> dict[str, int]:
+    """Newest CORRECTNESS round with a row, per name (files parsed here,
+    independently of the registry's own reader)."""
+    out: dict[str, int] = {}
+    for fname in sorted(os.listdir(_REPO)):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(_REPO, fname)) as f:
+                for name in json.load(f):
+                    out[name] = max(out.get(name, -1), int(m.group(1)))
+    return out
 
 
 def test_every_oracle_has_a_query():
@@ -33,23 +43,11 @@ def test_ordering_is_consistent_between_queries_and_oracles():
     assert q == o
 
 
-def test_front_window_has_room():
-    """Every _FRONT query must actually land inside the driver's
-    first-50 window."""
-    assert len(registry._FRONT) <= 50
-    ordered = list(registry.queries())
-    for n in registry._FRONT:
-        assert ordered.index(n) < 50
-
-
 def test_every_query_has_oracle_or_rows_only_justification():
     """No query ships without a correctness story: each registered
     name carries either a DuckDB oracle or an explicit rows_only=
     justification string (enforced at registration; asserted here so
     the invariant survives refactors of register())."""
-    from ml_feature_store_enterprise_grade_spark import registry
-
-    registry.load_all()
     for name in registry.queries():
         has_oracle = name in registry.oracles()
         justified = bool(registry.ROWS_ONLY.get(name))
@@ -65,10 +63,8 @@ def test_rows_only_outputs_are_canonicalizer_safe(spark):
     rows-only query must project such columns to digests/strings."""
     from pyspark.sql import types as T
 
-    from ml_feature_store_enterprise_grade_spark import registry
     from tests.conftest import SF_SMOKE
 
-    registry.load_all()
     for name in registry.ROWS_ONLY:
         df = registry.queries()[name](spark, SF_SMOKE)
         for field in df.schema.fields:
@@ -78,69 +74,42 @@ def test_rows_only_outputs_are_canonicalizer_safe(spark):
             )
 
 
-def test_front_rotation_is_well_formed():
-    """The driver checks the FIRST 50 queries; _FRONT controls that
-    window.  It must contain only registered names, no duplicates, and
-    at most 50 entries — a stale or overflowing rotation silently
-    wastes driver verification slots."""
-    from ml_feature_store_enterprise_grade_spark import registry
-
-    registry.load_all()
-    front = registry._FRONT
-    assert len(front) <= 50, f"{len(front)} > 50: tail entries get no driver row"
-    assert len(set(front)) == len(front), "duplicate names in _FRONT"
-    unknown = [n for n in front if n not in registry.QUERIES]
-    assert not unknown, f"stale names in _FRONT: {unknown}"
-
-
 def test_driver_unchecked_queries_are_in_the_window():
     """Every registered query that has no CORRECTNESS row from a prior
     round must be inside the first-50 window NOW — otherwise it ships
     'claimed, not proven' and the next verdict flags it (the r1/r2
     gap class this rotation discipline exists to prevent)."""
-    import glob
-    import json
-    import os
-
-    from ml_feature_store_enterprise_grade_spark import registry
-
-    registry.load_all()
-    seen: set[str] = set()
-    pattern = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json")
-    for path in sorted(glob.glob(pattern)):
-        with open(path) as f:
-            seen |= set(json.load(f))
+    seen = _last_checked_round()
     window = set(list(registry.queries())[:50])
     missing = [n for n in registry.queries() if n not in seen and n not in window]
     assert not missing, f"never driver-checked and outside the window: {missing}"
 
 
-def test_deferred_queries_all_carry_oracles_and_are_queued():
-    """Every deferred query must (a) carry an oracle (enforced at
-    registration too), and (b) be listed in the overflow-queue comment
-    in registry.py so the round-4 promotion cannot silently forget one."""
-    import inspect
-    import os
-
-    from ml_feature_store_enterprise_grade_spark import registry
-
-    registry.load_all()
-    assert set(registry.DEFERRED_QUERIES) == set(registry.DEFERRED_ORACLES)
-    src = inspect.getsource(registry)
-    for name in registry.DEFERRED_QUERIES:
-        assert f"#   - {name}" in src, f"{name} missing from the overflow queue comment"
-    # deferred names never leak onto the driver surface
-    assert not set(registry.DEFERRED_QUERIES) & set(registry.queries())
+def test_queries_are_stable_sorted_by_last_checked_round():
+    """The window rule: registration order, stable-sorted by the newest
+    CORRECTNESS round holding a row for the name (never checked = -1)."""
+    rounds = _last_checked_round()
+    assert rounds, "no CORRECTNESS_r*.json next to the package"
+    expected = sorted(registry.QUERIES, key=lambda n: rounds.get(n, -1))
+    assert list(registry.queries()) == expected
 
 
-def test_promoted_names_are_registered():
-    """Every _PROMOTED name must resolve to a real (now non-deferred)
-    registration — a typo'd or stale promotion would otherwise silently
-    promote nothing while the checklist believes it shipped."""
-    from ml_feature_store_enterprise_grade_spark import registry
-
-    registry.load_all()
-    stale = [n for n in registry._PROMOTED if n not in registry.QUERIES]
-    assert not stale, f"_PROMOTED names not registered (typo/stale): {stale}"
-    leaked = [n for n in registry._PROMOTED if n in registry.DEFERRED_QUERIES]
-    assert not leaked, f"_PROMOTED names still deferred: {leaked}"
+def test_never_checked_queries_lead_the_window():
+    """Against the committed history (through CORRECTNESS_r14), the nine
+    queries with no driver row are the first nine, and the window
+    continues with the oldest checked round."""
+    head = list(registry.queries())
+    assert sorted(head[:9]) == [
+        "consistent_sample_bottomk",
+        "epoch_shuffle_quality_audit",
+        "fellegi_sunter_weights",
+        "item_cobuy_jaccard_topk",
+        "item_implicit_als_epoch",
+        "mixture_temperature_sweep",
+        "order_value_permutation_test",
+        "ranker_rbo_agreement",
+        "stream_bottomk_sample",
+    ]
+    rounds = _last_checked_round()
+    assert all(n not in rounds for n in head[:9])
+    assert rounds[head[9]] == min(rounds[n] for n in head if n in rounds)

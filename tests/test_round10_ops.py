@@ -18,9 +18,7 @@ from ml_feature_store_enterprise_grade_spark import registry
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
 from tests.conftest import SF_SMOKE
 
-registry.load_all()
-
-_q = registry.any_query
+_Q = registry.queries()
 
 
 # --- session_gap_sensitivity ------------------------------------------
@@ -28,7 +26,7 @@ _q = registry.any_query
 
 def test_gap_sweep_monotone_and_consistent(spark):
     rows = sorted(
-        _q("session_gap_sensitivity")(spark, SF_SMOKE).collect(),
+        _Q["session_gap_sensitivity"](spark, SF_SMOKE).collect(),
         key=lambda r: r.gap_threshold_s,
     )
     assert [r.gap_threshold_s for r in rows] == [300, 1800, 3600, 21600]
@@ -59,7 +57,7 @@ def test_gap_sweep_matches_python_sessionizer(spark):
         by_user.setdefault(r.user_id, []).append((r.ts, r.event_id))
     got = {
         r.gap_threshold_s: r.n_sessions
-        for r in _q("session_gap_sensitivity")(spark, SF_SMOKE).collect()
+        for r in _Q["session_gap_sensitivity"](spark, SF_SMOKE).collect()
     }
     for thr, expect in got.items():
         n_sessions = 0
@@ -76,7 +74,7 @@ def test_gap_sweep_matches_python_sessionizer(spark):
 
 
 def test_minhash_audit_buckets_are_calibrated(spark):
-    rows = _q("minhash_jaccard_error_audit")(spark, SF_SMOKE).collect()
+    rows = _Q["minhash_jaccard_error_audit"](spark, SF_SMOKE).collect()
     assert rows, "LSH produced candidate pairs"
     for r in rows:
         assert 0 <= r.est_decile <= 9
@@ -100,7 +98,7 @@ def test_minhash_audit_error_bound_vs_sketch_theory(spark):
     error must stay within 3 standard errors of the binomial bound
     sigma = sqrt(J(1-J)/K) evaluated at the bucket's mean exact J
     (loose, but catches a broken estimator or a broken exact side)."""
-    rows = _q("minhash_jaccard_error_audit")(spark, SF_SMOKE).collect()
+    rows = _Q["minhash_jaccard_error_audit"](spark, SF_SMOKE).collect()
     for r in rows:
         j = min(max(r.mean_exact_jaccard, 0.0), 1.0)
         sigma = math.sqrt(max(j * (1 - j), 1.0 / 64) / 8)
@@ -114,7 +112,7 @@ def test_minhash_audit_error_bound_vs_sketch_theory(spark):
 
 def test_vocab_coverage_curve_shape(spark):
     rows = sorted(
-        _q("vocab_coverage_curve")(spark, SF_SMOKE).collect(),
+        _Q["vocab_coverage_curve"](spark, SF_SMOKE).collect(),
         key=lambda r: r.vocab_rank,
     )
     assert rows[0].vocab_rank == 1
@@ -135,7 +133,7 @@ def test_vocab_coverage_curve_shape(spark):
 def test_dict_advisor_matches_python_model(spark):
     """Recompute the parquet dictionary model (distinct-value bytes +
     ceil(log2 ndv)-bit indexes) per column in pure Python."""
-    rows = _q("dict_encoding_advisor")(spark, SF_SMOKE).collect()
+    rows = _Q["dict_encoding_advisor"](spark, SF_SMOKE).collect()
     assert len(rows) == 8
     for r in rows:
         table, col = r.column_ref.split(".")
@@ -162,7 +160,7 @@ def test_dict_advisor_matches_python_model(spark):
 
 def test_te_sweep_monotone_in_m(spark):
     rows = sorted(
-        _q("target_encoding_smoothing_sweep")(spark, SF_SMOKE).collect(),
+        _Q["target_encoding_smoothing_sweep"](spark, SF_SMOKE).collect(),
         key=lambda r: r.smoothing_m,
     )
     assert [r.smoothing_m for r in rows] == [0, 1, 10, 100, 1000]
@@ -209,7 +207,7 @@ def test_staleness_runmax_equals_naive_join(spark):
         )
         key = r.event_type
         naive.setdefault(key, []).append(st)
-    df = _q("pit_staleness_audit")(spark, SF_SMOKE).collect()
+    df = _Q["pit_staleness_audit"](spark, SF_SMOKE).collect()
     for row in df:
         sts = naive[row.event_type]
         matched = [s for s in sts if s is not None]
@@ -220,7 +218,7 @@ def test_staleness_runmax_equals_naive_join(spark):
 
 
 def test_staleness_plan_is_join_free(spark):
-    df = _q("pit_staleness_audit")(spark, SF_SMOKE)
+    df = _Q["pit_staleness_audit"](spark, SF_SMOKE)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan  # zero joins: union + window + aggregates
@@ -230,7 +228,7 @@ def test_staleness_plan_is_join_free(spark):
 
 
 def test_distance_profile_is_linear_pair_sample(spark):
-    rows = _q("embedding_distance_profile")(spark, SF_SMOKE).collect()
+    rows = _Q["embedding_distance_profile"](spark, SF_SMOKE).collect()
     n_vec = load_table(spark, SF_SMOKE, "embeddings").count()
     n_pairs = sum(r.n_pairs for r in rows)
     # ring pairing: exactly (n - buckets-with-members) pairs, so < n
@@ -250,7 +248,7 @@ def test_distance_profile_is_linear_pair_sample(spark):
 
 def test_anonymity_ladder_monotone(spark):
     rows = sorted(
-        _q("anonymity_generalization_ladder")(spark, SF_SMOKE).collect(),
+        _Q["anonymity_generalization_ladder"](spark, SF_SMOKE).collect(),
         key=lambda r: r.qi_level,
     )
     assert [r.qi_level for r in rows] == [1, 2, 3]
@@ -281,7 +279,7 @@ def test_audio_silence_runs_python_twin(spark):
     )
     got = {
         r.doc_id: r
-        for r in _q("multimodal_audio_silence_runs")(spark, SF_SMOKE).collect()
+        for r in _Q["multimodal_audio_silence_runs"](spark, SF_SMOKE).collect()
     }
     for d in docs:
         hx = "".join(
@@ -309,7 +307,7 @@ def test_audio_silence_runs_python_twin(spark):
 
 
 def test_winsorize_sweep_monotone(spark):
-    rows = {r.clip_level: r for r in _q("event_value_winsorize_sweep")(spark, SF_SMOKE).collect()}
+    rows = {r.clip_level: r for r in _Q["event_value_winsorize_sweep"](spark, SF_SMOKE).collect()}
     assert set(rows) == {"p90", "p95", "p99", "none"}
     assert rows["none"].n_clipped == 0
     assert rows["none"].mean_reduction == 0.0
@@ -335,9 +333,9 @@ def test_conductance_consistent_with_modularity_frame(spark):
     edge tallies adding up to each community's volume."""
     cond = {
         r.community: r
-        for r in _q("cobuy_community_conductance")(spark, SF_SMOKE).collect()
+        for r in _Q["cobuy_community_conductance"](spark, SF_SMOKE).collect()
     }
-    mod = {r.community: r for r in _q("graph_modularity")(spark, SF_SMOKE).collect()}
+    mod = {r.community: r for r in _Q["graph_modularity"](spark, SF_SMOKE).collect()}
     assert set(cond) == set(mod)
     for c, r in cond.items():
         assert r.n_members == mod[c].n_members
@@ -354,15 +352,15 @@ def test_method_agreement_census_is_exhaustive(spark):
     """The census classes must partition the union of the three pair
     sets, and the per-method marginals must equal the registered
     operators' own pair counts."""
-    rows = _q("dedup_method_agreement")(spark, SF_SMOKE).collect()
+    rows = _Q["dedup_method_agreement"](spark, SF_SMOKE).collect()
     total = sum(r.n_pairs for r in rows)
     assert abs(sum(r.pair_share for r in rows) - 1.0) < 1e-4
     n_sim = sum(r.n_pairs for r in rows if r.in_simhash)
     n_ex = sum(r.n_pairs for r in rows if r.in_exact)
     n_mh = sum(r.n_pairs for r in rows if r.in_minhash)
-    assert n_sim == _q("dedup_simhash_pairs")(spark, SF_SMOKE).count()
-    assert n_ex == _q("dedup_ngram_jaccard")(spark, SF_SMOKE).count()
-    assert n_mh == _q("dedup_minhash_lsh")(spark, SF_SMOKE).count()
+    assert n_sim == _Q["dedup_simhash_pairs"](spark, SF_SMOKE).count()
+    assert n_ex == _Q["dedup_ngram_jaccard"](spark, SF_SMOKE).count()
+    assert n_mh == _Q["dedup_minhash_lsh"](spark, SF_SMOKE).count()
     assert 0 < max(n_sim, n_ex, n_mh) <= total
     # no all-false class can exist (every key came from some set)
     assert all(r.in_minhash or r.in_simhash or r.in_exact for r in rows)
@@ -373,7 +371,7 @@ def test_method_agreement_census_is_exhaustive(spark):
 
 def test_rec_novelty_rank_curve(spark):
     rows = sorted(
-        _q("rec_novelty_by_rank")(spark, SF_SMOKE).collect(),
+        _Q["rec_novelty_by_rank"](spark, SF_SMOKE).collect(),
         key=lambda r: r.rec_rank,
     )
     assert [r.rec_rank for r in rows] == list(range(1, len(rows) + 1))
@@ -404,7 +402,7 @@ def test_stream_quantile_monitor_error_bound(spark):
 
     rows = {
         r.window_start: r
-        for r in _q("stream_histogram_quantile_monitor")(spark, SF_SMOKE).collect()
+        for r in _Q["stream_histogram_quantile_monitor"](spark, SF_SMOKE).collect()
     }
     assert rows
     ev = (
@@ -439,7 +437,7 @@ def test_stream_quantile_monitor_error_bound(spark):
 
 def test_probe_recall_curve_monotone_and_exact_at_full_probe(spark):
     rows = sorted(
-        _q("ann_probe_recall_curve")(spark, SF_SMOKE).collect(),
+        _Q["ann_probe_recall_curve"](spark, SF_SMOKE).collect(),
         key=lambda r: r.nprobe,
     )
     assert [r.nprobe for r in rows] == [1, 2, 3, 5, 8]
@@ -460,7 +458,7 @@ def test_probe_recall_curve_monotone_and_exact_at_full_probe(spark):
 
 
 def test_survivor_policies_consistent(spark):
-    rows = {r.policy: r for r in _q("dedup_survivor_policy_audit")(spark, SF_SMOKE).collect()}
+    rows = {r.policy: r for r in _Q["dedup_survivor_policy_audit"](spark, SF_SMOKE).collect()}
     assert set(rows) == {"min_doc_id", "longest_text", "richest_vocab"}
     base = rows["min_doc_id"]
     assert base.agreement_share == 1.0  # agrees with itself by definition

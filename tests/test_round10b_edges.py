@@ -14,9 +14,7 @@ from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
 
-registry.load_all()
-
-_q = registry.any_query
+_Q = registry.queries()
 
 
 def _write(spark, tmp_path, name, df):
@@ -40,7 +38,7 @@ def test_forecast_backtest_constant_series_ties_break_by_name(spark, tmp_path):
     )
     d = _write(spark, tmp_path, "orders", df)
     got = sorted(
-        _q("daily_revenue_forecast_backtest")(spark, d).collect(),
+        _Q["daily_revenue_forecast_backtest"](spark, d).collect(),
         key=lambda r: r.rnk,
     )
     assert [r.method for r in got] == ["drift", "mean", "naive", "seasonal_naive"]
@@ -68,7 +66,7 @@ def test_decay_features_age_clamp_boundaries(spark, tmp_path):
         " value double, props string",
     )
     d = _write(spark, tmp_path, "events", df)
-    got = {r.user_id: r for r in _q("user_decay_features")(spark, d).collect()}
+    got = {r.user_id: r for r in _Q["user_decay_features"](spark, d).collect()}
     assert got[10].last_event_age_days == 0
     assert got[10].decayed_count == _DECAY_WQ[0] / 1e6 == 1.0
     assert got[20].last_event_age_days == _DECAY_MAX_AGE_D
@@ -94,7 +92,7 @@ def test_price_dispersion_constant_price_and_single_supplier(spark, tmp_path):
         " l_shipdate timestamp",
     )
     d = _write(spark, tmp_path, "lineitem", df)
-    got = _q("part_price_dispersion_audit")(spark, d).collect()
+    got = _Q["part_price_dispersion_audit"](spark, d).collect()
     assert [r.l_partkey for r in got] == [1]
     assert got[0].price_cv == 0.0
     assert got[0].mean_unit_price == 10.0
@@ -111,7 +109,7 @@ def test_t_closeness_single_group_is_global(spark, tmp_path):
         " c_acctbal double, c_mktsegment string",
     )
     d = _write(spark, tmp_path, "customer", df)
-    got = _q("t_closeness_audit")(spark, d).collect()
+    got = _Q["t_closeness_audit"](spark, d).collect()
     assert len(got) == 1
     assert got[0].tvd == 0.0
     assert bool(got[0].meets_t) is True
@@ -135,7 +133,7 @@ def test_packing_efficiency_exact_fit_docs(spark, tmp_path):
     d = _write(spark, tmp_path, "documents", df)
     got = {
         r.strategy: r
-        for r in _q("sequence_packing_efficiency")(spark, d).collect()
+        for r in _Q["sequence_packing_efficiency"](spark, d).collect()
     }
     for r in got.values():
         assert r.n_sequences == 12
@@ -175,7 +173,7 @@ def test_fd_audit_holding_dependency(spark, tmp_path):
          (1, "t", "en", "s", 1)),
     ):
         _write(spark, tmp_path, t, spark.createDataFrame([row], schema))
-    got = {r.fd: r for r in _q("approximate_fd_audit")(spark, d).collect()}
+    got = {r.fd: r for r in _Q["approximate_fd_audit"](spark, d).collect()}
     r = got["customer.c_nationkey->c_mktsegment"]
     assert bool(r.holds) is True
     assert r.g3_error == 0.0

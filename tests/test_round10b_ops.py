@@ -15,9 +15,7 @@ from ml_feature_store_enterprise_grade_spark import registry
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
 from tests.conftest import SF_SMOKE
 
-registry.load_all()
-
-_q = registry.any_query
+_Q = registry.queries()
 
 
 # --- range_partition_balance_plan ------------------------------------
@@ -25,7 +23,7 @@ _q = registry.any_query
 
 def test_range_partition_plan_covers_and_balances(spark):
     rows = sorted(
-        _q("range_partition_balance_plan")(spark, SF_SMOKE).collect(),
+        _Q["range_partition_balance_plan"](spark, SF_SMOKE).collect(),
         key=lambda r: r.partition_idx,
     )
     n_parts = len(rows)
@@ -71,7 +69,7 @@ def test_range_partition_plan_matches_python_cutter(spark):
         cum += n
     got = {
         r.partition_idx: r
-        for r in _q("range_partition_balance_plan")(spark, SF_SMOKE).collect()
+        for r in _Q["range_partition_balance_plan"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(want)
     for idx, lst in want.items():
@@ -116,14 +114,14 @@ def test_price_dispersion_matches_python_twin(spark):
     cand.sort(key=lambda t: (-t[3], t[0]))
     want = cand[:20]
     got = sorted(
-        _q("part_price_dispersion_audit")(spark, SF_SMOKE).collect(),
+        _Q["part_price_dispersion_audit"](spark, SF_SMOKE).collect(),
         key=lambda r: (-r.price_cv, r.l_partkey),
     )
     assert [(r.l_partkey, r.n_items, r.n_suppliers, r.price_cv) for r in got] == want
 
 
 def test_price_dispersion_values_sane(spark):
-    for r in _q("part_price_dispersion_audit")(spark, SF_SMOKE).collect():
+    for r in _Q["part_price_dispersion_audit"](spark, SF_SMOKE).collect():
         assert r.n_suppliers >= 2
         assert r.n_items >= r.n_suppliers
         assert r.mean_unit_price > 0
@@ -136,7 +134,7 @@ def test_price_dispersion_values_sane(spark):
 def test_effective_rank_bounds_and_numpy_twin(spark):
     import numpy as np
 
-    row = _q("embedding_effective_rank")(spark, SF_SMOKE).collect()[0]
+    row = _Q["embedding_effective_rank"](spark, SF_SMOKE).collect()[0]
     d = row.n_dims
     # participation ratio is bounded by [1, d]
     assert 1.0 <= row.effective_rank <= d + 1e-9
@@ -180,7 +178,7 @@ def test_compression_screen_matches_zlib_twin(spark):
         want[key] = (n + 1, s + r_m)
     got = {
         (r.source, r.ratio_band): r
-        for r in _q("doc_compression_ratio_screen")(spark, SF_SMOKE).collect()
+        for r in _Q["doc_compression_ratio_screen"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(want)
     for key, (n, s) in want.items():
@@ -196,7 +194,7 @@ def test_compression_screen_matches_zlib_twin(spark):
 
 
 def test_compression_screen_band_contains_mean(spark):
-    for r in _q("doc_compression_ratio_screen")(spark, SF_SMOKE).collect():
+    for r in _Q["doc_compression_ratio_screen"](spark, SF_SMOKE).collect():
         lo, hi = r.ratio_band / 10.0, (r.ratio_band + 1) / 10.0
         if r.ratio_band == 10:
             assert r.mean_ratio >= 1.0 - 1e-9
@@ -240,7 +238,7 @@ def test_pq_adc_recall_matches_numpy_twin(spark):
         want[ids[qi]] = len(e10 & a10)
     got = {
         r.query_id: r
-        for r in _q("embedding_pq_adc_recall")(spark, SF_SMOKE).collect()
+        for r in _Q["embedding_pq_adc_recall"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(want)
     for qid, hits in want.items():
@@ -288,7 +286,7 @@ def test_decay_features_matches_python_twin(spark):
         )
     got = {
         r.user_id: r
-        for r in _q("user_decay_features")(spark, SF_SMOKE).collect()
+        for r in _Q["user_decay_features"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(want)
     for uid, (n, mind, swq, svwq) in want.items():
@@ -309,7 +307,7 @@ def test_fd_audit_matches_python_twin(spark):
         _FD_CANDIDATES,
     )
 
-    got = {r.fd: r for r in _q("approximate_fd_audit")(spark, SF_SMOKE).collect()}
+    got = {r.fd: r for r in _Q["approximate_fd_audit"](spark, SF_SMOKE).collect()}
     assert len(got) == len(_FD_CANDIDATES)
     for tab, lhs, rhs in _FD_CANDIDATES:
         rows = (
@@ -369,7 +367,7 @@ def test_t_closeness_matches_python_twin(spark):
     n = len(rows)
     got = {
         (r.c_nationkey, r.c_mktsegment): r
-        for r in _q("t_closeness_audit")(spark, SF_SMOKE).collect()
+        for r in _Q["t_closeness_audit"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(grp)
     for g, dist in grp.items():
@@ -391,7 +389,7 @@ def test_t_closeness_has_both_verdicts(spark):
     """The threshold splits real populations at smoke scale (the
     measured-signal guarantee: 0.06-0.58 TVD spread)."""
     verdicts = {
-        r.meets_t for r in _q("t_closeness_audit")(spark, SF_SMOKE).collect()
+        r.meets_t for r in _Q["t_closeness_audit"](spark, SF_SMOKE).collect()
     }
     assert verdicts == {True, False}
 
@@ -432,7 +430,7 @@ def test_forecast_backtest_matches_python_twin(spark):
         cum += r
     got = {
         r.method: r
-        for r in _q("daily_revenue_forecast_backtest")(spark, SF_SMOKE).collect()
+        for r in _Q["daily_revenue_forecast_backtest"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(sums)
     ranked = sorted(sums, key=lambda m: (sums[m], m))
@@ -487,7 +485,7 @@ def test_bootstrap_ci_matches_python_twin(spark):
     se = math.sqrt((nb * s2 - s1 * s1) / (nb * nb))
     lo = means[int(_BOOT_B * 0.025)][0]
     hi = means[int(_BOOT_B * 0.975) - 1][0]
-    r = _q("order_value_bootstrap_ci")(spark, SF_SMOKE).collect()[0]
+    r = _Q["order_value_bootstrap_ci"](spark, SF_SMOKE).collect()[0]
     assert r.n_orders == len(vq)
     assert r.n_replicates == _BOOT_B
     point = sum(vq.values()) / len(vq)
@@ -510,7 +508,7 @@ def test_bootstrap_se_tracks_analytic_se(spark):
         .collect()
     ]
     analytic = statistics.pstdev(vals) / math.sqrt(len(vals))
-    r = _q("order_value_bootstrap_ci")(spark, SF_SMOKE).collect()[0]
+    r = _Q["order_value_bootstrap_ci"](spark, SF_SMOKE).collect()[0]
     assert abs(r.boot_se - analytic) / analytic < 0.35
     assert r.ci_lo < r.mean_value < r.ci_hi
 
@@ -591,7 +589,7 @@ def test_stream_decay_multi_batch_replay_equals_batch(spark, tmp_path):
     assert out.count() > final.count()
     batch = {
         r.user_id: r
-        for r in _q("user_decay_features")(spark, SF_SMOKE).collect()
+        for r in _Q["user_decay_features"](spark, SF_SMOKE).collect()
     }
     assert set(got) == set(batch)
     for uid, (n, min_d, swq, svwq) in got.items():
@@ -645,7 +643,7 @@ def test_packing_efficiency_matches_python_twin(spark):
         concat_seqs += (cum + _SEQ_LEN - 1) // _SEQ_LEN
     got = {
         r.strategy: r
-        for r in _q("sequence_packing_efficiency")(spark, SF_SMOKE).collect()
+        for r in _Q["sequence_packing_efficiency"](spark, SF_SMOKE).collect()
     }
     pn = got["pad_per_doc"]
     assert pn.n_sequences == naive_seqs
@@ -697,7 +695,7 @@ def test_prefix_filter_join_is_lossless_vs_brute_force(spark):
                 want[(a, b)] = inter
     got = {
         (r.doc_a, r.doc_b): r.n_common
-        for r in _q("jaccard_prefix_filter_join")(spark, SF_SMOKE).collect()
+        for r in _Q["jaccard_prefix_filter_join"](spark, SF_SMOKE).collect()
     }
     assert got == want
     assert len(want) > 0  # the smoke corpus plants real near-dup pairs

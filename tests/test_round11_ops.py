@@ -266,9 +266,7 @@ def test_bootstrap_se_matches_analytic(spark):
     from pyspark.sql import functions as F
 
     registry.load_all()
-    q = {**registry.QUERIES, **registry.DEFERRED_QUERIES}[
-        "order_value_bootstrap_ci"
-    ]
+    q = registry.queries()["order_value_bootstrap_ci"]
     row = q(spark, SF_ORACLE).collect()[0]
     o = spark.read.parquet(f"{SF_ORACLE}/orders.parquet").filter(
         F.col("o_totalprice").isNotNull()

@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
-from ml_feature_store_enterprise_grade_spark.registry import any_query, load_all
+from ml_feature_store_enterprise_grade_spark.registry import load_all, queries
 
 from conftest import SF_ORACLE, SF_SMOKE
 
@@ -26,7 +26,7 @@ load_all()
 def test_theil_sen_matches_numpy_twin(spark):
     """The Spark pairwise-slope median and Sen CI must equal a direct
     numpy enumeration of all |days|²/2 slopes."""
-    row = any_query("daily_revenue_theil_sen")(spark, SF_SMOKE).collect()[0]
+    row = queries()["daily_revenue_theil_sen"](spark, SF_SMOKE).collect()[0]
     d = (
         load_table(spark, SF_SMOKE, "orders")
         .groupBy(F.date_trunc("day", F.col("o_orderdate").cast("date")).alias("day"))
@@ -63,7 +63,7 @@ def test_drift_fdr_bh_step_up_twin(spark):
     """BH verdicts must equal the textbook step-up rule applied in
     Python to the emitted p-values, and rejections must be monotone
     (everything below k* rejected, nothing above)."""
-    rows = any_query("order_value_drift_fdr")(spark, SF_ORACLE).collect()
+    rows = queries()["order_value_drift_fdr"](spark, SF_ORACLE).collect()
     m = rows[0]["n_tests"]
     assert len(rows) == m
     by_rank = sorted(rows, key=lambda r: r["p_rank"])
@@ -83,7 +83,7 @@ def test_drift_fdr_bh_step_up_twin(spark):
 def test_drift_fdr_measured_signal(spark):
     """The r12 measured signal pinned: exactly 1 raw false positive
     at sf0.01 and 0 BH rejections (stationary data)."""
-    rows = any_query("order_value_drift_fdr")(spark, SF_ORACLE).collect()
+    rows = queries()["order_value_drift_fdr"](spark, SF_ORACLE).collect()
     assert sum(r["reject_raw"] for r in rows) == 1
     assert sum(r["reject_bh"] for r in rows) == 0
 
@@ -96,7 +96,7 @@ def test_drift_fdr_measured_signal(spark):
 def test_hits_matches_numpy_twin(spark):
     out = {
         r["item_id"]: r
-        for r in any_query("item_hits_authority")(spark, SF_SMOKE).collect()
+        for r in queries()["item_hits_authority"](spark, SF_SMOKE).collect()
     }
     e = (
         load_table(spark, SF_SMOKE, "orders")
@@ -134,7 +134,7 @@ def test_hits_matches_numpy_twin(spark):
 
 
 def test_bloom_sizing_matches_formula(spark):
-    rows = any_query("bloom_filter_sizing_advisor")(
+    rows = queries()["bloom_filter_sizing_advisor"](
         spark, SF_ORACLE
     ).collect()
     assert len(rows) == 4
@@ -159,7 +159,7 @@ def test_dp_median_release_contract(spark):
     """The released grid point must be a valid candidate, the rank
     error must match an exact recount, and the release must be
     deterministic across invocations (pure function of data+seed)."""
-    q = any_query("dp_median_release")
+    q = queries()["dp_median_release"]
     rows1 = sorted(q(spark, SF_ORACLE).collect())
     rows2 = sorted(q(spark, SF_ORACLE).collect())
     assert rows1 == rows2
@@ -197,7 +197,7 @@ def test_cusum_closed_form_equals_recursion(spark):
     the literal Page recursion S_t = max(0, S_{t−1} + d_t) replayed
     in pandas on the same finalized-window means."""
     rows = (
-        any_query("stream_cusum_drift_monitor")(spark, SF_SMOKE)
+        queries()["stream_cusum_drift_monitor"](spark, SF_SMOKE)
         .orderBy("window_start")
         .collect()
     )
@@ -245,7 +245,7 @@ def test_regrouped_ntile_sites_have_no_small_key_window(spark):
         ("customer_segment_migration", "period"),
         ("ccnet_perplexity_buckets", "lang"),
     ):
-        df = any_query(name)(spark, SF_SMOKE)
+        df = queries()[name](spark, SF_SMOKE)
         plan = df._jdf.queryExecution().executedPlan().toString()
         saw_chunked = False
         for part, order in _window_specs(plan):
@@ -279,7 +279,7 @@ def test_unigram_census_memoized_once(spark):
 
 
 def test_mmr_matches_numpy_greedy_twin(spark):
-    rows = any_query("mmr_diversified_topk")(spark, SF_ORACLE).collect()
+    rows = queries()["mmr_diversified_topk"](spark, SF_ORACLE).collect()
     emb = (
         load_table(spark, SF_ORACLE, "embeddings")
         .select("vec_id", "embedding")
@@ -337,7 +337,7 @@ def test_reshard_movement_audit_contract(spark):
     modulo, 1/9 for HRW)."""
     rows = {
         r["method"]: r
-        for r in any_query("shard_reshard_movement_audit")(
+        for r in queries()["shard_reshard_movement_audit"](
             spark, SF_ORACLE
         ).collect()
     }

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ml_feature_store_enterprise_grade_spark.catalog import clear_count_cache
-from ml_feature_store_enterprise_grade_spark.registry import any_query, load_all
+from ml_feature_store_enterprise_grade_spark.registry import load_all, queries
 
 from conftest import SF_SMOKE
 
@@ -69,7 +69,7 @@ def test_census_rank_family_has_no_unbounded_window(spark):
         "rec_popularity_ndcg",
         "vocab_zipf_fit",
     ):
-        plan = _executed(any_query(name)(spark, SF_SMOKE))
+        plan = _executed(queries()[name](spark, SF_SMOKE))
         assert audit_plan(plan) == [], name
 
 
@@ -77,7 +77,7 @@ def test_rake_and_ndcg_rank_via_take_ordered(spark):
     """The re-rank idiom: the plan carries TakeOrderedAndProject (the
     per-partition-heap top-k) feeding the bounded re-rank window."""
     for name in ("doc_rake_keyphrases", "rec_popularity_ndcg"):
-        plan = _executed(any_query(name)(spark, SF_SMOKE))
+        plan = _executed(queries()[name](spark, SF_SMOKE))
         assert "TakeOrderedAndProject" in plan, name
 
 
@@ -154,7 +154,7 @@ def test_permutation_test_matches_python_twin(spark):
         _PERM_SEGS,
     )
 
-    row = any_query("order_value_permutation_test")(spark, SF_SMOKE).collect()[0]
+    row = queries()["order_value_permutation_test"](spark, SF_SMOKE).collect()[0]
     o = load_table(spark, SF_SMOKE, "orders")
     c = load_table(spark, SF_SMOKE, "customer")
     base = (
@@ -198,7 +198,7 @@ def test_bottomk_sample_matches_python_twin(spark):
         _BOTTOMK_SEED,
     )
 
-    rows = any_query("consistent_sample_bottomk")(spark, SF_SMOKE).collect()
+    rows = queries()["consistent_sample_bottomk"](spark, SF_SMOKE).collect()
     docs = load_table(spark, SF_SMOKE, "documents").select(
         "doc_id", "lang"
     ).collect()
@@ -221,14 +221,14 @@ def test_rbo_matches_numpy_twin(spark):
     """RBO from the two top-k lists, recomputed directly from the
     textbook formula in floats (engine must match within 1e-6 of the
     float form AND be exactly the quantized integer form)."""
-    rows = any_query("ranker_rbo_agreement")(spark, SF_SMOKE).collect()
+    rows = queries()["ranker_rbo_agreement"](spark, SF_SMOKE).collect()
     a = {
         r.doc_id: r.rank
-        for r in any_query("bm25_search_topk")(spark, SF_SMOKE).collect()
+        for r in queries()["bm25_search_topk"](spark, SF_SMOKE).collect()
     }
     b = {
         r.doc_id: r.rank
-        for r in any_query("lm_dirichlet_search_topk")(spark, SF_SMOKE).collect()
+        for r in queries()["lm_dirichlet_search_topk"](spark, SF_SMOKE).collect()
     }
     p = 0.9
     rbo = 0.0
@@ -244,7 +244,7 @@ def test_rbo_matches_numpy_twin(spark):
 
 
 def test_temperature_sweep_matches_python_twin(spark):
-    rows = any_query("mixture_temperature_sweep")(spark, SF_SMOKE).collect()
+    rows = queries()["mixture_temperature_sweep"](spark, SF_SMOKE).collect()
     counts = {
         r.lang: r["count"]
         for r in load_table(spark, SF_SMOKE, "documents")
@@ -271,7 +271,7 @@ def test_shuffle_audit_matches_python_twin(spark):
         _SHUF_EPOCH_SEED,
     )
 
-    rows = any_query("epoch_shuffle_quality_audit")(spark, SF_SMOKE).collect()
+    rows = queries()["epoch_shuffle_quality_audit"](spark, SF_SMOKE).collect()
     docs = load_table(spark, SF_SMOKE, "documents").select(
         "doc_id", "lang"
     ).collect()
@@ -306,7 +306,7 @@ def test_fellegi_sunter_length_dominates(spark):
     be a valid smoothed probability."""
     rows = {
         r.field: r
-        for r in any_query("fellegi_sunter_weights")(spark, SF_SMOKE).collect()
+        for r in queries()["fellegi_sunter_weights"](spark, SF_SMOKE).collect()
     }
     assert set(rows) == {"lang", "length", "source"}
     for r in rows.values():
@@ -329,7 +329,7 @@ def test_als_epoch_matches_numpy_twin(spark):
 
     out = {
         r.stage: r
-        for r in any_query("item_implicit_als_epoch")(spark, SF_SMOKE).collect()
+        for r in queries()["item_implicit_als_epoch"](spark, SF_SMOKE).collect()
     }
     o = load_table(spark, SF_SMOKE, "orders").select(
         F.col("o_custkey").alias("u"), "o_orderkey"
@@ -396,7 +396,7 @@ def test_cobuy_jaccard_topk_matches_python_twin(spark):
         _IJ_TOPK,
     )
 
-    rows = any_query("item_cobuy_jaccard_topk")(spark, SF_SMOKE).collect()
+    rows = queries()["item_cobuy_jaccard_topk"](spark, SF_SMOKE).collect()
     baskets = (
         load_table(spark, SF_SMOKE, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -450,7 +450,7 @@ def test_stream_bottomk_matches_batch_and_is_idempotent(spark, tmp_path):
         _bottomk_merge_processor,
     )
 
-    rows = any_query("stream_bottomk_sample")(spark, SF_SMOKE).collect()
+    rows = queries()["stream_bottomk_sample"](spark, SF_SMOKE).collect()
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "event_type"
     ).collect()
@@ -480,3 +480,33 @@ def test_stream_bottomk_matches_batch_and_is_idempotent(spark, tmp_path):
     proc(batch, 0)
     twice = sorted(map(tuple, spark.read.parquet(state).collect()))
     assert once == twice
+
+
+def test_stream_bottomk_merge_tolerates_null_ids_and_types(spark, tmp_path):
+    """A micro-batch carrying NULL event_ids (and a NULL event_type)
+    folds without error: NULL ids never enter the sample, and the NULL
+    type keeps its own bottom-k like any other type."""
+    from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
+        _SBK_SEED,
+        _bottomk_merge_processor,
+    )
+
+    raw = [(None, "click"), (None, None), (1, "click"), (2, "click"),
+           (3, "click"), (4, None), (5, None), (6, "view")]
+    batch = spark.createDataFrame(raw, "event_id bigint, event_type string")
+    state = str(tmp_path / "state")
+    proc = _bottomk_merge_processor(state, 2)
+    proc(batch, 0)
+    proc(batch, 1)
+    got = sorted(
+        ((r.event_type or ""), r.event_id, r.h)
+        for r in spark.read.parquet(state).collect()
+    )
+    bytype: dict = {}
+    for eid, et in raw:
+        if eid is not None:
+            bytype.setdefault(et or "", []).append((_ph64(str(eid), _SBK_SEED), eid))
+    expect = sorted(
+        (et, eid, h) for et, hs in bytype.items() for h, eid in sorted(hs)[:2]
+    )
+    assert got == expect

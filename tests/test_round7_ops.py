@@ -23,7 +23,6 @@ from ml_feature_store_enterprise_grade_spark.operators.asof import (
 )
 from tests.conftest import SF_SMOKE
 
-registry.queries()  # force module load so DEFERRED_QUERIES is populated
 
 T0 = datetime(2024, 1, 1)
 
@@ -81,7 +80,7 @@ def test_nearest_asof_matches_reference(spark, tol_hours, entities, features):
 
 
 def test_kcore_members_meet_degree_bound(spark):
-    rows = registry.any_query("item_kcore_membership")(
+    rows = registry.queries()["item_kcore_membership"](
         spark, SF_SMOKE
     ).collect()
     assert rows, "smoke corpus should have a non-empty 3-core"
@@ -91,7 +90,7 @@ def test_kcore_members_meet_degree_bound(spark):
 
 
 def test_lpa_communities_partition_the_node_set(spark):
-    rows = registry.any_query("item_label_propagation")(
+    rows = registry.queries()["item_label_propagation"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -130,7 +129,7 @@ def test_lpa_communities_partition_the_node_set(spark):
 
 def test_survival_curve_is_monotone(spark):
     rows = (
-        registry.any_query("session_survival_curve")(spark, SF_SMOKE)
+        registry.queries()["session_survival_curve"](spark, SF_SMOKE)
         .orderBy("duration_min")
         .collect()
     )
@@ -146,7 +145,7 @@ def test_survival_curve_is_monotone(spark):
 
 
 def test_srm_audit_accepts_the_null_hypothesis(spark):
-    rows = registry.any_query("ab_assignment_srm_audit")(
+    rows = registry.queries()["ab_assignment_srm_audit"](
         spark, SF_SMOKE
     ).collect()
     assert {r.arm for r in rows} == {"control", "treat_a", "treat_b"}
@@ -157,7 +156,7 @@ def test_srm_audit_accepts_the_null_hypothesis(spark):
 
 def test_rake_ranking_is_dense_and_positive(spark):
     rows = (
-        registry.any_query("doc_rake_keyphrases")(spark, SF_SMOKE)
+        registry.queries()["doc_rake_keyphrases"](spark, SF_SMOKE)
         .orderBy("rank")
         .collect()
     )
@@ -169,7 +168,7 @@ def test_rake_ranking_is_dense_and_positive(spark):
 
 
 def test_ndcg_metrics_are_proper_fractions(spark):
-    rows = registry.any_query("rec_popularity_ndcg")(
+    rows = registry.queries()["rec_popularity_ndcg"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -183,7 +182,7 @@ def test_ndcg_metrics_are_proper_fractions(spark):
 
 
 def test_streak_ordering_invariants(spark):
-    rows = registry.any_query("user_activity_streaks")(
+    rows = registry.queries()["user_activity_streaks"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -194,7 +193,7 @@ def test_streak_ordering_invariants(spark):
 
 
 def test_abc_classes_partition_revenue(spark):
-    rows = registry.any_query("part_revenue_abc_classes")(
+    rows = registry.queries()["part_revenue_abc_classes"](
         spark, SF_SMOKE
     ).collect()
     got = {r.abc: r for r in rows}
@@ -214,7 +213,7 @@ def test_abc_classes_partition_revenue(spark):
 
 def test_changepoint_scan_splits_cover_series(spark):
     rows = (
-        registry.any_query("revenue_changepoint_scan")(spark, SF_SMOKE)
+        registry.queries()["revenue_changepoint_scan"](spark, SF_SMOKE)
         .orderBy("rank")
         .collect()
     )

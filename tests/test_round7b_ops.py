@@ -49,7 +49,7 @@ def test_rendezvous_census_matches_python_reference(spark):
         agg[1] += n_chars
     got = {
         r.shard: [r.n_docs, r.n_chars_total]
-        for r in registry.any_query("doc_shard_rendezvous")(
+        for r in registry.queries()["doc_shard_rendezvous"](
             spark, SF_SMOKE
         ).collect()
     }
@@ -82,7 +82,7 @@ def test_rendezvous_minimal_movement_on_shard_removal():
 
 
 def test_ra_predictions_are_nonadjacent_and_ranked(spark):
-    df = registry.any_query("item_ra_link_prediction")(spark, SF_SMOKE)
+    df = registry.queries()["item_ra_link_prediction"](spark, SF_SMOKE)
     rows = df.collect()
     assert rows, "prediction set must be non-vacuous on the smoke corpus"
     scores = [r.ra_score for r in rows]
@@ -111,7 +111,7 @@ def test_ra_predictions_are_nonadjacent_and_ranked(spark):
 
 
 def test_sax_symbols_are_rank_monotone_quartiles(spark):
-    rows = registry.any_query("daily_revenue_sax")(
+    rows = registry.queries()["daily_revenue_sax"](
         spark, SF_SMOKE
     ).collect()
     by_sym: dict[str, list[float]] = {}
@@ -127,7 +127,7 @@ def test_sax_symbols_are_rank_monotone_quartiles(spark):
 
 
 def test_quantile_normalization_unifies_distributions(spark):
-    rows = registry.any_query("event_value_quantile_normalization")(
+    rows = registry.queries()["event_value_quantile_normalization"](
         spark, SF_SMOKE
     ).collect()
     # (1) after normalization every event type carries the IDENTICAL
@@ -152,7 +152,7 @@ def test_quantile_normalization_unifies_distributions(spark):
 
 
 def test_jl_distortion_is_near_unity(spark):
-    rows = registry.any_query("embedding_jl_distortion")(
+    rows = registry.queries()["embedding_jl_distortion"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -177,7 +177,7 @@ def test_left_outer_join_withholds_watermark_tail(spark):
 
     got = {
         r.user_id: (r.n_rows, r.n_matched)
-        for r in registry.any_query("stream_stream_left_outer_join")(
+        for r in registry.queries()["stream_stream_left_outer_join"](
             spark, SF_SMOKE
         ).collect()
     }
@@ -217,7 +217,7 @@ def test_left_outer_join_withholds_watermark_tail(spark):
 
 
 def test_segment_migration_matrix_is_consistent(spark):
-    rows = registry.any_query("customer_segment_migration")(
+    rows = registry.queries()["customer_segment_migration"](
         spark, SF_SMOKE
     ).collect()
     total = sum(r.n_customers for r in rows)
@@ -292,7 +292,7 @@ def test_bpe_merges_match_python_reference(spark):
     want = _python_bpe(texts, _BPE_MERGES)
     got = [
         (r.merge_rank, r.pair, r.merged, r.pair_count)
-        for r in registry.any_query("bpe_merge_learning")(
+        for r in registry.queries()["bpe_merge_learning"](
             spark, SF_SMOKE
         )
         .orderBy("merge_rank")
@@ -304,7 +304,7 @@ def test_bpe_merges_match_python_reference(spark):
 
 
 def test_source_ablation_shares_and_bounds(spark):
-    rows = registry.any_query("source_ablation_report")(
+    rows = registry.queries()["source_ablation_report"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -329,7 +329,7 @@ def test_source_ablation_shares_and_bounds(spark):
 
 
 def test_lexical_drift_is_bounded_and_symmetric_smoke(spark):
-    rows = registry.any_query("corpus_lexical_drift")(
+    rows = registry.queries()["corpus_lexical_drift"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -345,7 +345,7 @@ def test_centroid_drift_cosine_bounds_and_identity(spark):
     """Cosines in [-1, 1]; and on a label-coherent corpus the two
     halves of one label must agree far better than random (> 0).
     Identity check: feeding the SAME half twice must give cosine 1."""
-    rows = registry.any_query("embedding_centroid_drift")(
+    rows = registry.queries()["embedding_centroid_drift"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -369,7 +369,7 @@ def test_phrase_search_hits_contain_the_phrase(spark):
         .execute(f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'")
         .fetchall()
     }
-    rows = registry.any_query("phrase_search_topdocs")(
+    rows = registry.queries()["phrase_search_topdocs"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -434,7 +434,7 @@ def test_bitemporal_features_respect_both_time_axes(spark):
             want[k] = (n, float(rev))
     got = {
         r.o_orderkey: (r.prior_known_orders, r.prior_known_revenue)
-        for r in registry.any_query("bitemporal_customer_features")(
+        for r in registry.queries()["bitemporal_customer_features"](
             spark, SF_SMOKE
         ).collect()
     }
@@ -443,7 +443,7 @@ def test_bitemporal_features_respect_both_time_axes(spark):
 
 
 def test_language_purity_flags_are_consistent(spark):
-    rows = registry.any_query("doc_language_purity")(
+    rows = registry.queries()["doc_language_purity"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -476,7 +476,7 @@ def test_diversified_topk_matches_python_reference(spark):
         capped += [(k, c, p) for k, p in lst[:2]]
     capped.sort(key=lambda r: (-r[2], r[0]))
     want = [(k, c, float(p)) for k, c, p in capped[:20]]
-    rows = registry.any_query("top_orders_diversified")(
+    rows = registry.queries()["top_orders_diversified"](
         spark, SF_SMOKE
     ).collect()
     got = [(r.o_orderkey, r.o_custkey, r.o_totalprice) for r in rows]
@@ -491,7 +491,7 @@ def test_hard_negatives_live_in_the_similar_but_distinct_band(spark):
     so the result there is legitimately empty)."""
     from tests.conftest import SF_ORACLE
 
-    rows = registry.any_query("hard_negative_pairs")(
+    rows = registry.queries()["hard_negative_pairs"](
         spark, SF_ORACLE
     ).collect()
     assert rows, "sf0.01 must yield hard negatives"
@@ -506,7 +506,7 @@ def test_dsir_scores_favor_the_target_language(spark):
     """The defining property of importance resampling: documents from
     the target domain (en) must score higher on average than the rest,
     and the selected flag must equal score > 0."""
-    rows = registry.any_query("dsir_importance_weights")(
+    rows = registry.queries()["dsir_importance_weights"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -521,7 +521,7 @@ def test_dsir_scores_favor_the_target_language(spark):
 def test_ccnet_buckets_are_equal_terciles_ordered_by_fluency(spark):
     from collections import Counter, defaultdict
 
-    rows = registry.any_query("ccnet_perplexity_buckets")(
+    rows = registry.queries()["ccnet_perplexity_buckets"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -540,7 +540,7 @@ def test_ccnet_buckets_are_equal_terciles_ordered_by_fluency(spark):
 
 
 def test_funnel_ztest_rates_and_flags_are_consistent(spark):
-    rows = registry.any_query("funnel_conversion_ztest")(
+    rows = registry.queries()["funnel_conversion_ztest"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -557,7 +557,7 @@ def test_funnel_ztest_rates_and_flags_are_consistent(spark):
 
 
 def test_trimmed_mean_is_between_bounds_and_trims_ten_percent(spark):
-    rows = registry.any_query("robust_order_value_stats")(
+    rows = registry.queries()["robust_order_value_stats"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -569,7 +569,7 @@ def test_trimmed_mean_is_between_bounds_and_trims_ten_percent(spark):
 
 
 def test_edge_churn_shares_sum_to_one_and_cover_fates(spark):
-    rows = registry.any_query("cobuy_edge_churn")(
+    rows = registry.queries()["cobuy_edge_churn"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -579,7 +579,7 @@ def test_edge_churn_shares_sum_to_one_and_cover_fates(spark):
 
 
 def test_assortativity_is_a_valid_correlation(spark):
-    rows = registry.any_query("cobuy_degree_assortativity")(
+    rows = registry.queries()["cobuy_degree_assortativity"](
         spark, SF_SMOKE
     ).collect()
     assert len(rows) == 1
@@ -589,7 +589,7 @@ def test_assortativity_is_a_valid_correlation(spark):
 
 
 def test_cluster_language_purity_tallies_are_consistent(spark):
-    rows = registry.any_query("dup_cluster_language_purity")(
+    rows = registry.queries()["dup_cluster_language_purity"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -674,7 +674,7 @@ def test_ra_link_prediction_matches_python_reference_on_random_baskets(
     try:
         got = [
             (r.item_a, r.item_b, r.n_common, r.ra_score)
-            for r in registry.any_query("item_ra_link_prediction")(
+            for r in registry.queries()["item_ra_link_prediction"](
                 spark, str(d)
             ).collect()
         ]
@@ -718,7 +718,7 @@ def test_bpe_matches_python_reference_on_random_corpora(
     want = _python_bpe([text], _BPE_MERGES)
     got = [
         (r.merge_rank, r.pair, r.merged, r.pair_count)
-        for r in registry.any_query("bpe_merge_learning")(
+        for r in registry.queries()["bpe_merge_learning"](
             spark, str(d)
         )
         .orderBy("merge_rank")
@@ -730,7 +730,7 @@ def test_bpe_matches_python_reference_on_random_corpora(
 def test_entropy_rate_is_bounded_and_weighted_mean(spark):
     import math
 
-    rows = registry.any_query("markov_entropy_rate")(
+    rows = registry.queries()["markov_entropy_rate"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -751,7 +751,7 @@ def test_entropy_rate_is_bounded_and_weighted_mean(spark):
 
 
 def test_poisson_gof_expected_counts_sum_to_n(spark):
-    rows = registry.any_query("basket_size_poisson_gof")(
+    rows = registry.queries()["basket_size_poisson_gof"](
         spark, SF_SMOKE
     ).collect()
     assert rows
@@ -804,7 +804,7 @@ def test_spearman_is_valid_and_matches_scipy_free_reference(spark):
     want = (n * sxy - sx * sy) / (
         (n * sxx - sx * sx) * (n * syy - sy * sy)
     ) ** 0.5
-    got = registry.any_query("acctbal_revenue_spearman")(
+    got = registry.queries()["acctbal_revenue_spearman"](
         spark, SF_SMOKE
     ).collect()[0]
     assert got.n == n
@@ -813,7 +813,7 @@ def test_spearman_is_valid_and_matches_scipy_free_reference(spark):
 
 
 def test_cramers_v_is_bounded(spark):
-    r = registry.any_query("segment_priority_association")(
+    r = registry.queries()["segment_priority_association"](
         spark, SF_SMOKE
     ).collect()[0]
     assert r.n_orders > 0 and r.dof >= 1
@@ -823,7 +823,7 @@ def test_cramers_v_is_bounded(spark):
 
 def test_quality_concentration_curve_is_monotone_to_one(spark):
     rows = sorted(
-        registry.any_query("quality_concentration_curve")(
+        registry.queries()["quality_concentration_curve"](
             spark, SF_SMOKE
         ).collect(),
         key=lambda r: r.decile,

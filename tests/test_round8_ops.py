@@ -17,17 +17,14 @@ from pyspark.sql import functions as F
 from ml_feature_store_enterprise_grade_spark import registry
 from tests.conftest import SF_SMOKE
 
-registry.load_all()
-
-
-_q = registry.any_query
+_Q = registry.queries()
 
 
 # --- dp_contribution_bounding ---------------------------------------
 
 
 def test_dp_bounding_invariants(spark):
-    rows = _q("dp_contribution_bounding")(spark, SF_SMOKE).collect()
+    rows = _Q["dp_contribution_bounding"](spark, SF_SMOKE).collect()
     assert rows, "audit must cover at least one day"
     for r in rows:
         # bounded never exceeds raw; bias is exactly the gap.
@@ -43,7 +40,7 @@ def test_dp_bounding_invariants(spark):
 
 
 def test_dp_bounding_bounded_sum_capped_by_users_times_cap(spark):
-    rows = _q("dp_contribution_bounding")(spark, SF_SMOKE).collect()
+    rows = _Q["dp_contribution_bounding"](spark, SF_SMOKE).collect()
     for r in rows:
         assert r.bounded_sum <= r.n_users * 100.0 + 1e-9
 
@@ -52,7 +49,7 @@ def test_dp_bounding_bounded_sum_capped_by_users_times_cap(spark):
 
 
 def test_modularity_terms_sum_to_global(spark):
-    rows = _q("graph_modularity")(spark, SF_SMOKE).collect()
+    rows = _Q["graph_modularity"](spark, SF_SMOKE).collect()
     assert rows
     q_global = rows[0].modularity
     assert all(abs(r.modularity - q_global) < 1e-12 for r in rows)
@@ -68,7 +65,7 @@ def test_modularity_terms_sum_to_global(spark):
 def test_modularity_edge_accounting(spark):
     """Internal edges never exceed what the degree sum allows, and
     the degree grand total is twice the (undirected) edge count."""
-    rows = _q("graph_modularity")(spark, SF_SMOKE).collect()
+    rows = _Q["graph_modularity"](spark, SF_SMOKE).collect()
     for r in rows:
         assert 2 * r.internal_edges <= r.degree_sum
     # Σ_c d_c = 2m: every directed edge contributes one endpoint.
@@ -82,7 +79,7 @@ def test_modularity_edge_accounting(spark):
 
 
 def test_bitext_margin_one_best_per_source(spark):
-    rows = _q("embedding_bitext_margin")(spark, SF_SMOKE).collect()
+    rows = _Q["embedding_bitext_margin"](spark, SF_SMOKE).collect()
     assert rows
     xs = [r.x_id for r in rows]
     assert len(xs) == len(set(xs)), "exactly one best match per source"
@@ -103,7 +100,7 @@ def test_bitext_margin_one_best_per_source(spark):
 def test_bitext_margin_mutual_is_symmetric_best(spark):
     """A pair flagged mutual must be its target's best source too —
     re-derive the reverse election from the pair frame itself."""
-    df = _q("embedding_bitext_margin")(spark, SF_SMOKE)
+    df = _Q["embedding_bitext_margin"](spark, SF_SMOKE)
     rows = df.collect()
     mutual = [(r.x_id, r.y_id) for r in rows if r.is_mutual]
     # a target can be the best of many sources, but mutual pairs
@@ -118,7 +115,7 @@ def test_bitext_margin_mutual_is_symmetric_best(spark):
 def test_stream_asof_never_leaks_open_window(spark):
     """THE PIT guarantee: every attached feature_timestamp (an hourly
     window CLOSE) precedes or equals the event's own timestamp."""
-    rows = _q("stream_asof_enrichment")(spark, SF_SMOKE).collect()
+    rows = _Q["stream_asof_enrichment"](spark, SF_SMOKE).collect()
     assert rows
     n_featured = 0
     for r in rows:
@@ -136,7 +133,7 @@ def test_stream_asof_covers_every_event(spark):
         f"SELECT COUNT(*) FROM '{SF_SMOKE}/events.parquet' "
         "WHERE user_id IS NOT NULL"
     ).fetchone()[0]
-    got = _q("stream_asof_enrichment")(spark, SF_SMOKE).count()
+    got = _Q["stream_asof_enrichment"](spark, SF_SMOKE).count()
     assert got == want
 
 
@@ -172,7 +169,7 @@ def test_audio_kernel_matches_python_decode(spark):
         )
         .fetchall()
     )
-    df = _q("multimodal_audio_energy")(spark, SF_SMOKE).filter(
+    df = _Q["multimodal_audio_energy"](spark, SF_SMOKE).filter(
         F.col("doc_id").isin(*texts.keys())
     )
     got = {
@@ -185,18 +182,18 @@ def test_audio_kernel_matches_python_decode(spark):
 
 
 def test_audio_rms_consistent_with_sum_sq(spark):
-    rows = _q("multimodal_audio_energy")(spark, SF_SMOKE).limit(50).collect()
+    rows = _Q["multimodal_audio_energy"](spark, SF_SMOKE).limit(50).collect()
     for r in rows:
         assert abs(r.rms - round(float(np.sqrt(r.sum_sq / 64.0)), 6)) < 1e-9
 
 
-# --- returnflag_anova_ftest (deferred, round-9 queue) ----------------
+# --- returnflag_anova_ftest -----------------------------------------
 
 
 def test_anova_partition_identity(spark):
     """SSB + SSW = SST and eta² ∈ [0, 1]; F non-negative with the
     right degrees of freedom for 3 groups."""
-    rows = _q("returnflag_anova_ftest")(spark, SF_SMOKE).collect()
+    rows = _Q["returnflag_anova_ftest"](spark, SF_SMOKE).collect()
     assert len(rows) == 3
     r = rows[0]
     assert all(x.f_stat == r.f_stat for x in rows)
@@ -222,15 +219,15 @@ def test_anova_matches_numpy(spark):
     ssb = sum(len(g) * (g.mean() - allv.mean()) ** 2 for g in gm)
     k, n = len(gm), len(allv)
     f_ref = (ssb / (k - 1)) / ((sst - ssb) / (n - k))
-    r = _q("returnflag_anova_ftest")(spark, SF_SMOKE).collect()[0]
+    r = _Q["returnflag_anova_ftest"](spark, SF_SMOKE).collect()[0]
     assert abs(r.f_stat - f_ref) < max(1e-3, 1e-4 * abs(f_ref))
 
 
-# --- feature_information_gain (deferred, round-9 queue) --------------
+# --- feature_information_gain ---------------------------------------
 
 
 def test_information_gain_bounds_and_ranking(spark):
-    rows = {r.feature: r for r in _q("feature_information_gain")(
+    rows = {r.feature: r for r in _Q["feature_information_gain"](
         spark, SF_SMOKE
     ).collect()}
     assert set(rows) == {"segment", "nation", "bal_band"}
@@ -245,11 +242,11 @@ def test_information_gain_bounds_and_ranking(spark):
         assert abs((r.h_label - r.h_label_given_bin) - r.info_gain) < 2e-4
 
 
-# --- online_offline_skew_audit (deferred, round-9 queue) -------------
+# --- online_offline_skew_audit --------------------------------------
 
 
 def test_skew_audit_consistency(spark):
-    rows = {r.feature: r for r in _q("online_offline_skew_audit")(
+    rows = {r.feature: r for r in _Q["online_offline_skew_audit"](
         spark, SF_SMOKE
     ).collect()}
     assert set(rows) == {"total_events", "total_revenue"}
@@ -275,11 +272,11 @@ def test_skew_audit_consistency(spark):
     assert rev.n_changed <= ev.n_changed
 
 
-# --- cross_table_consistency_audit (deferred, round-9 queue) ---------
+# --- cross_table_consistency_audit ----------------------------------
 
 
 def test_consistency_audit_gates(spark):
-    rows = {r.check_name: r for r in _q("cross_table_consistency_audit")(
+    rows = {r.check_name: r for r in _Q["cross_table_consistency_audit"](
         spark, SF_SMOKE
     ).collect()}
     assert len(rows) == 8

@@ -19,17 +19,14 @@ from ml_feature_store_enterprise_grade_spark import registry
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
 from tests.conftest import SF_SMOKE
 
-registry.load_all()
-
-
-_q = registry.any_query
+_Q = registry.queries()
 
 
 # --- event_value_mann_whitney ----------------------------------------
 
 
 def test_mwu_bounds_and_flags(spark):
-    rows = _q("event_value_mann_whitney")(spark, SF_SMOKE).collect()
+    rows = _Q["event_value_mann_whitney"](spark, SF_SMOKE).collect()
     assert rows, "at least one event type"
     total = rows[0].n_type + rows[0].n_rest
     for r in rows:
@@ -58,7 +55,7 @@ def test_mwu_matches_numpy_rank_sum(spark):
             j += 1
         ranks[order[i:j]] = (i + j + 1) / 2.0  # average 1-based rank
         i = j
-    rows = _q("event_value_mann_whitney")(spark, SF_SMOKE).collect()
+    rows = _Q["event_value_mann_whitney"](spark, SF_SMOKE).collect()
     for r in rows:
         mask = (pdf["event_type"] == r.event_type).to_numpy()
         rsum = ranks[mask].sum()
@@ -71,7 +68,7 @@ def test_mwu_matches_numpy_rank_sum(spark):
 
 
 def test_variance_ratio_shape(spark):
-    r = _q("daily_revenue_variance_ratio")(spark, SF_SMOKE).collect()
+    r = _Q["daily_revenue_variance_ratio"](spark, SF_SMOKE).collect()
     assert len(r) == 1
     r = r[0]
     assert r.q == 5
@@ -81,7 +78,7 @@ def test_variance_ratio_shape(spark):
 
 
 def test_variance_ratio_matches_numpy(spark):
-    r = _q("daily_revenue_variance_ratio")(spark, SF_SMOKE).collect()[0]
+    r = _Q["daily_revenue_variance_ratio"](spark, SF_SMOKE).collect()[0]
     daily = (
         load_table(spark, SF_SMOKE, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
@@ -104,7 +101,7 @@ def test_ari_matches_numpy_contingency(spark):
         _km_final_assignments,
     )
 
-    r = _q("embedding_cluster_label_ari")(spark, SF_SMOKE).collect()[0]
+    r = _Q["embedding_cluster_label_ari"](spark, SF_SMOKE).collect()[0]
     a = (
         _km_final_assignments(spark, SF_SMOKE)
         .select("cid", "label")
@@ -130,7 +127,7 @@ def test_ari_matches_numpy_contingency(spark):
 
 
 def test_llr_nonnegative_and_ordered(spark):
-    rows = _q("corpus_bigram_llr")(spark, SF_SMOKE).collect()
+    rows = _Q["corpus_bigram_llr"](spark, SF_SMOKE).collect()
     assert 0 < len(rows) <= 20
     vals = [r.llr for r in rows]
     assert vals == sorted(vals, reverse=True)
@@ -143,7 +140,7 @@ def test_llr_nonnegative_and_ordered(spark):
 def test_llr_top_pair_matches_direct_g2(spark):
     """The top collocation's G² recomputed with exact math (no leaf
     quantization) must agree to within the quantization budget."""
-    rows = _q("corpus_bigram_llr")(spark, SF_SMOKE).collect()
+    rows = _Q["corpus_bigram_llr"](spark, SF_SMOKE).collect()
     top = rows[0]
     bc = (
         load_table(spark, SF_SMOKE, "documents")
@@ -196,7 +193,7 @@ def _py_portable_hash(word: str, seed: int) -> int:
 
 
 def test_blocklist_matches_python_md5(spark):
-    rows = _q("doc_blocklist_filter")(spark, SF_SMOKE).collect()
+    rows = _Q["doc_blocklist_filter"](spark, SF_SMOKE).collect()
     docs = {
         r.doc_id: r.text
         for r in load_table(spark, SF_SMOKE, "documents")
@@ -218,7 +215,7 @@ def test_blocklist_matches_python_md5(spark):
 
 
 def test_blocklist_filter_splits(spark):
-    rows = _q("doc_blocklist_filter")(spark, SF_SMOKE).collect()
+    rows = _Q["doc_blocklist_filter"](spark, SF_SMOKE).collect()
     kept = sum(1 for r in rows if r.kept)
     assert 0 < kept < len(rows), "threshold must actually split the corpus"
 
@@ -227,7 +224,7 @@ def test_blocklist_filter_splits(spark):
 
 
 def test_staleness_never_negative_and_ordered(spark):
-    rows = _q("pit_staleness_audit")(spark, SF_SMOKE).collect()
+    rows = _Q["pit_staleness_audit"](spark, SF_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.n_matched <= r.n_events
@@ -286,7 +283,7 @@ def test_silhouette_matches_numpy(spark):
 
     rows = {
         r.cid: r
-        for r in _q("embedding_silhouette")(spark, SF_SMOKE).collect()
+        for r in _Q["embedding_silhouette"](spark, SF_SMOKE).collect()
     }
     a = _km_final_assignments(spark, SF_SMOKE).select("cid", "qv").toPandas()
     x = np.array(a["qv"].tolist(), dtype=np.float64) / 1e6
@@ -321,7 +318,7 @@ def test_silhouette_matches_numpy(spark):
 
 
 def test_kruskal_wallis_matches_numpy(spark):
-    rows = _q("event_value_kruskal_wallis")(spark, SF_SMOKE).collect()
+    rows = _Q["event_value_kruskal_wallis"](spark, SF_SMOKE).collect()
     assert rows
     k = len(rows)
     for r in rows:
@@ -366,7 +363,7 @@ def test_kruskal_wallis_matches_numpy(spark):
 def test_knn_label_accuracy_matches_numpy(spark):
     rows = {
         r.label: r
-        for r in _q("embedding_knn_label_accuracy")(spark, SF_SMOKE).collect()
+        for r in _Q["embedding_knn_label_accuracy"](spark, SF_SMOKE).collect()
     }
     pdf = (
         load_table(spark, SF_SMOKE, "embeddings")
@@ -408,7 +405,7 @@ def test_knn_label_accuracy_matches_numpy(spark):
 def test_calibration_matches_python(spark):
     import datetime as dt
 
-    rows = _q("purchase_propensity_calibration")(spark, SF_SMOKE).collect()
+    rows = _Q["purchase_propensity_calibration"](spark, SF_SMOKE).collect()
     assert rows
     split = dt.datetime(2024, 1, 16)
     out_end = dt.datetime(2024, 1, 17)
@@ -463,7 +460,7 @@ def test_calibration_matches_python(spark):
 def test_rec_coverage_gini_matches_python(spark):
     from collections import Counter, defaultdict
 
-    r = _q("rec_coverage_gini")(spark, SF_SMOKE).collect()[0]
+    r = _Q["rec_coverage_gini"](spark, SF_SMOKE).collect()[0]
     li = (
         load_table(spark, SF_SMOKE, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -507,7 +504,7 @@ def test_rec_coverage_gini_matches_python(spark):
 
 
 def test_simpson_audit_matches_python(spark):
-    rows = _q("discount_simpson_paradox_audit")(spark, SF_SMOKE).collect()
+    rows = _Q["discount_simpson_paradox_audit"](spark, SF_SMOKE).collect()
     assert rows
     pdf = (
         load_table(spark, SF_SMOKE, "lineitem")
@@ -556,7 +553,7 @@ def test_image_entropy_matches_independent_decode(spark):
 
     rows = {
         r.doc_id: r
-        for r in _q("multimodal_image_entropy")(spark, SF_SMOKE).collect()
+        for r in _Q["multimodal_image_entropy"](spark, SF_SMOKE).collect()
     }
     docs = (
         load_table(spark, SF_SMOKE, "documents")
@@ -584,7 +581,7 @@ def test_image_entropy_matches_independent_decode(spark):
 
 
 def test_chow_matches_numpy(spark):
-    r = _q("daily_revenue_chow_test")(spark, SF_SMOKE).collect()[0]
+    r = _Q["daily_revenue_chow_test"](spark, SF_SMOKE).collect()[0]
     daily = (
         load_table(spark, SF_SMOKE, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
@@ -619,7 +616,7 @@ def test_chow_matches_numpy(spark):
 
 
 def test_fk_advisor_verdicts_consistent(spark):
-    rows = _q("fk_join_skew_advisor")(spark, SF_SMOKE).collect()
+    rows = _Q["fk_join_skew_advisor"](spark, SF_SMOKE).collect()
     assert len(rows) == 6
     by_fk = {r.fk: r for r in rows}
     # every relation's verdict must follow its own statistics
@@ -702,7 +699,7 @@ def test_littles_law_matches_python(spark):
 
     rows = {
         r.month: r
-        for r in _q("orders_backlog_littles_law")(spark, SF_SMOKE).collect()
+        for r in _Q["orders_backlog_littles_law"](spark, SF_SMOKE).collect()
     }
     o = (
         load_table(spark, SF_SMOKE, "orders")
@@ -755,7 +752,7 @@ def test_littles_law_matches_python(spark):
 
 
 def test_hubness_matches_numpy(spark):
-    r = _q("embedding_hubness_audit")(spark, SF_SMOKE).collect()[0]
+    r = _Q["embedding_hubness_audit"](spark, SF_SMOKE).collect()[0]
     pdf = (
         load_table(spark, SF_SMOKE, "embeddings")
         .select("vec_id", "embedding")
@@ -793,7 +790,7 @@ def test_dup_source_matrix_consistent_with_edges(spark):
         duplicate_edges,
     )
 
-    rows = _q("dup_pair_source_matrix")(spark, SF_SMOKE).collect()
+    rows = _Q["dup_pair_source_matrix"](spark, SF_SMOKE).collect()
     assert rows
     edges = duplicate_edges(spark, SF_SMOKE).collect()
     src = {
@@ -827,7 +824,7 @@ def test_transitivity_audit_matches_python(spark):
         duplicate_edges,
     )
 
-    r = _q("dedup_transitivity_audit")(spark, SF_SMOKE).collect()[0]
+    r = _Q["dedup_transitivity_audit"](spark, SF_SMOKE).collect()[0]
     edges = {(e.a, e.b) for e in duplicate_edges(spark, SF_SMOKE).collect()}
     adj = defaultdict(set)
     for a, b in edges:
@@ -854,7 +851,7 @@ def test_transitivity_audit_matches_python(spark):
 
 def test_label_horizon_sweep_monotone_and_consistent(spark):
     rows = sorted(
-        _q("label_horizon_sweep")(spark, SF_SMOKE).collect(),
+        _Q["label_horizon_sweep"](spark, SF_SMOKE).collect(),
         key=lambda r: r.horizon_hours,
     )
     assert [r.horizon_hours for r in rows] == [1, 6, 24, 72]
@@ -869,7 +866,7 @@ def test_label_horizon_sweep_monotone_and_consistent(spark):
         if r.n_positive:
             assert 0 < r.mean_gap_s <= r.horizon_hours * 3600
     # the 72h row must agree with pit_label_join (LABEL_HORIZON_HOURS=72)
-    lab = _q("pit_label_join")(spark, SF_SMOKE).collect()
+    lab = _Q["pit_label_join"](spark, SF_SMOKE).collect()
     pos72 = sum(1 for r in lab if r.label == 1)
     r72 = next(r for r in rows if r.horizon_hours == 72)
     assert r72.n_positive == pos72
@@ -882,7 +879,7 @@ def test_label_horizon_sweep_monotone_and_consistent(spark):
 def test_quantile_shift_matches_numpy(spark):
     import datetime as dt
 
-    rows = _q("drift_quantile_shift")(spark, SF_SMOKE).collect()
+    rows = _Q["drift_quantile_shift"](spark, SF_SMOKE).collect()
     assert rows
     pdf = (
         load_table(spark, SF_SMOKE, "events")

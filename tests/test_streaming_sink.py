@@ -517,22 +517,29 @@ from ml_feature_store_enterprise_grade_spark.streaming.joins import (
         "protobuf is not installed in this container — "
         "transformWithStateInPandas serializes its state protocol with "
         "proto, so the Spark-4 stateful API twin "
-        "(stream_tws_purchase_stats) registers and runs only where the "
-        "dependency exists; applyInPandasWithState coverage "
+        "(stream_tws_purchase_stats) runs only where the dependency "
+        "exists; applyInPandasWithState coverage "
         "(stream_stateful_running_totals) always runs"
     ),
 )
 def test_transform_with_state_twin_matches_batch(spark):
     from ml_feature_store_enterprise_grade_spark.streaming.joins import (
+        _TWS_ORACLE,
         stream_tws_purchase_stats,
+    )
+    from ml_feature_store_enterprise_grade_spark.testing import (
+        compare_query,
+        duckdb_connection,
     )
     from tests.conftest import SF_SMOKE
 
-    got = {
-        r.user_id: (r.n_purchases, r.max_value)
-        for r in stream_tws_purchase_stats(spark, SF_SMOKE).collect()
-    }
-    assert got  # non-empty and one row per purchasing user
+    con = duckdb_connection(SF_SMOKE)
+    try:
+        df = stream_tws_purchase_stats(spark, SF_SMOKE)
+        res = compare_query("stream_tws_purchase_stats", df, _TWS_ORACLE, con)
+    finally:
+        con.close()
+    assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
 
 
 def test_rocksdb_state_store_provider_matches_default(spark, tmp_path):

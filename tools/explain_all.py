@@ -86,7 +86,7 @@ QUERIES = (
     "segment_dedup",
     "semantic_dedup",
     "dedup_crossdoc_spans",
-    # deferred (round-4 window) queries — plans audited now
+    # round-4 additions
     "crossdoc_span_trim",
     "split_neardup_leakage",
     "user_decay_weighted_features",
@@ -96,7 +96,7 @@ QUERIES = (
     "embedding_label_confusion",
     "vocab_oov_rate",
     # round 4: TPC-H shapes, governance, containment, and the
-    # round-5-deferred trio
+    # round-5 trio
     "returned_items_revenue",
     "large_volume_customers",
     "nation_market_share",
@@ -537,7 +537,7 @@ def audit_plan(plan: str) -> list[str]:
 def run_audit(sf_dir: str) -> int:
     spark = get_spark("plan_audit", cpus=8)
     registry.load_all()
-    qs = {**registry.queries(), **registry.DEFERRED_QUERIES}
+    qs = registry.queries()
     flagged: dict[str, list[str]] = {}
     failed: dict[str, str] = {}
     for name, fn in qs.items():
@@ -579,7 +579,7 @@ def main() -> None:
         raise SystemExit(run_audit(sf_dir))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("explain_all", cpus=8)
-    qs = {**registry.queries(), **registry.DEFERRED_QUERIES}
+    qs = registry.queries()
     out = [
         "# PLANS — executed physical plans (AQE-final) at "
         f"`{sf_dir}`\n\nGenerated by `tools/explain_all.py`; plans show the join "

@@ -1,7 +1,8 @@
-"""Generate QUERIES.md: one line per registered query — name, status
-(driver-visible / deferred / rows-only), implementing function with
-file:line, and the first docstring sentence.  Regenerate after adding
-operators: python tools/gen_query_index.py
+"""Generate QUERIES.md: one line per registered query — name, check
+(oracle / rows-only), whether it is in the driver's first-50 window,
+implementing function with file:line, and the first docstring
+sentence.  Regenerate after adding operators or after a new
+CORRECTNESS_r*.json lands: python tools/gen_query_index.py
 """
 
 from __future__ import annotations
@@ -32,24 +33,18 @@ def main() -> int:
     rows = []
     visible = registry.queries()
     window_set = frozenset(list(visible)[:50])
-    for name, fn in {**visible, **registry.DEFERRED_QUERIES}.items():
+    for name, fn in visible.items():
         f = inspect.unwrap(fn)
         src = os.path.relpath(f.__code__.co_filename, REPO)
         line = f.__code__.co_firstlineno
-        if name in registry.ROWS_ONLY:
-            kind = "rows-only"
-        elif name in registry.DEFERRED_QUERIES:
-            kind = "deferred"
-        else:
-            kind = "oracle"
+        kind = "rows-only" if name in registry.ROWS_ONLY else "oracle"
         window = "window" if name in window_set else ""
         rows.append((name, kind, window, f"{src}:{line}", first_sentence(f.__doc__)))
 
     out = [
         "# QUERIES — registered operator index\n",
         f"\n{len(rows)} registered queries "
-        f"({len(visible)} driver-visible, {len(registry.DEFERRED_QUERIES)} "
-        f"deferred, {len(registry.ROWS_ONLY)} rows-only). "
+        f"({len(registry.ROWS_ONLY)} rows-only). "
         "Generated by `tools/gen_query_index.py`; every `oracle` row is "
         "value-hash-checked against DuckDB by `tools/parity.py`, `window` "
         "marks the first-50 driver check set for the CURRENT round.\n\n",

@@ -44,7 +44,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark("opt_profile")
-    qs = {**registry.queries(), **registry.DEFERRED_QUERIES}
+    qs = registry.queries()
     missing = [n for n in args.names if n not in qs]
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)

@@ -1,6 +1,6 @@
 """Signed-zero audit: python tools/zero_audit.py [sf_dir]
 
-Runs EVERY registered oracle (driver-visible + deferred) in DuckDB at
+Runs EVERY registered oracle in DuckDB at
 the given scale and reports any column that emits a -0.0 cell — the
 round-8 `graph_modularity` divergence class (DuckDB ROUND of a tiny
 negative double yields -0.0 where Spark round yields +0.0, and the
@@ -43,7 +43,7 @@ def _neg_zero_cols(cols: list[str], rows: list[tuple]) -> dict[str, int]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     registry.load_all()
-    oracles = {**registry.oracles(), **registry.DEFERRED_ORACLES}
+    oracles = registry.oracles()
     con = duckdb_connection(sf_dir)
     n_hit = 0
     for name, sql in sorted(oracles.items()):

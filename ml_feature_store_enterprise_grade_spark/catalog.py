@@ -10,10 +10,32 @@ At 100 TB these reads are partitioned parquet scans; all queries
 filter/prune on the columns they need so Catalyst pushes predicates
 and projection into the scan (check with ``df.explain``:
 ``PushedFilters`` / ``ReadSchema``).
+
+Reuse rules.  The engine reuses work in exactly two ways:
+
+* **Inside one call**, a frame read by more than one plan branch is
+  spooled with ``df.localCheckpoint()`` — eager, and nothing else.
+  Nothing releases it by hand: Spark's ContextCleaner frees the
+  blocks once the last frame reading them is dropped.  A ``.cache()``
+  or ``.persist()`` is allowed only in a function that unpersists the
+  same frame on every path (a cached plan stays pinned until
+  ``clearCache()`` and is matched against any later plan over the
+  same files, so a leaked one keeps serving data that was since
+  rewritten).  Fault tolerance: checkpoint blocks are executor-local
+  and unreplicated, so losing an executor after the spool fails the
+  query instead of recomputing lineage; the engine accepts that trade
+  (the query is re-run), and a frame too large for executor storage
+  should not be spooled at all.
+* **Across calls**, a ``(spark, sf_dir)`` factory whose result
+  several queries share is decorated with :func:`memo`.  Every memo
+  entry and every :func:`cached_count` lives in one dict, and
+  :func:`clear_count_cache` is the one invalidation call: a session
+  that rewrites the data under a path calls it for that path.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -103,6 +125,10 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     )
 
 
+#: Bytes of Catalyst size estimate per task in :func:`spread`'s cap.
+_SPREAD_TASK_BYTES = 64 * 1024
+
+
 def spread(
     df: DataFrame,
     min_partitions: int | None = None,
@@ -120,36 +146,26 @@ def spread(
 
     r14 (VERDICT r13 item 2 — over-parallelization of tiny frames):
     the fan-out target is additionally capped by the Catalyst
-    size estimate, one task per ``$SPARK_GRAFT_SPREAD_TASK_BYTES``
-    (default 64 KB, floor 1), so kB-sized frames stop fanning into
-    ``defaultParallelism`` trivial tasks.  64 KB/task is sized for
-    the engine's HEAVIEST per-byte consumers (shingle + k×md5 per
-    shingle: a 64 KB corpus slice is real work), so CPU-light callers
-    over-parallelize a little rather than CPU-heavy ones starving —
-    and at any real scale the estimate exceeds width × quantum and
-    the cap is inert (scan width governs; the rule is a pure function
-    of input size, not a local[32] constant).  Explicit
-    ``min_partitions`` bypasses the cap; ``bytes_per_task`` overrides
-    the quantum for callers whose per-byte compute is far above the
-    default's assumption (embedding frames: 64 packed doubles per row
-    feeding d-length similarity folds — measured, the 64 KB default
-    cut ann_ivf_topk's assignment to 13 tasks and cost 26%)."""
+    size estimate, one task per ``_SPREAD_TASK_BYTES`` (64 KB), so
+    kB-sized frames stop fanning into ``defaultParallelism`` trivial
+    tasks.  64 KB/task is sized for the engine's HEAVIEST per-byte
+    consumers (shingle + k×md5 per shingle: a 64 KB corpus slice is
+    real work), so CPU-light callers over-parallelize a little rather
+    than CPU-heavy ones starving — and at any real scale the estimate
+    exceeds width × quantum and the cap is inert (scan width governs;
+    the rule is a pure function of input size, not a local[32]
+    constant).  Explicit ``min_partitions`` bypasses the cap;
+    ``bytes_per_task`` overrides the quantum for callers whose
+    per-byte compute is far above the default's assumption
+    (embedding frames: 64 packed doubles per row feeding d-length
+    similarity folds — measured, the 64 KB default cut ann_ivf_topk's
+    assignment to 13 tasks and cost 26%)."""
     n = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if min_partitions is None:
-        if bytes_per_task is not None:
-            per = max(1024, bytes_per_task)
-        else:
-            try:
-                per = max(
-                    1024,
-                    int(
-                        os.environ.get(
-                            "SPARK_GRAFT_SPREAD_TASK_BYTES", "65536"
-                        )
-                    ),
-                )
-            except ValueError:
-                per = 65536
+        per = max(
+            1024,
+            _SPREAD_TASK_BYTES if bytes_per_task is None else bytes_per_task,
+        )
         try:
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -162,66 +178,56 @@ def spread(
     return df
 
 
-#: Memoized row counts for routing decisions (VERDICT r10 item 4:
-#: ``knn_candidates`` ran one count job per invocation).  Keyed by
-#: (sf_dir, tag) — the tag names the exact frame counted (a table or
-#: a documented filter of one), so repeat invocations and sibling
-#: queries sharing the frame skip the job.  Caveat (ADVICE r11): the
-#: cache is never invalidated, so if the data under an (sf_dir, tag)
-#: is REGENERATED within one session, a stale count can flip a
-#: router (e.g. knn_candidates' exact-vs-IVF bound) — the two paths
-#: are result-identical only below the bound, not across a data
-#: change.  Sessions that rewrite fixtures must call
-#: :func:`clear_count_cache` first; the read-only driver/test
-#: surfaces never rewrite, so the default is safe there.
-_ROW_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-#: Extra per-module cache clearers invoked by
-#: :func:`clear_count_cache` — modules holding memoized DataFrames
-#: keyed by sf_dir (the text census caches) register a
-#: ``fn(sf_dir | None)`` here at import so ONE call invalidates
-#: every sf_dir-keyed memo in the engine.  Unlike the routing-only
-#: row counts, a stale census silently changes VALUES (ADVICE r12
-#: item 1), so these must never be left out of the clear path.
-_EXTRA_CACHE_CLEARERS: list = []
+#: Every cross-call memo in the engine: :func:`memo` factory results
+#: and :func:`cached_count` row counts, keyed by (factory or count
+#: tag, Spark application id, absolute sf_dir).  A new SparkContext
+#: gets a new application id and therefore fresh entries.
+_MEMO: dict[tuple[object, str, str], object] = {}
 
 
-def register_cache_clearer(fn) -> None:
-    """Register a ``fn(sf_dir: str | None) -> None`` to be invoked by
-    every :func:`clear_count_cache` call (see comment above)."""
-    _EXTRA_CACHE_CLEARERS.append(fn)
+def _memo_key(what: object, spark: SparkSession, sf_dir: str) -> tuple:
+    return (what, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+
+
+def memo(factory):
+    """Memoize a ``factory(spark, sf_dir)`` across calls (module
+    docstring, reuse rules).  The factory's result — typically
+    localCheckpointed frames — stays pinned until
+    :func:`clear_count_cache` drops it."""
+
+    @functools.wraps(factory)
+    def memoized(spark: SparkSession, sf_dir: str):
+        key = _memo_key(factory, spark, sf_dir)
+        if key not in _MEMO:
+            _MEMO[key] = factory(spark, sf_dir)
+        return _MEMO[key]
+
+    return memoized
 
 
 def clear_count_cache(sf_dir: str | None = None) -> None:
-    """Drop memoized row counts AND registered sf_dir-keyed frame
-    memos (the text census caches) — all of them, or one
-    ``sf_dir``'s.
+    """Drop every memo entry — memoized factory results and row
+    counts — for one ``sf_dir``, or all of them.
 
-    Call after regenerating data under a previously-counted path so
-    routing decisions (exact vs IVF, broadcast vs shuffle) re-read
-    the real cardinality instead of the stale one, and so memoized
-    census frames (whose staleness would change VALUES, not just
-    routing) are rebuilt from the new data."""
+    Call after rewriting data under a path: counts steer routing
+    (exact vs IVF, broadcast vs shuffle) and memoized frames carry
+    values, so either would otherwise describe the old files."""
     if sf_dir is None:
-        _ROW_COUNT_CACHE.clear()
-    else:
-        for key in [k for k in _ROW_COUNT_CACHE if k[0] == sf_dir]:
-            del _ROW_COUNT_CACHE[key]
-    for fn in _EXTRA_CACHE_CLEARERS:
-        fn(sf_dir)
+        _MEMO.clear()
+        return
+    target = os.path.abspath(sf_dir)
+    for key in [k for k in _MEMO if k[2] == target]:
+        del _MEMO[key]
 
 
 def cached_count(df: DataFrame, sf_dir: str, tag: str) -> int:
-    """Count ``df`` once per (sf_dir, tag) and memoize.
-
-    The caller owns tag uniqueness: two different frames must not
-    share a tag within one sf_dir (and must
-    :func:`clear_count_cache` if the frame's data changes — see the
-    cache comment above)."""
-    key = (sf_dir, tag)
-    if key not in _ROW_COUNT_CACHE:
-        _ROW_COUNT_CACHE[key] = df.count()
-    return _ROW_COUNT_CACHE[key]
+    """Count ``df`` once per (sf_dir, tag) and memoize it with the
+    factory results.  The caller owns tag uniqueness: two different
+    frames must not share a tag within one sf_dir."""
+    key = _memo_key(("count", tag), df.sparkSession, sf_dir)
+    if key not in _MEMO:
+        _MEMO[key] = df.count()
+    return _MEMO[key]
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

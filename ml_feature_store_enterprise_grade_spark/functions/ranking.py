@@ -107,39 +107,22 @@ def _with_chunks(
     order_by: Sequence[tuple[str, str]],
     group_cols: Sequence[str],
     num_chunks: int | None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Add the deterministic monotone chunk id (module docstring §1):
     cut points from a hash-sampled exact percentile of the leading
     order column, broadcast and applied as a comparison fold — a pure
     function of the key, identical on every recomputation.
 
-    ``materialize`` (the r13 optimization-round change): the input is
-    ``localCheckpoint``-ed ONCE before the sample pass, because the
-    ranking machinery reads its input from THREE plan branches (cut
+    The input is ``localCheckpoint``-ed once before the sample pass:
+    the ranking machinery reads it from THREE plan branches (cut
     sample → percentile broadcast, the local-row-number window, the
-    per-chunk count aggregate) — without materialization every branch
-    recomputes the full upstream chain, and chained ``ranked()`` calls
-    (e.g. quality_filter_agreement's three ranks) compound that
-    re-execution geometrically.  Values are unaffected: ranks are a
-    pure function of the caller-guaranteed total order, and
-    ``running_totals`` requires order-independent (integral/DECIMAL)
-    value columns.  Pass ``materialize=False`` when the input is a
-    bare pushed-down scan cheaper to re-read than to spool (or is
-    already checkpointed by the caller).
-
-    Fault-tolerance policy (r14, ADVICE r13): ``localCheckpoint`` is
-    executor-local and unreplicated, so after the spool an executor
-    loss fails the query instead of recomputing lineage.  The engine
-    accepts that trade for intra-query spools — the query is simply
-    re-run — and callers whose input frame is huge relative to
-    executor storage should pass ``materialize=False`` (the §5 spill
-    note in the optimization guide)."""
+    per-chunk count aggregate), and chained ``ranked()`` calls (e.g.
+    quality_filter_agreement's three ranks) would otherwise compound
+    the re-execution geometrically."""
     spark = df.sparkSession
     if num_chunks is None:
         num_chunks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if materialize:
-        df = df.localCheckpoint()
+    df = df.localCheckpoint()
     lead, lead_dir = order_by[0]
     descending = lead_dir == "desc"
     v = F.col(lead).cast("double")
@@ -179,7 +162,6 @@ def ranked(
     rn_col: str = "rn",
     n_col: str = "n_rows",
     num_chunks: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact 1-based global (or per-group) ROW_NUMBER plus frame size.
 
@@ -192,7 +174,7 @@ def ranked(
     with no single-partition sort (see module docstring for the plan
     and the caller contract on order columns).
     """
-    withchunk = _with_chunks(df, order_by, group_cols, num_chunks, materialize)
+    withchunk = _with_chunks(df, order_by, group_cols, num_chunks)
     wloc = Window.partitionBy(*group_cols, _CHUNK).orderBy(
         *_sort_cols(order_by)
     )
@@ -228,7 +210,6 @@ def ranked_select(
     rn_col: str = "rn",
     n_col: str = "n_rows",
     num_chunks: int | None = None,
-    materialize: bool = True,
     extra: DataFrame | None = None,
 ) -> DataFrame:
     """Order-statistic SELECTION: the rows of :func:`ranked` whose
@@ -259,7 +240,7 @@ def ranked_select(
     caller contract as :func:`ranked`; consumers must only aggregate
     with target-row-sufficient forms (min/max/avg over rank-matched
     rows), never count unmatched rows."""
-    withchunk = _with_chunks(df, order_by, group_cols, num_chunks, materialize)
+    withchunk = _with_chunks(df, order_by, group_cols, num_chunks)
     counts = withchunk.groupBy(*group_cols, _CHUNK).agg(
         F.count("*").alias(_CNT)
     )
@@ -323,7 +304,6 @@ def running_totals(
     group_cols: Sequence[str] = (),
     num_chunks: int | None = None,
     suffix: str = "_cum",
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact INCLUSIVE running sums in a total order — the scalable
     form of ``SUM(v).over(Window.partitionBy(*group_cols)
@@ -340,7 +320,7 @@ def running_totals(
     discipline).  Value columns must be non-NULL (an all-NULL prefix
     is NULL under window semantics but 0 here).  Same caller contract
     as :func:`ranked` on the order columns."""
-    withchunk = _with_chunks(df, order_by, group_cols, num_chunks, materialize)
+    withchunk = _with_chunks(df, order_by, group_cols, num_chunks)
     wloc = (
         Window.partitionBy(*group_cols, _CHUNK)
         .orderBy(*_sort_cols(order_by))
@@ -403,7 +383,6 @@ def scalable_ntile(
     group_cols: Sequence[str] = (),
     out_col: str = "tile",
     num_chunks: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """``F.ntile(k).over(Window.partitionBy(*group_cols).orderBy(...))``
     with the parallel plan of :func:`ranked` — exact at every scale,
@@ -416,7 +395,6 @@ def scalable_ntile(
         rn_col=rn_col,
         n_col=n_col,
         num_chunks=num_chunks,
-        materialize=materialize,
     )
     return out.withColumn(
         out_col, ntile_from_rank(F.col(rn_col), F.col(n_col), k)

@@ -18,12 +18,10 @@ globally; nothing collects to the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread
+from ..catalog import load_table, memo, spread
 from ..functions import PORTABLE_HASH64_SQL, money, portable_hash64
 from ..functions.ranking import (
     ntile_from_rank,
@@ -719,15 +717,14 @@ def item_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials.  Item margins are a vocabulary-sized broadcast; the
     order count is a scalar.  This is the same bounded-blocking
     discipline as the LSH dedup family, applied to co-occurrence."""
-    # cached: three consumers (order count, pair expansion, item
-    # margins) would otherwise re-run the scan + basket aggregate —
-    # same discipline as the minhash signature cache in dedup.py
+    # spooled: three consumers (order count, pair expansion, item
+    # margins) would otherwise re-run the scan + basket aggregate
     orders = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("order_id"), F.col("l_partkey").alias("item_id"))
         .groupBy("order_id")
         .agg(F.array_sort(F.collect_set("item_id")).alias("items"))
-        .cache()
+        .localCheckpoint()
     )
     # one-row broadcast, not a driver-side count: keeps the operator
     # lazy (no hidden job at construction) and never stale on re-run
@@ -1174,28 +1171,18 @@ _PR_DAMPING = 0.85
 _PR_ITERS = 5
 _PR_MIN_SUPPORT = 2
 
-#: One co-purchase pair census per (application, sf_dir): every graph
-#: query (pagerank, triangle census, k-core, LPA, RA link prediction)
-#: derives its edge list from the SAME ``(a, b, n_ab)`` frame, so the
-#: expensive part — the 600k-row basket aggregate + map-side pair
-#: expansion + census shuffle — runs once per session instead of once
-#: per query (the dedup-label memoization discipline, dedup.py:718).
-#: Floor n_ab >= 2 = the weakest support any consumer uses; each
-#: consumer applies its own (>=) filter on top.  localCheckpoint ⇒
-#: physically materialized, lineage-free, app-scoped.
-_COBUY_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def cobuy_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(a, b, n_ab)`` co-purchase pair census (``a < b``, ``n_ab >=
     2``), built map-side from sorted per-order item arrays (bounded
-    blocking, no basket self-join) and memoized per (app, sf_dir).
-    Every oracle recomputes the census independently in SQL, so the
-    sharing is invisible to correctness."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _COBUY_CACHE.get(key)
-    if hit is not None:
-        return hit
+    blocking, no basket self-join).  Every graph query (pagerank,
+    triangle census, k-core, LPA, RA link prediction) derives its edge
+    list from this frame, so the basket aggregate + pair expansion +
+    census shuffle runs once per session.  Floor n_ab >= 2 = the
+    weakest support any consumer uses; each consumer applies its own
+    (>=) filter on top.  Every oracle recomputes the census
+    independently in SQL, so the sharing is invisible to
+    correctness."""
     orders = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -1218,15 +1205,13 @@ def cobuy_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    census = (
+    return (
         orders.select(F.explode(F.when(sz >= 2, pairs)).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count("*").alias("n_ab"))
         .filter(F.col("n_ab") >= 2)
         .localCheckpoint()
     )
-    _COBUY_CACHE[key] = census
-    return census
 
 
 def _pagerank_iter_sql(i: int) -> str:
@@ -2599,7 +2584,7 @@ def item_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     roster: label, member count, id range.
 
     Scale shape: identical per-round discipline to
-    :func:`item_pagerank` — the cached edge list never re-shuffles;
+    :func:`item_pagerank` — the spooled edge list never re-shuffles;
     each round broadcasts the (catalog-bounded) label frame into a
     map-side join, reduces per-(node, label) counts partial-first,
     and takes the deterministic mode as a hash aggregate, with
@@ -2612,20 +2597,13 @@ def item_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> (cached symmetric edge list, final LPA
-#: label frame).  Same cross-query memoization as dedup's
-#: _LABEL_CACHE: the roster query and the modularity query certify
-#: the SAME propagation, so the 5 rounds run once per session.
-_LPA_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@memo
 def _lpa_graph_labels(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _LPA_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """(symmetric edge list, final LPA label frame).  The roster query
+    and the modularity query certify the SAME propagation, so the
+    rounds run once per session."""
     pair = (
         cobuy_pair_census(spark, sf_dir)
         .filter(F.col("n_ab") >= _LPA_MIN_SUPPORT)
@@ -2636,9 +2614,8 @@ def _lpa_graph_labels(
         .unionAll(
             pair.select(F.col("item_b").alias("src"), F.col("item_a").alias("dst"))
         )
-        .cache()
+        .localCheckpoint()
     )
-    sym.count()
     lab = (
         sym.select(F.col("src").alias("item_id"))
         .distinct()
@@ -2659,7 +2636,6 @@ def _lpa_graph_labels(
             .select(F.col("dst").alias("item_id"), F.col("m.v").alias("label"))
             .localCheckpoint()
         )
-    _LPA_CACHE[key] = (sym, lab)
     return sym, lab
 
 
@@ -2723,7 +2699,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT once a degree sum passes ~3e9 — the switch is one cast.
 
     Scale shape: reuses the per-(session, sf) memoized LPA labels and
-    cached edge list (the 5 propagation rounds run once, not per
+    spooled edge list (the 5 propagation rounds run once, not per
     query); the label frame broadcasts into the edge scan twice (both
     endpoints), internal-edge and degree-sum tallies are map-side
     partial hash aggregates, and 2m attaches as a broadcast 1-row
@@ -6212,7 +6188,7 @@ def cobuy_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, directed volume, cut edge count, conductance.
 
     Determinism: reuses the per-(session, sf) memoized deterministic
-    LPA labels and cached edge list ([[item_label_propagation]]'s
+    LPA labels and spooled edge list ([[item_label_propagation]]'s
     ``_lpa_graph_labels``) — the oracle re-derives the identical
     fixed point through the shared ``_lpa_cte``; volumes and cuts are
     exact integer tallies; the one ratio is a fixed non-negative
@@ -6221,7 +6197,7 @@ def cobuy_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines).
 
     Scale shape: the (catalog-bounded) label frame broadcasts into
-    the cached edge scan twice, cut/volume tallies collapse map-side,
+    the spooled edge scan twice, cut/volume tallies collapse map-side,
     2m rides as a 1-row broadcast — zero wide shuffles beyond the
     per-community aggregate, the [[graph_modularity]] plan with a
     different reduction."""

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, spread
+from ..catalog import load_table, memo, spread
 from ..functions import NORMALIZE_TEXT_SQL, PORTABLE_HASH64_SQL, normalize_text, portable_hash64
 from ..registry import register
 
@@ -165,13 +165,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs.  Candidate pairs come from
     the shingle self-join (only docs sharing ≥1 rare shingle are ever
     compared); similarity is exact set Jaccard."""
-    # The filtered shingle frame feeds the size agg and both sides of
-    # the pair join — cache it so normalize+explode+DF-filter runs
-    # once.  count() materializes the cache eagerly: a lazy cache
-    # inside one action lets concurrently scheduled subtrees each
-    # recompute the still-empty partitions.
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir))).cache()
-    sh.count()
+    sh = _corpus_shingles(spark, sf_dir)
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (
@@ -212,6 +206,27 @@ def minhash_signatures(shingles: DataFrame, k: int = _MINHASH_K) -> DataFrame:
         for j in range(k)
     ]
     return shingles.groupBy("doc_id").agg(*aggs)
+
+
+@memo
+def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's rare-shingle frame ``(doc_id, shingle)``, spooled
+    once per session: it feeds size aggregates, both sides of pair
+    joins and :func:`_corpus_signatures` across the dedup family."""
+    return _frequent_shingle_filter(
+        _shingles(_normalized_docs(spark, sf_dir))
+    ).localCheckpoint()
+
+
+@memo
+def _corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash signatures of :func:`_corpus_shingles`, spooled once
+    per session.  The signature table (one row per doc, k longs)
+    appears in every LSH plan several times (band self-join sides and
+    both verification joins), so the shingle→hash→min pipeline runs
+    once; at 100 TB you persist signatures to a table for the same
+    reason."""
+    return minhash_signatures(_corpus_shingles(spark, sf_dir)).localCheckpoint()
 
 
 def _minhash_slot_sql(j: int) -> str:
@@ -299,14 +314,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles 4 small (doc, band-hash) rows per doc and only compares
     within buckets — never all-pairs.  Hot buckets are bounded by the
     rare-shingle filter upstream."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir)))
-    # The signature table (one row per doc, k longs) appears in the
-    # plan 8× (band self-join sides + both verification joins); cache
-    # it so the expensive shingle→hash→min pipeline runs once.  At
-    # 100 TB you persist signatures to a table for the same reason.
-    # count() materializes eagerly — see dedup_ngram_jaccard.
-    sig = minhash_signatures(sh).cache()
-    sig.count()
+    sig = _corpus_signatures(spark, sf_dir)
     cand = _lsh_candidate_pairs(sig)
     x = sig.select([F.col("doc_id").alias("doc_a")] + [F.col(f"sig_{j}").alias(f"xa_{j}") for j in range(_MINHASH_K)])
     y = sig.select([F.col("doc_id").alias("doc_b")] + [F.col(f"sig_{j}").alias(f"yb_{j}") for j in range(_MINHASH_K)])
@@ -715,17 +723,7 @@ def connected_components(
     return labels if isolated is None else labels.unionByName(isolated)
 
 
-#: Memoized component labels, keyed by (Spark application id, sf_dir).
-#: The label frame is the shared upstream of ``dedup_clusters``,
-#: ``dup_cluster_size_histogram`` and ``corpus_dedup_pipeline`` — each
-#: used to recompute the full ~6 s component pass (VERDICT r6 item 4).
-#: The cached frame is a localCheckpoint (physically materialized on
-#: the context, no lineage), so reuse across queries in one session is
-#: safe; a new SparkContext gets a new application id and a fresh
-#: entry.  Bounded: 2 longs per document per (app, sf_dir).
-_LABEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _doc_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, label)`` over the exact+MinHash duplicate graph,
     with exact-duplicate groups PRE-CONTRACTED to a single vertex
@@ -748,38 +746,34 @@ def _doc_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct texts| and edges by dropping the exact star edges
     entirely — for the one-off cost of the rep window (same
     hash-partition pass the exact-dedup step already does) and one
-    expansion join at the end."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    expansion join at the end.
+
+    Memoized: the label frame is the shared upstream of
+    ``dedup_clusters``, ``dup_cluster_size_histogram`` and
+    ``corpus_dedup_pipeline`` — each used to recompute the full ~6 s
+    component pass (VERDICT r6 item 4).  Bounded: 2 longs per
+    document."""
     rep = _exact_rep_frame(spark, sf_dir)
     edges = _contracted_edges(spark, sf_dir, rep)
     vertices = rep.select(F.col("rep").alias("doc_id")).distinct()
     rep_labels = connected_components(vertices, edges).withColumnRenamed(
         "doc_id", "rep"
     )
-    labels = _expand_labels(rep, rep_labels)
-    rep.unpersist()
-    _LABEL_CACHE[key] = labels
-    return labels
+    return _expand_labels(rep, rep_labels)
 
 
 def _exact_rep_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, rep)`` exact-group contraction map: every document
     mapped to the min doc_id sharing its ``md5(norm)``.  Returned
-    CACHED and eagerly counted: rep feeds FOUR independently-
-    materialized lineages (both edge-remap sides, the vertex frame,
-    the final expansion join) — uncached, each would re-run the
-    full-corpus hash-partition window.  Caller unpersists.  At
-    100 TB, persist to a table instead."""
+    spooled: rep feeds FOUR independently-materialized lineages (both
+    edge-remap sides, the vertex frame, the final expansion join) —
+    unspooled, each would re-run the full-corpus hash-partition
+    window.  At 100 TB, persist to a table instead."""
     nd = _normalized_docs(spark, sf_dir)
-    rep = nd.select(
+    return nd.select(
         "doc_id",
         F.min("doc_id").over(Window.partitionBy(F.md5("norm"))).alias("rep"),
-    ).cache()
-    rep.count()
-    return rep
+    ).localCheckpoint()
 
 
 def _contracted_edges(spark: SparkSession, sf_dir: str, rep: DataFrame) -> DataFrame:
@@ -802,9 +796,9 @@ def _contracted_edges(spark: SparkSession, sf_dir: str, rep: DataFrame) -> DataF
 
 def _expand_labels(rep: DataFrame, rep_labels: DataFrame) -> DataFrame:
     """Expand contracted-component labels back to all documents,
-    materialized (localCheckpoint) BEFORE the caller releases the rep
-    cache — the returned frame must not silently recompute the
-    full-corpus window after unpersist (bounded: 2 longs per doc)."""
+    spooled (localCheckpoint): the memoized label frame is read by
+    several queries, so the expansion join runs once (bounded: 2
+    longs per doc)."""
     return (
         rep.join(rep_labels, "rep").select("doc_id", "label").localCheckpoint()
     )
@@ -976,9 +970,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.min("c_id").alias("exact_match"))
     )
-    sh = _frequent_shingle_filter(_shingles(nd))
-    sig = minhash_signatures(sh).cache()
-    sig.count()
+    sig = _corpus_signatures(spark, sf_dir)
     band_structs = F.array(
         *[
             F.struct(
@@ -1718,9 +1710,7 @@ def split_neardup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the best-match window run on the (tiny) verified-candidate set.
     Same shape as ``dedup_incremental`` with the standing side =
     train split, probe side = eval splits."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir)))
-    sig = minhash_signatures(sh).cache()
-    sig.count()
+    sig = _corpus_signatures(spark, sf_dir)
     bands = minhash_band_frame(sig)
     bucket = (
         portable_hash64(F.col("doc_id").cast("string"), seed=_LEAK_SPLIT_SEED) % 100
@@ -2323,10 +2313,8 @@ def lsh_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CANDIDATE pair list (cost ∝ |candidates| × shingles/doc, the
     same bound as the admission pipeline's verify step); the report
     aggregate collapses to ≤ k+1 rows."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir))).cache()
-    sh.count()
-    sig = minhash_signatures(sh).cache()
-    sig.count()
+    sh = _corpus_shingles(spark, sf_dir)
+    sig = _corpus_signatures(spark, sf_dir)
     # r14: spooled — the candidate pair frame feeds BOTH the
     # signature-agreement join and the exact-verify join (the band
     # self-join otherwise executed twice per run).
@@ -2490,10 +2478,8 @@ def hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to dedup_minhash_lsh — band equi-join
     (never all-pairs, hot buckets bounded by the rare-shingle DF
-    cap), signature table cached once, TakeOrdered top-{_HARDNEG_TOPK}."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir)))
-    sig = minhash_signatures(sh).cache()
-    sig.count()
+    cap), signature table spooled once, TakeOrdered top-{_HARDNEG_TOPK}."""
+    sig = _corpus_signatures(spark, sf_dir)
     cand = _lsh_candidate_pairs(sig)
     x = sig.select(
         [F.col("doc_id").alias("doc_a")]
@@ -2507,7 +2493,7 @@ def hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col(f"xa_{j}") == F.col(f"yb_{j}"), 1).otherwise(0)
         for j in range(_MINHASH_K)
     )
-    out = (
+    return (
         cand.join(x, "doc_a")
         .join(y, "doc_b")
         .withColumn("n_agree", agree.cast("bigint"))
@@ -2522,10 +2508,7 @@ def hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("n_agree"), "doc_a", "doc_b")
         .limit(_HARDNEG_TOPK)
-        .localCheckpoint()
     )
-    sig.unpersist()
-    return out
 
 
 @register(
@@ -2905,13 +2888,8 @@ def minhash_jaccard_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is ≤10 rows at ANY corpus size — the audit is a
     bounded-size calibration report, safe to compute on a 100 TB
     corpus sample or whole."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir))).cache()
-    sh.count()
-    # r13 optimization: cache like every sibling consumer — sig feeds
-    # the band self-join and further signature branches; uncached, the
-    # groupBy + 8 Kirsch-Mitzenmacher min-slots over the shingle frame
-    # re-ran per branch.
-    sig = minhash_signatures(sh).cache()
+    sh = _corpus_shingles(spark, sf_dir)
+    sig = _corpus_signatures(spark, sf_dir)
     # r14: spooled — the candidate pair frame feeds BOTH the
     # signature-agreement join and the exact-verify join below.
     cand = _lsh_candidate_pairs(sig).localCheckpoint()
@@ -3101,13 +3079,8 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins (never all-pairs); the census unions three slim pair
     frames and aggregates 7 rows — bounded output at any corpus
     size."""
-    sh = _frequent_shingle_filter(_shingles(_normalized_docs(spark, sf_dir))).cache()
-    sh.count()
-    # r13 optimization: cache like every sibling consumer — sig feeds
-    # the band self-join and further signature branches; uncached, the
-    # groupBy + 8 Kirsch-Mitzenmacher min-slots over the shingle frame
-    # re-ran per branch.
-    sig = minhash_signatures(sh).cache()
+    sh = _corpus_shingles(spark, sf_dir)
+    sig = _corpus_signatures(spark, sf_dir)
     cand = _lsh_candidate_pairs(sig)
     x = sig.select(
         F.col("doc_id").alias("doc_a"),
@@ -3433,8 +3406,7 @@ def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle).  At a 31-word-vocabulary corpus this is the measured
     4,456× pruning; on a real heavy-tailed vocabulary the prefix df
     concentration is stronger still."""
-    sh = _shingles(_normalized_docs(spark, sf_dir)).cache()
-    sh.count()
+    sh = _shingles(_normalized_docs(spark, sf_dir)).localCheckpoint()
     dfq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")

@@ -38,7 +38,6 @@ def ks_2samp(
     value_col: str,
     sample_col: F.Column,
     min_samples: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact two-sample KS over ``value_col``; ``sample_col`` must be
     1 for sample A and 0 for sample B.  Returns one row:
@@ -49,32 +48,19 @@ def ks_2samp(
     the result is reported exactly as the reference reports it —
     ``(drift=False, stat=0.0, p=1.0)`` — not just an unflagged
     statistic.  Default off so oracle-checked callers keep pure KS
-    semantics.
-
-    ``materialize`` spool policy (r14, mirrors ``ranked()``'s): the
-    per-distinct-value counts feed three consumers, so by default they
-    are ``localCheckpoint``-ed once instead of recomputed per branch.
-    The spool is |distinct values| × |features| rows — DATA-sized for
-    continuous values, so at extreme scale a caller may pass
-    ``materialize=False`` to trade the extra scans for zero spool
-    footprint.  Fault-tolerance note: ``localCheckpoint`` is
-    executor-local and unreplicated — losing an executor mid-query
-    fails the query instead of recomputing lineage; this engine
-    accepts that for intra-query spools (the query is simply re-run),
-    the same policy as every other mechanism-2 site."""
+    semantics."""
     s = df.filter(F.col(value_col).isNotNull() & ~F.isnan(value_col)).select(
         F.col(value_col).alias("x"), sample_col.alias("is1")
     )
-    per_x = s.groupBy("x").agg(
-        F.sum("is1").alias("c1"), F.sum(1 - F.col("is1")).alias("c2")
+    # r13 optimization: the distinct-value counts feed THREE consumers
+    # (the min/max bounds job, the per-bucket offsets, the
+    # within-bucket cumsum) — spool once instead of re-scanning and
+    # re-shuffling the input per branch.
+    per_x = (
+        s.groupBy("x")
+        .agg(F.sum("is1").alias("c1"), F.sum(1 - F.col("is1")).alias("c2"))
+        .localCheckpoint()
     )
-    if materialize:
-        # r13 optimization: the distinct-value counts feed THREE
-        # consumers (the min/max bounds job, the per-bucket offsets,
-        # the within-bucket cumsum) — spool once instead of
-        # re-scanning and re-shuffling the input per branch.  Exact
-        # integer counts: recomputation-identical.
-        per_x = per_x.localCheckpoint()
     # Distributed prefix sum over x (two-pass, exact, no global
     # single-partition sort):
     #   1. assign each distinct x to one of _KS_BUCKETS value-range
@@ -179,7 +165,6 @@ def ks_2samp_keyed(
     value_col: str,
     sample_col: F.Column,
     min_samples: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Keyed two-sample KS: one statistic per ``key_col`` group in a
     single pass — the engine's form of the reference's *loop over
@@ -191,22 +176,17 @@ def ks_2samp_keyed(
 
     ``min_samples`` applies the reference's per-feature small-sample
     guard (scripts/drift_detection.py:40-46): an under-sampled feature
-    reports ``(stat=0.0, p=1.0, drift=False, severity='negligible')``.
-
-    ``materialize``: same spool policy and escape hatch as
-    :func:`ks_2samp` (the counts frame is |distinct x| × |features|
-    rows — unbounded for continuous values; pass ``False`` at extreme
-    scale to keep zero spool footprint)."""
+    reports ``(stat=0.0, p=1.0, drift=False, severity='negligible')``."""
     s = df.filter(F.col(value_col).isNotNull() & ~F.isnan(value_col)).select(
         F.col(key_col).alias("feature"), F.col(value_col).alias("x"), sample_col.alias("is1")
     )
-    per_x = s.groupBy("feature", "x").agg(
-        F.sum("is1").alias("c1"), F.sum(1 - F.col("is1")).alias("c2")
+    # r13 optimization: feeds both the cumsum window and the
+    # per-feature totals — spool once.
+    per_x = (
+        s.groupBy("feature", "x")
+        .agg(F.sum("is1").alias("c1"), F.sum(1 - F.col("is1")).alias("c2"))
+        .localCheckpoint()
     )
-    if materialize:
-        # r13 optimization: feeds both the cumsum window and the
-        # per-feature totals — spool once (exact integer counts).
-        per_x = per_x.localCheckpoint()
     w = (
         Window.partitionBy("feature")
         .orderBy("x")
@@ -1284,10 +1264,6 @@ def order_value_drift_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("is1").alias("c1"), F.sum(1 - F.col("is1")).alias("c2"))
         # r13 optimization: feeds the bounds job, the bucket offsets
         # and the within-bucket cumsum — spool once (exact integers).
-        # Spool size/fault-tolerance policy: see ks_2samp's
-        # ``materialize`` note (distinct (nation, price) pairs here —
-        # bounded by price quantization, and droppable the same way
-        # if this frame ever outgrew executor-local storage).
         .localCheckpoint()
     )
     bounds = per_x.groupBy("feature").agg(

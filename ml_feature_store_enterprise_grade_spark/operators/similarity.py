@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import cached_count, load_table, local_rows, spread
+from ..catalog import cached_count, load_table, local_rows, memo, spread
 from ..functions import PORTABLE_HASH64_SQL, portable_hash64
 from ..registry import register
 from .text import _BM25_SCORED_SQL_CTES  # no cycle: text does not import similarity
@@ -690,13 +690,13 @@ class VectorIndex:
 #: default keeps the broadcast side ≲ 100 MB, well inside a healthy
 #: broadcast budget); above it the generator refuses to build the
 #: quadratic pair table and routes through the persisted IVF index
-#: instead.  Env-overridable so a cluster with a bigger broadcast
-#: budget can raise it without a code change.
-_KNN_EXACT_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_KNN_EXACT_MAX_ROWS", "100000"))
+#: instead.  Callers with a bigger broadcast budget pass
+#: ``exact_below``.
+_KNN_EXACT_MAX_ROWS = 100_000
 
 #: Standing ``knn_candidates`` indexes by on-disk path — build once
 #: per (corpus, path) and reuse across query invocations in the same
-#: session, like ``_KM_CACHE`` memoizes the Lloyd fit.
+#: session, like ``_km_fit`` memoizes the Lloyd fit.
 _KNN_INDEX_CACHE: set[str] = set()
 
 
@@ -729,12 +729,12 @@ def knn_candidates(
     pairs (query_id, *query-meta, neighbor_id, *corpus-meta,
     cosine_sim [6-dp rounded double]) with self-pairs removed:
 
-    * **corpus ≤ exact_below** (default ``_KNN_EXACT_MAX_ROWS``,
-      env ``SPARK_GRAFT_KNN_EXACT_MAX_ROWS``): the EXACT path — every
-      (query, corpus) pair via one broadcast cross join (the corpus
-      side is bounded, so the broadcast is too).  Downstream top-k
-      elections over this frame are exact, which is what keeps the
-      oracle parity of the consumers intact at test scales.
+    * **corpus ≤ exact_below** (default ``_KNN_EXACT_MAX_ROWS``): the
+      EXACT path — every (query, corpus) pair via one broadcast cross
+      join (the corpus side is bounded, so the broadcast is too).
+      Downstream top-k elections over this frame are exact, which is
+      what keeps the oracle parity of the consumers intact at test
+      scales.
     * **above the bound**: the quadratic pair table is never built.
       The corpus is indexed once into a persisted cell-partitioned
       :class:`VectorIndex` (memoized per ``index_path`` across
@@ -1420,26 +1420,16 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: One scatter-moment computation per (application, sf_dir):
-#: embedding_covariance and embedding_top_eigenvector consume the
-#: IDENTICAL (di, dj, Σ qxi·qxj) upper-triangle frame + per-dim sums
-#: (same 1e-6 quantization, same overflow guard), so the d(d+1)/2
-#: expansion over the corpus runs once per session — the
-#: cobuy_pair_census / dedup-label memoization discipline.  Both
-#: frames are localCheckpointed (materialized, lineage-free).
-_EMB_MOMENTS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
-
-
+@memo
 def _embedding_scatter_moments(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int]:
     """``(ut, sums, n)``: upper-triangle co-moments ``(di, dj, sxy)``
     with exact DECIMAL sums of guarded int64 products, per-dimension
-    sums ``(dim, sx)`` as DECIMAL(38,0), and the vector count."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _EMB_MOMENTS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    sums ``(dim, sx)`` as DECIMAL(38,0), and the vector count.
+    embedding_covariance and embedding_top_eigenvector consume the
+    IDENTICAL frames (same 1e-6 quantization, same overflow guard), so
+    the d(d+1)/2 expansion over the corpus runs once per session."""
     # spread(): the embeddings parquet is byte-light, so Spark's
     # size-based split can hand the O(N·d²) pair expansion ONE task
     # without it (the eigenvector path had this before the refactor).
@@ -1491,10 +1481,7 @@ def _embedding_scatter_moments(
         .agg(F.sum(F.col("val").cast("decimal(38,0)")).alias("sx"))
         .localCheckpoint()
     )
-    n = int(emb.count())
-    out = (ut, sums, n)
-    _EMB_MOMENTS_CACHE[key] = out
-    return out
+    return ut, sums, int(emb.count())
 
 
 #: The covariance oracle body, shared verbatim by the
@@ -2118,7 +2105,7 @@ _KM_SEED = 7
 
 
 def _km_assign_ctes() -> list[str]:
-    """The DuckDB twin of :func:`_km_final_assignments` as a WITH-list
+    """The DuckDB twin of :func:`_km_fit` as a WITH-list
     ending at ``a{_KM_ITERS}`` (vec_id → assignment struct) — shared
     by the kmeans and ARI oracles."""
     from ..functions import PORTABLE_HASH64_SQL
@@ -2227,33 +2214,19 @@ def _km_oracle() -> str:
     """
 
 
-_KM_CACHE: dict[tuple[str, str], DataFrame] = {}
-#: Final-round centroid statistics (cid, element decimal-sums, count)
-#: memoized alongside the assignment frame — [[embedding_silhouette]]
-#: needs the full per-centroid distance set, not just the argmin.
-_KM_CENTS_CACHE: dict[tuple[str, str], list[tuple[int, list[int], int]]] = {}
-
-
-def _km_final_cents(
+@memo
+def _km_fit(
     spark: SparkSession, sf_dir: str
-) -> list[tuple[int, list[int], int]]:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _KM_CENTS_CACHE:
-        _km_final_assignments(spark, sf_dir)
-    return _KM_CENTS_CACHE[key]
-
-
-def _km_final_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic Lloyd fit shared by [[embedding_kmeans]] and
-    [[embedding_cluster_label_ari]]: runs the seed election and the
-    ``_KM_ITERS − 1`` exact-arithmetic update rounds, returning the
-    FINAL assignment frame ``(vec_id, label, qv, cid, dn, n_src)``
-    (memoized per (application, sf_dir) — the iteration's bounded
-    k·d-row collects run once, not per query)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _KM_CACHE.get(key)
-    if cached is not None:
-        return cached
+) -> tuple[DataFrame, list[tuple[int, list[int], int]]]:
+    """The deterministic Lloyd fit shared by [[embedding_kmeans]],
+    [[embedding_cluster_label_ari]] and [[embedding_silhouette]]: runs
+    the seed election and the ``_KM_ITERS − 1`` exact-arithmetic
+    update rounds, returning the FINAL assignment frame ``(vec_id,
+    label, qv, cid, dn, n_src)`` and the final-round centroid
+    statistics ``(cid, element decimal-sums, count)`` — the silhouette
+    needs the full per-centroid distance set, not just the argmin.
+    The iteration's bounded k·d-row collects run once per session,
+    not per query."""
     emb = spread(load_table(spark, sf_dir, "embeddings"), bytes_per_task=_EMB_TASK_BYTES)
     base = emb.select(
         "vec_id",
@@ -2262,7 +2235,7 @@ def _km_final_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(embedding, x ->"
             " CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
         ).alias("qv"),
-    ).cache()
+    ).localCheckpoint()
 
     seed_rows = (
         base.select(
@@ -2309,9 +2282,7 @@ def _km_final_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m.dn").alias("dn"),
         F.col("m.n").alias("n_src"),
     )
-    _KM_CACHE[key] = a
-    _KM_CENTS_CACHE[key] = cents
-    return a
+    return a, cents
 
 
 def _km_dist_structs(
@@ -2386,7 +2357,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerators would outgrow DECIMAL(38); the production path then
     divides first in doubles (MLlib semantics) and this query remains
     the small-SF determinism harness — noted, not hidden."""
-    a = _km_final_assignments(spark, sf_dir)
+    a, _cents = _km_fit(spark, sf_dir)
     stats = a.groupBy("cid").agg(
         F.count("*").alias("n_members"),
         F.sum("dn").alias("dn_sum"),
@@ -3095,7 +3066,7 @@ def embedding_cluster_label_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shuffle); the contingency table is one hash aggregate
     bounded by k·|labels| rows, and everything downstream folds that
     tiny frame."""
-    a = _km_final_assignments(spark, sf_dir)
+    a, _cents = _km_fit(spark, sf_dir)
     ct = a.groupBy("cid", "label").agg(F.count("*").alias("nij"))
     sidx = ct.agg(
         F.sum(F.expr("(nij * (nij - 1)) div 2")).alias("sidx"),
@@ -3211,8 +3182,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     run once per session); the k-distance set is a map-side
     broadcast-literal fold per point (no join, no shuffle of the
     corpus); the only aggregates are the k-row cluster stats."""
-    a = _km_final_assignments(spark, sf_dir)
-    cents = _km_final_cents(spark, sf_dir)
+    a, cents = _km_fit(spark, sf_dir)
     arr = F.array(*_km_dist_structs(cents))
     own_d = F.col("dn").cast("double") / (
         (F.col("n_src").cast("double") * F.lit(1000000.0))

@@ -198,11 +198,11 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(":"),
         F.to_date("ts").cast("string"),
     )
-    # cached: the <= |types|*k-row sketch is consumed by the per-type
+    # spooled: the <= |types|*k-row sketch is consumed by the per-type
     # stats, both sides of the pair pool, and the union re-sketch —
-    # without the cache each consumer re-runs the full events scan +
+    # without the spool each consumer re-runs the full events scan +
     # distinct + two-stage bottom-k.
-    sketch = kmv_sketch(ev, ["event_type"], member).cache()
+    sketch = kmv_sketch(ev, ["event_type"], member).localCheckpoint()
 
     stats = sketch.groupBy("event_type").agg(
         F.count("*").alias("n_sk"), F.max("h").alias("tau")

@@ -11,12 +11,11 @@ one shuffle per aggregate.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, register_cache_clearer, spread
+from ..catalog import load_table, memo, spread
 from ..functions import NORMALIZE_TEXT_SQL, PORTABLE_HASH64_SQL, normalize_text, portable_hash64
 from ..functions.ranking import ntile_from_rank, ranked, running_totals, scalable_ntile
 from ..registry import register
@@ -435,31 +434,21 @@ def corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: have unstable PMI and bloat the output).
 _PMI_MIN_COUNT = 5
 
-#: Memoized adjacent-bigram census per (session, sf_dir) — the
-#: vocab²-bounded (w1, w2, k11) table both collocation rankers
-#: ([[corpus_bigram_pmi]], [[corpus_bigram_llr]]) aggregate from.
-#: localCheckpointed ONCE so neither query rescans/retokenizes the
-#: corpus for a table the other already materialized (VERDICT r9
-#: item 4; the ``_event_value_rank_sums`` sharing pattern).
-_BIGRAM_CENSUS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@memo
 def _bigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, k11): corpus-wide adjacent word-pair counts,
-    tokenized with the engine's shared normalizer, materialized
-    lineage-free (localCheckpoint) on first use and reused by every
-    collocation consumer in the session."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _BIGRAM_CENSUS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    tokenized with the engine's shared normalizer — the vocab²-bounded
+    table both collocation rankers ([[corpus_bigram_pmi]],
+    [[corpus_bigram_llr]]) aggregate from, so neither rescans or
+    retokenizes the corpus for a table the other already built."""
     d = spread(load_table(spark, sf_dir, "documents")).select(
         _tokens(F.col("text")).alias("toks")
     )
     head = F.slice(F.col("toks"), 1, F.size("toks") - 1)
     tail = F.slice(F.col("toks"), 2, F.size("toks"))
     bigrams = F.zip_with(head, tail, lambda a, b: F.concat_ws(" ", a, b))
-    bc = (
+    return (
         d.select(F.explode(bigrams).alias("bigram"))
         .select(
             F.split("bigram", " ").getItem(0).alias("w1"),
@@ -474,8 +463,6 @@ def _bigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         # across queries).
         .localCheckpoint()
     )
-    _BIGRAM_CENSUS_CACHE[key] = bc
-    return bc
 
 
 @register(
@@ -831,7 +818,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is blind to).
 
     Scale shape: the per-doc bigram table collapses to distinct
-    (doc, w1, w2) counts before any join — ONCE, cached; the corpus
+    (doc, w1, w2) counts before any join — ONCE, spooled; the corpus
     bigram table rolls up FROM it (never a second pass over the
     exploded bigrams) and the unigram table is a vocabulary-sized
     aggregate (heavy-hitter pairs collapse map-side).  Joins run
@@ -844,7 +831,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("n"))
-        .cache()
+        .localCheckpoint()
     )
     tu = uc.agg(F.sum("n").cast("double").alias("total_u"))
     head = F.slice(F.col("toks"), 1, F.size("toks") - 1)
@@ -855,7 +842,11 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.zip_with(head, tail, lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
-    dbc = bg.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("cnt")).cache()
+    dbc = (
+        bg.groupBy("doc_id", "w1", "w2")
+        .agg(F.count("*").alias("cnt"))
+        .localCheckpoint()
+    )
     bc = dbc.groupBy("w1", "w2").agg(F.sum("cnt").alias("n_ab"))
     a = uc.select(F.col("w").alias("w1"), F.col("n").alias("n1"))
     c = uc.select(F.col("w").alias("w2"), F.col("n").alias("n2"))
@@ -1284,8 +1275,7 @@ def _doc_lengths(nd: DataFrame) -> DataFrame:
     are filtered to match the exploded form (explode drops them).
     NOT spooled: the frame is a pure projection of the pushed-down
     scan — re-reading is one map pass, cheaper than an eager
-    checkpoint job at any scale (the ranked() materialize=False
-    rationale)."""
+    checkpoint job at any scale."""
     return nd.filter(F.col("norm").isNotNull()).select(
         "doc_id", F.size(F.split("norm", " ")).alias("n_tokens")
     )
@@ -1827,9 +1817,7 @@ def doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (mechanism-2 spool): the fingerprint table feeds TWO plan
     # branches (the cross-doc df census and the per-doc report join)
     # — unspooled, the shingle posexplode + two windows + distinct ran
-    # twice.  Size note: fp is ~2/(w+1) of the k-gram stream (slim
-    # int rows) — data-proportional; at extreme scale the ks_2samp
-    # materialize policy applies (drop the spool, pay the rescan).
+    # twice.
     fp = winnow_fingerprints(nd).localCheckpoint()
     hd = fp.groupBy("fph").agg(F.count_distinct("doc_id").alias("n_docs"))
     w_hash = Window.partitionBy("doc_id", "fph")
@@ -2054,8 +2042,7 @@ def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pid", "pos", "w")
         # r14 (mechanism-2 spool): three consumers (phrase lengths,
         # word stats, phrase reassembly) re-ran the tokenize +
-        # doc-window chain each.  Size note: token-stream-sized —
-        # at extreme scale the ks_2samp materialize policy applies.
+        # doc-window chain each.
         .localCheckpoint()
     )
     plen = pw.groupBy("doc_id", "pid").agg(F.count("*").alias("n_words"))
@@ -3003,47 +2990,16 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memoized per-document unigram-LM census per (session, sf_dir) —
-#: the scored-doc frame every corpus-fluency consumer aggregates
-#: from: ``(doc_id, lang, n_chars, n_tokens, n_types, score_q,
-#: sclc)`` where ``score_q`` is the exact-integer 1e-6-quantized
-#: corpus-LM log-probability sum (the ccnet score numerator) and
-#: ``sclc`` the Σ cnt·⌊ln(cnt)·1e6⌋ entropy numerator.
-#: localCheckpointed ONCE so [[ccnet_perplexity_buckets]],
-#: [[quality_concentration_curve]], [[corpus_token_budget_curriculum]]
-#: and [[quality_filter_agreement]] never rescan/retokenize the
-#: corpus for a frame a sibling already materialized (VERDICT r11
-#: item 4; the ``_bigram_census`` pattern above).  Invalidated —
-#: together with ``_BIGRAM_CENSUS_CACHE`` — by
-#: ``catalog.clear_count_cache`` via :func:`clear_census_caches`
-#: (ADVICE r12 item 1: unlike the routing-only row counts, a stale
-#: census silently changes VALUES for its four consumers if
-#: fixtures are regenerated within a session).
-_UNIGRAM_CENSUS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_census_caches(sf_dir: str | None = None) -> None:
-    """Drop the memoized corpus census frames — all, or one
-    ``sf_dir``'s (keys are ``(applicationId, abspath(sf_dir))``).
-
-    Registered with ``catalog.register_cache_clearer`` so every
-    ``clear_count_cache`` call also clears these: a session that
-    regenerates fixtures makes ONE call and no memo — routing count
-    or value-bearing census — survives it."""
-    target = None if sf_dir is None else os.path.abspath(sf_dir)
-    for cache in (_BIGRAM_CENSUS_CACHE, _UNIGRAM_CENSUS_CACHE):
-        if target is None:
-            cache.clear()
-        else:
-            for key in [k for k in cache if k[1] == target]:
-                del cache[key]
-
-
-register_cache_clearer(clear_census_caches)
-
-
+@memo
 def _unigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc unigram-LM fluency census (see cache comment above).
+    """Per-doc unigram-LM fluency census ``(doc_id, lang, n_chars,
+    n_tokens, n_types, score_q, sclc)`` — the scored-doc frame every
+    corpus-fluency consumer ([[ccnet_perplexity_buckets]],
+    [[quality_concentration_curve]], [[corpus_token_budget_curriculum]],
+    [[quality_filter_agreement]]) aggregates from.  ``score_q`` is the
+    exact-integer 1e-6-quantized corpus-LM log-probability sum (the
+    ccnet score numerator), ``sclc`` the Σ cnt·⌊ln(cnt)·1e6⌋ entropy
+    numerator.
 
     Determinism: per-WORD log contributions quantize to exact 1e-6
     integers at the VOCABULARY level (never a per-token float sum);
@@ -3059,10 +3015,6 @@ def _unigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of once per plan branch (the previous shape re-tokenized
     for the vocab census, the total scalar and the broadcast build —
     three corpus passes inside one census build)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _UNIGRAM_CENSUS_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
@@ -3086,7 +3038,7 @@ def _unigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     lnq = F.floor(F.log(F.col("cnt").cast("double")) * 1000000.0).cast(
         "bigint"
     )
-    census = (
+    return (
         dtc.join(F.broadcast(contrib), "tok")
         .groupBy("doc_id", "lang", "n_chars")
         .agg(
@@ -3097,8 +3049,6 @@ def _unigram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _UNIGRAM_CENSUS_CACHE[key] = census
-    return census
 
 
 @register(

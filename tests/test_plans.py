@@ -18,13 +18,16 @@ from tests.conftest import SF_SMOKE
 registry.load_all()
 
 
-def plan_of(spark, name: str) -> str:
-    df = registry.queries()[name](spark, SF_SMOKE)
+def _executed_plan(df) -> str:
     # AQE finalizes the physical plan only at execution time — run
     # this DataFrame's own QueryExecution (collect, small at sf0.001)
     # so WholeStageCodegen / join choices are the real ones.
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_of(spark, name: str) -> str:
+    return _executed_plan(registry.queries()[name](spark, SF_SMOKE))
 
 
 def test_region_revenue_broadcasts_dims(spark):
@@ -194,16 +197,30 @@ def test_histogram_rollup_windows_are_partitioned(spark):
 
 
 def test_kmv_overlap_no_unpartitioned_window_or_cartesian(spark):
-    plan = plan_of(spark, "kmv_audience_overlap")
-    assert "CartesianProduct" not in plan
+    """Both window layers partition: the per-type bottom-k of the
+    sketch (which sits below the query's spool, so it is checked on
+    ``kmv_sketch`` itself) and the per-pair union re-sketch."""
     import re
 
-    windows = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    # every window spec carries at least one partition column before
-    # the ORDER BY spec (h ASC ...)
-    for spec in windows:
-        first = spec.split(",")[0].strip()
-        assert "ASC" not in first and first, f"unpartitioned window: {spec}"
+    from pyspark.sql import functions as F
+
+    from ml_feature_store_enterprise_grade_spark.catalog import load_table
+    from ml_feature_store_enterprise_grade_spark.operators.sketches import kmv_sketch
+
+    plan = plan_of(spark, "kmv_audience_overlap")
+    assert "CartesianProduct" not in plan
+    ev = load_table(spark, SF_SMOKE, "events")
+    sketch_plan = _executed_plan(
+        kmv_sketch(ev, ["event_type"], F.col("user_id").cast("string"))
+    )
+    for p in (plan, sketch_plan):
+        windows = re.findall(r"windowspecdefinition\(([^)]*)\)", p)
+        assert windows, f"no window in plan:\n{p}"
+        # every window spec carries at least one partition column
+        # before the ORDER BY spec (h ASC ...)
+        for spec in windows:
+            first = spec.split(",")[0].strip()
+            assert "ASC" not in first and first, f"unpartitioned window: {spec}"
 
 
 def test_crossdoc_spans_slim_shuffle_no_joins_on_text(spark):
@@ -380,10 +397,17 @@ def test_kmeans_assignment_is_map_side(spark):
     corpus (centroids are literal arrays): the only join in the final
     plan is the broadcast of the k-row label-mode frame — never a
     shuffle join or cartesian of the corpus."""
+    from ml_feature_store_enterprise_grade_spark.operators.similarity import _km_fit
+
     plan = plan_of(spark, "embedding_kmeans")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+    # The assignment frame the Lloyd fit returns is where the fold
+    # lives: a pure map over the corpus, no join or exchange at all.
+    assign_plan = _executed_plan(_km_fit(spark, SF_SMOKE)[0])
+    assert "Join" not in assign_plan and "Exchange" not in assign_plan
+    assert "Project" in assign_plan
 
 
 def test_benford_audit_broadcasts_group_totals(spark):

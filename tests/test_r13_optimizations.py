@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import local_rows
@@ -65,10 +66,9 @@ def test_stream_state_confs_rule(spark):
     assert compute_floor(spark) >= 1
 
 
-def test_ranked_materialize_value_invariant(spark):
-    """materialize=True (the r13 default: one localCheckpoint feeds
-    the machinery's three plan branches) must be bit-identical to the
-    recompute-per-branch form on ranks, counts and downstream use."""
+def test_ranked_matches_window_row_number(spark):
+    """The spooled chunk machinery must be bit-identical to the
+    single-task Window ``row_number()``/``count()`` on the same frame."""
     df = (
         spark.range(0, 5000)
         .select(
@@ -77,19 +77,29 @@ def test_ranked_materialize_value_invariant(spark):
             F.col("id"),
         )
     )
-    a = ranked(df, [("v", "asc"), ("id", "asc")], group_cols=["g"],
-               materialize=True).orderBy("g", "rn")
-    b = ranked(df, [("v", "asc"), ("id", "asc")], group_cols=["g"],
-               materialize=False).orderBy("g", "rn")
-    assert a.collect() == b.collect()
+    a = ranked(df, [("v", "asc"), ("id", "asc")], group_cols=["g"]).orderBy(
+        "g", "rn"
+    )
+    w = Window.partitionBy("g").orderBy("v", "id")
+    b = df.select(
+        "*",
+        F.row_number().over(w).cast("bigint").alias("rn"),
+        F.count("*").over(Window.partitionBy("g")).cast("bigint").alias("n_rows"),
+    ).orderBy("g", "rn")
+    got = a.select("g", "v", "id", "rn", "n_rows").collect()
+    assert got == b.collect()
+    assert len(got) == 5000
 
 
-def test_running_totals_materialize_value_invariant(spark):
+def test_running_totals_matches_window_sum(spark):
     df = spark.range(0, 3000).select(
         ((F.col("id") * 48271) % 1000003).alias("v"), F.col("id")
     )
-    a = running_totals(df, [("v", "asc"), ("id", "asc")], ["v"],
-                       materialize=True).orderBy("v", "id")
-    b = running_totals(df, [("v", "asc"), ("id", "asc")], ["v"],
-                       materialize=False).orderBy("v", "id")
-    assert a.collect() == b.collect()
+    a = running_totals(df, [("v", "asc"), ("id", "asc")], ["v"]).orderBy(
+        "v", "id"
+    )
+    w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
+    b = df.select("*", F.sum("v").over(w).alias("v_cum")).orderBy("v", "id")
+    got = a.select("v", "id", "v_cum").collect()
+    assert got == b.collect()
+    assert len(got) == 3000

@@ -1,7 +1,6 @@
-"""Round-13 regressions: the census cache clear hook (ADVICE r12
-item 1), the TakeOrdered re-plans of the unpartitioned row_number
-census family (VERDICT r12 item 2), and the full-registry plan
-flag-audit parser (VERDICT r12 item 4)."""
+"""Round-13 regressions: the TakeOrdered re-plans of the unpartitioned
+row_number census family (VERDICT r12 item 2), and the full-registry
+plan flag-audit parser (VERDICT r12 item 4)."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import sys
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ml_feature_store_enterprise_grade_spark.catalog import clear_count_cache
 from ml_feature_store_enterprise_grade_spark.registry import load_all, queries
 
 from conftest import SF_SMOKE
@@ -19,33 +17,6 @@ from conftest import SF_SMOKE
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 load_all()
-
-
-# ---------------------------------------------------------------- #
-# ADVICE r12 item 1: clear_count_cache must also drop the census    #
-# ---------------------------------------------------------------- #
-
-
-def test_clear_count_cache_drops_census_memos(spark):
-    from ml_feature_store_enterprise_grade_spark.operators.text import (
-        _UNIGRAM_CENSUS_CACHE,
-        _unigram_census,
-    )
-
-    a = _unigram_census(spark, SF_SMOKE)
-    assert _unigram_census(spark, SF_SMOKE) is a
-    # Clearing a DIFFERENT sf_dir must not evict this one.
-    clear_count_cache("/definitely/not/a/real/dir")
-    assert _unigram_census(spark, SF_SMOKE) is a
-    # Clearing the census's own sf_dir must evict it.
-    clear_count_cache(SF_SMOKE)
-    key = (spark.sparkContext.applicationId, os.path.abspath(SF_SMOKE))
-    assert key not in _UNIGRAM_CENSUS_CACHE
-    b = _unigram_census(spark, SF_SMOKE)
-    assert b is not a
-    # The all-caches form evicts too.
-    clear_count_cache()
-    assert not _UNIGRAM_CENSUS_CACHE
 
 
 # ---------------------------------------------------------------- #

@@ -653,8 +653,8 @@ def test_ra_link_prediction_matches_python_reference_on_random_baskets(
 ):
     import pandas as pd
 
+    from ml_feature_store_enterprise_grade_spark.catalog import clear_count_cache
     from ml_feature_store_enterprise_grade_spark.operators.analytics import (
-        _COBUY_CACHE,
         _RA_MIN_SUPPORT,
         _RA_TOPK,
     )
@@ -670,7 +670,7 @@ def test_ra_link_prediction_matches_python_reference_on_random_baskets(
     # fixture a real timestamp so the dispatch recognizes it
     pdf["l_shipdate"] = pd.Timestamp("1995-01-01")
     pdf.to_parquet(d / "lineitem.parquet")
-    _COBUY_CACHE.clear()  # synthetic dir must not hit a stale census
+    clear_count_cache(str(d))  # synthetic dir must not hit a stale census
     try:
         got = [
             (r.item_a, r.item_b, r.n_common, r.ra_score)
@@ -679,7 +679,7 @@ def test_ra_link_prediction_matches_python_reference_on_random_baskets(
             ).collect()
         ]
     finally:
-        _COBUY_CACHE.clear()
+        clear_count_cache(str(d))
     want = _python_ra_topk(baskets, _RA_MIN_SUPPORT, _RA_TOPK)
     assert got == want
 

@@ -98,15 +98,11 @@ def test_variance_ratio_matches_numpy(spark):
 
 def test_ari_matches_numpy_contingency(spark):
     from ml_feature_store_enterprise_grade_spark.operators.similarity import (
-        _km_final_assignments,
+        _km_fit,
     )
 
     r = _Q["embedding_cluster_label_ari"](spark, SF_SMOKE).collect()[0]
-    a = (
-        _km_final_assignments(spark, SF_SMOKE)
-        .select("cid", "label")
-        .toPandas()
-    )
+    a = _km_fit(spark, SF_SMOKE)[0].select("cid", "label").toPandas()
     ct = a.groupby(["cid", "label"]).size()
     comb2 = lambda v: (v * (v - 1)) // 2  # noqa: E731
     sidx = int(comb2(ct).sum())
@@ -277,15 +273,15 @@ def test_staleness_bruteforce_single_user(spark):
 
 def test_silhouette_matches_numpy(spark):
     from ml_feature_store_enterprise_grade_spark.operators.similarity import (
-        _km_final_assignments,
-        _km_final_cents,
+        _km_fit,
     )
 
     rows = {
         r.cid: r
         for r in _Q["embedding_silhouette"](spark, SF_SMOKE).collect()
     }
-    a = _km_final_assignments(spark, SF_SMOKE).select("cid", "qv").toPandas()
+    assignments, final_cents = _km_fit(spark, SF_SMOKE)
+    a = assignments.select("cid", "qv").toPandas()
     x = np.array(a["qv"].tolist(), dtype=np.float64) / 1e6
     cids = a["cid"].to_numpy()
     uniq = np.unique(cids)
@@ -293,7 +289,7 @@ def test_silhouette_matches_numpy(spark):
     # same ones the argmin used), not post-assignment recomputed means
     cents = {
         cid: np.array(s_list, dtype=np.float64) / (n * 1e6)
-        for cid, s_list, n in _km_final_cents(spark, SF_SMOKE)
+        for cid, s_list, n in final_cents
     }
     per_cluster: dict[int, list[float]] = {int(c): [] for c in uniq}
     for i in range(len(x)):

@@ -70,7 +70,6 @@ def main() -> None:
     )
     final.write.format("noop").mode("overwrite").save()
     out["t_expand_and_size_window"] = round(time.perf_counter() - t0, 3)
-    rep.unpersist()
 
     out["t_total"] = round(
         out["t_rep_window"]

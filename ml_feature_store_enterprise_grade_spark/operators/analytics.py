@@ -693,8 +693,9 @@ _BASKET_MIN_SUPPORT = 3
         HAVING COUNT(*) >= {_BASKET_MIN_SUPPORT}
     )
     SELECT p.item_a, p.item_b, p.n_ab,
-           ROUND((p.n_ab / n.n_orders)
-                 / ((ia.n_i / n.n_orders) * (ib.n_i / n.n_orders)), 4) AS lift
+           floor((p.n_ab / n.n_orders)
+                 / ((ia.n_i / n.n_orders) * (ib.n_i / n.n_orders)) * 10000 + 0.5)
+               / 10000 AS lift
     FROM pair p
     JOIN item ia ON p.item_a = ia.item_id
     JOIN item ib ON p.item_b = ib.item_id
@@ -758,11 +759,14 @@ def item_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ib = item.select(F.col("item_id").alias("item_b"), F.col("n_i").alias("n_b"))
     no = F.col("n_orders")
     lift = (F.col("n_ab") / no) / ((F.col("n_a") / no) * (F.col("n_b") / no))
+    # identical-IEEE 4-dp rounding, as in user_ltv_features: F.round and
+    # DuckDB's ROUND disagree at half-way ties
+    lift = F.floor(lift * 10000 + F.lit(0.5)) / 10000
     return (
         pair.join(F.broadcast(ia), "item_a")
         .join(F.broadcast(ib), "item_b")
         .crossJoin(F.broadcast(n))
-        .select("item_a", "item_b", "n_ab", F.round(lift, 4).alias("lift"))
+        .select("item_a", "item_b", "n_ab", lift.alias("lift"))
     )
 
 

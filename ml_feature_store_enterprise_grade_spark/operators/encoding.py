@@ -66,9 +66,9 @@ _SPLIT_VAL_END = 90
     )
     SELECT o.o_orderkey, o.o_orderpriority,
            CAST({MONEY_SQL("o.o_totalprice")} AS DOUBLE) AS target,
-           ROUND((CAST(c.s_c - {MONEY_SQL("o.o_totalprice")} AS DOUBLE)
+           floor((CAST(c.s_c - {MONEY_SQL("o.o_totalprice")} AS DOUBLE)
                   + {_TE_SMOOTHING} * g.gmean)
-                 / (c.n_c - 1 + {_TE_SMOOTHING}), 6) AS te_loo
+                 / (c.n_c - 1 + {_TE_SMOOTHING}) * 1000000 + 0.5) / 1000000 AS te_loo
     FROM orders o
     JOIN cat c USING (o_orderpriority)
     CROSS JOIN g
@@ -83,7 +83,10 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact-decimal sums (MONEY discipline) make the category/global
     sums associative, so the encoding is deterministic under any
     partial-aggregation order; the one double division happens last,
-    in an identical expression tree on both engines.
+    in an identical expression tree on both engines.  The 6-dp rounding
+    is ``floor(x*10^6 + 0.5)/10^6`` on both sides: Spark's ``round``
+    works on the shortest decimal repr and DuckDB's in floating point,
+    so at a half-way tie they disagree in the last digit.
 
     Scale: the category map is |categories| rows — broadcast back to
     the fact table (zero fact shuffle); the global mean is a scalar
@@ -109,7 +112,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_orderpriority",
             t.cast("double").alias("target"),
-            F.round(te, 6).alias("te_loo"),
+            (F.floor(te * 1000000 + F.lit(0.5)) / 1000000).alias("te_loo"),
         )
     )
 

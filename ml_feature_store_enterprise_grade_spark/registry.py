@@ -6,14 +6,15 @@ are ANSI-SQL-expressible) a DuckDB oracle SQL string over the same
 parquet tables, or a ``rows_only=`` reason why it has none.
 ``__spark_entry__.py`` re-exports this registry to the verify driver.
 
-Ordering rule.  The verify driver oracle-checks the FIRST 50 entries
-of ``queries()`` and records each round's rows in
-``CORRECTNESS_r<N>.json`` at the repo root (next to this package).
-``queries()`` and ``oracles()`` list the registered names stable-sorted
-by the newest round ``N`` that has a row for the name; a name with no
-row sorts as round -1.  So never-checked names lead the window, then
-the longest-unchecked ones, and ties keep registration order.  With no
-CORRECTNESS file present the order is plain registration order.
+Ordering rule.  The verify driver oracle-checks the first
+``DRIVER_WINDOW`` entries of ``queries()`` and records each round's
+rows in ``CORRECTNESS_r<N>.json`` at the repo root (next to this
+package).  ``queries()`` and ``oracles()`` list the registered names
+stable-sorted by the newest round ``N`` that has a row for the name; a
+name with no row sorts as round -1.  So never-checked names lead the
+window, then the longest-unchecked ones.  Ties keep
+``_OPERATOR_MODULES`` order, then definition order within a module, so
+the order does not depend on which module a process imported first.
 """
 
 from __future__ import annotations
@@ -29,6 +30,9 @@ from importlib import import_module
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+#: How many leading entries of ``queries()`` the verify driver checks.
+DRIVER_WINDOW = 50
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -123,7 +127,13 @@ def _last_checked() -> dict[str, int]:
 
 def _ordered(mapping: dict) -> dict:
     rounds = _last_checked()
-    return dict(sorted(mapping.items(), key=lambda kv: rounds.get(kv[0], -1)))
+    rank = {m: i for i, m in enumerate(_OPERATOR_MODULES)}
+    return dict(
+        sorted(
+            mapping.items(),
+            key=lambda kv: (rounds.get(kv[0], -1), rank[QUERIES[kv[0]].__module__]),
+        )
+    )
 
 
 def queries() -> dict[str, QueryFn]:

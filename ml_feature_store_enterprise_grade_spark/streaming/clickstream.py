@@ -149,6 +149,19 @@ def windowed_features(events: DataFrame) -> DataFrame:
     )
 
 
+#: Source bytes per state-store instance in ``stream_state_confs``.
+_STREAM_STATE_BYTES = 32 * 1024 * 1024
+#: Default state-partition floor.  Light windowed monitors (the common
+#: case here) are commit-bound, not compute-bound — measured at sf0.1
+#: (warmed, min-of-2): quality 2.17→1.00 s, topk 2.37→1.18 s, dp
+#: 2.00→1.11 s, cusum 2.79→1.68 s.  Sites whose PER-BATCH compute
+#: scales with data (window explosion, per-key Python state) pass
+#: ``floor=compute_floor(spark)`` — floor 1 measured
+#: stream_sliding_features 4.3 s → 8.4 s, so the floor is a
+#: per-operator property, not a global constant.
+_STREAM_STATE_FLOOR = 1
+
+
 def stream_state_confs(
     spark: SparkSession, sf_dir: str, floor: int | None = None
 ) -> dict[str, str]:
@@ -159,14 +172,14 @@ def stream_state_confs(
     micro-batch commits EVERY state-store instance — on this engine's
     replay twins the per-instance commit is the dominant fixed cost,
     not the data.  So size the count from the stream's staged input
-    bytes — one state-store instance per ``$SPARK_GRAFT_STREAM_STATE_MB``
-    (default 32 MB) of source — capped at the session's configured
-    shuffle width (the cluster-scale setting stays in charge at real
-    input sizes) and floored at ``floor`` (raise for compute-bound
-    stateful operators, e.g. stream-stream joins).  The rule is a
-    pure function of input size: ~20 MB of sf0.1 events yields 1
-    instance; a TB-scale replay saturates the configured width — no
-    local-only constant anywhere."""
+    bytes — one state-store instance per ``_STREAM_STATE_BYTES`` of
+    source — capped at the session's configured shuffle width (the
+    cluster-scale setting stays in charge at real input sizes) and
+    floored at ``floor`` (default ``_STREAM_STATE_FLOOR``; raise it for
+    compute-bound stateful operators, e.g. stream-stream joins).  The
+    rule is a pure function of input size: ~20 MB of sf0.1 events
+    yields 1 instance; a TB-scale replay saturates the configured
+    width."""
     # Size from the source table itself (the staged replay dir is a
     # verbatim copy of it) — statting the source avoids staging a
     # copy as a side effect on paths that replay from their own
@@ -182,30 +195,10 @@ def stream_state_confs(
             for d, _, files in os.walk(src)
             for f in files
         )
-    try:
-        per_mb = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_MB", "32"))
-    except ValueError:
-        per_mb = 32
-    per = max(1, per_mb) * (1024 * 1024)
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    env_floor = os.environ.get("SPARK_GRAFT_STREAM_STATE_FLOOR")
-    if floor is None and env_floor is not None:
-        try:
-            floor = max(1, int(env_floor))
-        except ValueError:
-            floor = None
     if floor is None:
-        # Default: purely state-sized.  Light windowed monitors (the
-        # common case here) are commit-bound, not compute-bound —
-        # measured at sf0.1 (warmed, min-of-2): quality 2.17→1.00 s,
-        # topk 2.37→1.18 s, dp 2.00→1.11 s, cusum 2.79→1.68 s.
-        # Sites whose PER-BATCH compute scales with data (window
-        # explosion, per-key Python state) pass compute_floor()
-        # explicitly — floor 1 measured stream_sliding_features
-        # 4.3 s → 8.4 s, so the floor is a per-operator property,
-        # not a global constant.
-        floor = 1
-    n = max(floor, min(cap, -(-size // per)))
+        floor = _STREAM_STATE_FLOOR
+    n = max(floor, min(cap, -(-size // _STREAM_STATE_BYTES)))
     return {"spark.sql.shuffle.partitions": str(n)}
 
 

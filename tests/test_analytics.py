@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.operators.analytics import (
@@ -29,6 +30,7 @@ def _events(spark, rows):
 
 
 class TestFunnel:
+    @pytest.mark.slow
     def test_order_enforced(self, spark):
         # user 1: click BEFORE any view — click must not progress the funnel
         rows = [
@@ -117,6 +119,7 @@ class TestScd2:
 
 
 class TestIntervalJoinQuery:
+    @pytest.mark.slow
     def test_bands_tile_all_events(self, spark):
         from ml_feature_store_enterprise_grade_spark.operators.analytics import (
             activity_band_interval_join,
@@ -185,6 +188,7 @@ def test_decay_weighted_features_semantics(spark):
     assert set(out) == set(by_user)
 
 
+@pytest.mark.slow
 def test_item_pagerank_invariants(spark):
     """PageRank sanity: scores positive, mass ≈ 1 over the node set
     (power iteration from uniform preserves total mass on a graph

@@ -31,6 +31,7 @@ def bucketed_tables(spark):
     spark.sql("DROP TABLE IF EXISTS b_daily")
 
 
+@pytest.mark.slow
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     t1, t2 = bucketed_tables
     a, b = read_bucketed(spark, t1), read_bucketed(spark, t2)

@@ -28,6 +28,7 @@ def split(spark):
     return docs.filter(~is_batch), docs.filter(is_batch)
 
 
+@pytest.mark.slow
 def test_probe_matches_dedup_incremental(spark, split, tmp_path):
     corpus, batch = split
     idx = DedupIndex.build(corpus, str(tmp_path / "idx"))
@@ -39,6 +40,7 @@ def test_probe_matches_dedup_incremental(spark, split, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_add_folds_admitted_docs_in(spark, split, tmp_path):
     corpus, batch = split
     idx = DedupIndex.build(corpus, str(tmp_path / "idx"))
@@ -65,6 +67,7 @@ def test_add_folds_admitted_docs_in(spark, split, tmp_path):
             )
 
 
+@pytest.mark.slow
 def test_probe_joins_broadcast_the_small_batch(spark, split, tmp_path):
     """Every probe join keeps the batch frame on one side (the class
     contract: no corpus-vs-corpus join exists in the code path), so
@@ -88,6 +91,7 @@ def test_probe_joins_broadcast_the_small_batch(spark, split, tmp_path):
             assert "doc_id" in line, f"standing-table shuffle join: {line.strip()}"
 
 
+@pytest.mark.slow
 def test_compact_preserves_probe_verdicts(spark, split, tmp_path):
     """Compaction folds all ingest dirs into one generation without
     changing any probe verdict."""
@@ -110,6 +114,7 @@ def test_compact_preserves_probe_verdicts(spark, split, tmp_path):
     assert len(first) == len(after)
 
 
+@pytest.mark.slow
 def test_probe_spans_matches_python_reference(spark, split, tmp_path):
     """probe_spans must equal the quadratic batch-vs-corpus reference:
     a batch span counts as duplicated iff its exact k-word window
@@ -155,6 +160,7 @@ def test_probe_spans_matches_python_reference(spark, split, tmp_path):
     assert got == expect
 
 
+@pytest.mark.slow
 def test_probe_spans_add_redelivery_and_compact(spark, split, tmp_path):
     """After add, a re-probe sees the batch's own spans (self dup);
     excluding the ingest reproduces the original report; compaction
@@ -181,6 +187,7 @@ def test_probe_spans_add_redelivery_and_compact(spark, split, tmp_path):
     assert after == full
 
 
+@pytest.mark.slow
 def test_empty_build_cold_start(spark, split, tmp_path):
     """A build over an EMPTY corpus (the cold-start shape
     streaming/ingestion.py advertises) must yield a probeable index:
@@ -205,6 +212,7 @@ def test_empty_build_cold_start(spark, split, tmp_path):
     assert {r["doc_id"]: r["verdict"] for r in warmed} == ref
 
 
+@pytest.mark.slow
 def test_missing_table_dir_raises_loudly(spark, split, tmp_path):
     """The empty-frame fallback in ``_read`` is ONLY for the
     cold-start ``bands`` shape (dir exists, no schema-bearing file).

@@ -6,6 +6,7 @@ per-operator oracle can see."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -18,6 +19,7 @@ def _q(name, spark):
     return registry.queries()[name](spark, SF_SMOKE)
 
 
+@pytest.mark.slow
 def test_corpus_pipeline_accounting(spark):
     """Admission → sampling → packing: every doc admitted by the dedup
     pipeline appears in the sampling plan; every kept doc appears in
@@ -43,6 +45,7 @@ def test_corpus_pipeline_accounting(spark):
     assert total_est == card.est_tokens
 
 
+@pytest.mark.slow
 def test_training_pipeline_split_is_leakage_free(spark):
     """training_set_export joined to the hash split: every exported
     example lands in exactly one split, split shares are sane, and no

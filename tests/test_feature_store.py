@@ -64,6 +64,7 @@ def test_offline_partitioned_and_pruned(store):
     assert [str(d) for d in dates] == ["2024-01-10"]
 
 
+@pytest.mark.slow
 def test_materialize_matches_latest_snapshot(store, spark):
     snap = store.materialize("user_click_features", incremental=False)
     direct = latest_snapshot(
@@ -74,6 +75,7 @@ def test_materialize_matches_latest_snapshot(store, spark):
     assert direct.exceptAll(snap).count() == 0
 
 
+@pytest.mark.slow
 def test_incremental_materialize_equals_full(store, spark, tmp_path):
     """Writing history in two batches then materializing twice must
     equal one full materialization (the daily DAG invariant)."""
@@ -139,6 +141,7 @@ def test_historical_matches_asof_operator(store, spark):
     assert out.select(*direct.columns).exceptAll(direct).count() == 0
 
 
+@pytest.mark.slow
 def test_historical_prunes_offline_partitions(store, spark):
     """With pruning on, the offline scan must carry PartitionFilters
     bounding event_date to [lookup − TTL, lookup]; results identical
@@ -156,6 +159,7 @@ def test_historical_prunes_offline_partitions(store, spark):
     assert "event_date" in pf and "2024-01-09" in pf and "2024-01-13" in pf
 
 
+@pytest.mark.slow
 def test_historical_ttl_none_has_unbounded_lookback(store, spark):
     """A TTL-less view must resolve features that predate the lookup
     window even with pruning on (regression: prune=True used to derive

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from datetime import timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
@@ -22,6 +23,7 @@ from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
 from tests.conftest import SF_SMOKE
 
 
+@pytest.mark.slow
 def test_stream_to_store_to_serving(spark, tmp_path):
     # 1. Streaming job → offline store (the reference's Spark app).
     user = Entity("user", join_key="user_id", value_type="bigint")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.operators.asof import asof_join
@@ -81,6 +82,7 @@ class TestAsofJoinEdges:
 
 
 class TestIvfRecall:
+    @pytest.mark.slow
     def test_recall_vs_bruteforce(self, spark):
         exact = {
             (r.query_id, r.neighbor_id) for r in ann_cosine_topk(spark, SF_SMOKE).collect()
@@ -356,6 +358,7 @@ def test_dataset_split_partition_and_rates(spark):
         assert again[r.c_custkey] == r.split
 
 
+@pytest.mark.slow
 def test_connected_components_long_chain_and_random_graph(spark):
     """Pointer jumping must converge a 256-vertex path (diameter 255)
     inside the 20-round cap — plain one-hop min propagation cannot.
@@ -405,6 +408,7 @@ def test_connected_components_long_chain_and_random_graph(spark):
     assert got_active == expected
 
 
+@pytest.mark.slow
 def test_connected_components_deep_chain_persisted_rounds(spark, tmp_path):
     """The 100 TB shape: a 2^14-vertex path (diameter 16383 — the
     adversarial templated-chain case) must converge inside the
@@ -563,6 +567,7 @@ def test_corpus_sampling_plan_rates_and_determinism(spark, sf_dir=SF_SMOKE):
     assert all(again[r.doc_id] == r.keep for r in rows)
 
 
+@pytest.mark.slow
 def test_multi_view_pit_per_view_ttl(spark):
     """The multi-view retrieval must honor each view's own TTL: at the
     2024-02-05 lookup (≥4 days after the last event) the 24 h click
@@ -590,6 +595,7 @@ def test_multi_view_pit_per_view_ttl(spark):
     assert mid and all(r.daily_feature_ts is not None for r in mid)
 
 
+@pytest.mark.slow
 def test_segment_dedup_matches_python_reference(spark, sf_dir=SF_SMOKE):
     """Full reference implementation in plain Python over the small
     corpus: first-occurrence election ordered by (doc_id, position),
@@ -635,6 +641,7 @@ def test_segment_dedup_matches_python_reference(spark, sf_dir=SF_SMOKE):
             assert r["clean_text"] == dict(docs)[doc_id]
 
 
+@pytest.mark.slow
 def test_semantic_dedup_invariants(spark, sf_dir=SF_SMOKE):
     """One rep per cluster, rep at cosine 1.0 to itself, and the
     action column exactly reflects the threshold rule."""
@@ -731,6 +738,7 @@ def test_crossdoc_trim_winner_keeps_loser_trims(spark):
     assert got[2] == (k, "")
 
 
+@pytest.mark.slow
 def test_split_neardup_leakage_invariants(spark, sf_dir=SF_SMOKE):
     """Every reported leak is an eval-split doc whose match is a
     train-split doc at/above the estimate threshold, one row per eval

@@ -2,13 +2,20 @@
 
 This mirrors the verify driver's correctness gate (row count + schema
 + order-insensitive values) at sf0.001 so it stays fast enough for
-the inner loop.  ``SPARK_GRAFT_PARITY_SF=/root/testdata/sf0.01`` runs
-the driver-scale sweep.
+the inner loop.  ``python tools/parity.py <sf_dir>`` is the
+driver-scale sweep.
+
+Tiering is derived from the registry, not from a list of test ids.
+A query runs in the default tier when it is in the driver window the
+next round checks (the first ``registry.DRIVER_WINDOW`` names of
+``queries()``), in the window the newest ``CORRECTNESS_r*.json`` round
+checked, or is the first query its module registers (so every operator
+module stays covered).  ``_PINNED`` adds the few queries the earlier
+hand-kept tier ran that no rule selects.  Every other case is marked
+``slow``.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -18,14 +25,50 @@ from ml_feature_store_enterprise_grade_spark.testing import (
     dtype_issues,
     duckdb_connection,
 )
-
-SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
+from tests.conftest import SF_SMOKE as SF_DIR
 
 registry.load_all()
 _ALL_QUERIES = registry.queries()
 _ALL_ORACLES = registry.oracles()
-_NAMES = sorted(_ALL_QUERIES)
-_ORACLE_NAMES = sorted(_ALL_ORACLES)
+
+
+#: Per-module picks of the earlier hand-kept tier (measured cheapest in
+#: their module) that no rule in ``_default_tier`` selects.  Kept so that
+#: no parity case that ran by default stops running; never extended.
+_PINNED = frozenset({
+    "bloom_prejoin_prune",
+    "calendar_features",
+    "corpus_lang_stats",
+    "feature_summary_stats",
+    "item_label_propagation",
+    "late_arrival_audit",
+    "latest_feature_snapshot",
+    "sketch_distinct_users_rollup",
+    "stratified_kfold_plan",
+})
+
+
+def _default_tier() -> set[str]:
+    """The next driver window, the last one checked, the first
+    registered query per module, and ``_PINNED``."""
+    first_of_module: dict[str, str] = {}
+    for name, fn in registry.QUERIES.items():
+        first_of_module.setdefault(fn.__module__, name)
+    window = list(_ALL_QUERIES)[: registry.DRIVER_WINDOW]
+    rounds = registry._last_checked()
+    newest = max(rounds.values(), default=None)
+    last_checked = {n for n, r in rounds.items() if r == newest and n in _ALL_QUERIES}
+    return set(window) | last_checked | set(first_of_module.values()) | _PINNED
+
+
+_DEFAULT = _default_tier()
+
+
+def _params(names) -> list:
+    return [
+        pytest.param(n, marks=() if n in _DEFAULT else pytest.mark.slow)
+        for n in sorted(names)
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -35,7 +78,7 @@ def con():
     c.close()
 
 
-@pytest.mark.parametrize("name", _NAMES)
+@pytest.mark.parametrize("name", _params(_ALL_QUERIES))
 def test_query_matches_oracle(spark, con, name):
     fn = _ALL_QUERIES[name]
     df = fn(spark, SF_DIR)
@@ -47,7 +90,7 @@ def test_query_matches_oracle(spark, con, name):
     assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
 
 
-@pytest.mark.parametrize("name", _ORACLE_NAMES)
+@pytest.mark.parametrize("name", _params(_ALL_ORACLES))
 def test_query_dtype_parity(spark, con, name):
     """The driver hashes pandas frames, so cross-engine *dtype* skew
     (DuckDB HUGEINT -> float64 vs Spark bigint -> int64; Spark decimal
@@ -58,3 +101,30 @@ def test_query_dtype_parity(spark, con, name):
     df = fn(spark, SF_DIR)
     issues = dtype_issues(df, _ALL_ORACLES[name], con)
     assert not issues, "; ".join(issues)
+
+
+@pytest.mark.parametrize(
+    "name,seed",
+    [
+        # order 7600: te_loo once read 246175.395557, the oracle ...558
+        ("target_encoding_loo", 505),
+        # pair (86, 635): lift once read 55.2712, the oracle 55.2713
+        ("item_cooccurrence_lift", 372561476),
+    ],
+)
+def test_rounding_ties_match_oracle(spark, tmp_path, name, seed):
+    """Half-way ties found by the benchmark's generated tables.  Spark's
+    ``round`` works on the shortest decimal repr and DuckDB's in
+    floating point, so both sides round with the same IEEE ops
+    (``floor(x*10^k + 0.5)/10^k``) and must agree on these seeds."""
+    from perfbench import datagen
+
+    datagen.generate(str(tmp_path), 0.01, seed)
+    c = duckdb_connection(str(tmp_path))
+    try:
+        df = _ALL_QUERIES[name](spark, str(tmp_path))
+        res = compare_query(name, df, _ALL_ORACLES[name], c)
+        assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
+        assert not dtype_issues(df, _ALL_ORACLES[name], c)
+    finally:
+        c.close()

@@ -88,6 +88,7 @@ def test_sliding_rollup_expands_buckets_not_raw_events(spark):
     assert "Exchange" in below_generate
 
 
+@pytest.mark.slow
 def test_embedding_neardup_has_no_cartesian(spark):
     """The blocked near-dup (sign-LSH band equi-join + exact verify)
     must never fall back to an all-pairs stage: no CartesianProduct /
@@ -312,6 +313,7 @@ def test_min_price_supplier_region_prunes_before_fact_join(spark):
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
 
+@pytest.mark.slow
 def test_retrieval_ranks_after_truncation(spark):
     """BM25 / RRF: shortlists truncate via TakeOrderedAndProject
     BEFORE any rank window — no unpartitioned window over the full

@@ -55,6 +55,7 @@ def _python_asof(entities, features, ttl_hours):
     return out
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("ttl_hours", [6, None])
 @settings(max_examples=12, deadline=None)
 @given(entities=entity_rows, features=feature_rows)
@@ -87,6 +88,7 @@ def _python_ks(a, b):
     return round(d, 6)
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None)
 @given(
     a=st.lists(st.integers(0, 20).map(float), min_size=1, max_size=30),
@@ -111,6 +113,7 @@ def _python_sliding_windows(ts_epoch_s: int, dur_s: int = 3600, slide_s: int = 6
     return sorted(starts)
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None)
 @given(
     events=st.lists(
@@ -165,6 +168,7 @@ def _python_mode(rows):
     return out
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None)
 @given(rows=mode_rows)
 def test_mode_by_matches_python_reference(spark, rows):
@@ -183,6 +187,7 @@ def test_mode_by_matches_python_reference(spark, rows):
     assert got == want
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None)
 @given(
     vals=st.lists(
@@ -254,6 +259,7 @@ _seg_docs = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None)
 @given(texts=_seg_docs)
 def test_segment_dedup_matches_reference_on_generated_corpora(spark, texts):
@@ -306,6 +312,7 @@ _span_docs = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None)
 @given(texts=_span_docs)
 def test_crossdoc_spans_match_reference_on_generated_corpora(spark, texts):
@@ -362,6 +369,7 @@ def _trim_reference(docs: list[tuple[int, str]], k: int) -> dict:
     return out
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None)
 @given(texts=_span_docs)
 def test_crossdoc_trim_matches_reference_on_generated_corpora(spark, texts):
@@ -408,6 +416,7 @@ def _containment_reference(docs, k=3, max_df=100, thresh=0.8):
     return out
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None)
 @given(texts=_seg_docs)
 def test_containment_pairs_match_reference_on_generated_corpora(spark, texts):
@@ -427,6 +436,7 @@ def test_containment_pairs_match_reference_on_generated_corpora(spark, texts):
     assert got == _containment_reference(docs)
 
 
+@pytest.mark.slow
 @settings(max_examples=50, deadline=None)
 @given(
     w=st.integers(min_value=1, max_value=24),

@@ -7,13 +7,12 @@ plan shape / materialization / partitioning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import local_rows
 from ml_feature_store_enterprise_grade_spark.functions.ranking import ranked, running_totals
+from ml_feature_store_enterprise_grade_spark.streaming import clickstream
 from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
     compute_floor,
     stream_state_confs,
@@ -40,7 +39,7 @@ def test_local_rows_empty(spark):
     assert [f.name for f in df.schema.fields] == ["a", "t"]
 
 
-def test_stream_state_confs_rule(spark):
+def test_stream_state_confs_rule(spark, monkeypatch):
     # staged events at sf0.001 is well under one 32 MB target ->
     # floor wins; explicit floor respected; cap = session width.
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -49,20 +48,14 @@ def test_stream_state_confs_rule(spark):
     # the floor always wins over the size term (compute-bound sites)
     c8 = stream_state_confs(spark, SF, floor=8)
     assert int(c8["spark.sql.shuffle.partitions"]) == 8
-    # env override for the default floor
-    os.environ["SPARK_GRAFT_STREAM_STATE_FLOOR"] = "3"
-    try:
-        c3 = stream_state_confs(spark, SF)
-        assert c3 == {"spark.sql.shuffle.partitions": "3"}
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_FLOOR"]
+    # the module default floor applies when no floor is passed
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_FLOOR", 3)
+    c3 = stream_state_confs(spark, SF)
+    assert c3 == {"spark.sql.shuffle.partitions": "3"}
     # tiny per-instance target: the size term takes over, capped at width
-    os.environ["SPARK_GRAFT_STREAM_STATE_MB"] = "1"
-    try:
-        cbig = stream_state_confs(spark, SF, floor=1)
-        assert 1 <= int(cbig["spark.sql.shuffle.partitions"]) <= cap
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_MB"]
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_BYTES", 1024 * 1024)
+    cbig = stream_state_confs(spark, SF, floor=1)
+    assert 1 <= int(cbig["spark.sql.shuffle.partitions"]) <= cap
     assert compute_floor(spark) >= 1
 
 

@@ -7,8 +7,7 @@ plan shape / materialization / partitioning.
 
 from __future__ import annotations
 
-import os
-
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table, spread
@@ -16,6 +15,7 @@ from ml_feature_store_enterprise_grade_spark.functions.ranking import (
     ranked,
     ranked_select,
 )
+from ml_feature_store_enterprise_grade_spark.streaming import clickstream
 from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
     stream_state_confs,
 )
@@ -65,6 +65,7 @@ def test_ranked_select_matches_ranked_filter_global(spark):
     assert len(got) == len({r.id for r in got})
 
 
+@pytest.mark.slow
 def test_ranked_select_matches_ranked_filter_grouped(spark):
     df = _frame(spark, 400, groups=7)
     t = lambda n: F.array(F.ceil((n + 1) * 0.9).cast("bigint"))  # noqa: E731
@@ -92,6 +93,7 @@ def test_ranked_select_empty_input(spark):
     assert out.count() == 0
 
 
+@pytest.mark.slow
 def test_ranked_select_extra_frame(spark):
     df = _frame(spark, 300)
     extra = spark.createDataFrame([(2,)], "k long")
@@ -133,6 +135,7 @@ def test_doc_lengths_matches_exploded_counts(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_als_fused_loss_two_stages(spark):
     from ml_feature_store_enterprise_grade_spark.operators.analytics import (
         item_implicit_als_epoch,
@@ -157,37 +160,14 @@ def test_spread_size_cap(spark):
     assert spread(bigger).rdd.getNumPartitions() >= n_tiny
 
 
-def test_stream_state_confs_env_robustness(spark):
-    # ADVICE r13: degenerate env values must not raise at query time
-    os.environ["SPARK_GRAFT_STREAM_STATE_MB"] = "0"
-    try:
-        c = stream_state_confs(spark, SF)
-        assert int(c["spark.sql.shuffle.partitions"]) >= 1
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_MB"]
-    os.environ["SPARK_GRAFT_STREAM_STATE_MB"] = "bogus"
-    try:
-        c = stream_state_confs(spark, SF)
-        assert int(c["spark.sql.shuffle.partitions"]) >= 1
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_MB"]
-    os.environ["SPARK_GRAFT_STREAM_STATE_FLOOR"] = "bogus"
-    try:
-        c = stream_state_confs(spark, SF)
-        assert int(c["spark.sql.shuffle.partitions"]) >= 1
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_FLOOR"]
-
-
 def test_stream_state_confs_sizes_nested_and_missing_sources(
     spark, tmp_path, monkeypatch
 ):
     """Bytes in every file of a partitioned events.parquet directory
     count (not just its top level), and a missing source falls back to
     the floor instead of raising."""
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_MB", "1")
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_FLOOR", raising=False)
     mb = 1024 * 1024
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_BYTES", mb)
     src = tmp_path / "nested" / "events.parquet"
     for part in ("event_date=2024-01-01", "event_date=2024-01-02"):
         (src / part).mkdir(parents=True)

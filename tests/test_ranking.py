@@ -32,6 +32,7 @@ def _frame(spark, n=937, groups=0):
     return spark.createDataFrame(rows)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("nchunks", [1, 3, 8, 50])
 def test_global_row_number_matches_window(spark, nchunks):
     df = _frame(spark)
@@ -170,6 +171,7 @@ def test_running_totals_grouped(spark):
     )
 
 
+@pytest.mark.slow
 def test_ntile_from_rank_formula_exhaustive(spark):
     """Pure-Python oracle for the tile formula over every (n, k, rn)
     in a dense grid — the arithmetic itself, independent of Spark's

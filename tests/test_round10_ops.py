@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -130,6 +131,7 @@ def test_vocab_coverage_curve_shape(spark):
 # --- dict_encoding_advisor ---------------------------------------------
 
 
+@pytest.mark.slow
 def test_dict_advisor_matches_python_model(spark):
     """Recompute the parquet dictionary model (distinct-value bytes +
     ceil(log2 ndv)-bit indexes) per column in pure Python."""
@@ -348,6 +350,7 @@ def test_conductance_consistent_with_modularity_frame(spark):
 # --- dedup_method_agreement (r11 queue) ------------------------------------
 
 
+@pytest.mark.slow
 def test_method_agreement_census_is_exhaustive(spark):
     """The census classes must partition the union of the three pair
     sets, and the per-method marginals must equal the registered
@@ -435,6 +438,7 @@ def test_stream_quantile_monitor_error_bound(spark):
 # --- ann_probe_recall_curve (rows-only) -------------------------------------
 
 
+@pytest.mark.slow
 def test_probe_recall_curve_monotone_and_exact_at_full_probe(spark):
     rows = sorted(
         _Q["ann_probe_recall_curve"](spark, SF_SMOKE).collect(),

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -23,6 +24,7 @@ def _write(spark, tmp_path, name, df):
     return d
 
 
+@pytest.mark.slow
 def test_forecast_backtest_constant_series_ties_break_by_name(spark, tmp_path):
     """A constant revenue series makes every forecaster exact: all
     error totals are 0 and the ranking must fall back to the method-
@@ -73,6 +75,7 @@ def test_decay_features_age_clamp_boundaries(spark, tmp_path):
     assert got[20].decayed_count == _DECAY_WQ[_DECAY_MAX_AGE_D] / 1e6
 
 
+@pytest.mark.slow
 def test_price_dispersion_constant_price_and_single_supplier(spark, tmp_path):
     """Constant unit price → cv exactly 0; a part sold by one supplier
     is excluded however many lineitems it has."""
@@ -99,6 +102,7 @@ def test_price_dispersion_constant_price_and_single_supplier(spark, tmp_path):
     assert got[0].n_suppliers == 2
 
 
+@pytest.mark.slow
 def test_t_closeness_single_group_is_global(spark, tmp_path):
     """When one QI group IS the whole corpus, its distribution equals
     the global one: TVD exactly 0 and the policy passes."""
@@ -116,6 +120,7 @@ def test_t_closeness_single_group_is_global(spark, tmp_path):
     assert got[0].group_size == 10
 
 
+@pytest.mark.slow
 def test_packing_efficiency_exact_fit_docs(spark, tmp_path):
     """Docs exactly one sequence long: zero waste and zero splits
     under BOTH strategies, and the two strategies agree on the
@@ -142,6 +147,7 @@ def test_packing_efficiency_exact_fit_docs(spark, tmp_path):
         assert r.docs_split == 0
 
 
+@pytest.mark.slow
 def test_fd_audit_holding_dependency(spark, tmp_path):
     """A constructed corpus where c_nationkey → c_mktsegment HOLDS:
     the audit must report holds=True with g3 exactly 0 (the corpus
@@ -180,6 +186,7 @@ def test_fd_audit_holding_dependency(spark, tmp_path):
     assert r.n_violating_groups == 0
 
 
+@pytest.mark.slow
 def test_stream_decay_rocksdb_provider_matches_default(spark, tmp_path):
     """The decay accumulator's GroupState under the RocksDB provider
     must produce the identical final per-user integers as the default

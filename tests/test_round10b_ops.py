@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -302,6 +303,7 @@ def test_decay_features_matches_python_twin(spark):
 # --- approximate_fd_audit --------------------------------------------------
 
 
+@pytest.mark.slow
 def test_fd_audit_matches_python_twin(spark):
     from ml_feature_store_enterprise_grade_spark.operators.quality import (
         _FD_CANDIDATES,
@@ -516,6 +518,7 @@ def test_bootstrap_se_tracks_analytic_se(spark):
 # --- stream_decay_features ---------------------------------------------------
 
 
+@pytest.mark.slow
 def test_stream_decay_multi_batch_replay_equals_batch(spark, tmp_path):
     """6 forced micro-batches through the stateful accumulator must
     reproduce user_decay_features exactly (the shared-oracle claim,

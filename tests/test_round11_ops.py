@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.operators.similarity import (
@@ -12,6 +13,7 @@ from ml_feature_store_enterprise_grade_spark.operators.similarity import (
 from conftest import SF_ORACLE, SF_SMOKE
 
 
+@pytest.mark.slow
 def test_router_ivf_recall_floor(spark):
     """The production IVF route must clear the pinned recall floor at
     both local scales (measured r11: 0.632 @ sf0.01, 0.676 @ sf0.001
@@ -56,6 +58,7 @@ def test_router_ivf_recall_plan_shape(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.slow
 def test_router_ivf_recall_deterministic(spark):
     """Two invocations return identical rows (memoized index +
     deterministic ranking)."""
@@ -255,6 +258,7 @@ def test_conformal_coverage_guarantee(spark):
     assert math.isclose(sum(r["coverage"] for r in rows) / 5, 0.909, abs_tol=0.05)
 
 
+@pytest.mark.slow
 def test_bootstrap_se_matches_analytic(spark):
     """The counter-based (seed-hash + Lehmer skip-ahead) bootstrap
     must still estimate the sampling error correctly: boot_se within

@@ -8,6 +8,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
@@ -23,6 +24,7 @@ load_all()
 # ---------------------------------------------------------------- #
 
 
+@pytest.mark.slow
 def test_theil_sen_matches_numpy_twin(spark):
     """The Spark pairwise-slope median and Sen CI must equal a direct
     numpy enumeration of all |days|²/2 slopes."""
@@ -93,6 +95,7 @@ def test_drift_fdr_measured_signal(spark):
 # ---------------------------------------------------------------- #
 
 
+@pytest.mark.slow
 def test_hits_matches_numpy_twin(spark):
     out = {
         r["item_id"]: r
@@ -231,6 +234,7 @@ def _window_specs(plan: str) -> list[tuple[str, str]]:
     return re.findall(r"Window \[[^\]]*\], \[([^\]]*)\], \[([^\]]*)\]", plan)
 
 
+@pytest.mark.slow
 def test_regrouped_ntile_sites_have_no_small_key_window(spark):
     """The four re-routed operators must not contain a WindowExec
     that partitions ONLY by their low-cardinality group key while
@@ -278,6 +282,7 @@ def test_unigram_census_memoized_once(spark):
 # ---------------------------------------------------------------- #
 
 
+@pytest.mark.slow
 def test_mmr_matches_numpy_greedy_twin(spark):
     rows = queries()["mmr_diversified_topk"](spark, SF_ORACLE).collect()
     emb = (

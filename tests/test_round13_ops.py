@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
@@ -29,6 +30,7 @@ def _executed(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.mark.slow
 def test_census_rank_family_has_no_unbounded_window(spark):
     """doc_rake_keyphrases / rec_popularity_ndcg / vocab_zipf_fit must
     not single-task-sort a census-sized frame: the audit parser (which
@@ -44,6 +46,7 @@ def test_census_rank_family_has_no_unbounded_window(spark):
         assert audit_plan(plan) == [], name
 
 
+@pytest.mark.slow
 def test_rake_and_ndcg_rank_via_take_ordered(spark):
     """The re-rank idiom: the plan carries TakeOrderedAndProject (the
     per-partition-heap top-k) feeding the bounded re-rank window."""
@@ -115,6 +118,7 @@ def _ph64(val: str, seed: int) -> int:
     return int(hashlib.md5(f"{seed}:{val}".encode()).hexdigest()[:15], 16)
 
 
+@pytest.mark.slow
 def test_permutation_test_matches_python_twin(spark):
     """Full pure-Python replication: Lehmer relabel stream, integer
     common-denominator verdicts, p-value."""
@@ -188,6 +192,7 @@ def test_bottomk_sample_matches_python_twin(spark):
         assert (r.doc_id, r.h, r.n_stratum) == (doc, h, n)
 
 
+@pytest.mark.slow
 def test_rbo_matches_numpy_twin(spark):
     """RBO from the two top-k lists, recomputed directly from the
     textbook formula in floats (engine must match within 1e-6 of the
@@ -271,6 +276,7 @@ def test_shuffle_audit_matches_python_twin(spark):
         )
 
 
+@pytest.mark.slow
 def test_fellegi_sunter_length_dominates(spark):
     """The learned weights must rank length far above lang/source
     (the generator randomizes near-dup metadata), and every m/u must
@@ -290,6 +296,7 @@ def test_fellegi_sunter_length_dominates(spark):
     assert rows["length"].w_disagree_bits < -1.0
 
 
+@pytest.mark.slow
 def test_als_epoch_matches_numpy_twin(spark):
     """Exact numpy replication of both half-steps with the same
     integer quantization — factors and SSE must match bit-for-bit."""
@@ -408,6 +415,7 @@ def test_cobuy_jaccard_topk_matches_python_twin(spark):
         ), (r.item_id, r.rank)
 
 
+@pytest.mark.slow
 def test_stream_bottomk_matches_batch_and_is_idempotent(spark, tmp_path):
     """The incrementally-maintained sample must equal the batch
     bottom-k, and re-delivering a micro-batch must not change the

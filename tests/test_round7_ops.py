@@ -59,6 +59,7 @@ def _python_nearest(entities, features, tol_hours):
     return out
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("tol_hours", [3, 12])
 @settings(max_examples=12, deadline=None)
 @given(entities=entity_rows, features=feature_rows)

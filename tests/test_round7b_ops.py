@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -165,6 +166,7 @@ def test_jl_distortion_is_near_unity(spark):
         assert 0.5 <= r.mean_distortion <= 1.6
 
 
+@pytest.mark.slow
 def test_left_outer_join_withholds_watermark_tail(spark):
     """The outer join's defining semantics: matched pairs all emit;
     unmatched clicks emit ONLY once the global watermark passes
@@ -640,6 +642,7 @@ def _python_ra_topk(baskets, support, topk):
     ]
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None)
 @given(
     baskets=st.lists(
@@ -684,6 +687,7 @@ def test_ra_link_prediction_matches_python_reference_on_random_baskets(
     assert got == want
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None)
 @given(
     words=st.lists(

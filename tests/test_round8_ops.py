@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -78,6 +79,7 @@ def test_modularity_edge_accounting(spark):
 # --- embedding_bitext_margin -----------------------------------------
 
 
+@pytest.mark.slow
 def test_bitext_margin_one_best_per_source(spark):
     rows = _Q["embedding_bitext_margin"](spark, SF_SMOKE).collect()
     assert rows
@@ -112,6 +114,7 @@ def test_bitext_margin_mutual_is_symmetric_best(spark):
 # --- stream_asof_enrichment ------------------------------------------
 
 
+@pytest.mark.slow
 def test_stream_asof_never_leaks_open_window(spark):
     """THE PIT guarantee: every attached feature_timestamp (an hourly
     window CLOSE) precedes or equals the event's own timestamp."""

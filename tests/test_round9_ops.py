@@ -13,6 +13,7 @@ import hashlib
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark import registry
@@ -313,6 +314,7 @@ def test_silhouette_matches_numpy(spark):
 # --- event_value_kruskal_wallis ------------------------------------------
 
 
+@pytest.mark.slow
 def test_kruskal_wallis_matches_numpy(spark):
     rows = _Q["event_value_kruskal_wallis"](spark, SF_SMOKE).collect()
     assert rows
@@ -356,6 +358,7 @@ def test_kruskal_wallis_matches_numpy(spark):
 # --- embedding_knn_label_accuracy ----------------------------------------
 
 
+@pytest.mark.slow
 def test_knn_label_accuracy_matches_numpy(spark):
     rows = {
         r.label: r
@@ -453,6 +456,7 @@ def test_calibration_matches_python(spark):
 # --- rec_coverage_gini ------------------------------------------------
 
 
+@pytest.mark.slow
 def test_rec_coverage_gini_matches_python(spark):
     from collections import Counter, defaultdict
 
@@ -611,6 +615,7 @@ def test_chow_matches_numpy(spark):
 # --- fk_join_skew_advisor --------------------------------------------------
 
 
+@pytest.mark.slow
 def test_fk_advisor_verdicts_consistent(spark):
     rows = _Q["fk_join_skew_advisor"](spark, SF_SMOKE).collect()
     assert len(rows) == 6
@@ -634,6 +639,7 @@ def test_fk_advisor_verdicts_consistent(spark):
 # --- connected_components property test --------------------------------
 
 
+@pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
     """Random graphs vs a Python union-find twin — pins the CC
     primitive (whose round cap the r9 path probe caught) on arbitrary
@@ -689,6 +695,7 @@ def test_connected_components_matches_union_find(spark):
 # --- orders_backlog_littles_law ---------------------------------------
 
 
+@pytest.mark.slow
 def test_littles_law_matches_python(spark):
     import datetime as dt
     from collections import defaultdict
@@ -747,6 +754,7 @@ def test_littles_law_matches_python(spark):
 # --- embedding_hubness_audit -------------------------------------------
 
 
+@pytest.mark.slow
 def test_hubness_matches_numpy(spark):
     r = _Q["embedding_hubness_audit"](spark, SF_SMOKE).collect()[0]
     pdf = (
@@ -781,6 +789,7 @@ def test_hubness_matches_numpy(spark):
 # --- dup_pair_source_matrix --------------------------------------------
 
 
+@pytest.mark.slow
 def test_dup_source_matrix_consistent_with_edges(spark):
     from ml_feature_store_enterprise_grade_spark.operators.dedup import (
         duplicate_edges,
@@ -813,6 +822,7 @@ def test_dup_source_matrix_consistent_with_edges(spark):
 # --- dedup_transitivity_audit -------------------------------------------
 
 
+@pytest.mark.slow
 def test_transitivity_audit_matches_python(spark):
     from collections import defaultdict
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
@@ -16,6 +17,7 @@ from tests.conftest import SF_SMOKE
 USER = Entity("user", join_key="user_id", value_type="bigint")
 
 
+@pytest.mark.slow
 def test_view_gains_feature_column(spark, tmp_path):
     fs = FeatureStore(spark, str(tmp_path))
     v1 = FeatureView(

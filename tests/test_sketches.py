@@ -4,6 +4,7 @@ month-level distinct count within HLL's error bound (lgK=14 ⇒ rsd
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
@@ -13,6 +14,7 @@ from ml_feature_store_enterprise_grade_spark.operators.feature_agg import (
 from tests.conftest import SF_SMOKE
 
 
+@pytest.mark.slow
 def test_sketch_union_estimates_within_error(spark):
     got = {
         r.event_type: r.approx_distinct_users
@@ -34,6 +36,7 @@ def test_sketch_union_estimates_within_error(spark):
 # --------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_kmv_overlap_tracks_exact_intersections(spark):
     """KMV estimates must land within the sketch's statistical error
     of the exact pairwise (user, day) audience intersections.  The
@@ -192,6 +195,7 @@ def test_histogram_sketch_merges_across_days(spark):
     assert direct.exceptAll(daily).count() == 0
 
 
+@pytest.mark.slow
 def test_histogram_store_range_queries_match_recompute(spark, tmp_path):
     """HistogramSketchStore.quantiles over a day range must equal the
     inverse-CDF walk recomputed directly from the range's raw events

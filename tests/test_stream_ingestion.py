@@ -54,6 +54,7 @@ def _admitted_ids(spark, path):
     return {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
 
 
+@pytest.mark.slow
 def test_stream_admission_equals_sequential_loop(spark, staged, tmp_path):
     corpus, chunks, src = staged
 
@@ -80,6 +81,7 @@ def test_stream_admission_equals_sequential_loop(spark, staged, tmp_path):
     assert 0 < len(got) < n_arriving
 
 
+@pytest.mark.slow
 def test_redelivered_batch_converges(spark, staged, tmp_path):
     """Re-running a micro-batch (foreachBatch crash re-delivery) must
     reproduce identical verdicts — probing with its own ingest
@@ -124,6 +126,7 @@ def test_redelivered_batch_converges(spark, staged, tmp_path):
     assert probe_after == probe_before
 
 
+@pytest.mark.slow
 def test_stream_vector_ingestion_folds_into_index(spark, tmp_path):
     from ml_feature_store_enterprise_grade_spark.operators.similarity import VectorIndex
     from ml_feature_store_enterprise_grade_spark.streaming.ingestion import (

@@ -59,6 +59,7 @@ def _stream(spark, src_dir, max_files=None):
     return normalize_ts(reader.load(src_dir), ["ts"])
 
 
+@pytest.mark.slow
 def test_parquet_sink_roundtrip_partitioned(spark, multi_file_source, tmp_path):
     out = str(tmp_path / "offline")
     ckpt = str(tmp_path / "ckpt")
@@ -111,6 +112,7 @@ def test_parquet_sink_roundtrip_partitioned(spark, multi_file_source, tmp_path):
     assert got.count() == want.count() and got.exceptAll(want).count() == 0
 
 
+@pytest.mark.slow
 def test_multi_batch_replay_is_batch_equivalent(spark, multi_file_source):
     """6 time-ordered micro-batches: the watermark advances batch by
     batch, windows finalize progressively, and the union of all
@@ -163,6 +165,7 @@ def test_multi_batch_replay_is_batch_equivalent(spark, multi_file_source):
     assert finalized.exceptAll(emitted).count() == 0
 
 
+@pytest.mark.slow
 def test_checkpoint_resume_processes_only_new_data(spark, tmp_path):
     """Exactly-once incremental restart (ST5): run the windowed query
     to completion, add more source files, restart with the SAME
@@ -234,6 +237,7 @@ def test_checkpoint_resume_processes_only_new_data(spark, tmp_path):
     assert final.select(*batch_all.columns).exceptAll(batch_all).count() == 0
 
 
+@pytest.mark.slow
 def test_streaming_online_materialize_multi_batch(spark, multi_file_source, tmp_path):
     """foreachBatch upsert across 6 micro-batches must converge to the
     same snapshot as one batch pass: latest-per-user over finalized
@@ -384,6 +388,7 @@ def test_upsert_survives_crashed_partial_generation(spark, tmp_path):
     assert u0 == t0 + dt.timedelta(hours=1)
 
 
+@pytest.mark.slow
 def test_upsert_retains_generation_window(spark, tmp_path):
     """Generations are immutable: a retention window of recent ones is
     kept for in-flight readers, older ones are garbage-collected, and
@@ -416,6 +421,7 @@ def test_upsert_retains_generation_window(spark, tmp_path):
     assert resolve_online_snapshot(online).endswith("v=4")
 
 
+@pytest.mark.slow
 def test_sliding_multi_batch_replay_is_batch_equivalent(spark, multi_file_source):
     """Sliding windows under 6 time-ordered micro-batches: each event
     feeds 6 overlapping windows whose state lives across batches; the
@@ -542,6 +548,7 @@ def test_transform_with_state_twin_matches_batch(spark):
     assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
 
 
+@pytest.mark.slow
 def test_rocksdb_state_store_provider_matches_default(spark, tmp_path):
     """ST8 at scale: the RocksDB state store provider (the provider a
     large-key-space deployment runs, per the module docstring) must

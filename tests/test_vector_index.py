@@ -47,6 +47,7 @@ def test_search_recall_and_pruning(spark, index):
     assert recall >= 0.6, f"recall {recall:.2f}"
 
 
+@pytest.mark.slow
 def test_lsh_banding_blocks_hard_at_production_params(spark):
     """The sign-LSH candidate generator must actually PRUNE when
     configured for the production near-dup regime (r=16 bits/band,
@@ -75,6 +76,7 @@ def test_lsh_banding_blocks_hard_at_production_params(spark):
     assert n_candidates < 0.05 * all_pairs, (n_candidates, all_pairs)
 
 
+@pytest.mark.slow
 def test_neardup_blocked_recall_vs_all_pairs(spark):
     """The blocked near-dup operator's recall against the all-pairs
     ground truth is a measured property (its oracle pins the
@@ -106,6 +108,7 @@ def test_neardup_blocked_recall_vs_all_pairs(spark):
     assert blocked == truth, f"recall {len(blocked)}/{len(truth)}"
 
 
+@pytest.mark.slow
 def test_add_folds_vectors_under_frozen_codebook(spark, tmp_path):
     """VectorIndex.add assigns new vectors with the standing codebook
     and appends to the cell tree; searches find them immediately, and
@@ -155,6 +158,7 @@ def test_add_folds_vectors_under_frozen_codebook(spark, tmp_path):
         assert abs(sim - 1.0) < 1e-5
 
 
+@pytest.mark.slow
 def test_compact_folds_ingests_preserving_search(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -186,6 +190,7 @@ def test_compact_folds_ingests_preserving_search(spark, tmp_path):
     assert after == before
 
 
+@pytest.mark.slow
 def test_filtered_search_matches_exact_filtered_baseline(spark, tmp_path):
     """Metadata columns ride into the cell layout; with every cell
     probed, a label-filtered search must EQUAL the brute-force top-k
@@ -230,6 +235,7 @@ def test_filtered_search_matches_exact_filtered_baseline(spark, tmp_path):
         assert got_ranked == [(c, v) for c, v in want]
 
 
+@pytest.mark.slow
 def test_compact_preserves_metadata_and_filtered_search(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
@@ -271,6 +277,7 @@ def test_legacy_flat_layout_rejected(spark, tmp_path):
         idx.compact()
 
 
+@pytest.mark.slow
 def test_knn_candidates_ivf_path_matches_exact_under_full_probe(spark, tmp_path):
     """The knn_candidates router (VERDICT r9 item 2): forcing the IVF
     path (exact_below=0) with a FULL probe (nprobe = n_cells) must
@@ -309,6 +316,7 @@ def test_knn_candidates_ivf_path_matches_exact_under_full_probe(spark, tmp_path)
     assert ivf == exact and exact
 
 
+@pytest.mark.slow
 def test_knn_candidates_ivf_path_plan_has_no_nested_loop(spark, tmp_path):
     """Above the bound the router must never build the quadratic pair
     table: no BroadcastNestedLoopJoin / CartesianProduct anywhere in
@@ -364,6 +372,7 @@ def test_knn_candidates_rejects_meta_collision(spark):
         )
 
 
+@pytest.mark.slow
 def test_knn_candidates_asymmetric_with_meta_full_probe(spark, tmp_path):
     """The bitext shape: disjoint query/corpus sides with metadata
     passthrough — IVF path under a full probe must reproduce the

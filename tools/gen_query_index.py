@@ -1,8 +1,9 @@
 """Generate QUERIES.md: one line per registered query — name, check
-(oracle / rows-only), whether it is in the driver's first-50 window,
-implementing function with file:line, and the first docstring
-sentence.  Regenerate after adding operators or after a new
-CORRECTNESS_r*.json lands: python tools/gen_query_index.py
+(oracle / rows-only), whether it is in the driver window (the first
+``registry.DRIVER_WINDOW`` names), implementing function with
+file:line, and the first docstring sentence.  Regenerate after adding
+operators or after a new CORRECTNESS_r*.json lands:
+python tools/gen_query_index.py
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def main() -> int:
     registry.load_all()
     rows = []
     visible = registry.queries()
-    window_set = frozenset(list(visible)[:50])
+    window_set = frozenset(list(visible)[: registry.DRIVER_WINDOW])
     for name, fn in visible.items():
         f = inspect.unwrap(fn)
         src = os.path.relpath(f.__code__.co_filename, REPO)
@@ -47,7 +48,8 @@ def main() -> int:
         f"({len(registry.ROWS_ONLY)} rows-only). "
         "Generated by `tools/gen_query_index.py`; every `oracle` row is "
         "value-hash-checked against DuckDB by `tools/parity.py`, `window` "
-        "marks the first-50 driver check set for the CURRENT round.\n\n",
+        f"marks the first-{registry.DRIVER_WINDOW} driver check set for the "
+        "CURRENT round.\n\n",
         "| Query | Check | Window | Source | Summary |\n",
         "|---|---|---|---|---|\n",
     ]

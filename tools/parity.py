@@ -24,14 +24,14 @@ def main() -> int:
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.001"
     only = [a for a in args if "/" not in a] or None
     if window:
-        # Dry-run of the verify driver's check: exactly the FIRST 50
-        # driver-visible queries, in window order.  Run with --vanilla
-        # at sf0.01 before a round ends to see what CORRECTNESS_r{N}
-        # will contain.
+        # Dry-run of the verify driver's check: exactly the first
+        # DRIVER_WINDOW driver-visible queries, in window order.  Run
+        # with --vanilla at sf0.01 before a round ends to see what
+        # CORRECTNESS_r{N} will contain.
         from ml_feature_store_enterprise_grade_spark import registry
 
         registry.load_all()
-        only = list(registry.queries())[:50]
+        only = list(registry.queries())[: registry.DRIVER_WINDOW]
     if vanilla:
         from pyspark.sql import SparkSession
 

@@ -102,6 +102,23 @@ def latest_snapshot(
     return features.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
+def lookup_latest(entities: DataFrame, snapshot: DataFrame, key: str) -> DataFrame:
+    """Online point lookup: every ``entities`` row (duplicates and NULL
+    keys kept) followed by the ``snapshot`` columns of its key, NULL for
+    absent keys.  ``snapshot`` holds one row per ``key``.
+
+    Spark cannot hash-build the preserved side of a LEFT join, so
+    broadcasting the entity batch into one silently shuffles the whole
+    snapshot.  Instead the snapshot is semi-joined against the broadcast
+    entity keys (a scan, no shuffle) and only those rows are broadcast
+    as the build side of the LEFT join, whose streamed, preserved side
+    is the entity batch: one plan, no snapshot shuffle."""
+    hits = snapshot.join(F.broadcast(entities.select(key)), key, "left_semi")
+    return entities.join(F.broadcast(hits), key, "left").select(
+        *entities.columns, *[c for c in snapshot.columns if c != key]
+    )
+
+
 _PIT_VALUES_SQL = ", ".join(f"(TIMESTAMP '{t}')" for t in PIT_LOOKUP_TIMES)
 _FEATURE_COLS_SQL = ", ".join(f"f.{c}" for c in _FEATURE_COLS)
 
@@ -332,30 +349,21 @@ def online_feature_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9/J2 online serving: fetch the feature vector for a batch of
     entity keys from the snapshot.  LEFT semantics — absent entities
     keep NULL feature rows (reference iterates Nones:
-    airflow/dags/feature_store_materialization.py:105-113).
-
-    Scale-aware formulation: a left join can't hash-build its
-    preserved side, so "broadcast the small entity batch" is
-    expressed as broadcast INNER join (zero shuffle of the big
-    snapshot) + left-anti against the hit keys (also broadcast) +
-    union of NULL rows for misses."""
+    airflow/dags/feature_store_materialization.py:105-113).  The plan
+    is :func:`lookup_latest`, shared with
+    ``store.FeatureStore.get_online_features``: the snapshot is
+    semi-filtered against the broadcast entity keys, and those rows are
+    broadcast into the LEFT join, so the snapshot is never shuffled
+    for the join."""
     snapshot = latest_snapshot(hourly_features(load_table(spark, sf_dir, "events")))
     entities = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < 300)
         .select(F.col("c_custkey").alias("user_id"))
     )
-    hits = snapshot.join(F.broadcast(entities), "user_id").select(
-        "user_id", "feature_timestamp", *_FEATURE_COLS
+    return lookup_latest(
+        entities, snapshot.select("user_id", "feature_timestamp", *_FEATURE_COLS), "user_id"
     )
-    misses = entities.join(
-        F.broadcast(hits.select("user_id")), "user_id", "left_anti"
-    ).select(
-        "user_id",
-        F.lit(None).cast("timestamp").alias("feature_timestamp"),
-        *[F.lit(None).cast(t).alias(c) for c, t in zip(_FEATURE_COLS, ("bigint", "bigint", "double", "double"))],
-    )
-    return hits.unionByName(misses)
 
 
 #: Profile-style daily view TTL (long-lived, vs 24 h click features)

@@ -12,15 +12,29 @@ pointer — so a crash at ANY point leaves either the previous pointer
 reconstructed.  Readers resolve the pointer once and then read a tree
 that is never mutated; a retention window of recent generations gives
 in-flight readers a grace period (a lease protocol is the
-object-store-native upgrade).  On an object store the pointer file
-becomes the table manifest — this is the standard table-format commit
+object-store-native upgrade).
+
+The marker is the generation's manifest: JSON holding the schema the
+writer produced and, for a batch materialization, the high-water-mark
+offline partition it read up to.  It is fsynced before the pointer
+flips, so this metadata commits atomically with the data, and
+:func:`read_snapshot` opens a generation without a footer-inference
+job.  On an object store the pointer file and the markers become the
+table's metadata log — this is the standard table-format commit
 protocol built from filesystem primitives.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: The per-generation manifest (see module doc).
+MARKER = "_COMMITTED"
 
 #: Committed generations retained besides the current one.  This is a
 #: GRACE WINDOW for in-flight readers, not a lease: a scan that
@@ -45,7 +59,7 @@ def read_generation(path: str) -> int | None:
     best = None
     if os.path.isdir(path):
         for d in os.listdir(path):
-            if d.startswith("v=") and os.path.exists(os.path.join(path, d, "_COMMITTED")):
+            if d.startswith("v=") and os.path.exists(os.path.join(path, d, MARKER)):
                 g = int(d.split("=", 1)[1])
                 best = g if best is None or g > best else best
     return best
@@ -75,14 +89,30 @@ def gc_generations(path: str, cur: int | None, retain: int = GEN_RETAIN) -> None
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
-def commit_generation(path: str, new_gen: int) -> None:
-    """Durably commit a fully-assembled ``v=new_gen`` directory:
-    fsync the ``_COMMITTED`` marker, then fsync + atomically rename
-    the pointer, then expire generations beyond the retention
-    window."""
-    marker = os.path.join(generation_dir(path, new_gen), "_COMMITTED")
+def read_marker(gen_dir: str) -> dict:
+    """The manifest of a committed generation: ``{"schema": <StructType
+    JSON>, "hwm": <partition value or None>}``."""
+    with open(os.path.join(gen_dir, MARKER)) as fh:
+        return json.load(fh)
+
+
+def read_snapshot(spark: SparkSession, gen_dir: str) -> DataFrame:
+    """A committed generation, read with the schema its marker holds,
+    so opening it launches no Spark job."""
+    schema = StructType.fromJson(read_marker(gen_dir)["schema"])
+    return spark.read.schema(schema).parquet(gen_dir)
+
+
+def commit_generation(
+    path: str, new_gen: int, schema: StructType, hwm: str | None = None
+) -> None:
+    """Durably commit a fully-assembled ``v=new_gen`` directory whose
+    files hold ``schema``: fsync the marker carrying ``schema`` and
+    ``hwm``, then fsync + atomically rename the pointer, then expire
+    generations beyond the retention window."""
+    marker = os.path.join(generation_dir(path, new_gen), MARKER)
     with open(marker, "w") as fh:
-        fh.write(str(new_gen))
+        json.dump({"schema": schema.jsonValue(), "hwm": hwm}, fh)
         fh.flush()
         os.fsync(fh.fileno())
     tmp = os.path.join(path, "_CURRENT.tmp")

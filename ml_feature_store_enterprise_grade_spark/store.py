@@ -16,11 +16,15 @@ ttl, timestamp_field)``         timestamp field, TTL)
 offline Parquet store           :meth:`FeatureStore.write_offline` —
 (date-partitioned)              date-partitioned parquet (S2)
 ``feast materialize-            :meth:`FeatureStore.materialize` —
-incremental``                   incremental latest-per-key snapshot (S8)
+incremental``                   incremental latest-per-key snapshot (S8),
+                                committed as a generation whose marker
+                                holds its schema and high-water mark
 ``get_online_features``         :meth:`FeatureStore.get_online_features`
-                                — broadcast LEFT lookup (S9/J2)
+                                — spooled entity batch, one semi-filtered
+                                broadcast LEFT plan per view (S9/J2)
 ``get_historical_features``     :meth:`FeatureStore.get_historical_features`
-                                — TTL-bounded as-of join (J1)
+                                — spooled entity frame, TTL-bounded
+                                as-of join (J1)
 ==============================  =======================================
 
 Semantics preserved from the reference:
@@ -32,10 +36,16 @@ Semantics preserved from the reference:
   ``view__feature`` to avoid the reference's name-collision gotcha
   (SURVEY Appendix 8), with :func:`flatten_feature_names` opting back
   into bare names.
-* Materialization is incremental: only offline partitions newer than
-  the snapshot's high-water mark are re-read (the DAG's daily
-  ``materialize-incremental`` over fresh ``event_date=`` dirs), then
-  merged against the previous snapshot.
+* Materialization is incremental: only offline partitions from the
+  previous generation's high-water mark on are re-read (the DAG's
+  daily ``materialize-incremental`` over fresh ``event_date=`` dirs),
+  then merged against the previous snapshot.
+
+Each call reads each of its inputs once: the caller's entity frame is
+spooled with ``localCheckpoint()`` before any plan uses it, and a
+snapshot generation is opened with the schema its commit marker holds
+(``snapshots.read_snapshot``), so neither is evaluated or inferred
+twice.
 
 Scale: the offline store is the system of record — date-partitioned
 parquet whose reads prune to the queried dates; the online snapshot
@@ -57,9 +67,11 @@ from .snapshots import (
     gc_generations,
     generation_dir,
     read_generation,
+    read_marker,
+    read_snapshot,
     resolve_snapshot,
 )
-from .operators.asof import asof_join, latest_snapshot
+from .operators.asof import asof_join, latest_snapshot, lookup_latest
 from .session import ensure_engine_confs
 from .sources.files import latest_partitions, read_partitioned, write_partitioned
 
@@ -157,11 +169,16 @@ class FeatureStore:
     def materialize(self, view_name: str, incremental: bool = True) -> DataFrame:
         """Refresh the online snapshot: latest feature row per entity.
 
-        Incremental mode reads only offline partitions strictly newer
-        than the snapshot's max partition date (the reference's daily
+        Incremental mode reads only the offline partitions from the
+        previous generation's high-water mark on (the reference's daily
         ``feast materialize-incremental``), unions the previous
         snapshot, and re-takes latest-per-key — shuffling fresh data
-        plus one row per entity instead of full history."""
+        plus one row per entity instead of full history.  The mark is
+        the newest partition listed before the read, stored in the
+        generation's marker; it is inclusive, so late rows for that day
+        are re-read, which latest-per-key makes idempotent.  A
+        generation without a mark (the streaming sink's) materializes
+        in full."""
         v = self.views[view_name]
         key, ts = v.entity.join_key, v.timestamp_field
         online = self._online_path(view_name)
@@ -171,11 +188,12 @@ class FeatureStore:
         prev: DataFrame | None = None
         start = None
         if incremental and cur is not None:
-            prev = self.spark.read.parquet(generation_dir(online, cur))
-            done = latest_partitions(self._offline_path(view_name), v.partition_col, n=10**6)
-            if done:
-                hwm = prev.agg(F.max(F.to_date(ts))).first()[0]
-                start = str(hwm) if hwm is not None else None
+            prev_dir = generation_dir(online, cur)
+            prev = read_snapshot(self.spark, prev_dir)
+            start = read_marker(prev_dir)["hwm"]
+        # Listed BEFORE the read: a partition that lands in between is
+        # re-read by the next run, never skipped.
+        newest = latest_partitions(self._offline_path(view_name), v.partition_col, n=1)
         fresh = self.read_offline(view_name, start=start).drop(v.partition_col)
         # allowMissingColumns: a view may gain feature columns over
         # time — an old snapshot unions against wider fresh data with
@@ -192,9 +210,10 @@ class FeatureStore:
         # is assembled; readers atomically switch at the pointer flip,
         # and a crash at any point leaves a resolvable snapshot.
         new_gen = (cur or 0) + 1
-        snap.write.mode("overwrite").parquet(generation_dir(online, new_gen))
-        commit_generation(online, new_gen)
-        return self.spark.read.parquet(generation_dir(online, new_gen))
+        new_dir = generation_dir(online, new_gen)
+        snap.write.mode("overwrite").parquet(new_dir)
+        commit_generation(online, new_gen, snap.schema, hwm=newest[0] if newest else None)
+        return read_snapshot(self.spark, new_dir)
 
     def _snapshot(self, view_name: str) -> DataFrame:
         gen_dir = resolve_snapshot(self._online_path(view_name))
@@ -202,7 +221,7 @@ class FeatureStore:
             raise FileNotFoundError(
                 f"view {view_name!r} not materialized; call materialize() first"
             )
-        return self.spark.read.parquet(gen_dir)
+        return read_snapshot(self.spark, gen_dir)
 
     def export_online(self, view_name: str, writer, batch_size: int = 10_000) -> None:
         """Push the online snapshot to an external KV store (the
@@ -229,29 +248,19 @@ class FeatureStore:
         """Point lookup of the latest feature vector for each entity
         row, LEFT semantics (absent entities yield NULL features).
 
-        Spark cannot broadcast-hash-build the *preserved* side of a
-        left outer join, so a naive ``broadcast(entities).join(snap,
-        "left")`` silently shuffles the full snapshot.  Instead (same
-        formulation as operators.asof.online_feature_lookup): broadcast
-        INNER join on the entity batch — zero shuffle of the snapshot —
-        plus a left-anti for the misses, unioned back with NULL
-        feature columns."""
-        out = entity_df
-        for view, feats in feature_refs(self.views, features).items():
-            v = self.views[view]
-            key = v.entity.join_key
-            aliased = [(f"{view}__{f}", f) for f in feats]
+        The entity frame is spooled once, then each view is one
+        :func:`operators.asof.lookup_latest` plan: the snapshot is
+        semi-filtered against the broadcast entity keys and only those
+        rows are broadcast into a LEFT join whose preserved side is the
+        entity batch, so the snapshot is never shuffled."""
+        refs = feature_refs(self.views, features)
+        out = entity_df.localCheckpoint()
+        for view, feats in refs.items():
+            key = self.views[view].entity.join_key
             snap = self._snapshot(view).select(
-                key, *[F.col(f).alias(a) for a, f in aliased]
+                key, *[F.col(f).alias(f"{view}__{f}") for f in feats]
             )
-            types = {f.name: f.dataType for f in snap.schema.fields}
-            hits = snap.join(F.broadcast(out), key)
-            misses = out.join(F.broadcast(hits.select(key)), key, "left_anti").select(
-                "*", *[F.lit(None).cast(types[a]).alias(a) for a, _ in aliased]
-            )
-            out = hits.unionByName(misses).select(
-                *out.columns, *[a for a, _ in aliased]
-            )
+            out = lookup_latest(out, snap, key)
         return out
 
     def get_historical_features(
@@ -266,9 +275,14 @@ class FeatureStore:
         ``prune`` (default) first computes the entity frame's lookup
         range (one tiny aggregate job) and reads only offline
         partitions inside [min_lookup − TTL, max_lookup] — at 100 TB
-        the as-of join then scans days, not years, of history."""
+        the as-of join then scans days, not years, of history.  The
+        entity frame is spooled first, so that aggregate, each view's
+        lookup keys and the final joins read it without re-running the
+        caller's plan."""
         from datetime import timedelta as _td
 
+        refs = feature_refs(self.views, features)
+        entity_df = entity_df.localCheckpoint()
         out = entity_df
         bounds = (
             entity_df.agg(
@@ -277,7 +291,7 @@ class FeatureStore:
             if prune
             else None
         )
-        for view, feats in feature_refs(self.views, features).items():
+        for view, feats in refs.items():
             v = self.views[view]
             ttl_h = int(v.ttl.total_seconds() // 3600) if v.ttl is not None else None
             start = end = None

@@ -51,6 +51,7 @@ from ..snapshots import (
     gc_generations,
     generation_dir,
     read_generation,
+    read_snapshot,
     resolve_snapshot,
 )
 from ..registry import register
@@ -618,7 +619,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
             if not touched:
                 batch.unpersist()
                 return
-            prev = spark.read.parquet(cur_dir).filter(F.col("bucket").isin(touched))
+            prev = read_snapshot(spark, cur_dir).filter(F.col("bucket").isin(touched))
             merged = prev.unionByName(batch, allowMissingColumns=True)
             n_parts = len(touched)
         snap = latest_snapshot(merged, key="user_id", feature_ts="feature_timestamp")
@@ -648,7 +649,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
                         os.link(src, dst)
                     except OSError:  # cross-device fallback
                         shutil.copy2(src, dst)
-        commit_generation(online_path, new_gen)
+        commit_generation(online_path, new_gen, snap.schema)
 
     return _upsert
 
@@ -714,7 +715,7 @@ def stream_online_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Nothing finalized (all events inside the watermark): an
         # empty frame with the output schema, not an opaque crash.
         return spark.createDataFrame([], result.drop("bucket").schema)
-    return spark.read.parquet(snap_dir).drop("bucket")
+    return read_snapshot(spark, snap_dir).drop("bucket")
 
 
 #: Heavy-hitter rank depth per finalized window.

@@ -30,3 +30,18 @@ def spark():
     s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn, *args, **kw):
+    """Run ``fn`` under its own job group: (its result, the number of
+    Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"count_jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args, **kw)
+    finally:
+        sc._jsc.clearJobGroup()
+    # The status tracker is fed by the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

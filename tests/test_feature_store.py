@@ -15,7 +15,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table
-from ml_feature_store_enterprise_grade_spark.operators.asof import asof_join, latest_snapshot
+from ml_feature_store_enterprise_grade_spark.operators.asof import (
+    DAILY_TTL_HOURS,
+    asof_join,
+    daily_activity_view,
+    latest_snapshot,
+)
 from ml_feature_store_enterprise_grade_spark.operators.feature_agg import hourly_features
 from ml_feature_store_enterprise_grade_spark.store import (
     Entity,
@@ -23,7 +28,7 @@ from ml_feature_store_enterprise_grade_spark.store import (
     FeatureView,
     flatten_feature_names,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 USER = Entity("user", join_key="user_id", value_type="bigint")
 CLICK_VIEW = FeatureView(
@@ -31,6 +36,12 @@ CLICK_VIEW = FeatureView(
     entity=USER,
     features=("total_events", "click_count", "total_revenue", "click_through_rate"),
     ttl=timedelta(hours=24),
+)
+DAILY_VIEW = FeatureView(
+    name="user_daily_activity",
+    entity=USER,
+    features=("daily_events", "daily_value"),
+    ttl=timedelta(hours=DAILY_TTL_HOURS),
 )
 
 
@@ -192,9 +203,9 @@ def test_historical_ttl_none_has_unbounded_lookback(store, spark):
 
 
 def test_online_lookup_plan_never_shuffles_snapshot(store, spark):
-    """The lookup must be broadcast-inner + anti + union — a shuffle
-    (SortMergeJoin / ShuffledHashJoin) of the snapshot defeats the
-    point of a point lookup."""
+    """The lookup must be a broadcast semi-filter of the snapshot feeding
+    a broadcast LEFT join — a shuffle (SortMergeJoin / ShuffledHashJoin)
+    of the snapshot defeats the point of a point lookup."""
     store.materialize("user_click_features", incremental=False)
     entities = spark.createDataFrame([(1,), (2,)], "user_id bigint")
     out = store.get_online_features(["user_click_features:total_events"], entities)
@@ -259,3 +270,118 @@ def test_materialize_commits_immutable_generations(store, spark):
     assert spark.read.parquet(g1).count() == n1
     # the store's own read path serves the new generation
     assert store._snapshot("user_click_features").count() >= n1
+
+
+@pytest.fixture(scope="module")
+def two_views(spark, tmp_path_factory):
+    """A store with the hourly click view and the daily activity view,
+    both materialized."""
+    fs = FeatureStore(spark, str(tmp_path_factory.mktemp("two_views")))
+    fs.apply([USER, CLICK_VIEW, DAILY_VIEW])
+    events = load_table(spark, SF_SMOKE, "events")
+    fs.write_offline(CLICK_VIEW.name, hourly_features(events))
+    fs.write_offline(DAILY_VIEW.name, daily_activity_view(events))
+    for v in (CLICK_VIEW, DAILY_VIEW):
+        fs.materialize(v.name)
+    return fs
+
+
+def _tagged(spark, rows, schema):
+    """A request frame built from Python rows, and an accumulator that
+    counts how many rows its plan has produced."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(row):
+        seen.add(1)
+        return row
+
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 2).map(tag), schema), seen
+
+
+def test_online_lookup_reads_entity_frame_once(two_views, spark):
+    """A two-view lookup evaluates the caller's entity frame once, and
+    keeps every entity row — duplicate keys, a NULL key, an absent key
+    and an extra column — with the latest features of its key."""
+    rows = [(1, "a"), (2, "b"), (2, "c"), (None, "d"), (10**9, "e")]
+    ent, seen = _tagged(spark, rows, "user_id bigint, req string")
+    refs = ["user_click_features:total_events", "user_daily_activity:daily_value"]
+    got = two_views.get_online_features(refs, ent).collect()
+    assert seen.value == len(rows)
+
+    def latest(view, feat):
+        return {
+            r.user_id: r[feat]
+            for r in two_views._snapshot(view).select("user_id", feat).collect()
+        }
+
+    clicks = latest("user_click_features", "total_events")
+    daily = latest("user_daily_activity", "daily_value")
+    assert clicks.get(1) is not None and daily.get(1) is not None
+    want = sorted(
+        ((u, q, clicks.get(u), daily.get(u)) for u, q in rows), key=lambda t: t[1]
+    )
+    assert sorted(map(tuple, got), key=lambda t: t[1]) == want
+    assert list(got[0].asDict()) == [
+        "user_id", "req", "user_click_features__total_events", "user_daily_activity__daily_value",
+    ]
+
+
+def test_historical_export_reads_entity_frame_once(two_views, spark):
+    """A two-view training export evaluates the entity frame once and
+    keeps one row per entity row."""
+    import datetime as dt
+
+    rows = [(u, dt.datetime(2024, 1, 10 + u % 5, u % 24)) for u in range(1, 31)]
+    ent, seen = _tagged(spark, rows, "user_id bigint, event_timestamp timestamp")
+    out = two_views.get_historical_features(
+        ent, ["user_click_features:total_events", "user_daily_activity:daily_events"]
+    )
+    out.write.format("noop").mode("overwrite").save()
+    assert seen.value == len(rows)
+    assert out.count() == len(rows)
+
+
+def test_materialize_and_snapshot_job_budget(two_views, spark):
+    """Incremental materialize launches at most 3 jobs (offline schema
+    merge, the latest-per-key shuffle, the write): the previous
+    generation's schema and high-water mark come from its marker, and
+    so does the returned frame's.  Opening a snapshot launches none."""
+    snap, jobs = count_jobs(spark, two_views.materialize, CLICK_VIEW.name, incremental=True)
+    assert jobs <= 3, jobs
+    assert snap.count() > 0
+    _, jobs = count_jobs(spark, two_views._snapshot, CLICK_VIEW.name)
+    assert jobs == 0
+
+
+def test_incremental_materialize_with_late_data_equals_full(spark, tmp_path):
+    """Three appends, the last one late rows for the day the previous
+    run's high-water mark names: each incremental run re-reads from
+    that day on, so the result equals one full materialization."""
+    fs = FeatureStore(spark, str(tmp_path))
+    fs.apply([USER, CLICK_VIEW])
+    feats = hourly_features(load_table(spark, SF_SMOKE, "events"))
+    day = F.to_date("feature_timestamp")
+    fs.write_offline(CLICK_VIEW.name, feats.filter(day < F.lit("2024-01-10")))
+    fs.materialize(CLICK_VIEW.name)
+    fs.write_offline(
+        CLICK_VIEW.name,
+        feats.filter((day >= F.lit("2024-01-10")) & (day < F.lit("2024-01-20"))),
+        mode="append",
+    )
+    fs.materialize(CLICK_VIEW.name)
+    # Late rows for 2024-01-19, the newest partition the last run saw:
+    # that day's rows a minute later (any that would leave the day
+    # dropped), with new values.
+    late = (
+        feats.filter(day == F.lit("2024-01-19"))
+        .withColumn("feature_timestamp", F.col("feature_timestamp") + F.expr("INTERVAL 1 MINUTE"))
+        .filter(day == F.lit("2024-01-19"))
+        .withColumn("total_events", F.col("total_events") + 1000)
+    )
+    assert late.count() > 0
+    fs.write_offline(CLICK_VIEW.name, late, mode="append")
+    incr = fs.materialize(CLICK_VIEW.name)
+    assert incr.filter(F.col("total_events") >= 1000).count() > 0
+    full = fs.materialize(CLICK_VIEW.name, incremental=False).select(*incr.columns)
+    assert incr.count() == full.count()
+    assert incr.exceptAll(full).count() == 0 and full.exceptAll(incr).count() == 0

@@ -1,8 +1,9 @@
 """Differential tests: every registered query vs its DuckDB oracle.
 
 This mirrors the verify driver's correctness gate (row count + schema
-+ order-insensitive values) at sf0.001 so it stays fast enough for
-the inner loop.  ``python tools/parity.py <sf_dir>`` is the
++ order-insensitive values + pandas dtypes) at sf0.001 so it stays fast
+enough for the inner loop; the value and dtype tests of a query share
+one evaluation of it.  ``python tools/parity.py <sf_dir>`` is the
 driver-scale sweep.
 
 Tiering is derived from the registry, not from a list of test ids.
@@ -78,15 +79,28 @@ def con():
     c.close()
 
 
+#: name -> (CompareResult, dtype issues) of the one evaluation both
+#: parity tests below read, so each query runs once per session.
+_CHECKED: dict = {}
+
+
+def _check(spark, con, name):
+    """Run the query once, spool it with ``localCheckpoint()`` and
+    compare values and dtypes against the oracle on that frame."""
+    if name not in _CHECKED:
+        oracle = _ALL_ORACLES[name]
+        df = _ALL_QUERIES[name](spark, SF_DIR).localCheckpoint()
+        _CHECKED[name] = (compare_query(name, df, oracle, con), dtype_issues(df, oracle, con))
+    return _CHECKED[name]
+
+
 @pytest.mark.parametrize("name", _params(_ALL_QUERIES))
 def test_query_matches_oracle(spark, con, name):
-    fn = _ALL_QUERIES[name]
-    df = fn(spark, SF_DIR)
-    oracle = _ALL_ORACLES.get(name)
-    if oracle is None:
+    if name not in _ALL_ORACLES:
+        df = _ALL_QUERIES[name](spark, SF_DIR)
         assert df.count() >= 0  # rows-only contract for non-SQL-expressible ops
         return
-    res = compare_query(name, df, oracle, con)
+    res, _ = _check(spark, con, name)
     assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
 
 
@@ -96,10 +110,9 @@ def test_query_dtype_parity(spark, con, name):
     (DuckDB HUGEINT -> float64 vs Spark bigint -> int64; Spark decimal
     -> Decimal objects vs DuckDB double) fails its value hash even
     when every value is numerically equal.  The fetchall()-based value
-    compare above is blind to this; this check is not."""
-    fn = _ALL_QUERIES[name]
-    df = fn(spark, SF_DIR)
-    issues = dtype_issues(df, _ALL_ORACLES[name], con)
+    compare above is blind to this; this check is not.  It reads the
+    evaluation ``test_query_matches_oracle`` already made."""
+    _, issues = _check(spark, con, name)
     assert not issues, "; ".join(issues)
 
 

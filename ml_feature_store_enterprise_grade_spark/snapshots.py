@@ -108,8 +108,8 @@ def commit_generation(
 ) -> None:
     """Durably commit a fully-assembled ``v=new_gen`` directory whose
     files hold ``schema``: fsync the marker carrying ``schema`` and
-    ``hwm``, then fsync + atomically rename the pointer, then expire
-    generations beyond the retention window."""
+    ``hwm``, then fsync + atomically rename the pointer, then
+    :func:`gc_generations` from the new pointer."""
     marker = os.path.join(generation_dir(path, new_gen), MARKER)
     with open(marker, "w") as fh:
         json.dump({"schema": schema.jsonValue(), "hwm": hwm}, fh)
@@ -121,6 +121,4 @@ def commit_generation(
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, os.path.join(path, "_CURRENT"))
-    for d in os.listdir(path):
-        if d.startswith("v=") and int(d.split("=", 1)[1]) < new_gen - GEN_RETAIN:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    gc_generations(path, new_gen)

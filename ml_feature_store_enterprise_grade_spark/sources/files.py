@@ -60,19 +60,17 @@ def read_partitioned(
     partition_col: str = "event_date",
     start=None,
     end=None,
-    merge_schema: bool = True,
 ) -> DataFrame:
     """Read the offline store with partition pruning: the
     ``partition_col`` predicates resolve against directory names at
     planning time (PartitionFilters), so only matching dirs are
     listed/scanned.
 
-    ``merge_schema`` (default on) unions the schemas of all footers so
-    a feature view can GAIN columns over time — rows from partitions
-    written before the column existed read as NULL.  Cost is one
-    footer read per file at planning; disable for fixed-schema
-    tables."""
-    df = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
+    The read merges the schemas of all footers so a feature view can
+    GAIN columns over time — rows from partitions written before the
+    column existed read as NULL.  Cost is one footer read per file at
+    planning."""
+    df = spark.read.option("mergeSchema", "true").parquet(path)
     if start is not None:
         df = df.filter(F.col(partition_col) >= F.lit(start))
     if end is not None:

@@ -236,45 +236,46 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
 def run_available_now(
     result: DataFrame,
     name: str,
-    confs: dict[str, str] | None = None,
     sf_dir: str | None = None,
-) -> DataFrame:
-    """Execute a streaming frame to completion with availableNow into
-    a memory sink; returns the sink table as a batch DataFrame.
+    *,
+    floor: int | None = None,
+    sink=None,
+) -> DataFrame | None:
+    """Run a streaming frame to completion under availableNow in
+    append mode — the package's only stream start.
 
-    ``confs`` are session confs scoped to the stream's lifetime
-    (set before ``start()``, restored after termination) — the knobs
-    that bind at query start, like ``spark.sql.shuffle.partitions``
-    (= number of state-store instances) and the state-store provider
-    class.  Stateful queries with heavy per-instance commit cost
-    (stream-stream joins keep 4 state stores per partition) pass a
-    lower partition count + RocksDB here without disturbing the
-    session's batch-side settings.
-
-    ``sf_dir`` (r13): when given, :func:`stream_state_confs` sizes the
-    stream's state partitioning from its staged input bytes; explicit
-    ``confs`` entries override the adaptive value."""
+    * ``sf_dir`` given: :func:`stream_state_confs` sizes the state
+      partitioning (= state-store instances, fixed at query start)
+      from the stream's input bytes with ``floor``, set for the run's
+      lifetime only by :func:`scoped_confs`.  Other start-bound knobs
+      (e.g. the state-store provider) go in a ``scoped_confs`` block
+      around the call.
+    * The checkpoint is a unique directory, removed in ``finally`` on
+      success and failure alike.
+    * ``sink=None``: memory sink; returns its rows as a batch frame.
+      The sink's temp view is dropped before returning — the analysed
+      frame references the sink's rows itself, so nothing stays
+      registered in the session catalog.
+    * ``sink=fn``: ``foreachBatch(fn)``; returns None (the sink owns
+      its output)."""
     spark = result.sparkSession
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{qname}")
-    merged: dict[str, str] = {}
-    if sf_dir is not None:
-        merged.update(stream_state_confs(spark, sf_dir))
-    merged.update(confs or {})
-    with scoped_confs(spark, merged):
-        q = (
-            result.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # The memory sink holds the results; the per-run checkpoint has no
-    # further use (query names are unique) — don't leak one dir per call.
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    confs = {} if sf_dir is None else stream_state_confs(spark, sf_dir, floor)
+    writer = (
+        result.writeStream.outputMode("append")
+        .queryName(qname)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    writer = writer.format("memory") if sink is None else writer.foreachBatch(sink)
+    try:
+        with scoped_confs(spark, confs):
+            writer.start().awaitTermination()
+        return spark.table(qname) if sink is None else None
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(qname)
 
 
 @register(
@@ -558,12 +559,6 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ONLINE_BUCKETS = 16
 
 
-#: Readers resolve the pointer through the shared commit protocol
-#: (ml_feature_store_enterprise_grade_spark.snapshots), which the batch
-#: materializer (store.FeatureStore.materialize) also uses.
-resolve_online_snapshot = resolve_snapshot
-
-
 def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
     """``foreachBatch`` sink: merge each finalized micro-batch into a
     latest-per-key online snapshot, laid out as immutable ``v=N``
@@ -580,7 +575,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
     Reader atomicity AND crash safety come from the same mechanism:
     a generation directory is fully assembled before the pointer flips
     to it (atomic ``os.replace`` of the pointer file), readers resolve
-    the pointer once via :func:`resolve_online_snapshot` and then read
+    the pointer once via :func:`resolve_snapshot` and then read
     an immutable tree, and a crash at ANY point before the flip leaves
     the previous pointer — and its intact generation — in place.
     Partially-built generations (no pointer) and generations older
@@ -693,24 +688,16 @@ def stream_online_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly aggregate.  Multi-batch upsert convergence is exercised in
     tests/test_streaming_sink.py."""
     result = windowed_features(streaming_events(spark, sf_dir)).drop("window_start")
-    # Deterministic per-sf dirs, recreated fresh each invocation:
-    # repeated bench/driver runs reuse (not accumulate) temp space.
+    # Deterministic per-sf snapshot dir, recreated fresh each
+    # invocation: the returned frame reads it lazily, so it outlives
+    # the call, and repeated runs reuse (not accumulate) temp space.
     tag = sf_dir.strip("/").replace("/", "_")
     online = os.path.join(tempfile.gettempdir(), f"online_snap_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_online_{tag}")
-    for d in (online, ckpt):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    with scoped_confs(spark, stream_state_confs(spark, sf_dir)):
-        q = (
-            result.writeStream.foreachBatch(online_upsert_sink(online))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    snap_dir = resolve_online_snapshot(online)
+    shutil.rmtree(online, ignore_errors=True)
+    run_available_now(
+        result, "stream_online_materialize", sf_dir, sink=online_upsert_sink(online)
+    )
+    snap_dir = resolve_snapshot(online)
     if snap_dir is None:
         # Nothing finalized (all events inside the watermark): an
         # empty frame with the output schema, not an opaque crash.
@@ -822,10 +809,11 @@ def stream_sliding_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         agg,
         "stream_sliding_features",
+        sf_dir,
         # sliding windows replicate every event into 6 open windows —
         # per-batch compute scales with data, so keep the aggregate
         # wide (see compute_floor; floor 1 measured 4.3 s → 8.4 s).
-        confs=stream_state_confs(spark, sf_dir, floor=compute_floor(spark)),
+        floor=compute_floor(spark),
     )
 
 
@@ -1920,7 +1908,6 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
     run_id = uuid.uuid4().hex[:8]
     state = os.path.join(tempfile.gettempdir(), f"sbk_state_{run_id}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"sbk_ckpt_{run_id}")
     # Per-run staged N-file replay source.  The projection+reshard is
     # query work, so it runs INSIDE every invocation (a file stream
     # source physically needs a directory of files to trigger N
@@ -1938,16 +1925,12 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        with scoped_confs(spark, stream_state_confs(spark, sf_dir)):
-            q = (
-                stream.writeStream.foreachBatch(
-                    _bottomk_merge_processor(state, _SBK_K)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_available_now(
+            stream,
+            "stream_bottomk_sample",
+            sf_dir,
+            sink=_bottomk_merge_processor(state, _SBK_K),
+        )
         final = spark.read.parquet(state)
         w = Window.partitionBy("event_type").orderBy("h", "event_id")
         out = (
@@ -1959,5 +1942,5 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = out.collect()  # bounded: <= k * |event types|
         return local_rows(spark, rows, out.schema)
     finally:
-        for d in (src, ckpt, state):
+        for d in (src, state):
             shutil.rmtree(d, ignore_errors=True)

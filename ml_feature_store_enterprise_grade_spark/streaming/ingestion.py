@@ -23,11 +23,6 @@ in tests/test_stream_ingestion.py.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,6 +30,11 @@ from pyspark.sql.window import Window
 from ..catalog import ensure_engine_confs
 from ..functions import normalize_text
 from ..operators.dedup import DedupIndex
+from .clickstream import run_available_now
+
+#: Arriving-file schemas (a stream source never infers one).
+_DOC_SCHEMA = "doc_id bigint, text string"
+_VEC_SCHEMA = "vec_id bigint, embedding array<float>"
 
 
 def _ingest_id(batch_id: int) -> str:
@@ -83,7 +83,6 @@ def stream_corpus_admission(
     source_dir: str,
     index_path: str,
     admitted_path: str,
-    schema: str = "doc_id bigint, text string",
 ) -> DataFrame:
     """Run the admission pipeline over every parquet file in
     ``source_dir`` (one micro-batch per file, availableNow) and return
@@ -98,23 +97,15 @@ def stream_corpus_admission(
     """
     ensure_engine_confs(spark)
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_DOC_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(source_dir)
     )
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ckpt_admission_{uuid.uuid4().hex[:8]}"
+    run_available_now(
+        stream,
+        "corpus_admission",
+        sink=admission_batch_processor(index_path, admitted_path),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            admission_batch_processor(index_path, admitted_path)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(admitted_path).drop("ingest")
 
 
@@ -122,7 +113,6 @@ def stream_vector_ingestion(
     spark: SparkSession,
     source_dir: str,
     index_path: str,
-    schema: str = "vec_id bigint, embedding array<float>",
 ) -> DataFrame:
     """Continuously fold arriving embedding batches into a standing
     :class:`~..operators.similarity.VectorIndex` (one micro-batch per
@@ -141,21 +131,13 @@ def stream_vector_ingestion(
     ensure_engine_confs(spark)
     idx = VectorIndex(spark, index_path)
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_VEC_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(source_dir)
     )
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ckpt_vec_ingest_{uuid.uuid4().hex[:8]}"
+    run_available_now(
+        stream,
+        "vector_ingestion",
+        sink=lambda b, bid: idx.add(b, ingest_id=f"batch{bid}"),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: idx.add(b, ingest_id=f"batch{bid}")
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(f"{index_path}/cells")

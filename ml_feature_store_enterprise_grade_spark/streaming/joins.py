@@ -27,6 +27,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import uuid
 from typing import Any, Iterable
 
 import pandas as pd
@@ -43,7 +47,6 @@ from .clickstream import (
     compute_floor,
     run_available_now,
     scoped_confs,
-    stream_state_confs,
     streaming_events,
 )
 
@@ -191,9 +194,10 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     out = run_available_now(
         snapshots,
         "stream_stateful_running_totals",
+        sf_dir,
         # per-key Python state processing: per-batch compute scales
         # with data, keep the stateful shuffle wide (compute_floor).
-        confs=stream_state_confs(spark, sf_dir, floor=compute_floor(spark)),
+        floor=compute_floor(spark),
     )
     final = out.groupBy("user_id").agg(
         F.max("total_events").alias("total_events"),
@@ -297,9 +301,10 @@ def stream_tws_purchase_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(
         snapshots,
         "stream_tws_purchase_stats",
+        sf_dir,
         # per-key Python state processing: per-batch compute scales
         # with data, keep the stateful shuffle wide (compute_floor).
-        confs=stream_state_confs(spark, sf_dir, floor=compute_floor(spark)),
+        floor=compute_floor(spark),
     )
     final = out.groupBy("user_id").agg(
         F.max("n_purchases").alias("n_purchases"),
@@ -385,20 +390,15 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
         "leftOuter",
     ).select("user_id", "value")
     # Stream-stream joins keep 4 state stores per shuffle partition;
-    # at this state size 32 instances are pure commit overhead.  8
-    # partitions + RocksDB measured 8.2s -> ~6.5s at sf0.1 (the rest
-    # is the mandatory no-data finalization micro-batch that emits
+    # idle instances are pure commit overhead.  compute_floor (8 at 32
+    # cores) + RocksDB measured 8.2s -> ~6.5s at sf0.1 (the rest is the
+    # mandatory no-data finalization micro-batch that emits
     # watermark-expired unmatched clicks — machinery, not config).
-    out = run_available_now(
-        pairs,
-        "stream_stream_left_outer_join",
-        confs={
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider",
-        },
-    )
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_confs(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
+        out = run_available_now(
+            pairs, "stream_stream_left_outer_join", sf_dir, floor=compute_floor(spark)
+        )
     return out.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.count("value").cast("bigint").alias("n_matched"),
@@ -484,11 +484,6 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at 100 TB, the same foreachBatch body switches to a
     bucketed sort-merge as-of — the batch operator's documented
     path."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     feats = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
@@ -554,19 +549,17 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.mode("append").parquet(out_dir)
 
     ev = streaming_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-    qname = f"stream_asof_enrichment_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{qname}")
-    with scoped_confs(spark, stream_state_confs(spark, sf_dir)):
-        q = (
-            ev.select("event_id", "user_id", "ts", "event_type")
-            .writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    try:
+        run_available_now(
+            ev.select("event_id", "user_id", "ts", "event_type"),
+            "stream_asof_enrichment",
+            sf_dir,
+            sink=enrich,
         )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)
+        # spool the sink's output so its directory goes with the call
+        return spark.read.parquet(out_dir).localCheckpoint()
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # --- Streaming decayed features (the user_decay_features twin) -------
@@ -687,9 +680,10 @@ def stream_decay_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(
         snapshots,
         "stream_decay_features",
+        sf_dir,
         # per-key Python state processing: per-batch compute scales
         # with data, keep the stateful shuffle wide (compute_floor).
-        confs=stream_state_confs(spark, sf_dir, floor=compute_floor(spark)),
+        floor=compute_floor(spark),
     )
     final = out.groupBy("user_id").agg(
         F.max("n").alias("n"),

@@ -93,6 +93,35 @@ def test_every_cache_or_persist_is_unpersisted_in_its_function():
     )
 
 
+def test_every_stream_starts_in_run_available_now():
+    """One stream runner: the package's only ``availableNow=True``
+    trigger is the one in ``streaming.clickstream.run_available_now``,
+    which sizes the stream's state and removes its checkpoint and
+    memory-sink view."""
+    starts = []
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parents = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call) or not any(
+                kw.arg == "availableNow" for kw in call.keywords
+            ):
+                continue
+            fn = parents.get(call)
+            while fn is not None and not isinstance(
+                fn, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                fn = parents.get(fn)
+            starts.append(
+                f"{path.relative_to(_PACKAGE)}:{fn.name if fn else '<module>'}"
+            )
+    assert starts == ["streaming/clickstream.py:run_available_now"], starts
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     """Ids of RDDs holding persisted blocks.  Read from the storage
     info, not ``getPersistentRDDs()``: that returns a map of the RDDs

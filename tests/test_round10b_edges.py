@@ -192,11 +192,13 @@ def test_stream_decay_rocksdb_provider_matches_default(spark, tmp_path):
     must produce the identical final per-user integers as the default
     HDFS-backed provider (the ST8-at-scale check the running-totals
     op carries, extended to the decay twin)."""
-    import uuid
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ml_feature_store_enterprise_grade_spark.catalog import normalize_ts
+    from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
+        run_available_now,
+        scoped_confs,
+    )
     from ml_feature_store_enterprise_grade_spark.streaming.joins import (
         _DECAY_OUT_SCHEMA,
         _DECAY_STATE_SCHEMA,
@@ -208,11 +210,12 @@ def test_stream_decay_rocksdb_provider_matches_default(spark, tmp_path):
     raw.coalesce(2).write.mode("append").parquet(src)
 
     def run(provider, tag):
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
+        confs = (
+            {"spark.sql.streaming.stateStore.providerClass": provider}
+            if provider
+            else {}
+        )
+        with scoped_confs(spark, confs):
             stream = normalize_ts(
                 spark.readStream.schema(raw.schema)
                 .format("parquet")
@@ -232,16 +235,7 @@ def test_stream_decay_rocksdb_provider_matches_default(spark, tmp_path):
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
-            qname = f"rocks_{tag}_{uuid.uuid4().hex[:6]}"
-            q = (
-                snaps.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(qname)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(qname)
+            out = run_available_now(snaps, f"rocks_{tag}")
             return {
                 r.user_id: (r.n, r.min_d, r.swq, r.svwq)
                 for r in out.groupBy("user_id")
@@ -253,10 +247,6 @@ def test_stream_decay_rocksdb_provider_matches_default(spark, tmp_path):
                 )
                 .collect()
             }
-        finally:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
 
     rocks = run(
         "org.apache.spark.sql.execution.streaming.state."

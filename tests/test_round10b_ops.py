@@ -525,11 +525,13 @@ def test_stream_decay_multi_batch_replay_equals_batch(spark, tmp_path):
     proven under real micro-batching, not just availableNow's single
     batch)."""
     import time as _time
-    import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ml_feature_store_enterprise_grade_spark.catalog import normalize_ts
+    from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
+        run_available_now,
+    )
     from ml_feature_store_enterprise_grade_spark.streaming.joins import (
         _DECAY_OUT_SCHEMA,
         _DECAY_STATE_SCHEMA,
@@ -569,16 +571,7 @@ def test_stream_decay_multi_batch_replay_equals_batch(spark, tmp_path):
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = f"decay_{uuid.uuid4().hex[:8]}"
-    q = (
-        snapshots.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(qname)
+    out = run_available_now(snapshots, "decay")
     final = out.groupBy("user_id").agg(
         F.max("n").alias("n"),
         F.max_by("min_d", "n").alias("min_d"),

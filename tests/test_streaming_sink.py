@@ -16,8 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ml_feature_store_enterprise_grade_spark.catalog import load_table, normalize_ts
+from ml_feature_store_enterprise_grade_spark.snapshots import resolve_snapshot
 from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
     events_raw_schema,
+    run_available_now,
     windowed_features,
 )
 from tests.conftest import SF_SMOKE
@@ -119,19 +121,8 @@ def test_multi_batch_replay_is_batch_equivalent(spark, multi_file_source):
     append-mode emissions must exactly equal the single-batch result —
     finalized windows present with complete aggregates, each emitted
     at most once."""
-    import uuid
-
-    qname = f"mb_{uuid.uuid4().hex[:8]}"
     result = windowed_features(_stream(spark, multi_file_source, max_files=1))
-    q = (
-        result.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table(qname)
+    emitted = run_available_now(result, "mb")
 
     e = load_table(spark, SF_SMOKE, "events").filter(F.col("user_id").isNotNull())
     max_ts = e.agg(F.max("ts")).first()[0]
@@ -261,11 +252,7 @@ def test_streaming_online_materialize_multi_batch(spark, multi_file_source, tmp_
         .start()
     )
     q.awaitTermination()
-    from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
-        resolve_online_snapshot,
-    )
-
-    got = spark.read.parquet(resolve_online_snapshot(online)).drop("bucket")
+    got = spark.read.parquet(resolve_snapshot(online)).drop("bucket")
 
     e = load_table(spark, SF_SMOKE, "events").filter(F.col("user_id").isNotNull())
     max_ts = e.agg(F.max("ts")).first()[0]
@@ -301,7 +288,6 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     as hardlinks (same inode — zero bytes rewritten)."""
     from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
         online_upsert_sink,
-        resolve_online_snapshot,
     )
 
     online = str(tmp_path / "online")
@@ -318,13 +304,13 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     # Seed: many users spread across all buckets.
     sink(mkbatch([(f"u{i}", t0) for i in range(64)]), 0)
-    gen1 = resolve_online_snapshot(online)
+    gen1 = resolve_snapshot(online)
     before = _bucket_inodes(gen1)
     assert len(before) > 1
 
     # Second batch: a single user -> exactly one bucket touched.
     sink(mkbatch([("u3", t0 + dt.timedelta(hours=1))]), 1)
-    gen2 = resolve_online_snapshot(online)
+    gen2 = resolve_snapshot(online)
     assert gen2 != gen1
     after = _bucket_inodes(gen2)
 
@@ -350,7 +336,6 @@ def test_upsert_survives_crashed_partial_generation(spark, tmp_path):
 
     from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
         online_upsert_sink,
-        resolve_online_snapshot,
     )
 
     online = str(tmp_path / "online")
@@ -367,7 +352,7 @@ def test_upsert_survives_crashed_partial_generation(spark, tmp_path):
         )
 
     sink(mkbatch([(f"u{i}", t0) for i in range(16)]), 0)
-    committed = resolve_online_snapshot(online)
+    committed = resolve_snapshot(online)
 
     # Simulate a crash mid-build: a partial new generation exists but
     # the pointer never flipped.
@@ -376,13 +361,13 @@ def test_upsert_survives_crashed_partial_generation(spark, tmp_path):
     with open(os.path.join(partial, "bucket=0", "part-junk.parquet"), "wb") as f:
         f.write(b"not parquet")
     # Readers still resolve the committed generation.
-    assert resolve_online_snapshot(online) == committed
+    assert resolve_snapshot(online) == committed
     assert spark.read.parquet(committed).count() == 16
 
     # Next batch GCs the partial build and merges from committed state.
     sink(mkbatch([("u0", t0 + dt.timedelta(hours=1))]), 1)
     assert not os.path.isdir(partial)
-    got = spark.read.parquet(resolve_online_snapshot(online))
+    got = spark.read.parquet(resolve_snapshot(online))
     assert got.count() == 16  # nothing lost, junk never merged
     u0 = got.filter(F.col("user_id") == "u0").select("feature_timestamp").first()[0]
     assert u0 == t0 + dt.timedelta(hours=1)
@@ -398,7 +383,6 @@ def test_upsert_retains_generation_window(spark, tmp_path):
 
     from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
         online_upsert_sink,
-        resolve_online_snapshot,
     )
 
     online = str(tmp_path / "online")
@@ -418,7 +402,7 @@ def test_upsert_retains_generation_window(spark, tmp_path):
     # retained generations are still complete readable snapshots
     assert spark.read.parquet(os.path.join(online, "v=2")).count() == 1
     assert spark.read.parquet(os.path.join(online, "v=3")).count() == 1
-    assert resolve_online_snapshot(online).endswith("v=4")
+    assert resolve_snapshot(online).endswith("v=4")
 
 
 @pytest.mark.slow
@@ -427,11 +411,8 @@ def test_sliding_multi_batch_replay_is_batch_equivalent(spark, multi_file_source
     feeds 6 overlapping windows whose state lives across batches; the
     union of append emissions must equal the batch x6 expansion on
     finalized windows, emitted at most once each."""
-    import uuid
-
     from ml_feature_store_enterprise_grade_spark.streaming.clickstream import WATERMARK
 
-    qname = f"slide_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream(spark, multi_file_source, max_files=1)
         .filter(F.col("user_id").isNotNull())
@@ -446,15 +427,7 @@ def test_sliding_multi_batch_replay_is_batch_equivalent(spark, multi_file_source
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table(qname)
+    emitted = run_available_now(agg, "slide")
 
     e = load_table(spark, SF_SMOKE, "events").filter(F.col("user_id").isNotNull())
     max_ts = e.agg(F.max("ts")).first()[0]
@@ -475,18 +448,21 @@ def test_sliding_multi_batch_replay_is_batch_equivalent(spark, multi_file_source
     assert batch.exceptAll(emitted).count() == 0
 
 
-def test_stream_staging_refreshes_on_source_change(spark, tmp_path):
+def test_stream_staging_refreshes_on_source_change(spark, tmp_path, monkeypatch):
     """The staged stream-source copy must track the source file:
     regenerated testdata (new size/mtime) invalidates the old copy —
     replaying a stale copy would silently diverge from the oracle."""
     import os
     import shutil
+    import tempfile
     import time
 
     from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
         _stream_source_dir,
     )
 
+    # stage under tmp_path, not the shared temp dir (one copy per run)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     sf = tmp_path / "sfX"
     sf.mkdir()
     src = sf / "events.parquet"
@@ -508,6 +484,44 @@ def test_stream_staging_refreshes_on_source_change(spark, tmp_path):
     second_sig = (os.stat(staged).st_size, os.stat(staged).st_mtime_ns)
     assert second_sig != first_sig
     assert second_sig[0] == first_sig[0] + 128
+
+
+def test_stream_queries_leave_no_view_checkpoint_or_output_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A memory-sink query (``stream_hourly_features``) and two
+    ``foreachBatch`` queries (``stream_online_materialize``,
+    ``stream_asof_enrichment``) leave no temp view in the session
+    catalog and no checkpoint or output directory in the temp dir, and
+    each returned frame still gives the oracle's row count after that
+    cleanup."""
+    import os
+    import tempfile
+
+    from ml_feature_store_enterprise_grade_spark import registry
+    from ml_feature_store_enterprise_grade_spark.testing import duckdb_connection
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    views = {t.name for t in spark.catalog.listTables()}
+    names = (
+        "stream_hourly_features",
+        "stream_online_materialize",
+        "stream_asof_enrichment",
+    )
+    frames = {n: registry.queries()[n](spark, SF_SMOKE) for n in names}
+    assert {t.name for t in spark.catalog.listTables()} == views
+    residue = sorted(
+        e for e in os.listdir(tmp_path) if e.startswith(("ckpt_", "asof_enrich_"))
+    )
+    assert residue == []
+    con = duckdb_connection(SF_SMOKE)
+    try:
+        for n, df in frames.items():
+            sql = registry.oracles()[n]
+            want = con.execute(f"SELECT COUNT(*) FROM ({sql})").fetchone()[0]
+            assert want > 0 and df.count() == want, n
+    finally:
+        con.close()
 
 
 import pytest as _pytest

@@ -37,6 +37,11 @@ same reason.
 
 Each query is timed end-to-end (plan + execute + noop-sink action
 that materializes every row) after a warm-up pass primes the JVM.
+
+BENCH_DETAIL.json (not stdout) also holds ``compiles``: for each query,
+the number of classes Spark's Janino compiler built during each timed
+sample, in sample order.  A query whose every sample compiles has plans
+that miss the session's generated-code cache on each pass.
 """
 
 from __future__ import annotations
@@ -288,6 +293,12 @@ BENCH_QUERIES = (
 )
 
 
+def _compiles(spark) -> int:
+    """Janino compilations so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _calibrate(spark, sf_dir: str) -> tuple[float, float]:
     """Fixed box-load denominators (VERDICT r12 item 3): one frozen
     batch aggregate and one frozen streaming micro-batch, run FIRST
@@ -394,6 +405,7 @@ def main() -> None:
     # plan, which is what the trend line should track.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     samples: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     t_start = time.perf_counter()
     for p in range(n_passes):
         # keep total wall bounded at bigger SFs: re-pass only while cheap
@@ -410,6 +422,7 @@ def main() -> None:
             break
         for name in BENCH_QUERIES:
             fn = qs[name]
+            c0 = _compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             # Materialize every output row without driver-side transfer.
@@ -417,6 +430,7 @@ def main() -> None:
             samples.setdefault(name, []).append(
                 round(time.perf_counter() - t0, 3)
             )
+            compiles.setdefault(name, []).append(_compiles(spark) - c0)
 
     # Streaming queries get a THIRD sample (VERDICT r12 item 3):
     # micro-batch state-commit cost is the component observed to
@@ -427,9 +441,11 @@ def main() -> None:
             if not name.startswith("stream_") or len(samples.get(name, [])) < 2:
                 continue
             fn = qs[name]
+            c0 = _compiles(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
+            compiles[name].append(_compiles(spark) - c0)
 
     timings = {n: min(s) for n, s in samples.items()}
     # Median alongside min: warm-cache flattery can mask a regression
@@ -485,6 +501,7 @@ def main() -> None:
                     "mins_sec": timings,
                     "medians_sec": medians,
                     "samples": counts,
+                    "compiles": compiles,
                 },
                 fh,
                 indent=1,

@@ -115,10 +115,17 @@ def commit_generation(
         json.dump({"schema": schema.jsonValue(), "hwm": hwm}, fh)
         fh.flush()
         os.fsync(fh.fileno())
-    tmp = os.path.join(path, "_CURRENT.tmp")
+    write_atomic(os.path.join(path, "_CURRENT"), str(new_gen))
+    gc_generations(path, new_gen)
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Replace the file ``path`` with ``text`` atomically: fsync a
+    sibling temp file, then rename it over ``path``, so a reader sees
+    the old content or the new, never a torn mix."""
+    tmp = f"{path}.tmp"
     with open(tmp, "w") as fh:
-        fh.write(str(new_gen))
+        fh.write(text)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(path, "_CURRENT"))
-    gc_generations(path, new_gen)
+    os.replace(tmp, path)

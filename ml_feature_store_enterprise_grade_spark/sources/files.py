@@ -18,16 +18,25 @@ Scale notes: partitioned writes shuffle-free (each task writes its
 partition values); reads with an equality/range filter on the
 partition column prune at planning time (check ``PartitionFilters``
 in ``df.explain``) — at 100 TB a day's read touches one partition,
-never the directory tree.
+never the directory tree.  The store's schema lives in a
+``_SCHEMA`` manifest beside the partitions, so a read infers nothing
+from file footers and launches no job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
+
+from ..snapshots import write_atomic
+
+#: A partitioned store's schema manifest: every field ever written, by
+#: name, in first-written order, as StructType JSON.
+SCHEMA_MANIFEST = "_SCHEMA"
 
 
 def read_csv(
@@ -50,8 +59,42 @@ def write_partitioned(
 
     ``partitionOverwriteMode=dynamic`` is set engine-wide (session.py)
     so an incremental rewrite replaces only the partitions present in
-    ``df`` — the 100 TB-safe upsert path."""
+    ``df`` — the 100 TB-safe upsert path.
+
+    After the data lands, ``df.schema`` is merged by name into the
+    ``_SCHEMA`` manifest (:func:`merge_schema`; a type change raises
+    before anything is written) and the manifest is replaced
+    atomically."""
+    manifest = os.path.join(path, SCHEMA_MANIFEST)
+    schema = merge_schema(
+        read_manifest(path) if os.path.exists(manifest) else None, df.schema
+    )
     df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    write_atomic(manifest, json.dumps(schema.jsonValue()))
+
+
+def read_manifest(path: str) -> StructType:
+    """The schema manifest of a partitioned store (a store written
+    without one cannot be read: write it again)."""
+    with open(os.path.join(path, SCHEMA_MANIFEST)) as fh:
+        return StructType.fromJson(json.load(fh))
+
+
+def merge_schema(old: StructType | None, new: StructType) -> StructType:
+    """``old`` with the fields of ``new`` it lacks appended, all
+    nullable (rows from files that predate a field read as NULL).
+    Raises ``TypeError`` when a field of both changes type."""
+    fields = list(old.fields) if old is not None else []
+    have = {f.name: f.dataType for f in fields}
+    for f in new.fields:
+        if f.name not in have:
+            fields.append(StructField(f.name, f.dataType, True))
+        elif have[f.name].simpleString() != f.dataType.simpleString():
+            raise TypeError(
+                f"column {f.name!r} changes type: "
+                f"{have[f.name].simpleString()} -> {f.dataType.simpleString()}"
+            )
+    return StructType(fields)
 
 
 def read_partitioned(
@@ -66,11 +109,11 @@ def read_partitioned(
     planning time (PartitionFilters), so only matching dirs are
     listed/scanned.
 
-    The read merges the schemas of all footers so a feature view can
-    GAIN columns over time — rows from partitions written before the
-    column existed read as NULL.  Cost is one footer read per file at
+    The read takes the ``_SCHEMA`` manifest's schema, so a feature view
+    can GAIN columns over time — rows from partitions written before
+    the column existed read as NULL — and no footer is read at
     planning."""
-    df = spark.read.option("mergeSchema", "true").parquet(path)
+    df = spark.read.schema(read_manifest(path)).parquet(path)
     if start is not None:
         df = df.filter(F.col(partition_col) >= F.lit(start))
     if end is not None:

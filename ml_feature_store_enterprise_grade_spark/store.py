@@ -153,7 +153,9 @@ class FeatureStore:
     def write_offline(self, view_name: str, df: DataFrame, mode: str = "overwrite") -> None:
         """Persist a feature frame to the date-partitioned offline
         store, deriving the partition column from the view's
-        timestamp field when absent."""
+        timestamp field when absent.  The frame's schema is merged into
+        the store's ``_SCHEMA`` manifest, which reads take, so a read
+        launches no footer-merge job."""
         v = self.views[view_name]
         if v.partition_col not in df.columns:
             df = df.withColumn(v.partition_col, F.to_date(v.timestamp_field))

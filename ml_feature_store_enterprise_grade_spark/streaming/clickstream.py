@@ -688,21 +688,22 @@ def stream_online_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly aggregate.  Multi-batch upsert convergence is exercised in
     tests/test_streaming_sink.py."""
     result = windowed_features(streaming_events(spark, sf_dir)).drop("window_start")
-    # Deterministic per-sf snapshot dir, recreated fresh each
-    # invocation: the returned frame reads it lazily, so it outlives
-    # the call, and repeated runs reuse (not accumulate) temp space.
-    tag = sf_dir.strip("/").replace("/", "_")
-    online = os.path.join(tempfile.gettempdir(), f"online_snap_{tag}")
-    shutil.rmtree(online, ignore_errors=True)
-    run_available_now(
-        result, "stream_online_materialize", sf_dir, sink=online_upsert_sink(online)
+    online = os.path.join(
+        tempfile.gettempdir(), f"online_snap_{uuid.uuid4().hex[:8]}"
     )
-    snap_dir = resolve_snapshot(online)
-    if snap_dir is None:
-        # Nothing finalized (all events inside the watermark): an
-        # empty frame with the output schema, not an opaque crash.
-        return spark.createDataFrame([], result.drop("bucket").schema)
-    return read_snapshot(spark, snap_dir).drop("bucket")
+    try:
+        run_available_now(
+            result, "stream_online_materialize", sf_dir, sink=online_upsert_sink(online)
+        )
+        snap_dir = resolve_snapshot(online)
+        if snap_dir is None:
+            # Nothing finalized (all events inside the watermark): an
+            # empty frame with the output schema, not an opaque crash.
+            return spark.createDataFrame([], result.drop("bucket").schema)
+        # spool the snapshot so its directory goes with the call
+        return read_snapshot(spark, snap_dir).drop("bucket").localCheckpoint()
+    finally:
+        shutil.rmtree(online, ignore_errors=True)
 
 
 #: Heavy-hitter rank depth per finalized window.

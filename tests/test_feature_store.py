@@ -342,15 +342,47 @@ def test_historical_export_reads_entity_frame_once(two_views, spark):
 
 
 def test_materialize_and_snapshot_job_budget(two_views, spark):
-    """Incremental materialize launches at most 3 jobs (offline schema
-    merge, the latest-per-key shuffle, the write): the previous
-    generation's schema and high-water mark come from its marker, and
-    so does the returned frame's.  Opening a snapshot launches none."""
+    """Incremental materialize launches at most 2 jobs (the
+    latest-per-key shuffle, the write): the offline schema comes from
+    the store's ``_SCHEMA`` manifest, the previous generation's schema
+    and high-water mark from its marker, and so does the returned
+    frame's.  Opening the offline store or a snapshot launches none."""
+    _, jobs = count_jobs(spark, two_views.read_offline, CLICK_VIEW.name)
+    assert jobs == 0
     snap, jobs = count_jobs(spark, two_views.materialize, CLICK_VIEW.name, incremental=True)
-    assert jobs <= 3, jobs
+    assert jobs < 3, jobs
     assert snap.count() > 0
     _, jobs = count_jobs(spark, two_views._snapshot, CLICK_VIEW.name)
     assert jobs == 0
+
+
+def test_offline_schema_manifest_merges_by_name(spark, tmp_path):
+    """Each write merges its schema into ``_SCHEMA`` by name: old fields
+    keep their place, new ones go at the end, rows written before a
+    field existed read it as NULL, and a type change raises before any
+    data lands."""
+    from ml_feature_store_enterprise_grade_spark.sources.files import read_manifest
+
+    view = FeatureView("tiny", USER, features=("a", "b"), ttl=None)
+    fs = FeatureStore(spark, str(tmp_path))
+    fs.apply([USER, view])
+    fs.write_offline("tiny", spark.sql(
+        "SELECT 1L AS user_id, TIMESTAMP'2024-01-01 10:00:00' AS feature_timestamp, 5L AS a"
+    ))
+    fs.write_offline("tiny", spark.sql(
+        "SELECT 0.5D AS b, 2L AS user_id, TIMESTAMP'2024-01-02 10:00:00' AS feature_timestamp"
+    ), mode="append")
+    path = fs._offline_path("tiny")
+    assert read_manifest(path).fieldNames() == [
+        "user_id", "feature_timestamp", "a", "event_date", "b"
+    ]
+    rows = {r.user_id: (r.a, r.b) for r in fs.read_offline("tiny").collect()}
+    assert rows == {1: (5, None), 2: (None, 0.5)}
+    with pytest.raises(TypeError, match="'a' changes type"):
+        fs.write_offline("tiny", spark.sql(
+            "SELECT 3L AS user_id, TIMESTAMP'2024-01-03 10:00:00' AS feature_timestamp, 'x' AS a"
+        ), mode="append")
+    assert fs.read_offline("tiny").count() == 2
 
 
 def test_incremental_materialize_with_late_data_equals_full(spark, tmp_path):

@@ -511,7 +511,9 @@ def test_stream_queries_leave_no_view_checkpoint_or_output_dir(
     frames = {n: registry.queries()[n](spark, SF_SMOKE) for n in names}
     assert {t.name for t in spark.catalog.listTables()} == views
     residue = sorted(
-        e for e in os.listdir(tmp_path) if e.startswith(("ckpt_", "asof_enrich_"))
+        e
+        for e in os.listdir(tmp_path)
+        if e.startswith(("ckpt_", "asof_enrich_", "online_snap_"))
     )
     assert residue == []
     con = duckdb_connection(SF_SMOKE)
@@ -522,6 +524,18 @@ def test_stream_queries_leave_no_view_checkpoint_or_output_dir(
             assert want > 0 and df.count() == want, n
     finally:
         con.close()
+
+
+def test_stream_online_materialize_frames_survive_a_second_call(spark):
+    """Each call owns its snapshot: a second call at the same sf leaves
+    the frame an earlier call returned readable, with the same rows."""
+    from ml_feature_store_enterprise_grade_spark import registry
+
+    fn = registry.queries()["stream_online_materialize"]
+    first = fn(spark, SF_SMOKE)
+    second = fn(spark, SF_SMOKE)
+    assert first.count() == second.count() > 0
+    assert first.exceptAll(second).count() == 0
 
 
 import pytest as _pytest

@@ -2,9 +2,17 @@
 
 The reference declares explicit schemas everywhere and never relies
 on inference (reference spark/apps/clickstream_aggregation.py:48-66,
-feast_repo/features.py:44-49).  We follow suit: every table has a
-declared post-normalization schema, and loading normalizes physical
-quirks (nanosecond parquet timestamps) into clean engine types.
+feast_repo/features.py:44-49).  The source tables come with no
+schema file, and their physical timestamp encoding has changed between
+generations, so the engine takes each file's schema from its parquet
+footer — once: :func:`parquet_schema` infers it the first time it sees
+a file (one Spark footer job) and serves it from the memo after that,
+keyed by the file's identity (size and ``mtime_ns``; for a directory,
+every file's), so a rewritten file gets a new key and never a stale
+schema.  Every read then declares its schema (``read.schema(s)``;
+``tests/test_reuse_rules.py`` names the few index re-reads that still
+infer one), and loading normalizes physical quirks (nanosecond
+parquet timestamps) into clean engine types.
 
 At 100 TB these reads are partitioned parquet scans; all queries
 filter/prune on the columns they need so Catalyst pushes predicates
@@ -28,9 +36,10 @@ Reuse rules.  The engine reuses work in exactly two ways:
   should not be spooled at all.
 * **Across calls**, a ``(spark, sf_dir)`` factory whose result
   several queries share is decorated with :func:`memo`.  Every memo
-  entry and every :func:`cached_count` lives in one dict, and
-  :func:`clear_count_cache` is the one invalidation call: a session
-  that rewrites the data under a path calls it for that path.
+  entry, every :func:`cached_count` and every :func:`parquet_schema`
+  lives in one dict, and :func:`clear_count_cache` is the one
+  invalidation call: a session that rewrites the data under a path
+  calls it for that path.
 """
 
 from __future__ import annotations
@@ -40,6 +49,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .session import ensure_engine_confs
 
@@ -101,8 +111,11 @@ def normalize_ts(df: DataFrame, cols) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table with normalized engine types."""
+    # First: the inferred type of a nanosecond timestamp depends on
+    # ``nanosAsLong``.
     ensure_engine_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return normalize_ts(df, _TS_COLS.get(name, ()))
 
 
@@ -178,10 +191,11 @@ def spread(
     return df
 
 
-#: Every cross-call memo in the engine: :func:`memo` factory results
-#: and :func:`cached_count` row counts, keyed by (factory or count
-#: tag, Spark application id, absolute sf_dir).  A new SparkContext
-#: gets a new application id and therefore fresh entries.
+#: Every cross-call memo in the engine: :func:`memo` factory results,
+#: :func:`cached_count` row counts and :func:`parquet_schema` footer
+#: schemas, keyed by (factory, count tag or file identity, Spark
+#: application id, absolute sf_dir).  A new SparkContext gets a new
+#: application id and therefore fresh entries.
 _MEMO: dict[tuple[object, str, str], object] = {}
 
 
@@ -206,8 +220,8 @@ def memo(factory):
 
 
 def clear_count_cache(sf_dir: str | None = None) -> None:
-    """Drop every memo entry — memoized factory results and row
-    counts — for one ``sf_dir``, or all of them.
+    """Drop every memo entry — memoized factory results, row counts
+    and footer schemas — for one ``sf_dir``, or all of them.
 
     Call after rewriting data under a path: counts steer routing
     (exact vs IVF, broadcast vs shuffle) and memoized frames carry
@@ -218,6 +232,38 @@ def clear_count_cache(sf_dir: str | None = None) -> None:
     target = os.path.abspath(sf_dir)
     for key in [k for k in _MEMO if k[2] == target]:
         del _MEMO[key]
+
+
+def _file_identity(path: str) -> tuple:
+    """(size, mtime_ns) of the file at ``path``; for a directory, the
+    (relative name, size, mtime_ns) of every file under it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The footer schema of the parquet file or directory at ``path``,
+    inferred once per file identity (module docstring) and memoized
+    with the other memo entries under the directory that holds
+    ``path``, so ``clear_count_cache`` of that directory drops it.
+    Inference reads the session's parquet confs: apply
+    ``ensure_engine_confs`` before the first call."""
+    path = os.path.abspath(path)
+    key = _memo_key(
+        ("schema", path, _file_identity(path)), spark, os.path.dirname(path)
+    )
+    if key not in _MEMO:
+        _MEMO[key] = spark.read.parquet(path).schema
+    return _MEMO[key]
 
 
 def cached_count(df: DataFrame, sf_dir: str, tag: str) -> int:

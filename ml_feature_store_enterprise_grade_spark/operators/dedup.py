@@ -647,7 +647,7 @@ def connected_components(
             return df.localCheckpoint()
         path = f"{persist_rounds_to}/round={round_no}"
         df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     # Iterate ONLY over vertices that touch an edge: an isolated
     # vertex keeps label = doc_id and never changes, so it is emitted

@@ -34,6 +34,22 @@ JVM only, so nothing persists across runs.  The conf is static, so it
 cannot ride in ``RUNTIME_CONFS``: a session built elsewhere and
 handed to ``ensure_engine_confs`` (the ``__spark_entry__`` contract,
 ``tools/parity.py --vanilla``) keeps Spark's default.
+
+Call-site capture: by default PySpark records the Python ``file:line``
+of every ``Column``/``DataFrame`` API call
+(``spark.python.sql.dataFrameDebugging.enabled``), so that an error
+can name the line that built the failing expression.  Each capture
+costs about five py4j round trips plus a failed optional import, and
+an engine query makes thousands of such calls while it builds its
+plan: over three warm passes of perfbench's ``query_suite`` selection
+at sf0.01 (4 cores) the capture made 26k of the 49k py4j
+round trips.  ``get_spark`` turns the capture off.  Errors still
+raise with Spark's error class and message; they lose only the
+Python "DataFrame query context", which for an engine query points
+into engine code anyway.  PySpark reads the flag once, at the first
+API call of the process, so it is a builder conf like the codegen
+cache: a session handed to ``ensure_engine_confs`` keeps its own
+setting.
 """
 
 from __future__ import annotations
@@ -110,6 +126,7 @@ def get_spark(app_name: str = "ml_feature_store_enterprise_grade_spark", cpus: i
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

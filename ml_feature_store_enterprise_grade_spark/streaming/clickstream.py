@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, local_rows, normalize_ts
+from ..catalog import load_table, local_rows, normalize_ts, parquet_schema
 from ..functions import PORTABLE_HASH64_SQL
 from ..operators.sketches import _HLL_ALPHA, _HLL_IDX_BITS, _HLL_M, _HLL_RHO_BITS, _HLL_SEED
 from ..snapshots import (
@@ -84,37 +84,20 @@ def _stream_source_dir(sf_dir: str) -> str:
     return d
 
 
-#: (src_dir, size, mtime_ns) -> schema.  A schema read is a Spark
-#: footer job (~0.5 s of fixed overhead); queries that build two
-#: streams over the same staged dir (stream-stream joins) would pay
-#: it twice per run without this.  Keyed on the staged file's
-#: identity so testdata regeneration between rounds invalidates it.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-
-
-def events_raw_schema(spark: SparkSession, src_dir: str) -> T.StructType:
-    """Explicit stream schema (never infer on a stream source), taken
-    from the staged parquet's own footer so the replay matches the
-    physical encoding the driver generated (int64-nanos ``ts`` in
-    older testdata, timestamp[us] in newer)."""
-    files = tuple(
-        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-        for e in sorted(os.scandir(src_dir), key=lambda e: e.name)
-        if e.is_file()
-    )
-    key = (src_dir, files)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(src_dir).schema
-    return _SCHEMA_CACHE[key]
-
-
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source replay of the events table as a stream (the test
     stand-in for the Kafka source S1)."""
     ensure_engine_confs(spark)
     src = _stream_source_dir(sf_dir)
+    # Explicit schema (never infer on a stream source), taken from the
+    # footer of the file the staged copy was made from, so the replay
+    # keeps the physical encoding of the testdata (int64-nanos ``ts``
+    # in older generations, timestamp[us] in newer) and shares the
+    # schema memo entry with ``load_table``.
     raw = (
-        spark.readStream.schema(events_raw_schema(spark, src))
+        spark.readStream.schema(
+            parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
+        )
         .format("parquet")
         .load(src)
     )
@@ -1774,6 +1757,8 @@ def stream_cusum_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SBK_K = 8
 _SBK_SEED = 47
 _SBK_SOURCE_FILES = 8
+#: The standing bottom-k table's file schema.
+_SBK_STATE_SCHEMA = "event_type string, event_id bigint, h bigint"
 
 
 def _nulls_first(*vals) -> tuple:
@@ -1828,7 +1813,9 @@ def _bottomk_merge_processor(state_path: str, k: int):
             if os.path.exists(state_path):
                 standing["rows"] = {
                     (r.event_type, r.event_id, r.h)
-                    for r in spark.read.parquet(state_path).collect()
+                    for r in spark.read.schema(_SBK_STATE_SCHEMA)
+                    .parquet(state_path)
+                    .collect()
                 }
             else:
                 standing["rows"] = set()
@@ -1849,11 +1836,7 @@ def _bottomk_merge_processor(state_path: str, k: int):
         # final read re-sorts by (event_type, rank)).
         ordered = sorted(keep, key=lambda t: _nulls_first(t[0], t[2], t[1]))
         (
-            local_rows(
-                spark,
-                ordered,
-                "event_type string, event_id bigint, h bigint",
-            )
+            local_rows(spark, ordered, _SBK_STATE_SCHEMA)
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(state_path)
@@ -1932,7 +1915,7 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             sink=_bottomk_merge_processor(state, _SBK_K),
         )
-        final = spark.read.parquet(state)
+        final = spark.read.schema(_SBK_STATE_SCHEMA).parquet(state)
         w = Window.partitionBy("event_type").orderBy("h", "event_id")
         out = (
             final.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -514,6 +514,9 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(
         tempfile.gettempdir(), f"asof_enrich_{uuid.uuid4().hex[:8]}"
     )
+    # The schema every batch writes: the read-back declares it instead
+    # of inferring it with a footer job.
+    written: dict = {}
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         j = batch_df.join(
@@ -546,6 +549,7 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("f.f_total_revenue").cast("double").alias("f_total_revenue"),
             )
         )
+        written["schema"] = latest.schema
         latest.write.mode("append").parquet(out_dir)
 
     ev = streaming_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
@@ -557,7 +561,9 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink=enrich,
         )
         # spool the sink's output so its directory goes with the call
-        return spark.read.parquet(out_dir).localCheckpoint()
+        return (
+            spark.read.schema(written["schema"]).parquet(out_dir).localCheckpoint()
+        )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -22,7 +22,7 @@ from ml_feature_store_enterprise_grade_spark.catalog import (
     memo,
 )
 
-from conftest import SF_ORACLE, SF_SMOKE
+from conftest import SF_ORACLE, SF_SMOKE, count_jobs
 
 registry.load_all()
 
@@ -204,7 +204,8 @@ def test_clear_count_cache_evicts_every_memo(spark, tmp_path):
     shutil.copyfile(f"{SF_SMOKE}/documents.parquet", other / "documents.parquet")
     factories["text._bigram_census"](spark, str(other))
     cached_count(load_table(spark, str(other), "documents"), str(other), "documents")
-    assert len(_memo_keys_for(str(other))) == 2
+    # The frame, the count and the footer schema ``load_table`` read.
+    assert len(_memo_keys_for(str(other))) == 3
 
     # Clearing another path keeps every entry of this one.
     clear_count_cache(str(other))
@@ -223,6 +224,113 @@ def test_clear_count_cache_evicts_every_memo(spark, tmp_path):
     factories["text._bigram_census"](spark, str(other))
     clear_count_cache()
     assert not catalog._MEMO
+
+
+def test_load_table_infers_a_footer_schema_once(spark, tmp_path):
+    """The first ``load_table`` of a file infers its schema with one
+    footer job; every later one reads with the memoized schema."""
+    shutil.copyfile(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
+    try:
+        _, first = count_jobs(spark, load_table, spark, str(tmp_path), "events")
+        _, second = count_jobs(spark, load_table, spark, str(tmp_path), "events")
+    finally:
+        clear_count_cache(str(tmp_path))
+    assert (first, second) == (1, 0)
+
+
+def _write_events(path, ts_type: str, first_id: int) -> list[tuple]:
+    """Write three ``events`` rows whose ``ts`` is stored as
+    ``timestamp[us]`` (``ts_type="us"``) or as int64
+    ``TIMESTAMP(NANOS)`` (``"ns"``); return their (event_id, epoch
+    seconds)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [(first_id + i, 1_700_000_000 + first_id + i) for i in range(3)]
+    unit = 10**6 if ts_type == "us" else 10**9
+    ts = pa.array([s * unit for _, s in rows], pa.timestamp(ts_type))
+    ids = pa.array([i for i, _ in rows], pa.int64())
+    pq.write_table(pa.table({"event_id": ids, "ts": ts}), path, version="2.6")
+    return rows
+
+
+def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
+    """A table rewritten at the same path with the other physical
+    ``ts`` encoding gets a new schema memo key (its size and mtime
+    changed), so the next ``load_table`` reads the new file correctly
+    without a ``clear_count_cache``."""
+    try:
+        for ts_type, first_id in (("us", 0), ("ns", 10), ("us", 20)):
+            want = _write_events(tmp_path / "events.parquet", ts_type, first_id)
+            df = load_table(spark, str(tmp_path), "events")
+            assert dict(df.dtypes)["ts"] == "timestamp", ts_type
+            got = sorted((r.event_id, int(r.ts.timestamp())) for r in df.collect())
+            assert got == want, ts_type
+    finally:
+        clear_count_cache(str(tmp_path))
+
+
+#: Package reads that still infer a parquet schema: index and
+#: ingestion re-reads of tables that an earlier call or session wrote,
+#: whose schema no manifest records.
+_INFERRING_READS = {
+    "operators/dedup.py:DedupIndex._read",
+    "operators/dedup.py:DedupIndex._empty_bands",
+    "operators/similarity.py:VectorIndex._assign",
+    "operators/similarity.py:VectorIndex.compact",
+    "operators/similarity.py:VectorIndex.shortlist",
+    "operators/sketches.py:HistogramSketchStore.merged",
+    "streaming/ingestion.py:stream_corpus_admission",
+    "streaming/ingestion.py:stream_vector_ingestion",
+}
+
+
+def _receiver_calls(node: ast.AST) -> list[str]:
+    """Names of the calls and attributes a method chain is built on:
+    ``spark.read.schema(s).parquet`` gives ``["schema", "read"]``."""
+    out = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Call):
+            node = node.func
+        else:
+            out.append(node.attr)
+            node = node.value
+    return out
+
+
+def test_every_parquet_read_declares_its_schema():
+    """A ``read.parquet(...)`` infers the schema with a footer job
+    unless a ``.schema(...)`` precedes it.  Only
+    ``catalog.parquet_schema`` (which memoizes the result) and the
+    named re-reads above may infer one."""
+    found = set()
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+
+        def visit(node, scope):
+            for child in ast.iter_child_nodes(node):
+                inner = scope
+                if isinstance(
+                    child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    inner = [*scope, child.name]
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "parquet"
+                ):
+                    chain = _receiver_calls(child.func.value)
+                    if "read" in chain and "schema" not in chain:
+                        found.add(f"{path.relative_to(_PACKAGE)}:{'.'.join(inner)}")
+                visit(child, inner)
+
+        visit(tree, [])
+    allowed = _INFERRING_READS | {"catalog.py:parquet_schema"}
+    assert not found - allowed, (
+        "declare the schema with read.schema(...).parquet(...): "
+        f"{sorted(found - allowed)}"
+    )
+    assert found == allowed, f"no longer inferring: {sorted(allowed - found)}"
 
 
 # ---------------------------------------------------------------- #

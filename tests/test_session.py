@@ -1,4 +1,5 @@
-"""The engine's session keeps every generated class a warm pass needs.
+"""The engine's session keeps every generated class a warm pass needs
+and records no Python call site per API call.
 
 ``session.get_spark`` sizes Spark's generated-code cache to
 ``_CODEGEN_CACHE_ENTRIES``.  At Spark's default of 100 entries, five
@@ -43,3 +44,12 @@ def test_warm_pass_reuses_compiled_classes(spark):
     clear_count_cache()
     second = _run_all(spark)
     assert second <= 16, (first, second)
+
+
+def test_session_skips_call_site_capture(spark):
+    """``get_spark`` turns off PySpark's per-call call-site capture."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    conf = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(conf) == "false"
+    assert not is_debugging_enabled()

@@ -15,14 +15,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ml_feature_store_enterprise_grade_spark.catalog import load_table, normalize_ts
+from ml_feature_store_enterprise_grade_spark.catalog import (
+    load_table,
+    normalize_ts,
+    parquet_schema,
+)
 from ml_feature_store_enterprise_grade_spark.snapshots import resolve_snapshot
 from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
-    events_raw_schema,
     run_available_now,
     windowed_features,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +58,7 @@ def multi_file_source(spark, tmp_path_factory):
 
 
 def _stream(spark, src_dir, max_files=None):
-    reader = spark.readStream.schema(events_raw_schema(spark, src_dir)).format("parquet")
+    reader = spark.readStream.schema(parquet_schema(spark, src_dir)).format("parquet")
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     return normalize_ts(reader.load(src_dir), ["ts"])
@@ -524,6 +527,23 @@ def test_stream_queries_leave_no_view_checkpoint_or_output_dir(
             assert want > 0 and df.count() == want, n
     finally:
         con.close()
+
+
+def test_stream_read_backs_declare_their_schema(spark):
+    """``stream_asof_enrichment`` and ``stream_bottomk_sample`` read back
+    the directory their sink wrote with the schema the sink writes, and
+    their ``events`` scans take the memoized footer schema, so a warm
+    call launches no schema-inference job.  The jobs left in the
+    calling thread are the queries' own spools, writes and collects;
+    each inferring read would add one."""
+    from ml_feature_store_enterprise_grade_spark import registry
+
+    budgets = {"stream_asof_enrichment": 3, "stream_bottomk_sample": 6}
+    for name, budget in budgets.items():
+        fn = registry.queries()[name]
+        fn(spark, SF_SMOKE)
+        _, jobs = count_jobs(spark, fn, spark, SF_SMOKE)
+        assert jobs <= budget, (name, jobs)
 
 
 def test_stream_online_materialize_frames_survive_a_second_call(spark):

@@ -41,7 +41,9 @@ that materializes every row) after a warm-up pass primes the JVM.
 BENCH_DETAIL.json (not stdout) also holds ``compiles``: for each query,
 the number of classes Spark's Janino compiler built during each timed
 sample, in sample order.  A query whose every sample compiles has plans
-that miss the session's generated-code cache on each pass.
+that miss the session's generated-code cache on each pass.  It says
+what produced it: ``git_sha`` (the checkout's commit, null outside a
+git work tree) and ``cpus`` (the session's ``defaultParallelism``).
 """
 
 from __future__ import annotations
@@ -49,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -365,6 +368,21 @@ def _calibrate(spark, sf_dir: str) -> tuple[float, float]:
     return cal_batch, cal_stream
 
 
+def _git_sha() -> str | None:
+    """The commit this checkout is at, or None outside a git work tree."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip() or None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -495,6 +513,8 @@ def main() -> None:
             json.dump(
                 {
                     "sf": sf_val,
+                    "git_sha": _git_sha(),
+                    "cpus": spark.sparkContext.defaultParallelism,
                     "names_sha256_8": names_h,
                     "calibration_batch_sec": cal_batch,
                     "calibration_stream_sec": cal_stream,

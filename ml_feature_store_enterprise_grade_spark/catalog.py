@@ -9,10 +9,10 @@ footer — once: :func:`parquet_schema` infers it the first time it sees
 a file (one Spark footer job) and serves it from the memo after that,
 keyed by the file's identity (size and ``mtime_ns``; for a directory,
 every file's), so a rewritten file gets a new key and never a stale
-schema.  Every read then declares its schema (``read.schema(s)``;
-``tests/test_reuse_rules.py`` names the few index re-reads that still
-infer one), and loading normalizes physical quirks (nanosecond
-parquet timestamps) into clean engine types.
+schema.  Every read then declares its schema (``read.schema(s)``),
+and loading normalizes physical quirks (nanosecond parquet timestamps)
+into clean engine types.  Tables the engine writes itself carry a
+``_SCHEMA`` manifest instead (``sources/files.py``).
 
 At 100 TB these reads are partitioned parquet scans; all queries
 filter/prune on the columns they need so Catalyst pushes predicates

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table, memo, spread
 from ..functions import NORMALIZE_TEXT_SQL, PORTABLE_HASH64_SQL, normalize_text, portable_hash64
 from ..registry import register
+from ..sources.files import read_table, write_table
 
 #: Drop shingles occurring in more than this many docs before the
 #: pair join (no discrimination value, quadratic cost).
@@ -1795,8 +1796,9 @@ class DedupIndex:
     fold admitted documents back in — the corpus itself is never
     re-scanned, re-shingled, or self-joined.
 
-    Layout under ``path`` — every write lands in an
-    ``ingest=<id>`` subdirectory of its table:
+    Layout under ``path`` — five engine tables (``sources/files.py``:
+    a ``_SCHEMA`` manifest at each table's root), and every write
+    lands in an ``ingest=<id>`` subdirectory of its table:
 
     * ``hashes/ingest=<id>/``      — ``(text_hash, doc_id)``: exact-dup probe.
     * ``bands/ingest=<id>/band=<b>/`` — ``(h1, h2, doc_id)``: LSH buckets.
@@ -1843,70 +1845,17 @@ class DedupIndex:
         return idx
 
     def _read(self, table: str, exclude_ingest: str | None = None) -> DataFrame:
-        """Read a standing table across all ingests (partition
-        discovery surfaces ``ingest``; excluding one id prunes that
-        partition directory from the scan entirely).
-
-        Cold-start guard: a zero-row ``partitionBy`` write (the
-        ``bands`` table under an empty build, which the streaming
-        admission pipeline explicitly supports) leaves a directory
-        with a ``_SUCCESS`` marker but NO schema-bearing parquet file
-        — Spark only writes metadata-only files for non-partitioned
-        empty writes — so schema inference fails.  Fall back to a
-        typed empty frame, taking ``doc_id``'s type from the
-        ``signatures`` table (non-partitioned, always schema-bearing
-        after any build, even an empty one).
-
-        The fallback is gated on ``table == 'bands'`` AND the table
-        directory actually existing: ``bands`` is the only partitioned
-        standing table (the only one that can legitimately be
-        schema-less), and a genuinely missing/deleted directory must
-        stay a loud error — silently substituting an empty frame
-        there would turn near-dup detection off instead of failing."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = self.spark.read.parquet(f"{self.path}/{table}")
-        except AnalysisException:
-            if table != "bands" or not self._table_dir_exists(table):
-                raise
-            df = self._empty_bands()
+        """Read a standing table across all ingests with its manifest's
+        schema (``sources/files.py``), so the read launches no job and
+        an empty build reads back as a typed empty table; excluding
+        one ingest id prunes that partition directory from the scan.
+        A deleted table has no manifest and raises
+        ``FileNotFoundError``: a probe must never silently lose one of
+        its checks."""
+        df = read_table(self.spark, f"{self.path}/{table}")
         if exclude_ingest is not None:
             df = df.filter(F.col("ingest") != exclude_ingest)
         return df.drop("ingest")
-
-    def _table_dir_exists(self, table: str) -> bool:
-        """Filesystem-portable existence probe (Hadoop FS API, so it
-        holds for HDFS/S3 paths, not just local disk)."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{table}")
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
-
-    def _empty_bands(self) -> DataFrame:
-        """Typed empty stand-in for a schema-less ``bands`` directory
-        (the only partitioned standing table)."""
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        doc_id_type = self.spark.read.parquet(f"{self.path}/signatures").schema[
-            "doc_id"
-        ].dataType
-        schema = StructType(
-            [
-                StructField("doc_id", doc_id_type),
-                StructField("band", IntegerType()),
-                StructField("h1", LongType()),
-                StructField("h2", LongType()),
-                StructField("ingest", StringType()),
-            ]
-        )
-        return self.spark.createDataFrame([], schema)
 
     def _shingle_df(self, exclude_ingest: str | None = None) -> DataFrame:
         return (
@@ -1932,19 +1881,24 @@ class DedupIndex:
         return minhash_signatures(sh.join(frequent, "shingle", "left_anti"))
 
     def _write_artifacts(self, nd: DataFrame, ingest_id: str) -> None:
+        root = self.path
         nd = nd.cache()
-        nd.select(F.md5("norm").alias("text_hash"), "doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/hashes/ingest={ingest_id}")
+        write_table(
+            nd.select(F.md5("norm").alias("text_hash"), "doc_id"),
+            f"{root}/hashes",
+            ingest=ingest_id,
+        )
         # df increment first: signatures of the SAME write exclude this
         # ingest's standing rows, so a re-run sees a consistent view
-        _shingles(nd).groupBy("shingle").agg(F.count("*").alias("df")).write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/shingle_df/ingest={ingest_id}")
+        write_table(
+            _shingles(nd).groupBy("shingle").agg(F.count("*").alias("df")),
+            f"{root}/shingle_df",
+            ingest=ingest_id,
+        )
         sig = self._signatures_of(nd, exclude_ingest=ingest_id).cache()
-        sig.write.mode("overwrite").parquet(f"{self.path}/signatures/ingest={ingest_id}")
-        minhash_band_frame(sig).write.mode("overwrite").partitionBy("band").parquet(
-            f"{self.path}/bands/ingest={ingest_id}"
+        write_table(sig, f"{root}/signatures", ingest=ingest_id)
+        write_table(
+            minhash_band_frame(sig), f"{root}/bands", partition_by="band", ingest=ingest_id
         )
         sig.unpersist()
         # Substring-level state: the distinct (span-hash, doc) pairs of
@@ -1952,10 +1906,12 @@ class DedupIndex:
         # provenance.  The largest standing table (≈ one row per
         # token), which is inherent to substring dedup: Lee et al.'s
         # suffix arrays carry the same order of state.
-        _span_rows(nd.select("doc_id", F.split("norm", " ").alias("toks"))).select(
-            "h", "doc_id"
-        ).distinct().write.mode("overwrite").parquet(
-            f"{self.path}/spans/ingest={ingest_id}"
+        write_table(
+            _span_rows(nd.select("doc_id", F.split("norm", " ").alias("toks")))
+            .select("h", "doc_id")
+            .distinct(),
+            f"{root}/spans",
+            ingest=ingest_id,
         )
         nd.unpersist()
 
@@ -2105,34 +2061,16 @@ class DedupIndex:
         root = self.path
         gen = f"compact-{uuid.uuid4().hex[:8]}"
         olds = {
-            t: [
-                d
-                for d in os.listdir(f"{root}/{t}")
-                if d.startswith("ingest=")
-            ]
+            t: [d for d in os.listdir(f"{root}/{t}") if d.startswith("ingest=")]
             for t in self._TABLES
-            if os.path.isdir(f"{root}/{t}")
         }
-        self._shingle_df().write.mode("overwrite").parquet(
-            f"{root}/shingle_df/ingest={gen}"
-        )
-        self._read("hashes").write.mode("overwrite").parquet(
-            f"{root}/hashes/ingest={gen}"
-        )
-        self._read("signatures").write.mode("overwrite").parquet(
-            f"{root}/signatures/ingest={gen}"
-        )
-        self._read("bands").write.mode("overwrite").partitionBy("band").parquet(
-            f"{root}/bands/ingest={gen}"
-        )
+        write_table(self._shingle_df(), f"{root}/shingle_df", ingest=gen)
+        write_table(self._read("hashes"), f"{root}/hashes", ingest=gen)
+        write_table(self._read("signatures"), f"{root}/signatures", ingest=gen)
+        write_table(self._read("bands"), f"{root}/bands", partition_by="band", ingest=gen)
         # distinct() collapses (h, doc_id) pairs a redelivered ingest
-        # may have duplicated across generations.  The isdir guard
-        # matches the olds listing above: an index persisted before
-        # the spans table existed compacts its other tables cleanly.
-        if os.path.isdir(f"{root}/spans"):
-            self._read("spans").distinct().write.mode("overwrite").parquet(
-                f"{root}/spans/ingest={gen}"
-            )
+        # may have duplicated across generations.
+        write_table(self._read("spans").distinct(), f"{root}/spans", ingest=gen)
         for t, dirs in olds.items():
             for d in dirs:
                 _sh.rmtree(f"{root}/{t}/{d}", ignore_errors=True)

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from ..catalog import cached_count, load_table, local_rows, memo, spread
 from ..functions import PORTABLE_HASH64_SQL, portable_hash64
 from ..registry import register
+from ..sources.files import read_table, write_table
 from .text import _BM25_SCORED_SQL_CTES  # no cycle: text does not import similarity
 
 #: spread() quantum for embedding frames (r14): 64 packed doubles per
@@ -463,7 +464,9 @@ class VectorIndex:
 
     * :meth:`build` — train the coarse codebook (spherical k-means),
       assign every vector to its nearest cell, write
-      ``{path}/centroids`` + ``{path}/cells/ingest=base/cell=<i>/``.
+      ``{path}/centroids`` + ``{path}/cells/ingest=base/cell=<i>/``
+      (two engine tables, each with its ``_SCHEMA`` manifest:
+      ``sources/files.py``).
     * :meth:`add` — fold an arriving batch in under the frozen
       codebook; per-ingest subtrees make re-delivery idempotent.
     * :meth:`search` — assign the query batch to its ``nprobe``
@@ -479,11 +482,9 @@ class VectorIndex:
     def build(cls, emb: DataFrame, path: str, k: int = 8) -> "VectorIndex":
         spark = emb.sparkSession
         cent = ivf_codebook(emb, k)
-        cent.write.mode("overwrite").parquet(f"{path}/centroids")
+        write_table(cent, f"{path}/centroids")
         idx = cls(spark, path)
-        idx._assign(emb).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/cells/ingest=base"
-        )
+        write_table(idx._assign(emb), f"{path}/cells", partition_by="cell", ingest="base")
         return idx
 
     def _assign(self, emb: DataFrame) -> DataFrame:
@@ -492,7 +493,7 @@ class VectorIndex:
         beyond (vec_id, embedding) ride along into the cell layout, so
         searches can filter on them (:meth:`search` ``where=``)."""
         cent_n = with_norm(
-            self.spark.read.parquet(f"{self.path}/centroids"), "centroid"
+            read_table(self.spark, f"{self.path}/centroids"), "centroid"
         ).select("cell", F.col("centroid").alias("c_emb"), F.col("nrm").alias("c_nrm"))
         vecs = with_norm(emb)
         w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("cell"))
@@ -523,8 +524,8 @@ class VectorIndex:
         self._check_layout()
         if ingest_id is None:
             ingest_id = _uuid.uuid4().hex[:12]
-        self._assign(emb).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{self.path}/cells/ingest={ingest_id}"
+        write_table(
+            self._assign(emb), f"{self.path}/cells", partition_by="cell", ingest=ingest_id
         )
 
     def compact(self) -> None:
@@ -547,14 +548,14 @@ class VectorIndex:
         olds = [d for d in os.listdir(root) if d.startswith("ingest=")]
         gen = f"compact-{_uuid.uuid4().hex[:8]}"
         # drop() only the ingest partition column: metadata columns
-        # (e.g. a label used by filtered search) must survive
-        # compaction exactly as _assign stored them.
-        (
-            self.spark.read.parquet(root)
-            .drop("ingest")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{root}/ingest={gen}")
+        # (e.g. a label used by filtered search, even one that only
+        # later ingests carry) must survive compaction exactly as
+        # _assign stored them.
+        write_table(
+            read_table(self.spark, root).drop("ingest"),
+            root,
+            partition_by="cell",
+            ingest=gen,
         )
         for d in olds:
             _sh.rmtree(f"{root}/{d}", ignore_errors=True)
@@ -604,7 +605,7 @@ class VectorIndex:
         plan)."""
         import math as _math
 
-        cent_rows = self.spark.read.parquet(f"{self.path}/centroids").collect()
+        cent_rows = read_table(self.spark, f"{self.path}/centroids").collect()
         cent_lit = F.array(*[
             F.struct(
                 F.lit(int(r.cell)).alias("cell"),
@@ -632,7 +633,7 @@ class VectorIndex:
         # Static partition pruning: the probed-cell set is tiny —
         # collect it and filter, so the scan lists only those dirs.
         cells = [r.cell for r in probed.select("cell").distinct().collect()]
-        corpus = self.spark.read.parquet(f"{self.path}/cells").filter(F.col("cell").isin(cells))
+        corpus = read_table(self.spark, f"{self.path}/cells").filter(F.col("cell").isin(cells))
         if where is not None:
             corpus = corpus.filter(F.expr(where) if isinstance(where, str) else where)
         nmeta = [

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, local_rows
 from ..functions import PORTABLE_HASH64_SQL, portable_hash64
 from ..registry import register
+from ..sources.files import read_table, write_table
 
 # --------------------------------------------------------------------------
 # KMV audience overlap
@@ -503,14 +504,12 @@ class HistogramSketchStore:
         self.bin_w = bin_w
 
     def build(self, events: DataFrame) -> None:
-        hist_day_sketch(events, self.bin_w).write.mode("overwrite").partitionBy(
-            "day"
-        ).parquet(self.path)
+        write_table(hist_day_sketch(events, self.bin_w), self.path, partition_by="day")
 
     def merged(self, start: str | None = None, end: str | None = None) -> DataFrame:
         """(event_type, bin, cnt) summed over the day range
         [start, end] (inclusive bounds, either side open)."""
-        sk = self.spark.read.parquet(self.path)
+        sk = read_table(self.spark, self.path)
         if start is not None:
             sk = sk.filter(F.col("day") >= F.lit(start).cast("date"))
         if end is not None:

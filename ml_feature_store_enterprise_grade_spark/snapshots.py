@@ -6,7 +6,8 @@ online_upsert_sink``): a snapshot lives as immutable ``v=N``
 generation directories behind a ``_CURRENT`` pointer file.
 
 Commit is two durable steps — (1) fsync a ``_COMMITTED`` marker into
-the fully-assembled generation, (2) fsync + atomically rename the
+the fully-assembled generation, after its files and its ``_SCHEMA``
+manifest (``sources/files.py``), (2) fsync + atomically rename the
 pointer — so a crash at ANY point leaves either the previous pointer
 (and its intact generation) or a marker from which the pointer is
 reconstructed.  Readers resolve the pointer once and then read a tree
@@ -14,14 +15,13 @@ that is never mutated; a retention window of recent generations gives
 in-flight readers a grace period (a lease protocol is the
 object-store-native upgrade).
 
-The marker is the generation's manifest: JSON holding the schema the
-writer produced and, for a batch materialization, the high-water-mark
-offline partition it read up to.  It is fsynced before the pointer
-flips, so this metadata commits atomically with the data, and
-:func:`read_snapshot` opens a generation without a footer-inference
-job.  On an object store the pointer file and the markers become the
-table's metadata log — this is the standard table-format commit
-protocol built from filesystem primitives.
+The marker is JSON holding, for a batch materialization, the
+high-water-mark offline partition it read up to.  It is fsynced before
+the pointer flips, so the mark commits atomically with the data.  A
+generation is an ordinary engine table: read it with
+``sources.files.read_table``.  On an object store the pointer file and
+the markers become the table's metadata log — this is the standard
+table-format commit protocol built from filesystem primitives.
 """
 
 from __future__ import annotations
@@ -30,10 +30,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-#: The per-generation manifest (see module doc).
+#: The per-generation commit marker (see module doc).
 MARKER = "_COMMITTED"
 
 #: Committed generations retained besides the current one.  This is a
@@ -90,29 +87,19 @@ def gc_generations(path: str, cur: int | None, retain: int = GEN_RETAIN) -> None
 
 
 def read_marker(gen_dir: str) -> dict:
-    """The manifest of a committed generation: ``{"schema": <StructType
-    JSON>, "hwm": <partition value or None>}``."""
+    """The marker of a committed generation: ``{"hwm": <partition value
+    or None>}``."""
     with open(os.path.join(gen_dir, MARKER)) as fh:
         return json.load(fh)
 
 
-def read_snapshot(spark: SparkSession, gen_dir: str) -> DataFrame:
-    """A committed generation, read with the schema its marker holds,
-    so opening it launches no Spark job."""
-    schema = StructType.fromJson(read_marker(gen_dir)["schema"])
-    return spark.read.schema(schema).parquet(gen_dir)
-
-
-def commit_generation(
-    path: str, new_gen: int, schema: StructType, hwm: str | None = None
-) -> None:
-    """Durably commit a fully-assembled ``v=new_gen`` directory whose
-    files hold ``schema``: fsync the marker carrying ``schema`` and
-    ``hwm``, then fsync + atomically rename the pointer, then
-    :func:`gc_generations` from the new pointer."""
+def commit_generation(path: str, new_gen: int, hwm: str | None = None) -> None:
+    """Durably commit a fully-assembled ``v=new_gen`` directory: fsync
+    the marker carrying ``hwm``, then fsync + atomically rename the
+    pointer, then :func:`gc_generations` from the new pointer."""
     marker = os.path.join(generation_dir(path, new_gen), MARKER)
     with open(marker, "w") as fh:
-        json.dump({"schema": schema.jsonValue(), "hwm": hwm}, fh)
+        json.dump({"hwm": hwm}, fh)
         fh.flush()
         os.fsync(fh.fileno())
     write_atomic(os.path.join(path, "_CURRENT"), str(new_gen))

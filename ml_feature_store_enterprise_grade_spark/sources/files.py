@@ -1,4 +1,5 @@
-"""File sources & sinks: schema-declared CSV, partitioned Parquet.
+"""File sources & sinks: schema-declared CSV and JSON lines, and the
+engine's one parquet table format.
 
 Re-expresses the reference's file I/O surface (SURVEY §2.1):
 
@@ -14,13 +15,28 @@ Re-expresses the reference's file I/O surface (SURVEY §2.1):
   a last-N fallback (airflow/dags/feature_store_materialization.py:
   128-160).
 
+Table format.  Every parquet table the engine writes — the offline
+store, each online snapshot generation, the ``DedupIndex`` and
+``VectorIndex`` tables, the histogram sketch store and the streaming
+queries' read-backs — is a directory of parquet files with a
+``_SCHEMA`` manifest at its root: StructType JSON of every field ever
+written, by name, in first-written order, partition columns included.
+:func:`write_table` is the one writer: it merges the frame's schema
+into the manifest (a type change raises before any data lands), writes
+the files, then replaces the manifest atomically.  :func:`read_table`
+is the one reader: ``spark.read.schema(manifest).parquet(table)``, so a
+read infers nothing from file footers and launches no job, a column
+that some files lack reads as NULL, and an empty table (even a
+zero-row partitioned write, which leaves no parquet file) reads back
+typed.  Spark's file listing skips ``_``-prefixed names, so scans never
+see the manifest.  A table written without one cannot be read: write
+it again.
+
 Scale notes: partitioned writes shuffle-free (each task writes its
 partition values); reads with an equality/range filter on the
 partition column prune at planning time (check ``PartitionFilters``
 in ``df.explain``) — at 100 TB a day's read touches one partition,
-never the directory tree.  The store's schema lives in a
-``_SCHEMA`` manifest beside the partitions, so a read infers nothing
-from file footers and launches no job.
+never the directory tree.
 """
 
 from __future__ import annotations
@@ -29,13 +45,11 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..snapshots import write_atomic
 
-#: A partitioned store's schema manifest: every field ever written, by
-#: name, in first-written order, as StructType JSON.
+#: A table's schema manifest (module doc).
 SCHEMA_MANIFEST = "_SCHEMA"
 
 
@@ -52,30 +66,41 @@ def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
     df.write.mode("overwrite").option("header", header).csv(path)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_col: str = "event_date", mode: str = "overwrite"
+def write_table(
+    df: DataFrame,
+    table: str,
+    *,
+    partition_by: str | None = None,
+    ingest: str | None = None,
+    mode: str = "overwrite",
 ) -> None:
-    """S2 (batch): snappy-parquet offline store partitioned by date.
+    """Write ``df`` into ``table`` and merge its schema into the
+    table's ``_SCHEMA`` manifest (module doc).
 
-    ``partitionOverwriteMode=dynamic`` is set engine-wide (session.py)
-    so an incremental rewrite replaces only the partitions present in
-    ``df`` — the 100 TB-safe upsert path.
-
-    After the data lands, ``df.schema`` is merged by name into the
-    ``_SCHEMA`` manifest (:func:`merge_schema`; a type change raises
-    before anything is written) and the manifest is replaced
-    atomically."""
-    manifest = os.path.join(path, SCHEMA_MANIFEST)
+    ``partition_by`` partitions the files by one column; with
+    ``partitionOverwriteMode=dynamic`` (set engine-wide, session.py)
+    an overwrite replaces only the partitions present in ``df`` — the
+    100 TB-safe upsert path.  ``ingest`` writes into
+    ``<table>/ingest=<id>`` instead, replacing that one ingest's
+    subtree and nothing else, so a re-delivered ingest converges; the
+    manifest then records ``ingest`` as a string column."""
+    schema, target = df.schema, table
+    if ingest is not None:
+        schema = StructType([*schema.fields, StructField("ingest", StringType())])
+        target = os.path.join(table, f"ingest={ingest}")
+    manifest = os.path.join(table, SCHEMA_MANIFEST)
     schema = merge_schema(
-        read_manifest(path) if os.path.exists(manifest) else None, df.schema
+        read_manifest(table) if os.path.exists(manifest) else None, schema
     )
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    writer = df.write.mode(mode)
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(target)
     write_atomic(manifest, json.dumps(schema.jsonValue()))
 
 
 def read_manifest(path: str) -> StructType:
-    """The schema manifest of a partitioned store (a store written
-    without one cannot be read: write it again)."""
+    """The ``_SCHEMA`` manifest of the table at ``path``."""
     with open(os.path.join(path, SCHEMA_MANIFEST)) as fh:
         return StructType.fromJson(json.load(fh))
 
@@ -97,28 +122,11 @@ def merge_schema(old: StructType | None, new: StructType) -> StructType:
     return StructType(fields)
 
 
-def read_partitioned(
-    spark: SparkSession,
-    path: str,
-    partition_col: str = "event_date",
-    start=None,
-    end=None,
-) -> DataFrame:
-    """Read the offline store with partition pruning: the
-    ``partition_col`` predicates resolve against directory names at
-    planning time (PartitionFilters), so only matching dirs are
-    listed/scanned.
-
-    The read takes the ``_SCHEMA`` manifest's schema, so a feature view
-    can GAIN columns over time — rows from partitions written before
-    the column existed read as NULL — and no footer is read at
-    planning."""
-    df = spark.read.schema(read_manifest(path)).parquet(path)
-    if start is not None:
-        df = df.filter(F.col(partition_col) >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col(partition_col) < F.lit(end))
-    return df
+def read_table(spark: SparkSession, table: str) -> DataFrame:
+    """A table :func:`write_table` wrote, read with its manifest's
+    schema (module doc).  Filter the partition column to prune: the
+    predicate resolves against directory names at planning time."""
+    return spark.read.schema(read_manifest(table)).parquet(table)
 
 
 def partition_exists(path: str, partition_col: str, value) -> bool:

@@ -18,7 +18,7 @@ offline Parquet store           :meth:`FeatureStore.write_offline` —
 ``feast materialize-            :meth:`FeatureStore.materialize` —
 incremental``                   incremental latest-per-key snapshot (S8),
                                 committed as a generation whose marker
-                                holds its schema and high-water mark
+                                holds its high-water mark
 ``get_online_features``         :meth:`FeatureStore.get_online_features`
                                 — spooled entity batch, one semi-filtered
                                 broadcast LEFT plan per view (S9/J2)
@@ -42,10 +42,10 @@ Semantics preserved from the reference:
   then merged against the previous snapshot.
 
 Each call reads each of its inputs once: the caller's entity frame is
-spooled with ``localCheckpoint()`` before any plan uses it, and a
-snapshot generation is opened with the schema its commit marker holds
-(``snapshots.read_snapshot``), so neither is evaluated or inferred
-twice.
+spooled with ``localCheckpoint()`` before any plan uses it, and the
+offline store and each snapshot generation are read with the schema
+their ``_SCHEMA`` manifest holds (``sources.files.read_table``), so
+nothing is evaluated twice or inferred.
 
 Scale: the offline store is the system of record — date-partitioned
 parquet whose reads prune to the queried dates; the online snapshot
@@ -68,12 +68,11 @@ from .snapshots import (
     generation_dir,
     read_generation,
     read_marker,
-    read_snapshot,
     resolve_snapshot,
 )
 from .operators.asof import asof_join, latest_snapshot, lookup_latest
 from .session import ensure_engine_confs
-from .sources.files import latest_partitions, read_partitioned, write_partitioned
+from .sources.files import latest_partitions, read_table, write_table
 
 
 @dataclass(frozen=True)
@@ -153,19 +152,25 @@ class FeatureStore:
     def write_offline(self, view_name: str, df: DataFrame, mode: str = "overwrite") -> None:
         """Persist a feature frame to the date-partitioned offline
         store, deriving the partition column from the view's
-        timestamp field when absent.  The frame's schema is merged into
-        the store's ``_SCHEMA`` manifest, which reads take, so a read
-        launches no footer-merge job."""
+        timestamp field when absent, as an engine table partitioned by
+        that column (``sources/files.py``): only the partitions in
+        ``df`` are replaced, and a read launches no footer job."""
         v = self.views[view_name]
         if v.partition_col not in df.columns:
             df = df.withColumn(v.partition_col, F.to_date(v.timestamp_field))
-        write_partitioned(df, self._offline_path(view_name), v.partition_col, mode=mode)
+        write_table(
+            df, self._offline_path(view_name), partition_by=v.partition_col, mode=mode
+        )
 
     def read_offline(self, view_name: str, start=None, end=None) -> DataFrame:
+        """The offline store, pruned to partitions in [start, end)."""
         v = self.views[view_name]
-        return read_partitioned(
-            self.spark, self._offline_path(view_name), v.partition_col, start, end
-        )
+        df = read_table(self.spark, self._offline_path(view_name))
+        if start is not None:
+            df = df.filter(F.col(v.partition_col) >= F.lit(start))
+        if end is not None:
+            df = df.filter(F.col(v.partition_col) < F.lit(end))
+        return df
 
     # -- materialization (S8) ------------------------------------------
     def materialize(self, view_name: str, incremental: bool = True) -> DataFrame:
@@ -191,7 +196,7 @@ class FeatureStore:
         start = None
         if incremental and cur is not None:
             prev_dir = generation_dir(online, cur)
-            prev = read_snapshot(self.spark, prev_dir)
+            prev = read_table(self.spark, prev_dir)
             start = read_marker(prev_dir)["hwm"]
         # Listed BEFORE the read: a partition that lands in between is
         # re-read by the next run, never skipped.
@@ -213,9 +218,9 @@ class FeatureStore:
         # and a crash at any point leaves a resolvable snapshot.
         new_gen = (cur or 0) + 1
         new_dir = generation_dir(online, new_gen)
-        snap.write.mode("overwrite").parquet(new_dir)
-        commit_generation(online, new_gen, snap.schema, hwm=newest[0] if newest else None)
-        return read_snapshot(self.spark, new_dir)
+        write_table(snap, new_dir)
+        commit_generation(online, new_gen, hwm=newest[0] if newest else None)
+        return read_table(self.spark, new_dir)
 
     def _snapshot(self, view_name: str) -> DataFrame:
         gen_dir = resolve_snapshot(self._online_path(view_name))
@@ -223,7 +228,7 @@ class FeatureStore:
             raise FileNotFoundError(
                 f"view {view_name!r} not materialized; call materialize() first"
             )
-        return read_snapshot(self.spark, gen_dir)
+        return read_table(self.spark, gen_dir)
 
     def export_online(self, view_name: str, writer, batch_size: int = 10_000) -> None:
         """Push the online snapshot to an external KV store (the

@@ -51,11 +51,11 @@ from ..snapshots import (
     gc_generations,
     generation_dir,
     read_generation,
-    read_snapshot,
     resolve_snapshot,
 )
 from ..registry import register
 from ..session import ensure_engine_confs
+from ..sources.files import read_table, write_table
 
 WATERMARK = "15 minutes"
 
@@ -597,7 +597,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
             if not touched:
                 batch.unpersist()
                 return
-            prev = read_snapshot(spark, cur_dir).filter(F.col("bucket").isin(touched))
+            prev = read_table(spark, cur_dir).filter(F.col("bucket").isin(touched))
             merged = prev.unionByName(batch, allowMissingColumns=True)
             n_parts = len(touched)
         snap = latest_snapshot(merged, key="user_id", feature_ts="feature_timestamp")
@@ -605,9 +605,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
         # One write task per bucket: without this, every shuffle
         # partition opens a file in every touched bucket dir —
         # tasks × buckets tiny files instead of one per bucket.
-        snap.repartition(n_parts, "bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(new_dir)
+        write_table(snap.repartition(n_parts, "bucket"), new_dir, partition_by="bucket")
         batch.unpersist()
         # Carry untouched buckets forward as hardlinks.
         if cur_dir is not None:
@@ -627,7 +625,7 @@ def online_upsert_sink(online_path: str, n_buckets: int = _ONLINE_BUCKETS):
                         os.link(src, dst)
                     except OSError:  # cross-device fallback
                         shutil.copy2(src, dst)
-        commit_generation(online_path, new_gen, snap.schema)
+        commit_generation(online_path, new_gen)
 
     return _upsert
 
@@ -684,7 +682,7 @@ def stream_online_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # empty frame with the output schema, not an opaque crash.
             return spark.createDataFrame([], result.drop("bucket").schema)
         # spool the snapshot so its directory goes with the call
-        return read_snapshot(spark, snap_dir).drop("bucket").localCheckpoint()
+        return read_table(spark, snap_dir).drop("bucket").localCheckpoint()
     finally:
         shutil.rmtree(online, ignore_errors=True)
 

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from ..catalog import ensure_engine_confs
 from ..functions import normalize_text
 from ..operators.dedup import DedupIndex
+from ..sources.files import read_table, write_table
 from .clickstream import run_available_now
 
 #: Arriving-file schemas (a stream source never infers one).
@@ -69,9 +70,7 @@ def admission_batch_processor(index_path: str, admitted_path: str):
         admitted = firsts.join(
             verdicts.filter(F.col("verdict") == "admit"), "doc_id", "left_semi"
         ).cache()
-        admitted.write.mode("overwrite").parquet(
-            f"{admitted_path}/ingest={ingest}"
-        )
+        write_table(admitted, admitted_path, ingest=ingest)
         idx.add(admitted, ingest_id=ingest)
         admitted.unpersist()
 
@@ -106,7 +105,7 @@ def stream_corpus_admission(
         "corpus_admission",
         sink=admission_batch_processor(index_path, admitted_path),
     )
-    return spark.read.parquet(admitted_path).drop("ingest")
+    return read_table(spark, admitted_path).drop("ingest")
 
 
 def stream_vector_ingestion(
@@ -140,4 +139,4 @@ def stream_vector_ingestion(
         "vector_ingestion",
         sink=lambda b, bid: idx.add(b, ingest_id=f"batch{bid}"),
     )
-    return spark.read.parquet(f"{index_path}/cells")
+    return read_table(spark, f"{index_path}/cells")

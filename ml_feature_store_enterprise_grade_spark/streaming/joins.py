@@ -42,6 +42,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..catalog import load_table
 from ..functions.scalar import MONEY, money
 from ..registry import register
+from ..sources.files import read_table, write_table
 from .clickstream import (
     WATERMARK,
     compute_floor,
@@ -514,9 +515,6 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(
         tempfile.gettempdir(), f"asof_enrich_{uuid.uuid4().hex[:8]}"
     )
-    # The schema every batch writes: the read-back declares it instead
-    # of inferring it with a footer job.
-    written: dict = {}
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         j = batch_df.join(
@@ -549,8 +547,7 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("f.f_total_revenue").cast("double").alias("f_total_revenue"),
             )
         )
-        written["schema"] = latest.schema
-        latest.write.mode("append").parquet(out_dir)
+        write_table(latest, out_dir, mode="append")
 
     ev = streaming_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
     try:
@@ -561,9 +558,7 @@ def stream_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink=enrich,
         )
         # spool the sink's output so its directory goes with the call
-        return (
-            spark.read.schema(written["schema"]).parquet(out_dir).localCheckpoint()
-        )
+        return read_table(spark, out_dir).localCheckpoint()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -205,3 +205,16 @@ def test_item_pagerank_invariants(spark):
     assert abs(total - 1.0) < 1e-3
     assert all(r.pr_permille > 0 for r in rows)
     assert all(r.deg >= 1 for r in rows)
+
+
+@pytest.mark.slow
+def test_als_fused_loss_two_stages(spark):
+    from ml_feature_store_enterprise_grade_spark.operators.analytics import (
+        item_implicit_als_epoch,
+    )
+
+    out = item_implicit_als_epoch(spark, SF_SMOKE).collect()
+    # the fused single-pass aggregate must still unpack to the two
+    # report rows with a shared interaction count
+    assert [r.stage for r in out] == ["after_epoch", "after_item_step"]
+    assert out[0].n_interactions == out[1].n_interactions > 0

@@ -194,7 +194,7 @@ def test_empty_build_cold_start(spark, split, tmp_path):
     every verdict is admit, probe_spans reports zero coverage, and a
     subsequent add() warms it up to normal behavior.  Regression for
     the zero-row partitionBy write leaving bands/ with no
-    schema-bearing parquet file (UNABLE_TO_INFER_SCHEMA)."""
+    schema-bearing parquet file: the table's manifest types it."""
     corpus, batch = split
     idx = DedupIndex.build(corpus.filter("1=0"), str(tmp_path / "cold"))
     verdicts = idx.probe(batch).collect()
@@ -214,23 +214,20 @@ def test_empty_build_cold_start(spark, split, tmp_path):
 
 @pytest.mark.slow
 def test_missing_table_dir_raises_loudly(spark, split, tmp_path):
-    """The empty-frame fallback in ``_read`` is ONLY for the
-    cold-start ``bands`` shape (dir exists, no schema-bearing file).
-    A genuinely deleted standing table must raise, not silently
-    disable its dedup check — a probe that can't see ``hashes`` would
-    otherwise admit every exact duplicate."""
+    """A deleted standing table has no ``_SCHEMA`` manifest, so
+    reading it raises ``FileNotFoundError`` instead of silently
+    disabling its dedup check — a probe that can't see ``hashes``
+    would otherwise admit every exact duplicate.  An empty build's
+    ``bands`` table (no parquet file, but a manifest) still reads."""
     import shutil
-
-    from pyspark.errors import AnalysisException
 
     corpus, batch = split
     idx = DedupIndex.build(corpus, str(tmp_path / "idx"))
     shutil.rmtree(tmp_path / "idx" / "hashes")
-    with pytest.raises(AnalysisException):
+    with pytest.raises(FileNotFoundError):
         idx.probe(batch).collect()
-    # and a deleted bands dir (not the schema-less cold-start shape)
-    # is equally loud — the gate requires the directory to EXIST.
+    # and a deleted bands dir is equally loud
     idx2 = DedupIndex.build(corpus, str(tmp_path / "idx2"))
     shutil.rmtree(tmp_path / "idx2" / "bands")
-    with pytest.raises(AnalysisException):
+    with pytest.raises(FileNotFoundError):
         idx2.probe(batch).collect()

@@ -343,10 +343,10 @@ def test_historical_export_reads_entity_frame_once(two_views, spark):
 
 def test_materialize_and_snapshot_job_budget(two_views, spark):
     """Incremental materialize launches at most 2 jobs (the
-    latest-per-key shuffle, the write): the offline schema comes from
-    the store's ``_SCHEMA`` manifest, the previous generation's schema
-    and high-water mark from its marker, and so does the returned
-    frame's.  Opening the offline store or a snapshot launches none."""
+    latest-per-key shuffle, the write): the offline store's and each
+    generation's schema come from their ``_SCHEMA`` manifests, the
+    previous generation's high-water mark from its marker.  Opening the
+    offline store or a snapshot launches none."""
     _, jobs = count_jobs(spark, two_views.read_offline, CLICK_VIEW.name)
     assert jobs == 0
     snap, jobs = count_jobs(spark, two_views.materialize, CLICK_VIEW.name, incremental=True)

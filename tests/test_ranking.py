@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from ml_feature_store_enterprise_grade_spark.functions.ranking import (
     ntile_from_rank,
     ranked,
+    ranked_select,
+    running_totals,
     scalable_ntile,
 )
 
@@ -208,3 +210,132 @@ def test_no_single_partition_window_in_plan(spark):
     for line in plan.splitlines():
         if "row_number()" in line:
             assert "_rk_chunk" in line, line
+
+
+def test_ranked_matches_window_row_number(spark):
+    """The spooled chunk machinery must be bit-identical to the
+    single-task Window ``row_number()``/``count()`` on the same frame."""
+    df = (
+        spark.range(0, 5000)
+        .select(
+            (F.col("id") % 97).alias("g"),
+            ((F.col("id") * 1103515245 + 12345) % 2147483647).alias("v"),
+            F.col("id"),
+        )
+    )
+    a = ranked(df, [("v", "asc"), ("id", "asc")], group_cols=["g"]).orderBy(
+        "g", "rn"
+    )
+    w = Window.partitionBy("g").orderBy("v", "id")
+    b = df.select(
+        "*",
+        F.row_number().over(w).cast("bigint").alias("rn"),
+        F.count("*").over(Window.partitionBy("g")).cast("bigint").alias("n_rows"),
+    ).orderBy("g", "rn")
+    got = a.select("g", "v", "id", "rn", "n_rows").collect()
+    assert got == b.collect()
+    assert len(got) == 5000
+
+
+def test_running_totals_matches_window_sum(spark):
+    df = spark.range(0, 3000).select(
+        ((F.col("id") * 48271) % 1000003).alias("v"), F.col("id")
+    )
+    a = running_totals(df, [("v", "asc"), ("id", "asc")], ["v"]).orderBy(
+        "v", "id"
+    )
+    w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
+    b = df.select("*", F.sum("v").over(w).alias("v_cum")).orderBy("v", "id")
+    got = a.select("v", "id", "v_cum").collect()
+    assert got == b.collect()
+    assert len(got) == 3000
+
+
+def _id_v_frame(spark, n=500, groups=0):
+    rows = [
+        (
+            i,
+            (i * 2654435761) % 1000,  # non-monotone value with ties
+            f"g{i % groups}" if groups else "g0",
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "id long, v long, g string")
+
+
+def test_ranked_select_matches_ranked_filter_global(spark):
+    df = _id_v_frame(spark, 501)
+
+    def targets(n):
+        return F.array(
+            (((n + 1) - (n + 1) % 2) / 2).cast("bigint"),  # median lo
+            (((n + 2) - (n + 2) % 2) / 2).cast("bigint"),  # median hi (== lo, odd n)
+            F.lit(1).cast("bigint"),
+            n,  # extremes
+            n + F.lit(5),  # out of range: ignored
+        )
+
+    full = ranked(df, [("v", "asc"), ("id", "asc")])
+    n = F.col("n_rows")
+    cond = (
+        (F.col("rn") == (((n + 1) - (n + 1) % 2) / 2).cast("bigint"))
+        | (F.col("rn") == (((n + 2) - (n + 2) % 2) / 2).cast("bigint"))
+        | (F.col("rn") == 1)
+        | (F.col("rn") == n)
+    )  # n + 5 can never match: out-of-range targets are ignored
+    want = sorted(full.filter(cond).collect())
+    got = sorted(
+        ranked_select(df, [("v", "asc"), ("id", "asc")], targets).collect()
+    )
+    assert got == want
+    # no duplicate rows even when two target expressions coincide
+    # (odd n: median-lo == median-hi)
+    assert len(got) == len({r.id for r in got})
+
+
+@pytest.mark.slow
+def test_ranked_select_matches_ranked_filter_grouped(spark):
+    df = _id_v_frame(spark, 400, groups=7)
+    t = lambda n: F.array(F.ceil((n + 1) * 0.9).cast("bigint"))  # noqa: E731
+    full = ranked(
+        df, [("v", "asc"), ("id", "asc")], group_cols=["g"], n_col="n"
+    )
+    want = sorted(
+        full.filter(
+            F.col("rn") == F.ceil((F.col("n") + 1) * 0.9).cast("bigint")
+        ).collect()
+    )
+    got = sorted(
+        ranked_select(
+            df, [("v", "asc"), ("id", "asc")], t, group_cols=["g"], n_col="n"
+        ).collect()
+    )
+    assert got == want
+
+
+def test_ranked_select_empty_input(spark):
+    df = _id_v_frame(spark, 500).filter("id < 0")
+    out = ranked_select(
+        df, [("v", "asc"), ("id", "asc")], lambda n: F.array(n)
+    )
+    assert out.count() == 0
+
+
+@pytest.mark.slow
+def test_ranked_select_extra_frame(spark):
+    df = _id_v_frame(spark, 300)
+    extra = spark.createDataFrame([(2,)], "k long")
+    # target = n - k, with k coming from the broadcast extra frame
+    got = sorted(
+        ranked_select(
+            df,
+            [("v", "asc"), ("id", "asc")],
+            lambda n: F.array((n - F.col("k")).cast("bigint")),
+            extra=extra,
+        ).collect()
+    )
+    full = ranked(df, [("v", "asc"), ("id", "asc")])
+    want = sorted(
+        full.filter(F.col("rn") == F.col("n_rows") - 2).collect()
+    )
+    assert got == want

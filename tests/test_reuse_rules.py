@@ -238,6 +238,36 @@ def test_load_table_infers_a_footer_schema_once(spark, tmp_path):
     assert (first, second) == (1, 0)
 
 
+def test_engine_table_reads_launch_no_job(spark, tmp_path):
+    """A table the engine wrote is read with its ``_SCHEMA`` manifest,
+    so opening the dedup ``hashes`` table, the ``bands`` table of an
+    empty build (a zero-row partitioned write leaves no parquet file),
+    the vector codebook behind ``VectorIndex._assign`` and the
+    histogram sketch store launches no Spark job."""
+    from ml_feature_store_enterprise_grade_spark.operators.dedup import DedupIndex
+    from ml_feature_store_enterprise_grade_spark.operators.similarity import (
+        VectorIndex,
+    )
+    from ml_feature_store_enterprise_grade_spark.operators.sketches import (
+        HistogramSketchStore,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    full = DedupIndex.build(docs, str(tmp_path / "dedup"))
+    empty = DedupIndex.build(docs.limit(0), str(tmp_path / "empty"))
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    vec = VectorIndex.build(emb, str(tmp_path / "ivf"))
+    sketches = HistogramSketchStore(spark, str(tmp_path / "hist"))
+    sketches.build(load_table(spark, SF_SMOKE, "events"))
+    jobs = {
+        "hashes": count_jobs(spark, full._read, "hashes")[1],
+        "empty bands": count_jobs(spark, empty._read, "bands")[1],
+        "assign": count_jobs(spark, vec._assign, emb)[1],
+        "sketches": count_jobs(spark, sketches.merged)[1],
+    }
+    assert jobs == dict.fromkeys(jobs, 0)
+
+
 def _write_events(path, ts_type: str, first_id: int) -> list[tuple]:
     """Write three ``events`` rows whose ``ts`` is stored as
     ``timestamp[us]`` (``ts_type="us"``) or as int64
@@ -270,21 +300,6 @@ def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
         clear_count_cache(str(tmp_path))
 
 
-#: Package reads that still infer a parquet schema: index and
-#: ingestion re-reads of tables that an earlier call or session wrote,
-#: whose schema no manifest records.
-_INFERRING_READS = {
-    "operators/dedup.py:DedupIndex._read",
-    "operators/dedup.py:DedupIndex._empty_bands",
-    "operators/similarity.py:VectorIndex._assign",
-    "operators/similarity.py:VectorIndex.compact",
-    "operators/similarity.py:VectorIndex.shortlist",
-    "operators/sketches.py:HistogramSketchStore.merged",
-    "streaming/ingestion.py:stream_corpus_admission",
-    "streaming/ingestion.py:stream_vector_ingestion",
-}
-
-
 def _receiver_calls(node: ast.AST) -> list[str]:
     """Names of the calls and attributes a method chain is built on:
     ``spark.read.schema(s).parquet`` gives ``["schema", "read"]``."""
@@ -301,8 +316,9 @@ def _receiver_calls(node: ast.AST) -> list[str]:
 def test_every_parquet_read_declares_its_schema():
     """A ``read.parquet(...)`` infers the schema with a footer job
     unless a ``.schema(...)`` precedes it.  Only
-    ``catalog.parquet_schema`` (which memoizes the result) and the
-    named re-reads above may infer one."""
+    ``catalog.parquet_schema`` may infer one: source tables arrive
+    without a manifest, and it memoizes the result.  Every table the
+    engine writes is read through its ``_SCHEMA`` manifest."""
     found = set()
     for path in sorted(_PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text())
@@ -325,7 +341,7 @@ def test_every_parquet_read_declares_its_schema():
                 visit(child, inner)
 
         visit(tree, [])
-    allowed = _INFERRING_READS | {"catalog.py:parquet_schema"}
+    allowed = {"catalog.py:parquet_schema"}
     assert not found - allowed, (
         "declare the schema with read.schema(...).parquet(...): "
         f"{sorted(found - allowed)}"

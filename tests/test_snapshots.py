@@ -1,13 +1,12 @@
 """Unit tests for the generation-pointer commit protocol
 (snapshots.py): pointer resolution, torn-pointer recovery from markers,
 partial-build GC and retention are pure-filesystem; the last test reads
-a generation through Spark with the schema its marker holds."""
+a generation through Spark with the schema its ``_SCHEMA`` manifest
+holds."""
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ml_feature_store_enterprise_grade_spark.snapshots import (
     GEN_RETAIN,
@@ -16,12 +15,14 @@ from ml_feature_store_enterprise_grade_spark.snapshots import (
     generation_dir,
     read_generation,
     read_marker,
-    read_snapshot,
     resolve_snapshot,
 )
+from ml_feature_store_enterprise_grade_spark.sources.files import (
+    read_manifest,
+    read_table,
+    write_table,
+)
 from tests.conftest import count_jobs
-
-_SCHEMA = StructType([StructField("user_id", LongType())])
 
 
 def _mk_gen(root, gen, committed=True):
@@ -44,7 +45,7 @@ def test_commit_flips_pointer_and_expires_old(tmp_path):
     root = str(tmp_path)
     for g in range(1, GEN_RETAIN + 3):
         _mk_gen(root, g, committed=False)
-        commit_generation(root, g, _SCHEMA)
+        commit_generation(root, g)
         assert read_generation(root) == g
     gens = sorted(int(d.split("=")[1]) for d in os.listdir(root) if d.startswith("v="))
     newest = GEN_RETAIN + 2
@@ -87,22 +88,25 @@ def test_gc_with_no_committed_generation_clears_partials(tmp_path):
 
 
 def test_torn_pointer_reads_generation_with_marker_schema(spark, tmp_path):
-    """The marker is the generation's manifest: after a torn pointer
-    the generation still resolves, and it is read with the schema and
-    high-water mark its marker holds (a column the files lack reads as
-    NULL), without a schema-inference job."""
+    """After a torn pointer the generation still resolves from its
+    marker, which holds the high-water mark; the generation is read
+    with the schema its ``_SCHEMA`` manifest recorded (a column that
+    only a later zero-row write added reads as NULL), without a
+    schema-inference job."""
     root = str(tmp_path)
-    spark.createDataFrame([(1,), (2,)], "user_id bigint").write.parquet(
-        generation_dir(root, 1)
+    gen = generation_dir(root, 1)
+    write_table(spark.createDataFrame([(1,), (2,)], "user_id bigint"), gen)
+    write_table(
+        spark.createDataFrame([], "user_id bigint, segment string"), gen, mode="append"
     )
-    wider = StructType(_SCHEMA.fields + [StructField("segment", StringType())])
-    commit_generation(root, 1, wider, hwm="2024-01-15")
+    commit_generation(root, 1, hwm="2024-01-15")
     with open(os.path.join(root, "_CURRENT"), "w") as f:
         f.write("torn")
     gen_dir = resolve_snapshot(root)
-    assert gen_dir == generation_dir(root, 1)
-    assert read_marker(gen_dir)["hwm"] == "2024-01-15"
-    snap, jobs = count_jobs(spark, read_snapshot, spark, gen_dir)
+    assert gen_dir == gen
+    assert read_marker(gen_dir) == {"hwm": "2024-01-15"}
+    snap, jobs = count_jobs(spark, read_table, spark, gen_dir)
     assert jobs == 0
-    assert snap.schema == wider
+    assert snap.schema == read_manifest(gen_dir)
+    assert snap.columns == ["user_id", "segment"]
     assert sorted(snap.collect()) == [(1, None), (2, None)]

@@ -21,8 +21,11 @@ from ml_feature_store_enterprise_grade_spark.catalog import (
     parquet_schema,
 )
 from ml_feature_store_enterprise_grade_spark.snapshots import resolve_snapshot
+from ml_feature_store_enterprise_grade_spark.streaming import clickstream
 from ml_feature_store_enterprise_grade_spark.streaming.clickstream import (
+    compute_floor,
     run_available_now,
+    stream_state_confs,
     windowed_features,
 )
 from tests.conftest import SF_SMOKE, count_jobs
@@ -641,3 +644,43 @@ def test_rocksdb_state_store_provider_matches_default(spark, tmp_path):
     assert rocks.count() == default.count() > 0
     assert rocks.exceptAll(default).count() == 0
     assert default.exceptAll(rocks).count() == 0
+
+
+def test_stream_state_confs_rule(spark, monkeypatch):
+    # staged events at sf0.001 is well under one 32 MB target ->
+    # floor wins; explicit floor respected; cap = session width.
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    c1 = stream_state_confs(spark, SF_SMOKE, floor=1)
+    assert c1 == {"spark.sql.shuffle.partitions": "1"}
+    # the floor always wins over the size term (compute-bound sites)
+    c8 = stream_state_confs(spark, SF_SMOKE, floor=8)
+    assert int(c8["spark.sql.shuffle.partitions"]) == 8
+    # the module default floor applies when no floor is passed
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_FLOOR", 3)
+    c3 = stream_state_confs(spark, SF_SMOKE)
+    assert c3 == {"spark.sql.shuffle.partitions": "3"}
+    # tiny per-instance target: the size term takes over, capped at width
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_BYTES", 1024 * 1024)
+    cbig = stream_state_confs(spark, SF_SMOKE, floor=1)
+    assert 1 <= int(cbig["spark.sql.shuffle.partitions"]) <= cap
+    assert compute_floor(spark) >= 1
+
+
+def test_stream_state_confs_sizes_nested_and_missing_sources(
+    spark, tmp_path, monkeypatch
+):
+    """Bytes in every file of a partitioned events.parquet directory
+    count (not just its top level), and a missing source falls back to
+    the floor instead of raising."""
+    mb = 1024 * 1024
+    monkeypatch.setattr(clickstream, "_STREAM_STATE_BYTES", mb)
+    src = tmp_path / "nested" / "events.parquet"
+    for part in ("event_date=2024-01-01", "event_date=2024-01-02"):
+        (src / part).mkdir(parents=True)
+        (src / part / "part-0.parquet").write_bytes(b"x" * (mb + 1))
+    (src / "_SUCCESS").write_bytes(b"")
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    c = stream_state_confs(spark, str(tmp_path / "nested"))
+    assert int(c["spark.sql.shuffle.partitions"]) == min(cap, 3)
+    c = stream_state_confs(spark, str(tmp_path / "missing"), floor=2)
+    assert c["spark.sql.shuffle.partitions"] == "2"

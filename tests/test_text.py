@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from ml_feature_store_enterprise_grade_spark.catalog import load_table
 from ml_feature_store_enterprise_grade_spark.operators.text import doc_tfidf_top_terms
 
 from conftest import SF_SMOKE
@@ -70,3 +73,25 @@ class TestPiiScrub:
             assert r["n_ips"] == (1 if r["doc_id"] % 4 == 0 else 0)
             assert r["n_phones"] == (1 if r["doc_id"] % 5 == 0 else 0)
             assert "@" not in r["clean_text"]
+
+
+def test_doc_lengths_matches_exploded_counts(spark):
+    from ml_feature_store_enterprise_grade_spark.operators.text import (
+        _doc_lengths,
+    )
+    from ml_feature_store_enterprise_grade_spark.functions import (
+        normalize_text,
+    )
+
+    nd = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", normalize_text(F.col("text")).alias("norm")
+    )
+    got = {(r.doc_id, r.n_tokens) for r in _doc_lengths(nd).collect()}
+    toks = nd.select(
+        "doc_id", F.explode(F.split("norm", " ")).alias("token")
+    )
+    want = {
+        (r.doc_id, r.n)
+        for r in toks.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert got == want

@@ -13,6 +13,7 @@ from ml_feature_store_enterprise_grade_spark.operators.similarity import (
     VectorIndex,
     ann_cosine_topk,
 )
+from ml_feature_store_enterprise_grade_spark.sources.files import write_table
 from tests.conftest import SF_SMOKE
 
 
@@ -134,9 +135,7 @@ def test_add_folds_vectors_under_frozen_codebook(spark, tmp_path):
 
     shutil.copytree(tmp_path / "idx" / "centroids", tmp_path / "ref" / "centroids")
     ref = VectorIndex(spark, str(tmp_path / "ref"))
-    ref._assign(emb).write.mode("overwrite").partitionBy("cell").parquet(
-        f"{tmp_path}/ref/cells/ingest=base"
-    )
+    write_table(ref._assign(emb), f"{tmp_path}/ref/cells", partition_by="cell", ingest="base")
     queries = emb.filter(F.col("vec_id") < 20).select(
         (F.col("vec_id") + 1_000_000).alias("query_id"), "embedding"
     )
@@ -236,11 +235,18 @@ def test_filtered_search_matches_exact_filtered_baseline(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_compact_preserves_metadata_and_filtered_search(spark, tmp_path):
+@pytest.mark.parametrize("label_from", ["build", "add"])
+def test_compact_preserves_metadata_and_filtered_search(spark, tmp_path, label_from):
+    """Metadata columns survive ``compact()`` — also one that only a
+    later ``add`` carries, which the cells' ``_SCHEMA`` manifest
+    records (a footer-inferred schema could miss it and drop it)."""
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
     )
-    idx = VectorIndex.build(emb.filter(F.col("vec_id") % 2 == 0), str(tmp_path / "m"))
+    base = emb.filter(F.col("vec_id") % 2 == 0)
+    if label_from == "add":
+        base = base.drop("label")
+    idx = VectorIndex.build(base, str(tmp_path / "m"))
     idx.add(emb.filter(F.col("vec_id") % 2 == 1), ingest_id="odd")
     queries = emb.filter(F.col("vec_id") < 3).select(
         (F.col("vec_id") + 1_000_000).alias("query_id"), "embedding"
